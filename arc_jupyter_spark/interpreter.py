@@ -20,7 +20,7 @@ from typing import Any, Callable
 
 from pyspark.sql import DataFrame
 
-from arc_jupyter_spark import __version__
+from arc_jupyter_spark import __version__, render
 from arc_jupyter_spark.context import (
     PLACEHOLDER_VIEW,
     ArcContext,
@@ -175,23 +175,22 @@ class Interpreter:
                 duration_s=_int(args.get("streamingDuration"), conf.streaming_duration),
                 frequency_ms=conf.streaming_frequency_ms,
             )
-        kwargs = dict(
-            num_rows=num_rows,
-            max_num_rows=conf.max_num_rows,
-            truncate=truncate,
+        # one Spark action per cell: both formats render from this take
+        header, body = render.take_formatted(
+            df, num_rows=num_rows, max_num_rows=conf.max_num_rows, truncate=truncate
         )
-        text = render_text(df, **kwargs)
+        text = render_text(header, body)
         if _bool(args.get("showLog"), conf.show_log):
             last = self.log_buffer.last_message()
             if last:
                 text = f"{text}\n{last}"
         html = (
             render_html(
-                df,
+                header,
+                body,
                 monospace=_bool(args.get("monospace"), conf.monospace),
                 left_align=_bool(args.get("leftAlign"), conf.left_align),
                 label=label if _bool(args.get("datasetLabels"), conf.dataset_labels) else None,
-                **kwargs,
             )
             if self.html
             else None
@@ -224,10 +223,12 @@ class Interpreter:
         df = self.ctx.spark.sql(stmt)
         view, is_placeholder = self._output_view(args)
         self.ctx.register(df, view, persist=_bool(args.get("persist")))
-        result = self._render(df, args, label=view)
-        if is_placeholder and not streaming:
-            self.ctx.drop_view(view)  # reference: ArcInterpreter.scala:600
-        return result
+        try:
+            return self._render(df, args, label=view)
+        finally:
+            # a cell that fails while rendering must not leave it behind
+            if is_placeholder and not streaming:
+                self.ctx.drop_view(view)  # reference: ArcInterpreter.scala:600
 
     def magic_sqlvalidate(self, args: dict[str, str], body: str) -> CellResult:
         stmt = inject_parameters(body, self._sql_params(args))
@@ -291,14 +292,14 @@ class Interpreter:
         """Physical plan + scale-advisor findings for a view (an
         engine-native addition: the 100 TB checklist this repo's plan
         gates enforce, surfaced to the notebook before a job ships)."""
-        from arc_jupyter_spark.plans.advisor import analyze, report
+        from arc_jupyter_spark.plans.advisor import analyze_plan, plan_string, report
 
         view = body.strip()
         if not view:
             raise ValueError("%plan expects a view name on the next line")
-        df = self.ctx.table(view)
-        findings = analyze(df)
-        return CellResult(text=report(df), data=[f.__dict__ for f in findings])
+        plan = plan_string(self.ctx.table(view))
+        findings = analyze_plan(plan)
+        return CellResult(text=report(findings, plan), data=[f.__dict__ for f in findings])
 
     def magic_metadatafilter(self, args: dict[str, str], body: str) -> CellResult:
         stages = parse_pipeline([{

@@ -56,10 +56,15 @@ class LogBuffer(logging.Handler):
 
 
 def attach_log_buffer(logger_name: str = "arc_jupyter_spark") -> LogBuffer:
-    buffer = LogBuffer()
+    """The logger's :class:`LogBuffer`, attached on first use and shared
+    by every later caller (one handler however many interpreters)."""
     logger = logging.getLogger(logger_name)
-    logger.addHandler(buffer)
     logger.setLevel(logging.INFO)
+    for handler in logger.handlers:
+        if isinstance(handler, LogBuffer):
+            return handler
+    buffer = LogBuffer()
+    logger.addHandler(buffer)
     return buffer
 
 

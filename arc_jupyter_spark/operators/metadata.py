@@ -15,6 +15,7 @@ from __future__ import annotations
 import json
 from typing import Any
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
@@ -55,19 +56,22 @@ def metadata_dataframe(spark: SparkSession, df: DataFrame) -> DataFrame:
             return json.dumps(v)
         return v
 
-    rows = []
-    for f in df.schema.fields:
-        md = f.metadata or {}
-        rows.append(
-            (f.name, f.nullable, f.dataType.simpleString())
-            + tuple(cell(md, k) for k in keys)
-        )
-    fields = [
+    fields = df.schema.fields
+    columns = [
+        [f.name for f in fields],
+        [f.nullable for f in fields],
+        [f.dataType.simpleString() for f in fields],
+    ] + [[cell(f.metadata or {}, k) for f in fields] for k in keys]
+    schema = T.StructType([
         T.StructField("name", T.StringType(), False),
         T.StructField("nullable", T.BooleanType(), False),
         T.StructField("type", T.StringType(), False),
-    ] + [T.StructField(k, key_types[k], True) for k in keys]
-    return spark.createDataFrame(rows, T.StructType(fields))
+    ] + [T.StructField(k, key_types[k], True) for k in keys])
+    # An Arrow table becomes a LocalRelation: taking from it runs on the
+    # driver and fires no Spark job (a Python row list is parallelized).
+    # createDataFrame casts each inferred Arrow column to *schema*.
+    table = pa.Table.from_arrays([pa.array(c) for c in columns], names=schema.names)
+    return spark.createDataFrame(table, schema)
 
 
 def schema_to_arc_metadata(df: DataFrame) -> list[dict[str, Any]]:

@@ -28,13 +28,18 @@ class Finding:
         return f"[{self.severity}] {self.code}: {self.message}"
 
 
-def _plan_string(df: DataFrame) -> str:
+def plan_string(df: DataFrame) -> str:
+    """*df*'s formatted physical plan (compiled, not run)."""
     return df._jdf.queryExecution().executedPlan().toString()
 
 
 def analyze(df: DataFrame) -> list[Finding]:
     """Return scale findings for *df*'s physical plan (worst first)."""
-    plan = _plan_string(df)
+    return analyze_plan(plan_string(df))
+
+
+def analyze_plan(plan: str) -> list[Finding]:
+    """Scale findings for a formatted physical plan (worst first)."""
     out: list[Finding] = []
 
     if "CartesianProduct" in plan:
@@ -160,8 +165,8 @@ def analyze(df: DataFrame) -> list[Finding]:
     return out
 
 
-def report(df: DataFrame) -> str:
+def report(findings: list[Finding], plan: str) -> str:
     """Human-readable advisor report + the formatted plan (the single
-    rendering ``%plan`` uses)."""
-    lines = [str(f) for f in analyze(df)]
-    return "\n".join(lines) + "\n\n" + _plan_string(df)
+    rendering ``%plan`` uses), from findings already computed."""
+    lines = [str(f) for f in findings]
+    return "\n".join(lines) + "\n\n" + plan

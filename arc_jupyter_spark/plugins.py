@@ -86,12 +86,11 @@ class RenderStagesPlugin:
     def after(self, stage, result, ctx: ArcContext) -> None:
         if result is None or getattr(result, "isStreaming", False):
             return
-        from arc_jupyter_spark.render import render_text
+        from arc_jupyter_spark.render import render_text, take_formatted
 
-        self.outputs.append(
-            (stage.name, render_text(result, num_rows=self.num_rows,
-                                     truncate=self.truncate))
-        )
+        header, body = take_formatted(result, num_rows=self.num_rows,
+                                      truncate=self.truncate)
+        self.outputs.append((stage.name, render_text(header, body)))
 
 
 def load_entry_points(group: str = "arc_jupyter_spark.plugins") -> list[str]:

@@ -3,7 +3,11 @@
 The reference formats INSIDE Spark (one projection producing display
 strings) so only ``numRows`` formatted strings ever reach the driver —
 the same shape is kept here: a single ``select`` of string columns,
-then ``take``. Rules (reference: Common.scala:249-285; SURVEY.md §1.3):
+then ``take``. :func:`take_formatted` is the only function here that
+runs Spark; :func:`render_text` and :func:`render_html` are pure
+formatters over its ``(header, body)`` result, so one take per cell
+feeds both formats. Rules (reference: Common.scala:249-285;
+SURVEY.md §1.3):
 
 - binary → hex bytes ``[0A FF]``
 - double → ``format_number(col, 10)``, commas stripped, trailing
@@ -98,17 +102,15 @@ def take_formatted(
 
 
 def render_html(
-    df: DataFrame,
-    num_rows: int = 20,
-    max_num_rows: int = 2**31 - 1,
-    truncate: int = 50,
+    header: list[str],
+    body: list[list[str]],
     monospace: bool = False,
     left_align: bool = False,
     label: str | None = None,
 ) -> str:
-    """HTML table with the reference's css flags
-    (Common.scala:287-334; datasetLabels CHANGELOG.md:198)."""
-    header, body = take_formatted(df, num_rows, max_num_rows, truncate)
+    """HTML table of a :func:`take_formatted` result, with the
+    reference's css flags (Common.scala:287-334; datasetLabels
+    CHANGELOG.md:198)."""
     css = []
     if monospace:
         css.append("font-family:monospace;")
@@ -129,14 +131,9 @@ def render_html(
     return "".join(parts)
 
 
-def render_text(
-    df: DataFrame,
-    num_rows: int = 20,
-    max_num_rows: int = 2**31 - 1,
-    truncate: int = 50,
-) -> str:
-    """Plain-text table (same formatting rules; for non-HTML frontends)."""
-    header, body = take_formatted(df, num_rows, max_num_rows, truncate)
+def render_text(header: list[str], body: list[list[str]]) -> str:
+    """Plain-text table of a :func:`take_formatted` result (for
+    non-HTML frontends)."""
     widths = [len(h) for h in header]
     for row in body:
         for i, v in enumerate(row):

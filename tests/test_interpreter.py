@@ -1,6 +1,9 @@
 """Cell-language tests: magic dispatch, options, env/secret/conf,
 placeholder view lifecycle (reference semantics per SURVEY.md §2.A)."""
 
+import logging
+import uuid
+
 import pytest
 
 from arc_jupyter_spark.context import PLACEHOLDER_VIEW
@@ -264,3 +267,139 @@ def test_conf_master_restart_stops_streams_and_old_session(spark):
     assert not q.isActive
     # user_data (lastView, stream registry) does not survive a restart
     assert "streaming_queries" not in interp.ctx.user_data
+
+
+# -- one Spark action per rendered cell --------------------------------
+
+
+def _count_jobs(spark, fn) -> int:
+    """Spark jobs *fn* fires, read from the status tracker."""
+    sc = spark.sparkContext
+    group = f"count-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "count jobs")
+    try:
+        fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.fixture()
+def takes(monkeypatch):
+    """Tables each call to ``render.take_formatted`` was asked for."""
+    from arc_jupyter_spark import render
+
+    calls = []
+    real = render.take_formatted
+
+    def counting(df, *args, **kwargs):
+        calls.append(df)
+        return real(df, *args, **kwargs)
+
+    monkeypatch.setattr(render, "take_formatted", counting)
+    return calls
+
+
+HOCON_CELL = '''{
+  type = SQLTransform
+  name = base
+  sql = """SELECT id, id % 2 AS parity FROM one_take_src"""
+  outputView = one_take_base
+}
+{
+  type = SQLTransform
+  name = per parity
+  sql = """SELECT parity, COUNT(*) AS n FROM one_take_base GROUP BY parity ORDER BY parity"""
+  outputView = one_take_out
+}
+{
+  type = SQLValidate
+  name = not empty
+  sql = """SELECT COUNT(*) > 0 AS valid, CAST(COUNT(*) AS STRING) AS message FROM one_take_out"""
+}'''
+
+
+@pytest.mark.parametrize("cell", [
+    "%sql\nSELECT id % 3 AS k, COUNT(*) AS n FROM one_take_src GROUP BY id % 3 ORDER BY k",
+    HOCON_CELL,
+    "%metadata\none_take_src",
+], ids=["sql", "hocon", "metadata"])
+def test_rendered_cell_takes_once(interp, takes, cell):
+    interp.ctx.register(interp.ctx.spark.range(10), "one_take_src")
+    res = interp.execute(cell)
+    assert len(takes) == 1
+    assert res.text.startswith("+-") and res.html.startswith("<table")
+
+
+def test_html_cell_fires_the_jobs_of_a_text_cell(ctx):
+    cell = "%sql\nSELECT id % 7 AS k, COUNT(*) AS n FROM range(1000) GROUP BY id % 7 ORDER BY k"
+    text_only = Interpreter(ctx=ctx, html=False)
+    with_html = Interpreter(ctx=ctx, html=True)
+    text_only.execute(cell)  # warm-up
+    jobs = [_count_jobs(ctx.spark, lambda i=i: i.execute(cell)) for i in (text_only, with_html)]
+    assert jobs[0] > 0 and jobs[1] == jobs[0]
+
+
+def test_metadata_cell_fires_no_job(interp):
+    df = interp.ctx.spark.range(3).withMetadata("id", {"pii": True, "rank": 2})
+    interp.ctx.register(df, "no_job_src")
+    results = []
+    jobs = _count_jobs(interp.ctx.spark,
+                       lambda: results.append(interp.execute("%metadata\nno_job_src")))
+    assert jobs == 0
+    assert "<td>id</td><td>false</td><td>bigint</td><td>true</td><td>2</td>" in results[0].html
+
+
+def test_metadatavalidate_over_the_metadata_table(interp):
+    df = interp.ctx.spark.range(3).withMetadata("id", {"pii": True})
+    interp.ctx.register(df, "mv_src")
+    ok = interp.execute(
+        "%metadatavalidate inputView=mv_src\n"
+        "SELECT SUM(CAST(pii AS INT)) = 1, 'one pii column' FROM metadata")
+    assert ok.text == "one pii column"
+    with pytest.raises(ValidationError):
+        interp.execute(
+            "%metadatavalidate inputView=mv_src\nSELECT COUNT(*) = 0, 'no columns' FROM metadata")
+    assert "metadata" not in interp.ctx.view_names()
+
+
+def test_failed_sql_cell_leaves_catalog_unchanged(interp):
+    spark = interp.ctx.spark
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    before = sorted(interp.ctx.view_names())
+    try:
+        with pytest.raises(Exception, match="NumberFormatException|CAST_INVALID_INPUT"):
+            interp.execute("%sql\nSELECT CAST(concat('x', id) AS INT) AS v FROM range(3)")
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
+    assert sorted(interp.ctx.view_names()) == before
+
+
+def test_interpreters_share_one_log_handler(ctx):
+    from arc_jupyter_spark.observability import LogBuffer
+
+    interps = [Interpreter(ctx=ctx) for _ in range(4)]
+    logger = logging.getLogger("arc_jupyter_spark")
+    buffers = [h for h in logger.handlers if isinstance(h, LogBuffer)]
+    assert len(buffers) == 1
+    assert all(i.log_buffer is buffers[0] for i in interps)
+    interps[-1].execute("%log\nSELECT 'one-handler-check' AS message")
+    res = interps[0].execute("%sql showLog=true\nSELECT 1 AS a")
+    assert '"message": "one-handler-check"' in res.text.splitlines()[-1]
+
+
+def test_plan_reports_from_one_plan_string(interp, monkeypatch):
+    from arc_jupyter_spark.plans import advisor
+
+    interp.ctx.register(
+        interp.ctx.spark.range(10).selectExpr("id % 3 AS k").groupBy("k").count(), "plan_src")
+    plans = []
+    real = advisor.plan_string
+    monkeypatch.setattr(advisor, "plan_string", lambda df: plans.append(real(df)) or plans[-1])
+    res = interp.execute("%plan\nplan_src")
+    assert len(plans) == 1
+    findings = [advisor.Finding(**d) for d in res.data]
+    assert findings == advisor.analyze_plan(plans[0])
+    assert res.text == "\n".join(str(f) for f in findings) + "\n\n" + plans[0]

@@ -4,6 +4,7 @@
 import json
 
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from arc_jupyter_spark.operators.metadata import (
     apply_metadata,
@@ -124,3 +125,78 @@ def test_metadata_survives_sqltransform_and_rename(ctx):
     )
     md = spark.table("meta_out").schema["id2"].metadata
     assert md["primaryKey"] is True and md["nullable"] is False
+
+
+# metadata_dataframe builds its frame from an Arrow table on the driver;
+# the schema and rows below are the frame's contract. Metadata keys come
+# in the order Spark keeps them, so the key columns are compared by name.
+BASE_FIELDS = [
+    T.StructField("name", T.StringType(), False),
+    T.StructField("nullable", T.BooleanType(), False),
+    T.StructField("type", T.StringType(), False),
+]
+BASE_ROWS = [("a", False, "int"), ("b", False, "string"), ("c", True, "double")]
+
+
+def _meta(spark, per_column, key_fields):
+    """Check the frame's schema; return its key columns by row."""
+    df = spark.sql("SELECT 1 AS a, 'x' AS b, CAST(NULL AS DOUBLE) AS c")
+    meta = metadata_dataframe(spark, apply_metadata(df, per_column))
+    assert meta.schema.fields[:3] == BASE_FIELDS
+    assert sorted(meta.schema.fields[3:], key=lambda f: f.name) == sorted(
+        key_fields, key=lambda f: f.name)
+    rows = meta.collect()
+    assert [tuple(r)[:3] for r in rows] == BASE_ROWS
+    return [{k: v for k, v in r.asDict().items() if k not in ("name", "nullable", "type")}
+            for r in rows]
+
+
+def test_metadata_dataframe_without_field_metadata(spark):
+    assert _meta(spark, {}, []) == [{}, {}, {}]
+
+
+def test_metadata_dataframe_bool_long_double_keys(spark):
+    keys = _meta(spark, {
+        "a": {"pii": True, "rank": 3, "weight": 0.5},
+        "b": {"pii": False, "rank": 7, "weight": 2.5},
+        "c": {"pii": True, "rank": -1, "weight": 1.25},
+    }, [
+        T.StructField("pii", T.BooleanType(), True),
+        T.StructField("rank", T.LongType(), True),
+        T.StructField("weight", T.DoubleType(), True),
+    ])
+    assert keys == [
+        {"pii": True, "rank": 3, "weight": 0.5},
+        {"pii": False, "rank": 7, "weight": 2.5},
+        {"pii": True, "rank": -1, "weight": 1.25},
+    ]
+
+
+def test_metadata_dataframe_widens_ints_in_a_double_key(spark):
+    """A whole number among doubles becomes a double; a Python row list
+    with this schema was rejected (DoubleType cannot accept an int)."""
+    keys = _meta(spark, {"a": {"weight": 0.5}, "b": {"weight": 2}},
+                 [T.StructField("weight", T.DoubleType(), True)])
+    assert keys == [{"weight": 0.5}, {"weight": 2.0}, {"weight": None}]
+    assert isinstance(keys[1]["weight"], float)
+
+
+def test_metadata_dataframe_mixed_values_fall_back_to_json(spark):
+    keys = _meta(spark, {
+        "a": {"tag": "plain"},
+        "b": {"tag": 5},
+        "c": {"tag": {"k": [1, 2]}},
+    }, [T.StructField("tag", T.StringType(), True)])
+    assert keys == [{"tag": "plain"}, {"tag": "5"}, {"tag": '{"k": [1, 2]}'}]
+
+
+def test_metadata_dataframe_absent_keys_are_null(spark):
+    keys = _meta(spark, {"a": {"unit": "cm"}, "c": {"scale": 2}}, [
+        T.StructField("unit", T.StringType(), True),
+        T.StructField("scale", T.LongType(), True),
+    ])
+    assert keys == [
+        {"unit": "cm", "scale": None},
+        {"unit": None, "scale": None},
+        {"unit": None, "scale": 2},
+    ]

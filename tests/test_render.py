@@ -78,7 +78,7 @@ def test_row_cap(spark):
 
 def test_html_escapes_and_css(spark):
     df = spark.sql("SELECT '<b>&' AS v")
-    html = render_html(df, monospace=True, left_align=True, label="lbl")
+    html = render_html(*take_formatted(df), monospace=True, left_align=True, label="lbl")
     assert "&lt;b&gt;&amp;" in html
     assert "monospace" in html and "text-align:left" in html
     assert "<caption>lbl</caption>" in html
