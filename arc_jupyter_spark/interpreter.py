@@ -302,15 +302,19 @@ class Interpreter:
         return CellResult(text=report(findings, plan), data=[f.__dict__ for f in findings])
 
     def magic_metadatafilter(self, args: dict[str, str], body: str) -> CellResult:
+        view, is_placeholder = self._output_view(args)
         stages = parse_pipeline([{
             "type": "MetadataFilterTransform",
             "name": args.get("name", "metadatafilter"),
             "inputView": args["inputView"],
-            "outputView": self._output_view(args)[0],
+            "outputView": view,
             "sql": body,
         }])
-        df = run_pipeline(stages, self.ctx)
-        return self._render(df, args)
+        try:
+            return self._render(run_pipeline(stages, self.ctx), args)
+        finally:
+            if is_placeholder:
+                self.ctx.drop_view(view)
 
     def magic_metadatavalidate(self, args: dict[str, str], body: str) -> CellResult:
         meta = metadata_dataframe(self.ctx.spark, self.ctx.table(args["inputView"]))

@@ -1,94 +1,122 @@
-"""Spark UI REST metrics helpers (shared by bench.py and tools/).
+"""Per-stage Spark metrics, read in-process from the JVM status store
+(shared by bench.py and tools/).
 
-The UI REST API (``/api/v1``) is the one public, version-stable way
-to read per-stage shuffle/spill totals from outside the JVM — the
-same numbers the listener bus aggregates for the web UI. Sessions
-must be built with ``spark.ui.enabled=true`` for the endpoint to be
-served (the status store itself always exists; only the HTTP server
-is optional).
+``SparkContext.statusStore()`` is the store the listener bus fills for
+the web UI. It exists whether or not the UI server runs, so these reads
+work with ``spark.ui.enabled=false`` — the default for
+``build_session``, the driver's session and the test session. Every
+read first drains the listener bus, so a stage whose last task has
+just finished is already COMPLETE in the store.
 
-Pattern for measuring one query segment (used by the p10 per-stage
-breakdown and the spill probe): snapshot completed stage keys,
-materialize the segment, diff, and aggregate the NEW stages' totals.
+Pattern for measuring one segment of work (bench.py's per-query and
+per-pipeline-stage records, the spill and skew probes): build a
+``SegmentMeter``, do the work, call ``segment()`` for the totals of
+the stages that completed in between.
 """
 
 from __future__ import annotations
 
-import json
-import urllib.request
-
-def _get(url: str):
-    with urllib.request.urlopen(url) as r:
-        return json.load(r)
+MB = 2**20
+# task_quantiles reads these: min, median, max
+QUANTILES = (0.0, 0.5, 1.0)
 
 
-def _app_base(spark) -> str:
-    # uiWebUrl reports the ACTUALLY BOUND port (4040 auto-increments
-    # when another local session holds it), unlike the ui.port conf
-    ui = spark.sparkContext.uiWebUrl
-    app_id = spark.sparkContext.applicationId
-    return f"{ui}/api/v1/applications/{app_id}"
-
-
-def completed_stage_keys(spark) -> set[tuple[int, int]]:
-    return {
-        (s["stageId"], s["attemptId"])
-        for s in _get(f"{_app_base(spark)}/stages?status=COMPLETE")
-    }
-
-
-def stage_totals(spark, keys: set[tuple[int, int]]) -> dict:
-    """Aggregate shuffle/spill/input totals over the given stage keys.
-
-    Returns MiB-denominated sums plus the max single-stage
-    ``peakExecutionMemory`` (the task-aggregated unroll/execution
-    memory high-water mark — the number that predicts whether a 100×
-    scale-up fits executor memory or spills).
-    """
-    tot = {
-        "n_stages": 0,
-        "input_mb": 0.0,
-        "shuffle_read_mb": 0.0,
-        "shuffle_write_mb": 0.0,
-        # partial-aggregate hash maps degrade under memory pressure by
-        # EARLY FLUSH (emitting partial rows before full combine), not
-        # by disk spill — visible as a shuffle-record increase at an
-        # unchanged result; the forced-spill harness reads this to
-        # classify map-combined plans (s13/s14-shaped) whose per-task
-        # state is bounded by construction
-        "shuffle_write_records": 0,
-        "mem_spill_mb": 0.0,
-        "disk_spill_mb": 0.0,
-        "peak_execution_memory_mb": 0.0,
-    }
-    for s in _get(f"{_app_base(spark)}/stages?status=COMPLETE"):
-        if (s["stageId"], s["attemptId"]) not in keys:
-            continue
-        tot["n_stages"] += 1
-        tot["input_mb"] += s.get("inputBytes", 0) / 2**20
-        tot["shuffle_read_mb"] += s.get("shuffleReadBytes", 0) / 2**20
-        tot["shuffle_write_mb"] += s.get("shuffleWriteBytes", 0) / 2**20
-        tot["shuffle_write_records"] += s.get("shuffleWriteRecords", 0)
-        tot["mem_spill_mb"] += s.get("memoryBytesSpilled", 0) / 2**20
-        tot["disk_spill_mb"] += s.get("diskBytesSpilled", 0) / 2**20
-        tot["peak_execution_memory_mb"] = max(
-            tot["peak_execution_memory_mb"],
-            s.get("peakExecutionMemory", 0) / 2**20,
-        )
-    return {k: (round(v, 2) if isinstance(v, float) else v)
-            for k, v in tot.items()}
+def _floats(seq) -> list[float]:
+    return [float(seq.apply(i)) for i in range(seq.size())]
 
 
 class SegmentMeter:
-    """Measure wall + stage totals for successive segments of work."""
+    """Stage totals for successive segments of work in one session."""
 
     def __init__(self, spark) -> None:
-        self.spark = spark
-        self._before = completed_stage_keys(spark)
+        sc, jvm = spark.sparkContext, spark._jvm
+        self._status = sc._jsc.sc().statusStore()
+        self._bus = sc._jsc.sc().listenerBus()
+        self._wrapper = jvm.java.lang.Class.forName(
+            "org.apache.spark.status.StageDataWrapper")
+        self._quantiles = sc._gateway.new_array(jvm.double, len(QUANTILES))
+        for i, q in enumerate(QUANTILES):
+            self._quantiles[i] = q
+        # stage attempts finish in completion-time order: a read walks
+        # back only to the newest finish time of the previous read;
+        # _seen holds the attempts already walked at or after it. The
+        # start, 2**31 ms (January 1970), is the smallest int py4j hands
+        # over as a java.lang.Long, which the index's compare needs.
+        self._since, self._seen = 2**31, set()
+        self.new_stages()
+
+    def _finished_since(self):
+        """Iterator over the stage attempts (``StageDataWrapper``) that
+        finished at or after ``_since`` ms, newest first."""
+        self._bus.waitUntilEmpty()
+        view = self._status.store().view(self._wrapper)
+        return (view.index("completionTime").reverse()
+                .last(self._since).closeableIterator())
+
+    def new_stages(self) -> list:
+        """JVM ``StageData`` of the stage attempts that completed since
+        the last call (or init). SKIPPED and FAILED attempts never
+        count; a retried or resubmitted attempt counts when it
+        completes, whatever its stage id.
+        """
+        new, walked, newest = [], set(), None
+        it = self._finished_since()
+        try:
+            while it.hasNext():
+                st = it.next().info()
+                key = (st.stageId(), st.attemptId())
+                if newest is None:
+                    newest = st.completionTime().get().getTime()
+                walked.add(key)
+                if key not in self._seen and st.status().toString() == "COMPLETE":
+                    new.append(st)
+        finally:
+            it.close()
+        if newest is not None:
+            self._since, self._seen = newest, walked
+        return new
 
     def segment(self) -> dict:
-        """Totals for stages completed since the last call (or init)."""
-        now = completed_stage_keys(self.spark)
-        new = now - self._before
-        self._before = now
-        return stage_totals(self.spark, new)
+        """Totals for stages completed since the last call (or init).
+
+        MiB-denominated sums plus the max single-stage
+        ``peakExecutionMemory`` (the task-aggregated unroll/execution
+        memory high-water mark — the number that predicts whether a
+        100× scale-up fits executor memory or spills).
+        """
+        stages = self.new_stages()
+
+        def mb(field: str) -> float:
+            return round(sum(getattr(s, field)() for s in stages) / MB, 2)
+
+        return {
+            "n_stages": len(stages),
+            "input_mb": mb("inputBytes"),
+            "shuffle_read_mb": mb("shuffleReadBytes"),
+            "shuffle_write_mb": mb("shuffleWriteBytes"),
+            # partial-aggregate hash maps degrade under memory pressure
+            # by EARLY FLUSH (emitting partial rows before full
+            # combine), not by disk spill — visible as a shuffle-record
+            # increase at an unchanged result; the forced-spill harness
+            # reads this to classify map-combined plans (s13/s14-shaped)
+            # whose per-task state is bounded by construction
+            "shuffle_write_records": sum(s.shuffleWriteRecords() for s in stages),
+            "mem_spill_mb": mb("memoryBytesSpilled"),
+            "disk_spill_mb": mb("diskBytesSpilled"),
+            "peak_execution_memory_mb": round(
+                max((s.peakExecutionMemory() for s in stages), default=0) / MB, 2),
+        }
+
+    def task_quantiles(self, stage) -> dict | None:
+        """Task duration (ms) and shuffle-read bytes at ``QUANTILES``
+        over the successful tasks of *stage* (a ``StageData`` from
+        ``new_stages``); None when it has no successful task."""
+        found = self._status.taskSummary(stage.stageId(), stage.attemptId(),
+                                         self._quantiles)
+        if found.isEmpty():
+            return None
+        dist = found.get()
+        return {
+            "duration_ms": _floats(dist.duration()),
+            "shuffle_read_bytes": _floats(dist.shuffleReadMetrics().readBytes()),
+        }

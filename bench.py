@@ -1,7 +1,8 @@
 """Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints
 ONE JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ...}.
+"queries": {name: sec}, "sf": ...}. The full per-query detail, with
+each query's build/exec split and stage totals, goes to BENCH_DETAIL.json.
 
 Headline set covers the engine's main plan shapes: scan+agg, broadcast
 join, 3-way join topk, window, rollup, range join, time window,
@@ -241,7 +242,7 @@ def pipeline_stage_breakdown(spark, sf_dir: str) -> dict:
                     "disk_spill_mb": seg["disk_spill_mb"],
                 }
         except Exception as exc:  # noqa: BLE001 - breakdown must never
-            # fail the whole bench run (REST endpoint hiccup etc.)
+            # fail the whole bench run (a stage frame failing to build etc.)
             out["_error"] = {"err": str(exc)[:200]}
         finally:
             for df in pinned:
@@ -256,15 +257,11 @@ def main() -> int:
     os.environ.setdefault("SPARK_GRAFT_CPUS", cpus)
 
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+    from arc_jupyter_spark.metrics import SegmentMeter
     from arc_jupyter_spark.session import build_session
     from arc_jupyter_spark.workloads import queries
 
-    # UI on: the p10 per-stage breakdown reads per-stage shuffle
-    # totals from the REST endpoint (arc_jupyter_spark/metrics.py).
-    # Overhead is the idle Jetty server only — the listener bus and
-    # status store run regardless, so r1→r6 timing comparability holds.
-    spark = build_session(master=f"local[{cpus}]", app_name="bench",
-                          extra_conf={"spark.ui.enabled": "true"})
+    spark = build_session(master=f"local[{cpus}]", app_name="bench")
 
     # warmup: JVM + parquet footer caches, one real scan
     spark.sql("SELECT 1").collect()
@@ -293,6 +290,10 @@ def main() -> int:
     # a warm cluster delivers.
     timings: dict[str, float] = {}
     first_pass: dict[str, float] = {}
+    # the best pass's build/exec split and stage totals (build and
+    # execution together), read after the wall is taken
+    layers: dict[str, dict] = {}
+    meter = SegmentMeter(spark)
     # best-of-3: this machine shows intermittent multi-second stalls
     # on otherwise-warm queries; a third pass makes the per-query min
     # a stable steady-state number.
@@ -305,13 +306,24 @@ def main() -> int:
     for _pass in range(3):
         for name in HEADLINE:
             t0 = time.perf_counter()
-            rows = qs[name](spark, sf_dir).collect()
-            elapsed = round(time.perf_counter() - t0, 3)
+            df = qs[name](spark, sf_dir)
+            t1 = time.perf_counter()
+            rows = df.collect()
+            t2 = time.perf_counter()
+            elapsed = round(t2 - t0, 3)
+            seg = meter.segment()
             if _pass == 0:
                 first_pass[name] = elapsed
             if name not in timings or elapsed < timings[name]:
                 timings[name] = elapsed
-            del rows
+                layers[name] = {
+                    "build_s": round(t1 - t0, 3),
+                    "exec_s": round(t2 - t1, 3),
+                    "n_stages": seg["n_stages"],
+                    "shuffle_write_mb": seg["shuffle_write_mb"],
+                    "input_mb": seg["input_mb"],
+                }
+            del df, rows
 
     # streaming micro-bench (VERDICT r5 item 5): rate-source windowed
     # aggregate, engine-reported rows/s + trigger latency. Recorded in
@@ -349,6 +361,7 @@ def main() -> int:
         # comparisons can line up like-for-like with best-of-2.
         "value_first_pass": round(sum(first_pass.values()), 3),
         "queries_first_pass": first_pass,
+        "query_layers": layers,
         "streaming": streaming_probe,
         # per-pipeline per-stage attribution (p10 kept under its old
         # key for r6/r7 artifact continuity)

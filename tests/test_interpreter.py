@@ -377,6 +377,31 @@ def test_failed_sql_cell_leaves_catalog_unchanged(interp):
     assert sorted(interp.ctx.view_names()) == before
 
 
+def test_metadatafilter_cell_leaves_catalog_unchanged(interp):
+    spark = interp.ctx.spark
+    interp.ctx.register(
+        spark.range(3).selectExpr("id", "id * 2 AS twice").withMetadata("id", {"keep": True}),
+        "mf_src")
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        interp.ctx.register(
+            spark.sql("SELECT CAST(concat('x', id) AS INT) AS v FROM range(3)")
+            .withMetadata("v", {"keep": True}),
+            "mf_bad_src")
+        interp.ctx.drop_view(PLACEHOLDER_VIEW)
+        before = sorted(interp.ctx.view_names())
+        cell = "%metadatafilter inputView={}\nSELECT * FROM metadata WHERE keep = true"
+        res = interp.execute(cell.format("mf_src"))
+        assert res.df.columns == ["id"]
+        assert sorted(interp.ctx.view_names()) == before
+        with pytest.raises(Exception, match="NumberFormatException|CAST_INVALID_INPUT"):
+            interp.execute(cell.format("mf_bad_src"))
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
+    assert sorted(interp.ctx.view_names()) == before
+
+
 def test_interpreters_share_one_log_handler(ctx):
     from arc_jupyter_spark.observability import LogBuffer
 

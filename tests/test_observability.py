@@ -1,8 +1,13 @@
-"""Log buffer, progress reporter, plugin registry, new stages."""
+"""Log buffer, progress reporter, stage metrics, plugin registry, new
+stages."""
 
 import logging
+import re
+import uuid
+from pathlib import Path
 
 import pytest
+from pyspark.sql import functions as F
 
 from arc_jupyter_spark.interpreter import Interpreter
 from arc_jupyter_spark.observability import LogBuffer, Progress, ProgressReporter
@@ -39,6 +44,100 @@ def test_progress_reporter_during_job(spark):
         spark.range(0, 5_000_000, 1, 16).selectExpr("sum(id)").collect()
     assert seen  # at least the final snapshot
     assert seen[-1].failed is False
+
+
+def _shuffled_counts(spark):
+    return spark.range(0, 200_000, 1, 4).groupBy((F.col("id") % 10_000).alias("k")).count()
+
+
+def test_segment_meter_reads_the_status_store_with_ui_off(spark):
+    from arc_jupyter_spark.metrics import SegmentMeter
+
+    assert spark.sparkContext.uiWebUrl is None  # no UI server to ask
+    meter = SegmentMeter(spark)
+    _shuffled_counts(spark).collect()
+    seg = meter.segment()
+    assert seg["n_stages"] >= 1
+    assert seg["shuffle_write_mb"] > 0 and seg["shuffle_write_records"] > 0
+    assert meter.segment()["n_stages"] == 0
+
+
+def test_segment_meter_skips_a_reused_shuffle_stage(spark):
+    from arc_jupyter_spark.metrics import SegmentMeter
+
+    sc = spark.sparkContext
+    df = _shuffled_counts(spark)
+    meter = SegmentMeter(spark)
+    df.collect()
+    first = meter.segment()
+    group = f"reread-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "re-read reusing its shuffle output")
+    try:
+        df.collect()
+    finally:
+        sc._jsc.clearJobGroup()
+    again = meter.segment()
+    tracker = sc.statusTracker()
+    referenced = {sid for job in tracker.getJobIdsForGroup(group)
+                  for sid in tracker.getJobInfo(job).stageIds}
+    # the re-read's jobs name the map stage, which is SKIPPED, not run
+    assert len(referenced) > again["n_stages"] >= 1
+    assert again["n_stages"] < first["n_stages"]
+    assert again["shuffle_write_records"] == 0 and first["shuffle_write_records"] > 0
+
+
+def test_segment_meter_counts_work_after_a_failed_stage(spark):
+    from arc_jupyter_spark.metrics import SegmentMeter
+
+    sc = spark.sparkContext
+    meter = SegmentMeter(spark)
+    failing = _shuffled_counts(spark).select(
+        F.when(F.col("k") >= 0, F.raise_error(F.lit("boom"))).alias("x"))
+    group = f"failing-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "a job whose result stage fails")
+    try:
+        with pytest.raises(Exception, match="boom"):
+            failing.collect()
+    finally:
+        sc._jsc.clearJobGroup()
+    seg = meter.segment()
+    # the map stage completed; the failed result stage does not count
+    assert seg["n_stages"] == 1 and seg["shuffle_write_records"] > 0
+    _shuffled_counts(spark).collect()
+    seg = meter.segment()
+    assert seg["n_stages"] >= 1 and seg["shuffle_write_records"] > 0
+    assert meter.segment()["n_stages"] == 0
+    # the failed attempt holds nothing open: the last read walked
+    # (_seen) only attempts that finished after the failed job
+    tracker = sc.statusTracker()
+    failed_job = {sid for job in tracker.getJobIdsForGroup(group)
+                  for sid in tracker.getJobInfo(job).stageIds}
+    assert failed_job and not failed_job & {sid for sid, _ in meter._seen}
+
+
+def test_task_quantiles_of_a_multi_task_stage(spark):
+    from arc_jupyter_spark.metrics import SegmentMeter
+
+    meter = SegmentMeter(spark)
+    spark.range(0, 100_000, 1, 4).selectExpr("sum(id)").collect()
+    stage = next(s for s in meter.new_stages() if s.numCompleteTasks() > 1)
+    q = meter.task_quantiles(stage)
+    assert len(q["duration_ms"]) == 3 and q["duration_ms"] == sorted(q["duration_ms"])
+    assert len(q["shuffle_read_bytes"]) == 3
+
+
+_UI_REST = re.compile(r"""api/v1|spark\.ui\.enabled["']?\s*[:,=]\s*["']?true""", re.IGNORECASE)
+
+
+def test_one_in_process_metrics_core():
+    """Stage metrics come from the status store only: no package or
+    tool module calls the UI REST API or turns the UI server on."""
+    root = Path(__file__).resolve().parent.parent
+    files = [root / "bench.py", *(root / "arc_jupyter_spark").rglob("*.py"),
+             *(root / "tools").glob("*.py")]
+    offenders = [str(f.relative_to(root)) for f in files
+                 if _UI_REST.search(f.read_text(encoding="utf-8"))]
+    assert offenders == []
 
 
 def test_config_plugin_merges_env(ctx):

@@ -1,7 +1,9 @@
-"""Dump .explain('formatted') for headline queries into plans/r09/.
+"""Dump .explain('formatted') for headline queries into plans/<round>/.
 
-Usage: python tools/dump_plans_r09.py <suffix> [query ...]
+Usage: python tools/dump_plans.py <round> <suffix> [query ...]
+  round:  the dump directory label, e.g. 'r10'
   suffix: 'before' or 'after'
+Each plan goes to plans/<round>/<query>_<suffix>.txt.
 With no query list, dumps every bench.py HEADLINE query.
 Plan-only (no jobs run), so it is cheap and safe to run alongside
 other Spark work.
@@ -14,24 +16,28 @@ import os
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def main() -> int:
-    suffix = sys.argv[1] if len(sys.argv) > 1 else "before"
-    names = sys.argv[2:]
+    if len(sys.argv) < 2:
+        raise SystemExit(__doc__)
+    rnd = sys.argv[1]
+    suffix = sys.argv[2] if len(sys.argv) > 2 else "before"
+    names = sys.argv[3:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
     from arc_jupyter_spark.session import build_session
     from arc_jupyter_spark.workloads import queries
     from bench import HEADLINE
 
-    spark = build_session(master="local[4]", app_name=f"plans-r09-{suffix}")
+    spark = build_session(master="local[4]", app_name=f"plans-{rnd}-{suffix}")
     qs = queries()
     if not names:
         names = HEADLINE
 
-    outdir = "/root/repo/plans/r09"
+    outdir = os.path.join(REPO, "plans", rnd)
     os.makedirs(outdir, exist_ok=True)
     for name in names:
         try:

@@ -10,7 +10,7 @@ processes:
    spill; its result digest is the ground truth.
 2. CONSTRAINED — a deliberately starved session (small heap +
    ``spark.memory.fraction`` squeezed), walking a tightening ladder
-   until the UI REST metrics report **disk spill > 0** with exit
+   until the status-store metrics report **disk spill > 0** with exit
    code 0 (no OOM).
 
 PASS per query = constrained digest == unconstrained digest AND
@@ -79,7 +79,7 @@ def child(name: str, sf_dir: str) -> int:
     from arc_jupyter_spark.workloads import queries
     from tools.selfcheck import normalize
 
-    extra = {"spark.ui.enabled": "true"}
+    extra = {}
     fraction = os.environ.get("FORCED_SPILL_FRACTION")
     if fraction:
         extra["spark.memory.fraction"] = fraction

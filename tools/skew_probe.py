@@ -3,8 +3,9 @@ per-task shuffle-read-bytes ratio under the zipfian fixture
 (tools/gen_skewed.py).
 
 For each skew-relevant query the probe runs the query on the uniform
-data and on the skewed variant, and — via the Spark UI REST API —
-pulls per-stage task quantiles. Two skew signals per run:
+data and on the skewed variant, and reads per-stage task quantiles
+from the in-process status store (arc_jupyter_spark/metrics.py). Two
+skew signals per run:
 
 - duration straggler: worst max/median task duration over stages
   whose MAX is >= 500 ms (qualifying by max, not median — a skewed
@@ -57,26 +58,11 @@ import argparse
 import json
 import sys
 import time
-import urllib.request
 
 sys.path.insert(0, "/root/repo")
 
-API = "http://localhost:4040/api/v1/applications"
 
-
-def _get(url: str):
-    with urllib.request.urlopen(url) as r:
-        return json.load(r)
-
-
-def _completed_stage_keys(app_id: str) -> set[tuple[int, int]]:
-    return {
-        (s["stageId"], s["attemptId"])
-        for s in _get(f"{API}/{app_id}/stages?status=COMPLETE")
-    }
-
-
-def _worst_skew(app_id: str, new_stages: set[tuple[int, int]]) -> dict:
+def _worst_skew(meter, stages: list) -> dict:
     """Worst max/median task duration AND worst max/median shuffle
     read bytes across the run's stages.
 
@@ -87,15 +73,12 @@ def _worst_skew(app_id: str, new_stages: set[tuple[int, int]]) -> dict:
     """
     dur = {"ratio": 0.0, "stage": None, "median_ms": 0, "max_ms": 0}
     byt = {"ratio": 0.0, "stage": None, "median_mb": 0.0, "max_mb": 0.0}
-    for sid, att in new_stages:
-        try:
-            q = _get(
-                f"{API}/{app_id}/stages/{sid}/{att}/taskSummary"
-                "?quantiles=0.0,0.5,1.0"
-            )
-        except Exception:  # noqa: BLE001 - 1-task stages have no summary
+    for st in stages:
+        q = meter.task_quantiles(st)
+        if q is None:
             continue
-        median, mx = q["duration"][1], q["duration"][2]
+        sid = st.stageId()
+        _, median, mx = q["duration_ms"]  # metrics.QUANTILES: min, median, max
         if mx >= 500:
             ratio = mx / max(median, 1.0)
             if ratio > dur["ratio"]:
@@ -103,25 +86,22 @@ def _worst_skew(app_id: str, new_stages: set[tuple[int, int]]) -> dict:
                     "ratio": round(ratio, 2), "stage": sid,
                     "median_ms": int(median), "max_ms": int(mx),
                 }
-        sr = q.get("shuffleReadMetrics") or {}
-        rb = sr.get("readBytes")
-        if rb:
-            bmed, bmax = rb[1], rb[2]
-            if bmax >= 1 << 20:
-                # floor the denominator at 64 KiB: a ~0-byte median
-                # (most reducers empty at toy scale) makes max/median
-                # meaningless — g03's skewed graph printed a 1.3e6x
-                # "ratio" that was really "1.2 MiB vs empty peers".
-                # With the floor, the reported worst case reads as
-                # "max partition is N x a 64 KiB floor" — still a
-                # skew signal, no longer a nonsense magnitude.
-                bratio = bmax / max(bmed, 64.0 * 1024)
-                if bratio > byt["ratio"]:
-                    byt = {
-                        "ratio": round(bratio, 2), "stage": sid,
-                        "median_mb": round(bmed / 2**20, 2),
-                        "max_mb": round(bmax / 2**20, 2),
-                    }
+        _, bmed, bmax = q["shuffle_read_bytes"]
+        if bmax >= 1 << 20:
+            # floor the denominator at 64 KiB: a ~0-byte median
+            # (most reducers empty at toy scale) makes max/median
+            # meaningless — g03's skewed graph printed a 1.3e6x
+            # "ratio" that was really "1.2 MiB vs empty peers".
+            # With the floor, the reported worst case reads as
+            # "max partition is N x a 64 KiB floor" — still a
+            # skew signal, no longer a nonsense magnitude.
+            bratio = bmax / max(bmed, 64.0 * 1024)
+            if bratio > byt["ratio"]:
+                byt = {
+                    "ratio": round(bratio, 2), "stage": sid,
+                    "median_mb": round(bmed / 2**20, 2),
+                    "max_mb": round(bmax / 2**20, 2),
+                }
     return {"straggler": dur, "bytes_skew": byt}
 
 
@@ -174,6 +154,7 @@ def q55_unsalted(spark, sf_dir: str):
 
 
 def main() -> int:
+    from arc_jupyter_spark.metrics import SegmentMeter
     from arc_jupyter_spark.session import build_session
     from arc_jupyter_spark.workloads import queries
 
@@ -184,10 +165,8 @@ def main() -> int:
                          "partial SKEW.json is merged over the existing file")
     args = ap.parse_args()
 
-    spark = build_session(app_name="skew-probe", extra_conf={
-        "spark.ui.enabled": "true",
-    })
-    app_id = spark.sparkContext.applicationId
+    spark = build_session(app_name="skew-probe")
+    meter = SegmentMeter(spark)
     qs = queries()
 
     SF01, SKEW01 = "/root/testdata/sf0.1", "/root/repo/.scaledata/skew01"
@@ -338,13 +317,11 @@ def main() -> int:
             # in-sweep d19 run 5x (11.8s vs 8.0s isolated, round 7)
             gc.collect()
             spark.catalog.clearCache()
-            before = _completed_stage_keys(app_id)
+            meter.new_stages()
             t0 = time.time()
             fn(spark, sf_dir).collect()
             wall = time.time() - t0
-            skew = _worst_skew(
-                app_id, _completed_stage_keys(app_id) - before
-            )
+            skew = _worst_skew(meter, meter.new_stages())
             if best_wall is None or wall < best_wall:
                 best_wall, best_skew = wall, skew
         return {"wall_s": round(best_wall, 3), **best_skew}

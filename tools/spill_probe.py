@@ -2,7 +2,7 @@
 
 Plans (PLANS_sf*.md) and skew (SKEW.json) are covered; the remaining
 100×-scale unknown is MEMORY: does any operator's working set outrun
-the executor heap and spill? This runs queries under the UI REST
+the executor heap and spill? This runs queries under the status-store
 metrics (arc_jupyter_spark/metrics.py) and records, per query, the
 aggregated shuffle-spill (memory + disk) and the max single-stage
 ``peakExecutionMemory`` — the hash/sort/unroll high-water mark that
@@ -73,8 +73,7 @@ def main() -> int:
         ap.error("give --all, --top N, or explicit query names")
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = build_session(master=f"local[{cpus}]", app_name="spill-probe",
-                          extra_conf={"spark.ui.enabled": "true"})
+    spark = build_session(master=f"local[{cpus}]", app_name="spill-probe")
     qs = queries()
     meter = SegmentMeter(spark)
     section: dict[str, dict] = {}
