@@ -117,7 +117,7 @@ class Interpreter:
         input_fn: Callable[[str], str] | None = None,
         html: bool = True,
         restart_on_master_change: bool = False,
-        session_factory: Callable[[str], Any] | None = None,
+        session_factory: Callable[[str, Any], Any] | None = None,
     ) -> None:
         if ctx is None:
             if spark is None:
@@ -432,21 +432,11 @@ class Interpreter:
         they would otherwise keep running untracked after the swap.
 
         The factory receives ``(master, old_session)`` so it can stop
-        exactly this interpreter's session; legacy single-argument
-        factories (tests predating the contract) still work.
+        exactly this interpreter's session.
         """
-        import inspect
-
         old = self.ctx
         old.stop_streams()
-        try:
-            n_params = len(inspect.signature(self.session_factory).parameters)
-        except (TypeError, ValueError):  # builtins / C callables
-            n_params = 2
-        if n_params >= 2:
-            spark = self.session_factory(master, old.spark)
-        else:
-            spark = self.session_factory(master)
+        spark = self.session_factory(master, old.spark)
         self.ctx = ArcContext(
             spark=spark,
             env=old.env,

@@ -95,16 +95,10 @@ class RenderStagesPlugin:
 
 def load_entry_points(group: str = "arc_jupyter_spark.plugins") -> list[str]:
     """Import plugin modules advertised via package entry points."""
+    from importlib.metadata import entry_points
+
     loaded = []
-    try:
-        from importlib.metadata import entry_points
-    except ImportError:  # pragma: no cover
-        return loaded
-    try:
-        eps = entry_points(group=group)
-    except TypeError:  # pragma: no cover - older API shape
-        eps = entry_points().get(group, [])
-    for ep in eps:
+    for ep in entry_points(group=group):
         ep.load()
         loaded.append(ep.name)
     return loaded

@@ -4987,7 +4987,7 @@ def p10_stage_frames(
     # anti-join and the substring accounting all read exact) — without
     # pinning, the static plan re-ran the tokenize+gate(+digest-dedup)
     # chain per branch: 12 documents scans / 41 exchanges, zero
-    # ReusedExchange (plans/r09/p10_refinedweb_pipeline_before.txt).
+    # ReusedExchange (e0f20d3:plans/r09/p10_refinedweb_pipeline_before.txt).
     # Lazy localCheckpoints pin one RDD each inside the single action,
     # so every branch shares a single evaluation (guide §5: cut
     # lineage/recompute for a reused intermediate).

@@ -197,7 +197,8 @@ def test_conf_master_restarts_kernel_session(spark):
 
     calls = []
 
-    def fake_factory(master):
+    def fake_factory(master, old_session):
+        assert old_session is spark
         calls.append(master)
         return spark
 

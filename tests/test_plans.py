@@ -8,14 +8,14 @@ fails CI even while results stay correct.
 
 import pytest
 
+from arc_jupyter_spark.plans.advisor import ALLOWED_BNL, plan_shape, plan_string
 from arc_jupyter_spark.workloads import queries
 
 from tests.conftest import SF_DIR
 
 
 def plan_of(spark, name):
-    df = queries()[name](spark, SF_DIR)
-    return df._jdf.queryExecution().executedPlan().toString()
+    return plan_string(queries()[name](spark, SF_DIR))
 
 
 def test_q01_pushdown_and_pruning(spark):
@@ -261,43 +261,17 @@ def test_p02_pipeline_shape(spark):
 
 def test_no_cartesian_in_any_batch_query(spark):
     """Blanket 100 TB gate: no batch query's plan may contain a
-    cartesian product or an unintended nested-loop join.
-
-    Allowlisted BroadcastNestedLoopJoin uses — all broadcast a
-    provably tiny side:
-    - q53_funnel / s06_semantic_dedup / q63_null_safe_join: crossJoin
-      of 1-row scalar aggregates (the one-lazy-plan contract pattern);
-    - s03_batch_topk: the handful of query vectors broadcast against
-      the corpus by design (every corpus row scores every query).
-    """
-    ALLOWED_BNL = {
-        "q53_funnel", "s06_semantic_dedup", "s03_batch_topk",
-        "q63_null_safe_join", "q67_similarity_join",
-        "d10_bloom_prefilter",  # crossJoin of four 1-row aggregates
-        "t23_bigram_lift",  # crossJoin of the 1-row total-tokens aggregate
-        "t30_hll_shards",  # crossJoin of two 1-row sketch-estimate aggregates
-        "t34_hist_quantile",  # crossJoin of the 1-row histogram total
-        "s10_hybrid_rrf",  # crossJoin of the 1-row BM25 corpus stats
-        "s12_mmr_rerank",  # 50-row pool self-crossJoin for the sim matrix
-        "t43_kmv_overlap",  # sketch (S*K rows) x source list (S rows)
-        # pair-tagging, a non-equi join by construction; both sides
-        # are bottom-k sketches, never corpus-sized — bounded S^2*K
-        "t44_coverage_curve",  # crossJoin of the 1-row corpus total
-        "g01_pagerank",  # crossJoin of the 1-row node-count aggregate
-        # (folds n into the rank constants without a driver count job)
-        "s16_range_search",  # corpus x broadcast 3-row query set —
-        # scoring every corpus row against every query IS the range
-        # scan (the s03 batch-topk rationale)
-    }
-    sf = "/root/testdata/sf0.001"
+    cartesian product or an unintended nested-loop join. Every allowed
+    BroadcastNestedLoopJoin broadcasts a provably tiny side; the sites
+    and their reasons are ``advisor.ALLOWED_BNL``."""
     offenders = []
     for name, fn in sorted(queries().items()):
         if name.startswith("st"):  # streaming queries execute on build
             continue
-        plan = fn(spark, sf)._jdf.queryExecution().executedPlan().toString()
-        if "CartesianProduct" in plan:
+        shape = plan_shape(plan_string(fn(spark, SF_DIR)))
+        if shape["cartesian"]:
             offenders.append((name, "CartesianProduct"))
-        if "BroadcastNestedLoopJoin" in plan and name not in ALLOWED_BNL:
+        if shape["bnlj"] and name not in ALLOWED_BNL:
             offenders.append((name, "BroadcastNestedLoopJoin"))
     assert not offenders, f"scale-unsafe joins: {offenders}"
 

@@ -14,8 +14,8 @@ asserts only the SCALE-ROBUST killer class:
   changed shape in a way that dropped a pushable predicate).
 
 Join-strategy flips (broadcast → sort-merge) are EXPECTED above the
-broadcast threshold and are not asserted here; tools/plan_scale_audit.py
-records them in PLANS_sf1.md.
+broadcast threshold and are not asserted here; tools/dump_plans.py
+records them in PLANS.json.
 
 Skip-gated on the generated data being present (it is not committed;
 `python tools/gen_scaled.py` rebuilds it in ~2 min). Static plans
@@ -41,8 +41,8 @@ pytestmark = pytest.mark.skipif(
 def test_headline_plans_have_no_scale_killers_at_sf1(spark):
     """One sweep, all headline queries: zero scale-killer hits."""
     from bench import HEADLINE
-    from tools.plan_scale_audit import classify, killers
 
+    from arc_jupyter_spark.plans.advisor import killers, plan_shape, plan_string
     from arc_jupyter_spark.workloads import queries
 
     qs = queries()
@@ -50,15 +50,9 @@ def test_headline_plans_have_no_scale_killers_at_sf1(spark):
     for name in HEADLINE:
         if name.startswith("st"):  # streaming queries execute on build
             continue
-        base = classify(
-            qs[name](spark, BASE_DIR)
-            ._jdf.queryExecution().executedPlan().toString()
-        )
-        plan = (
-            qs[name](spark, SF1_DIR)
-            ._jdf.queryExecution().executedPlan().toString()
-        )
-        ks = killers(name, classify(plan), base)
+        base = plan_shape(plan_string(qs[name](spark, BASE_DIR)))
+        shape = plan_shape(plan_string(qs[name](spark, SF1_DIR)))
+        ks = killers(name, shape, base)
         if ks:
             offenders.append((name, ks))
         spark.catalog.clearCache()

@@ -1,6 +1,6 @@
 """Spill/memory posture probe (VERDICT r6 item 5).
 
-Plans (PLANS_sf*.md) and skew (SKEW.json) are covered; the remaining
+Plans (PLANS.json) and skew (SKEW.json) are covered; the remaining
 100×-scale unknown is MEMORY: does any operator's working set outrun
 the executor heap and spill? This runs queries under the status-store
 metrics (arc_jupyter_spark/metrics.py) and records, per query, the
