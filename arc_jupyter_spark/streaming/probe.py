@@ -116,9 +116,10 @@ def multibatch_cdc_ingest_probe(
 
     from arc_jupyter_spark.operators.dedup import cdc_chunks
     from arc_jupyter_spark.workloads._duck_sql import CDC_MASK, CDC_WINDOW
+    from arc_jupyter_spark.workloads.base import read_parquet
 
     t0 = time.time()
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = read_parquet(spark, f"{sf_dir}/documents.parquet").select(
         "source", "doc_id", F.coalesce("text", F.lit("")).alias("text")
     )
     tmp = tempfile.mkdtemp(prefix="mb_cdc_docs_")

@@ -26,6 +26,7 @@ from arc_jupyter_spark.checkpoint import materialize, materialize_lazy
 from arc_jupyter_spark.workloads.base import (
     query,
     read_events_stream,
+    read_parquet,
     read_table_stream,
 )
 
@@ -886,7 +887,7 @@ def st12(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # anchors come from the batch side (the already-ingested corpus);
     # the stream only ever sees the folded-in integer literals
-    batch = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    batch = read_parquet(spark, f"{sf_dir}/embeddings.parquet")
     anchor_rows = batch.where(F.col("vec_id") < 8).select(
         "vec_id", "embedding"
     ).collect()
@@ -1020,7 +1021,7 @@ def st14(spark: SparkSession, sf_dir: str) -> DataFrame:
         # both sides of the semi-join use this same helper
         return word_shingle_digests(col, 5)
 
-    batch = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    batch = read_parquet(spark, f"{sf_dir}/documents.parquet")
     eval_digests = (
         batch.where(F.col("doc_id") % 20 == 0)
         .select(F.explode(digests(F.col("text"))).alias("_d"))
@@ -1093,7 +1094,7 @@ FROM dist GROUP BY source ORDER BY source
 def st15(spark: SparkSession, sf_dir: str) -> DataFrame:
     from arc_jupyter_spark.operators.dedup import cdc_chunks
 
-    batch = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    batch = read_parquet(spark, f"{sf_dir}/documents.parquet")
     stream = read_table_stream(spark, sf_dir, "documents", batch.schema)
     docs = stream.select(
         "source", "doc_id", F.coalesce("text", F.lit("")).alias("text")
@@ -1174,7 +1175,7 @@ def st16(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from arc_jupyter_spark.operators.dedup import incremental_near_dedup
 
-    batch = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    batch = read_parquet(spark, f"{sf_dir}/documents.parquet")
     existing = batch.where(F.col("doc_id") % 3 == 0).select(
         "doc_id", "text"
     )
