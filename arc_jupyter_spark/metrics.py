@@ -9,20 +9,14 @@ read first drains the listener bus, so a stage whose last task has
 just finished is already COMPLETE in the store.
 
 Pattern for measuring one segment of work (bench.py's per-query and
-per-pipeline-stage records, the spill and skew probes): build a
-``SegmentMeter``, do the work, call ``segment()`` for the totals of
-the stages that completed in between.
+per-pipeline-stage records, selfcheck's per-query ``disk_spill_mb``):
+build a ``SegmentMeter``, do the work, call ``segment()`` for the
+totals of the stages that completed in between.
 """
 
 from __future__ import annotations
 
 MB = 2**20
-# task_quantiles reads these: min, median, max
-QUANTILES = (0.0, 0.5, 1.0)
-
-
-def _floats(seq) -> list[float]:
-    return [float(seq.apply(i)) for i in range(seq.size())]
 
 
 class SegmentMeter:
@@ -34,9 +28,6 @@ class SegmentMeter:
         self._bus = sc._jsc.sc().listenerBus()
         self._wrapper = jvm.java.lang.Class.forName(
             "org.apache.spark.status.StageDataWrapper")
-        self._quantiles = sc._gateway.new_array(jvm.double, len(QUANTILES))
-        for i, q in enumerate(QUANTILES):
-            self._quantiles[i] = q
         # stage attempts finish in completion-time order: a read walks
         # back only to the newest finish time of the previous read;
         # _seen holds the attempts already walked at or after it. The
@@ -97,26 +88,11 @@ class SegmentMeter:
             # partial-aggregate hash maps degrade under memory pressure
             # by EARLY FLUSH (emitting partial rows before full
             # combine), not by disk spill — visible as a shuffle-record
-            # increase at an unchanged result; the forced-spill harness
-            # reads this to classify map-combined plans (s13/s14-shaped)
-            # whose per-task state is bounded by construction
+            # increase at an unchanged result; the stage-metrics tests
+            # read it to tell a map stage that ran from a skipped one
             "shuffle_write_records": sum(s.shuffleWriteRecords() for s in stages),
             "mem_spill_mb": mb("memoryBytesSpilled"),
             "disk_spill_mb": mb("diskBytesSpilled"),
             "peak_execution_memory_mb": round(
                 max((s.peakExecutionMemory() for s in stages), default=0) / MB, 2),
-        }
-
-    def task_quantiles(self, stage) -> dict | None:
-        """Task duration (ms) and shuffle-read bytes at ``QUANTILES``
-        over the successful tasks of *stage* (a ``StageData`` from
-        ``new_stages``); None when it has no successful task."""
-        found = self._status.taskSummary(stage.stageId(), stage.attemptId(),
-                                         self._quantiles)
-        if found.isEmpty():
-            return None
-        dist = found.get()
-        return {
-            "duration_ms": _floats(dist.duration()),
-            "shuffle_read_bytes": _floats(dist.shuffleReadMetrics().readBytes()),
         }

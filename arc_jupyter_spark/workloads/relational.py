@@ -11,8 +11,9 @@ both engines, the long SUM is exact (so partitioning / summation
 order can never flip a rounding tie), and long sums codegen faster
 than both double and decimal sums. S is chosen per site so
 S * |x| * rows stays far below 2^63 (Spark wraps; DuckDB's HUGEINT
-doesn't — they'd diverge past that). Verified bit-for-bit across
-partitionings and engines in tools/exp_decimal_recipe.py.
+doesn't — they'd diverge past that). tools/selfcheck.py under
+perturbed partitioning checks every query that uses it bit-for-bit
+against DuckDB.
 """
 
 from __future__ import annotations

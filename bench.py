@@ -290,19 +290,20 @@ def main() -> int:
     # a warm cluster delivers.
     timings: dict[str, float] = {}
     first_pass: dict[str, float] = {}
-    # the best pass's build/exec split and stage totals (build and
-    # execution together), read after the wall is taken
+    # the best pass's build/exec split, stage totals, spill and peak
+    # execution memory (build and execution together), read after the
+    # wall is taken
     layers: dict[str, dict] = {}
     meter = SegmentMeter(spark)
     # best-of-3: this machine shows intermittent multi-second stalls
     # on otherwise-warm queries; a third pass makes the per-query min
     # a stable steady-state number.
-    # NOTE: unlike tools/scale_probe.py, NO per-query gc/clearCache
-    # here — an A/B at round 5 showed it does not help at this data
-    # volume (107.5s with vs 98.3s without, ambient load dominating),
-    # and changing the harness would break the r1→r5 comparability of
-    # the shared-18 subtotal. The accumulated-checkpoint-block artifact
-    # matters at the sf1 sweep's volume, not at sf0.1.
+    # NOTE: NO per-query gc/clearCache between queries — an A/B at
+    # round 5 showed it does not help at this data volume (107.5s with
+    # vs 98.3s without, ambient load dominating), and changing the
+    # harness would break the r1→r5 comparability of the shared-18
+    # subtotal. Accumulated checkpoint blocks matter at sf1's volume,
+    # not at sf0.1.
     for _pass in range(3):
         for name in HEADLINE:
             t0 = time.perf_counter()
@@ -322,6 +323,9 @@ def main() -> int:
                     "n_stages": seg["n_stages"],
                     "shuffle_write_mb": seg["shuffle_write_mb"],
                     "input_mb": seg["input_mb"],
+                    "disk_spill_mb": seg["disk_spill_mb"],
+                    "mem_spill_mb": seg["mem_spill_mb"],
+                    "peak_execution_memory_mb": seg["peak_execution_memory_mb"],
                 }
             del df, rows
 

@@ -1,8 +1,8 @@
 """Integrity of the replica-shifted sf1 scale point (tools/gen_scaled.py).
 
-The 3-point scaling story in SCALING.md rests on sf1 preserving the
-sf0.1 workload SHAPE — join fan-outs, group cardinality ratios,
-distinct-shingle disjointness. These tests pin that, and are skipped
+The 3-point scaling story (`git show cfcdf0a:SCALING.md`) rests on
+sf1 preserving the sf0.1 workload SHAPE — join fan-outs, group
+cardinality ratios, distinct-shingle disjointness. These tests pin that, and are skipped
 when the generated data is absent (it is .gitignored; regenerate with
 `python tools/gen_scaled.py`)."""
 

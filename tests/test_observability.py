@@ -115,17 +115,6 @@ def test_segment_meter_counts_work_after_a_failed_stage(spark):
     assert failed_job and not failed_job & {sid for sid, _ in meter._seen}
 
 
-def test_task_quantiles_of_a_multi_task_stage(spark):
-    from arc_jupyter_spark.metrics import SegmentMeter
-
-    meter = SegmentMeter(spark)
-    spark.range(0, 100_000, 1, 4).selectExpr("sum(id)").collect()
-    stage = next(s for s in meter.new_stages() if s.numCompleteTasks() > 1)
-    q = meter.task_quantiles(stage)
-    assert len(q["duration_ms"]) == 3 and q["duration_ms"] == sorted(q["duration_ms"])
-    assert len(q["shuffle_read_bytes"]) == 3
-
-
 _UI_REST = re.compile(r"""api/v1|spark\.ui\.enabled["']?\s*[:,=]\s*["']?true""", re.IGNORECASE)
 
 

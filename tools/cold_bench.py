@@ -153,8 +153,8 @@ def main() -> int:
     names = args.queries or bench.HEADLINE
     out_path = os.path.join(REPO, "COLD_BENCH.json")
     detail: dict[str, dict] = {}
-    # partial runs merge over the existing artifact (same contract as
-    # skew_probe.py) so one slow query can be re-measured alone
+    # partial runs merge over the existing artifact, so one slow query
+    # can be re-measured alone
     if args.queries and os.path.exists(out_path):
         with open(out_path) as fh:
             detail = json.load(fh).get("detail", {})

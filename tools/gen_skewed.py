@@ -1,245 +1,13 @@
-"""Generate a ZIPFIAN-SKEWED variant of the sf0.1 test tables.
+"""Adversarial graph fixture with an analytically known answer.
 
-All scaling evidence so far (SCALING.md's 3-point sweep) runs on
-uniform-ish TPC-H-shaped data; the salted operators (q42/q55) and the
-``max_doc_freq`` stop-shingle cap exist precisely for skew, but
-nothing measured them under a hot key. This writes
-``/root/repo/.scaledata/skew01`` — same schema and scale as
-``/root/testdata/sf0.1`` with deliberate hot-key mass:
-
-- ``events``: ~40% of all events remapped to ONE hot user_id (the
-  smallest c_custkey, so the q55 join still hits a dim row). The
-  remap key is ``xxhash64(event_id)`` — deterministic, reproducible.
-- ``documents``: a fixed 8-word sentence appended to ~50% of docs
-  (one shingle with corpus-scale doc-frequency — the d03/d17
-  stop-shingle cap must absorb it), and ``source`` rewritten to one
-  hot value on ~60% of docs (t17's per-source cap window must bound
-  it via WindowGroupLimit, not ship the hot source's full mass).
-- every other table: copied unchanged (selfcheck registers all ten
-  as DuckDB views up front, so the full set must exist).
-
-Correctness on the skewed data is still oracle-checkable: the DuckDB
-oracles are plain SQL over whatever parquet sits in the sf dir, so
-``python tools/selfcheck.py /root/repo/.scaledata/skew01 <query...>``
-closes the loop.
-
-``--graph`` mode (VERDICT r6 item 2) writes a SEPARATE fixture with a
-hot-community zipfian graph instead: a 3-key zipf head (6.25/1.6/1.6%
-of rows) remaps ``orders``/``lineitem`` keys so g01/g03's
-customer–supplier bipartite graph and g05's order–part graph each get
-a hot node whose DISTINCT degree saturates the other side's
-cardinality (~260x the median degree at sf1) while the total
-distinct-edge count shrinks <10% — see ``_zipf_head`` for why degree,
-not mass share, is the right dial. Separate dir because skew01/skew1
-keep ``lineitem`` byte-identical — that is the q42 host-noise-floor
-control's premise — while graph skew must touch exactly that table.
-
-Usage: python tools/gen_skewed.py [--src /root/testdata/sf0.1] [--out DIR]
-       python tools/gen_skewed.py --graph --src .scaledata/sf1 \
-           --out .scaledata/skewg1
+``onion_edges`` builds the deep-peel "onion" graph whose k-core is
+known in closed form: the iterative ``kcore`` loop needs one round per
+layer to peel it, and a hub node gives it a power-law degree head.
+tests/test_round9.py checks ``kcore`` against that closed form and
+against a brute-force peel.
 """
 
 from __future__ import annotations
-
-import argparse
-import json
-import os
-import sys
-
-sys.path.insert(0, "/root/repo")
-
-
-def write_meta(out: str, src: str, mode: str, **extra) -> None:
-    """Stamp the fixture with its generator provenance. skew_probe.py
-    refuses to compare a skewed dir against a uniform dir it was not
-    generated from (a stale sf0.1-sourced fixture probed against sf1
-    silently reintroduces the size-confounded comparison the CDC
-    fixture's byte-parity design exists to eliminate)."""
-    meta = {"src": os.path.abspath(src), "mode": mode, **extra}
-    os.makedirs(out, exist_ok=True)
-    with open(os.path.join(out, "_meta.json"), "w") as fh:
-        json.dump(meta, fh, indent=1)
-
-HOT_SENTENCE = (
-    " the quick brown fox jumps over the lazy dog"
-)  # 9 words -> one guaranteed-hot 8-shingle
-
-
-def _zipf_head(col, n_rows_hash_col, hot_base, shares=(4, 1, 1)):
-    """Remap a zipf head of rows onto ``len(shares)`` hot keys;
-    ``shares`` are 64ths of all rows per hot key (halving-style head),
-    chosen by a deterministic row hash; the rest keep their original
-    key. ``hot_base + k`` are the hot keys.
-
-    Default is deliberately GENTLE (6/64 ≈ 9.4% of row mass): in a
-    bipartite graph a hot node's DISTINCT degree saturates at the
-    other side's cardinality, so a heavy head only collapses distinct
-    edges (the round-7 first cut remapped 48% of orders and shrank
-    the distinct-edge graph ~2x, making the uniform-vs-skew wall
-    comparison apples-to-oranges) — while even 6% of sf1's orders
-    saturates the hot customer at ~10k distinct suppliers ≈ 260x the
-    median degree. Degree skew, not mass share, is what the join
-    reducer sees after DISTINCT."""
-    from pyspark.sql import functions as F
-
-    bucket = F.pmod(F.xxhash64(n_rows_hash_col), F.lit(64))
-    expr, lo = None, 0
-    for k, share in enumerate(shares):
-        hi = lo + share
-        cond = (bucket >= lo) & (bucket < hi)
-        expr = (F.when(cond, F.lit(hot_base + k)) if expr is None
-                else expr.when(cond, F.lit(hot_base + k)))
-        lo = hi
-    return expr.otherwise(col)
-
-
-def graph_skew(spark, src: str, out: str) -> int:
-    """Hot-community graph fixture: the g01/g03 bipartite graph
-    (o_custkey ↔ l_suppkey via o_orderkey) and the g05 graph
-    (l_orderkey ↔ l_partkey) each get a 3-key zipf head (6.25/1.6/1.6%
-    of rows — gentle by design, see ``_zipf_head``) that saturates the
-    hot node's distinct degree at the far side's cardinality. Key
-    domains are preserved (hot keys are existing min keys), so joins
-    against customer/supplier still hit dimension rows."""
-    from pyspark.sql import functions as F
-
-    orders = spark.read.parquet(f"{src}/orders.parquet")
-    lineitem = spark.read.parquet(f"{src}/lineitem.parquet")
-    hot_cust = orders.agg(F.min("o_custkey")).first()[0]
-    hot_supp = lineitem.agg(F.min("l_suppkey")).first()[0]
-    hot_part = lineitem.agg(F.min("l_partkey")).first()[0]
-
-    orders.withColumn(
-        "o_custkey", _zipf_head(F.col("o_custkey"), "o_orderkey", hot_cust)
-    ).write.mode("overwrite").parquet(f"{out}/orders.parquet")
-
-    li_row = (F.col("l_orderkey") * 8 + F.col("l_linenumber"))
-    (
-        lineitem
-        .withColumn("l_suppkey",
-                    _zipf_head(F.col("l_suppkey"), li_row, hot_supp))
-        .withColumn("l_partkey",
-                    _zipf_head(F.col("l_partkey"), li_row + 3, hot_part))
-        .write.mode("overwrite").parquet(f"{out}/lineitem.parquet")
-    )
-
-    so = spark.read.parquet(f"{out}/orders.parquet")
-    n = so.count()
-    hot_n = so.filter(F.col("o_custkey") == hot_cust).count()
-    write_meta(out, src, "graph", hot_cust=hot_cust, hot_orders=hot_n,
-               n_orders=n)
-    print(f"wrote {out}: hot customer {hot_cust} holds {hot_n}/{n} "
-          f"orders ({100 * hot_n / n:.0f}%)")
-    return 0
-
-
-def cdc_skew(spark, src: str, out: str) -> int:
-    """Identical-corpus fixture for the CDC family (VERDICT r7 item
-    3): ~60% of documents get ONE shared byte-identical text, so
-    every chunk digest of that text owns ~60% of ALL chunk
-    occurrences corpus-wide — the worst posting-list concentration
-    the keep-first aggregate (p11), the per-(source, dg) rollup
-    (d21), and the streaming dropDuplicates state (st15) can see.
-    The shared text is ~2000 chars (~30 expected chunks at mask=64),
-    so hot mass spreads over ~30 digests per the CDC cut rule —
-    exactly the identical-document shape the round-7 correctness test
-    (tests/test_round7.py) covers, now as a performance fixture.
-
-    Only ``documents`` changes; the other nine tables are copied so
-    selfcheck can register all views. The oracles run over whatever
-    parquet sits in the dir, so correctness on the skewed fixture
-    stays checkable end to end."""
-    from pyspark.sql import functions as F
-
-    docs = spark.read.parquet(f"{src}/documents.parquet")
-    # deterministic shared text sized to the CORPUS MEAN doc length so
-    # total input bytes match the uniform fixture (otherwise the wall
-    # factor confounds key skew with a bigger corpus — the first cut
-    # of this fixture used a ~2000-char shared text and carried 4.4x
-    # the bytes of its uniform baseline). At mask=64 a mean-length
-    # (~300 char) shared text yields ~4-5 chunks, so the hot mass
-    # concentrates on FEWER digests than the long-text variant —
-    # strictly more adversarial for the keep-first aggregate and the
-    # streaming dedup state.
-    mean_len = int(
-        docs.agg(F.avg(F.length(F.coalesce("text", F.lit(""))))).first()[0]
-    )
-    base = " ".join(
-        f"common boilerplate sentence number {i} repeated in most "
-        f"documents of this corpus"
-        for i in range(25)
-    )
-    # tile base past mean_len before slicing: base is a fixed ~1900
-    # char string, and a corpus whose mean doc length exceeds it would
-    # otherwise silently cap the shared text — re-confounding the
-    # uniform-vs-skew byte volumes this sizing exists to equalize
-    if len(base) < mean_len:
-        base = (base + " ") * (mean_len // len(base) + 1)
-    shared = base[:mean_len].rstrip()
-    skew_docs = docs.withColumn(
-        "text",
-        F.when(
-            F.pmod(F.xxhash64("doc_id"), F.lit(5)) < 3, F.lit(shared)
-        ).otherwise(F.col("text")),
-    ).withColumn(
-        "n_chars",
-        F.length(F.coalesce(F.col("text"), F.lit(""))).cast("bigint"),
-    )
-    skew_docs.write.mode("overwrite").parquet(f"{out}/documents.parquet")
-    for t in ("lineitem", "customer", "orders", "supplier", "part",
-              "region", "nation", "events", "embeddings"):
-        spark.read.parquet(f"{src}/{t}.parquet").write.mode(
-            "overwrite"
-        ).parquet(f"{out}/{t}.parquet")
-    sd = spark.read.parquet(f"{out}/documents.parquet")
-    n = sd.count()
-    hot_n = sd.filter(F.col("text") == shared).count()
-    write_meta(out, src, "cdc", hot_docs=hot_n, n_docs=n,
-               shared_chars=len(shared))
-    print(f"wrote {out}: {hot_n}/{n} docs byte-identical "
-          f"({100 * hot_n / n:.0f}%), shared text {len(shared)} chars")
-    return 0
-
-
-def emb_skew(spark, src: str, out: str) -> int:
-    """Hot-cluster embeddings fixture (VERDICT r8 item 1): ~50% of
-    all vectors are remapped into ONE dense cluster around vec 0's
-    embedding (blend 0.95*q + 0.05*orig, renormalization-free — the
-    cosine to q lands ~0.99+). Stresses two shapes at once:
-
-    - s16 range search: query 0's radius set becomes ~half the
-      corpus, so the per-query row_number cap's window sees one hot
-      query_id partition owning ~50% of all passing rows (the
-      WindowGroupLimit rank-limit pushdown is the mitigation);
-    - s11/s13 anchor/k-means assignment: ~half the corpus assigns to
-      anchor 0, so the per-cluster aggregate gets one hot cluster_id
-      key (map-side partial aggregation is the mitigation).
-
-    Query/anchor vectors (vec_id 0..7 in replica 0) keep their
-    original embeddings so the probe's query set is unchanged. Only
-    ``embeddings`` is written — the s-family probe queries load no
-    other table."""
-    from pyspark.sql import functions as F
-
-    emb = spark.read.parquet(f"{src}/embeddings.parquet")
-    q0 = emb.where(F.col("vec_id") == 0).select("embedding").first()[0]
-    qlit = F.array(*[F.lit(float(x)) for x in q0])
-    hot = (F.pmod(F.col("vec_id"), F.lit(2)) == 1) & (F.col("vec_id") > 7)
-    blended = F.zip_with(
-        F.col("embedding"), qlit,
-        lambda x, y: (x * F.lit(0.05) + y * F.lit(0.95)).cast("float"),
-    )
-    out_emb = emb.withColumn(
-        "embedding", F.when(hot, blended).otherwise(F.col("embedding"))
-    )
-    out_emb.write.mode("overwrite").parquet(f"{out}/embeddings.parquet")
-    se = spark.read.parquet(f"{out}/embeddings.parquet")
-    n = se.count()
-    hot_n = se.where(hot).count()
-    write_meta(out, src, "emb", hot_vectors=hot_n, n_vectors=n)
-    print(f"wrote {out}: {hot_n}/{n} vectors in the hot cluster "
-          f"({100 * hot_n / n:.0f}%)")
-    return 0
 
 
 def onion_edges(spark, depth: int, m: int, k: int,
@@ -304,145 +72,3 @@ def onion_edges(spark, depth: int, m: int, k: int,
     )
     return layers.unionAll(last).unionAll(cl).unionAll(hub_layer) \
         .unionAll(hub_core)
-
-
-def ring_edges(spark, n_nodes: int, k: int):
-    """Shallow control graph, byte-matched to the onion: every node
-    links forward to its next k/2 ring neighbours, so every degree is
-    exactly k and the peel is a no-op (fixpoint on round 2). Same
-    directed-pair count as an onion when ``n_nodes = pairs / (k/2)``."""
-    from pyspark.sql import functions as F
-
-    fwd = k // 2
-    idc = F.col("id")
-    return spark.range(n_nodes * fwd).select(
-        (idc / fwd).cast("bigint").alias("src"),
-        (((idc / fwd).cast("bigint") + 1 + idc % fwd) % n_nodes)
-        .alias("dst"),
-    )
-
-
-#: the at-scale onion shape: 24 peel rounds, 16,384 nodes/layer,
-#: k=32 — ~6.5M directed pairs (~13M mirrored edges), hub degree
-#: ~196k ≈ 6000x the median degree of 32.
-PEEL_DEPTH, PEEL_M, PEEL_K = 24, 16384, 32
-
-
-def peel_graph(spark, out: str, out_uniform: str) -> int:
-    """Write the deep-peel onion to ``out`` and its byte-matched
-    shallow ring control to ``out_uniform`` (each as edges.parquet).
-    The skew probe pairs them; _meta.json stamps the pairing so the
-    provenance check holds."""
-    onion = onion_edges(spark, PEEL_DEPTH, PEEL_M, PEEL_K)
-    onion.write.mode("overwrite").parquet(f"{out}/edges.parquet")
-    n_pairs = spark.read.parquet(f"{out}/edges.parquet").count()
-    n_ring = (n_pairs + PEEL_K // 2 - 1) // (PEEL_K // 2)
-    ring_edges(spark, n_ring, PEEL_K).write.mode("overwrite").parquet(
-        f"{out_uniform}/edges.parquet"
-    )
-    n_uni = spark.read.parquet(f"{out_uniform}/edges.parquet").count()
-    clique, hub_links = 64, 40
-    write_meta(out_uniform, out_uniform, "peel-uniform",
-               n_pairs=n_uni, k=PEEL_K)
-    write_meta(out, out_uniform, "peel", n_pairs=n_pairs, k=PEEL_K,
-               depth=PEEL_DEPTH, m=PEEL_M,
-               hub_degree=PEEL_DEPTH * PEEL_M // 2 + hub_links,
-               expected_core_nodes=clique + 1,
-               expected_degree_sum=clique * (clique - 1) + 2 * hub_links)
-    print(f"wrote {out}: {n_pairs} onion pairs (depth {PEEL_DEPTH}); "
-          f"{out_uniform}: {n_uni} ring pairs")
-    return 0
-
-
-def main() -> int:
-    from pyspark.sql import functions as F
-
-    from arc_jupyter_spark.session import build_session
-
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--src", default="/root/testdata/sf0.1")
-    ap.add_argument("--out", default="/root/repo/.scaledata/skew01")
-    ap.add_argument("--minimal", action="store_true",
-                    help="write only the probe tables (events, documents, "
-                         "lineitem, customer) — enough for skew_probe.py, "
-                         "NOT for selfcheck (which views all ten tables)")
-    ap.add_argument("--graph", action="store_true",
-                    help="write the hot-community graph fixture "
-                         "(orders+lineitem only) — see module docstring")
-    ap.add_argument("--cdc", action="store_true",
-                    help="write the identical-corpus CDC fixture "
-                         "(60%% byte-identical documents) — see "
-                         "cdc_skew docstring")
-    ap.add_argument("--emb", action="store_true",
-                    help="write the hot-cluster embeddings fixture "
-                         "(~50%% of vectors in one dense cluster) — "
-                         "see emb_skew docstring")
-    ap.add_argument("--peel", action="store_true",
-                    help="write the deep-peel onion graph fixture to "
-                         "--out and its shallow ring control to "
-                         "--out-uniform — see peel_graph docstring")
-    ap.add_argument("--out-uniform",
-                    default="/root/repo/.scaledata/g07uni",
-                    help="uniform-control dir for --peel")
-    args = ap.parse_args()
-
-    spark = build_session(app_name="gen-skewed")
-
-    if args.graph:
-        return graph_skew(spark, args.src, args.out)
-    if args.cdc:
-        return cdc_skew(spark, args.src, args.out)
-    if args.emb:
-        return emb_skew(spark, args.src, args.out)
-    if args.peel:
-        return peel_graph(spark, args.out, args.out_uniform)
-
-    customer = spark.read.parquet(f"{args.src}/customer.parquet")
-    hot_user = customer.agg(F.min("c_custkey")).first()[0]
-
-    events = spark.read.parquet(f"{args.src}/events.parquet")
-    skew_events = events.withColumn(
-        "user_id",
-        F.when(
-            F.pmod(F.xxhash64("event_id"), F.lit(5)) < 2, F.lit(hot_user)
-        ).otherwise(F.col("user_id")),
-    )
-    skew_events.write.mode("overwrite").parquet(f"{args.out}/events.parquet")
-
-    docs = spark.read.parquet(f"{args.src}/documents.parquet")
-    skew_docs = docs.withColumn(
-        "text",
-        F.when(
-            F.pmod(F.xxhash64("doc_id"), F.lit(2)) == 0,
-            F.concat(F.col("text"), F.lit(HOT_SENTENCE)),
-        ).otherwise(F.col("text")),
-    ).withColumn(
-        "source",
-        F.when(
-            F.pmod(F.xxhash64("doc_id"), F.lit(5)) < 3, F.lit("hot_source")
-        ).otherwise(F.col("source")),
-    )
-    skew_docs.write.mode("overwrite").parquet(f"{args.out}/documents.parquet")
-
-    copy_tables = ("lineitem", "customer") if args.minimal else (
-        "lineitem", "customer", "orders", "supplier", "part",
-        "region", "nation", "embeddings")
-    for t in copy_tables:
-        spark.read.parquet(f"{args.src}/{t}.parquet").write.mode(
-            "overwrite"
-        ).parquet(f"{args.out}/{t}.parquet")
-
-    n_ev = spark.read.parquet(f"{args.out}/events.parquet")
-    hot_n = n_ev.filter(F.col("user_id") == hot_user).count()
-    total = n_ev.count()
-    write_meta(args.out, args.src, "default", hot_user=hot_user,
-               hot_events=hot_n, n_events=total)
-    print(
-        f"wrote {args.out}: hot user {hot_user} holds {hot_n}/{total} events "
-        f"({100*hot_n/total:.0f}%)"
-    )
-    return 0
-
-
-if __name__ == "__main__":
-    raise SystemExit(main())

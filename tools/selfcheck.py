@@ -36,15 +36,21 @@ matrix can be committed per round (SELFCHECK_r{N}.json) and diffed by
 the judge instead of sampled. Queries with no oracle entry are
 recorded rows-only (hash_match/schema_match null), mirroring the
 driver's weaker check.
+
+Each ``--emit`` record also carries ``disk_spill_mb``: the MiB the
+query's stages spilled to disk (build and collect, read from
+``metrics.SegmentMeter``), so a run under forced spill thresholds
+(tests/test_spill.py) shows the spill path was taken.
 """
 
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 LOOSE = False
 
@@ -145,6 +151,7 @@ def main() -> int:
 
     from pyspark.sql import SparkSession
 
+    from arc_jupyter_spark.metrics import SegmentMeter
     from arc_jupyter_spark.workloads import oracle_sql, queries
 
     args = sys.argv[1:]
@@ -193,6 +200,7 @@ def main() -> int:
         )
 
     qs, oracles = queries(), oracle_sql()
+    meter = SegmentMeter(spark)
     failures = []
     report: dict[str, dict] = {}
     for name, fn in qs.items():
@@ -203,12 +211,15 @@ def main() -> int:
             sdf = fn(spark, sf_dir)
             scols = sdf.columns
             srows = [tuple(r) for r in sdf.collect()]
+            spill = meter.segment()["disk_spill_mb"]
         except Exception as exc:  # noqa: BLE001
+            meter.segment()  # the failed query's stages count for no one
             failures.append(name)
             report[name] = {
                 "rows_match": False, "schema_match": False,
                 "hash_match": False, "spark_rows": None,
                 "oracle_rows": None, "err": f"spark error: {exc}",
+                "disk_spill_mb": None,
             }
             print(f"FAIL {name}: spark error: {exc}")
             continue
@@ -216,7 +227,7 @@ def main() -> int:
             report[name] = {
                 "rows_match": len(srows) >= 0, "schema_match": None,
                 "hash_match": None, "spark_rows": len(srows),
-                "oracle_rows": None, "err": None,
+                "oracle_rows": None, "err": None, "disk_spill_mb": spill,
             }
             print(f"ok   {name}: rows-only ({len(srows)} rows, {time.time()-t0:.1f}s)")
             continue
@@ -231,6 +242,7 @@ def main() -> int:
                 "rows_match": False, "schema_match": False,
                 "hash_match": False, "spark_rows": len(srows),
                 "oracle_rows": None, "err": f"duckdb error: {exc}",
+                "disk_spill_mb": spill,
             }
             print(f"FAIL {name}: duckdb error: {exc}")
             continue
@@ -260,6 +272,7 @@ def main() -> int:
             "spark_rows": len(srows),
             "oracle_rows": len(orows),
             "err": None,
+            "disk_spill_mb": spill,
         }
         if problems:
             failures.append(name)
