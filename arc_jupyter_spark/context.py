@@ -9,8 +9,9 @@ the symbol table (ArcInterpreter.scala:476-487).
 
 from __future__ import annotations
 
+import contextlib
 from dataclasses import dataclass, field
-from typing import Any
+from typing import Any, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.storagelevel import StorageLevel
@@ -34,8 +35,8 @@ STORAGE_LEVELS: dict[str, StorageLevel] = {
 DEFAULT_STORAGE_LEVEL = "MEMORY_AND_DISK_SER"
 
 # Placeholder view name injected when a result-producing stage has no
-# outputView (reference: ArcInterpreter.scala:59, 246-254); dropped after
-# the cell completes (ArcInterpreter.scala:600).
+# outputView (reference: ArcInterpreter.scala:59, 246-254); dropped when
+# the cell succeeds (ArcInterpreter.scala:600).
 PLACEHOLDER_VIEW = "__arc_placeholder__"
 
 
@@ -72,6 +73,9 @@ class ArcContext:
     #: Arc deployment environment; stages with a non-empty
     #: ``environments`` list run only when this matches
     environment: str | None = None
+    #: views the open cell wrote: name -> the DataFrame it replaced, or
+    #: None; None outside a cell
+    _written: dict[str, DataFrame | None] | None = field(default=None, init=False, repr=False)
 
     # -- view registry (thin veneer over the Spark catalog) ------------
 
@@ -89,12 +93,16 @@ class ArcContext:
 
         Streaming DataFrames cannot be persisted — persist is ignored
         for them (matches Spark semantics the reference inherits).
+        Inside :meth:`cell`, the first write of each name records the
+        view it replaces.
         """
         if self.immutable_views and name in self.view_names():
             raise ValueError(f"view '{name}' already exists and views are immutable")
         if persist and not df.isStreaming:
             level = STORAGE_LEVELS[(storage_level or self.conf.storage_level).upper()]
             df = df.persist(level)
+        if self._written is not None and name not in self._written:
+            self._written[name] = self._temp_view(name)
         df.createOrReplaceTempView(name)
         self.user_data["lastView"] = name
         return df
@@ -104,6 +112,58 @@ class ArcContext:
 
     def view_names(self) -> list[str]:
         return [t.name for t in self.spark.catalog.listTables()]
+
+    def _temp_view(self, name: str) -> DataFrame | None:
+        """The temp view registered as *name* now, or None. The
+        DataFrame is analyzed here, so it keeps this plan after *name*
+        is replaced."""
+        if self.spark._jsparkSession.sessionState().catalog().getTempView(name).isEmpty():
+            return None
+        return self.spark.table(name)
+
+    def _put_back(self, name: str, old: DataFrame | None) -> None:
+        if old is None:
+            self.drop_view(name)
+        else:
+            old.createOrReplaceTempView(name)
+
+    @contextlib.contextmanager
+    def cell(self, keep_placeholder: bool = False) -> Iterator[None]:
+        """The boundary of one notebook cell, which owns its catalog
+        writes. If the cell fails, every view it wrote goes back to
+        what it was before the cell. If it succeeds, the placeholder
+        view goes (unless *keep_placeholder*: a streaming ``%sql``
+        keeps it), and a persisted view the cell replaced with a
+        different plan is unpersisted; an equal plan keeps its cache.
+        """
+        outer, self._written = self._written, {}
+        try:
+            yield
+        except BaseException:
+            for name, old in reversed(self._written.items()):
+                self._put_back(name, old)
+            raise
+        else:
+            for name, old in self._written.items():
+                if name == PLACEHOLDER_VIEW and not keep_placeholder:
+                    self.drop_view(name)
+                elif (old is not None and old.storageLevel != StorageLevel.NONE
+                      and not old.sameSemantics(self.table(name))):
+                    old.unpersist()
+        finally:
+            self._written = outer
+
+    @contextlib.contextmanager
+    def metadata_view(self, meta: DataFrame) -> Iterator[None]:
+        """Register *meta* (a ``metadata_dataframe``) as the
+        ``metadata`` view that metadata SQL reads; on exit put back
+        the view that had the name before, if any."""
+        old = self._temp_view("metadata")
+        meta.createOrReplaceTempView("metadata")
+        try:
+            yield
+        finally:
+            self._put_back("metadata", old)
 
     # -- streaming query lifecycle ------------------------------------
 

@@ -2,32 +2,28 @@
 
 Re-expression of the reference kernel's dispatch surface (reference:
 ArcInterpreter.scala:242-296 dispatch table; 298-306 common options;
-663-677 quote-aware arg parser; 400-402 secret scan; 246-254
-placeholder outputView injection; 600 placeholder cleanup). The
-interpreter is frontend-agnostic: it returns a :class:`CellResult`
+663-677 quote-aware arg parser; 400-402 secret scan; 246-258 stage
+magics compiled to stage configs, with placeholder outputView
+injection; 600 placeholder cleanup). The interpreter is
+frontend-agnostic: it returns a :class:`CellResult`
 (DataFrame + rendered text/HTML) and never talks to Jupyter directly —
 a kernel shell is a thin wrapper over :meth:`Interpreter.execute`.
 """
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import re
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from datetime import datetime, timezone
 from typing import Any, Callable
 
 from pyspark.sql import DataFrame
 
 from arc_jupyter_spark import __version__, render
-from arc_jupyter_spark.context import (
-    PLACEHOLDER_VIEW,
-    ArcContext,
-    DisplayConf,
-    STORAGE_LEVELS,
-)
-from arc_jupyter_spark.operators.execute import ValidationError
+from arc_jupyter_spark.context import ArcContext, STORAGE_LEVELS
 from arc_jupyter_spark.operators.metadata import (
     metadata_dataframe,
     schema_to_arc_metadata,
@@ -43,11 +39,15 @@ SECRET_PATTERN = re.compile(
     r'"(token|signature|accessKey|secret|secretAccessKey)"\s*:\s*"'
 )
 
-# Options every magic accepts (reference: ArcInterpreter.scala:298-306).
-COMMON_OPTIONS = {
-    "name", "outputView", "numRows", "truncate", "persist", "streaming",
-    "streamingDuration", "monospace", "leftAlign", "datasetLabels",
-    "showLog", "environments", "inputView", "sqlParams",
+# Magics that compile to one registered stage, with the SQL body as its
+# ``sql`` (reference: ArcInterpreter.scala:246-258).
+STAGE_MAGICS = {
+    "sql": "SQLTransform",
+    "sqlvalidate": "SQLValidate",
+    "log": "LogExecute",
+    "configexecute": "ConfigExecute",
+    "metadatafilter": "MetadataFilterTransform",
+    "metadatavalidate": "MetadataValidate",
 }
 
 
@@ -82,6 +82,20 @@ def _int(value: str | None, default: int) -> int:
         return int(value) if value is not None else default
     except ValueError:
         return default
+
+
+def stage_config(magic: str, args: dict[str, str], body: str) -> dict[str, Any]:
+    """The stage config a stage magic compiles to, with the types HOCON
+    would give: ``persist`` a bool, ``sqlParams`` (``k=v,...``) the
+    ``params`` object."""
+    config: dict[str, Any] = {"type": STAGE_MAGICS[magic], "sql": body}
+    config.update({k: args[k] for k in ("name", "inputView", "outputView") if k in args})
+    if "persist" in args:
+        config["persist"] = _bool(args["persist"])
+    if args.get("sqlParams"):
+        pairs = (p.split("=", 1) for p in args["sqlParams"].split(",") if "=" in p)
+        config["params"] = {k.strip(): v.strip() for k, v in pairs}
+    return config
 
 
 def _default_session_factory(master: str, old_session=None):
@@ -153,14 +167,22 @@ class Interpreter:
         if first.startswith("%"):
             parts = first.split(None, 1)
             magic = parts[0][1:].lower()
-            argline = parts[1] if len(parts) > 1 else ""
+            args = parse_args(parts[1] if len(parts) > 1 else "")
+        else:
+            # bare cells are full Arc pipeline configs
+            # (reference: ArcInterpreter.scala:244, 295)
+            magic, args, rest = "arc", {}, cell
+        if magic in STAGE_MAGICS:
+            stages = parse_pipeline([stage_config(magic, args, rest)])
+            run = functools.partial(self._run, stages, args)
+        else:
             handler = getattr(self, f"magic_{magic}", None)
             if handler is None:
                 raise ValueError(f"unknown magic '%{magic}'")
-            return handler(parse_args(argline), rest)
-        # bare cells are full Arc pipeline configs
-        # (reference: ArcInterpreter.scala:244, 295)
-        return self.magic_arc({}, cell)
+            run = functools.partial(handler, args, rest)
+        streaming = magic == "sql" and _bool(args.get("streaming"), self.ctx.conf.streaming)
+        with self.ctx.cell(keep_placeholder=streaming):
+            return run()
 
     # -- rendering helper ---------------------------------------------
 
@@ -197,76 +219,6 @@ class Interpreter:
         )
         return CellResult(df=df, text=text, html=html)
 
-    def _output_view(self, args: dict[str, str]) -> tuple[str, bool]:
-        """outputView or the injected placeholder
-        (reference: ArcInterpreter.scala:246-254)."""
-        view = args.get("outputView")
-        if view:
-            return view, False
-        return PLACEHOLDER_VIEW, True
-
-    def _sql_params(self, args: dict[str, str]) -> dict[str, str]:
-        extra: dict[str, str] = {}
-        raw = args.get("sqlParams")
-        if raw:
-            for pair in raw.split(","):
-                if "=" in pair:
-                    k, v = pair.split("=", 1)
-                    extra[k.strip()] = v.strip()
-        return self.ctx.merged_params(extra)
-
-    # -- SQL magics ----------------------------------------------------
-
-    def magic_sql(self, args: dict[str, str], body: str) -> CellResult:
-        stmt = inject_parameters(body, self._sql_params(args))
-        streaming = _bool(args.get("streaming"), self.ctx.conf.streaming)
-        df = self.ctx.spark.sql(stmt)
-        view, is_placeholder = self._output_view(args)
-        self.ctx.register(df, view, persist=_bool(args.get("persist")))
-        try:
-            return self._render(df, args, label=view)
-        finally:
-            # a cell that fails while rendering must not leave it behind
-            if is_placeholder and not streaming:
-                self.ctx.drop_view(view)  # reference: ArcInterpreter.scala:600
-
-    def magic_sqlvalidate(self, args: dict[str, str], body: str) -> CellResult:
-        stmt = inject_parameters(body, self._sql_params(args))
-        row = self.ctx.spark.sql(stmt).first()
-        if row is None or len(row) != 2:
-            raise ValidationError(
-                "%sqlvalidate query must return exactly one row [valid: boolean, message]"
-            )
-        valid, message = bool(row[0]), row[1]
-        try:
-            message = json.loads(message) if isinstance(message, str) else message
-        except (TypeError, json.JSONDecodeError):
-            pass
-        if not valid:
-            raise ValidationError(f"validation failed: {message}")
-        return CellResult(text=json.dumps(message) if not isinstance(message, str) else message,
-                          data=message)
-
-    def magic_configexecute(self, args: dict[str, str], body: str) -> CellResult:
-        stmt = inject_parameters(body, self._sql_params(args))
-        row = self.ctx.spark.sql(stmt).first()
-        if row is None:
-            raise ValidationError("%configexecute query returned no rows")
-        parsed = json.loads(row[0])
-        if not isinstance(parsed, dict):
-            raise ValidationError("%configexecute must return a JSON object")
-        self.ctx.env.update({k: str(v) for k, v in parsed.items()})
-        return CellResult(text=json.dumps(parsed), data=parsed)
-
-    def magic_log(self, args: dict[str, str], body: str) -> CellResult:
-        import logging
-
-        stmt = inject_parameters(body, self._sql_params(args))
-        row = self.ctx.spark.sql(stmt).first()
-        message = row[0] if row is not None else None
-        logging.getLogger("arc_jupyter_spark").info(message)
-        return CellResult(text=str(message), data=message)
-
     # -- metadata magics ----------------------------------------------
 
     def magic_metadata(self, args: dict[str, str], body: str) -> CellResult:
@@ -300,37 +252,6 @@ class Interpreter:
         plan = plan_string(self.ctx.table(view))
         findings = analyze_plan(plan)
         return CellResult(text=report(findings, plan), data=[f.__dict__ for f in findings])
-
-    def magic_metadatafilter(self, args: dict[str, str], body: str) -> CellResult:
-        view, is_placeholder = self._output_view(args)
-        stages = parse_pipeline([{
-            "type": "MetadataFilterTransform",
-            "name": args.get("name", "metadatafilter"),
-            "inputView": args["inputView"],
-            "outputView": view,
-            "sql": body,
-        }])
-        try:
-            return self._render(run_pipeline(stages, self.ctx), args)
-        finally:
-            if is_placeholder:
-                self.ctx.drop_view(view)
-
-    def magic_metadatavalidate(self, args: dict[str, str], body: str) -> CellResult:
-        meta = metadata_dataframe(self.ctx.spark, self.ctx.table(args["inputView"]))
-        meta.createOrReplaceTempView("metadata")
-        try:
-            stmt = inject_parameters(body, self._sql_params(args))
-            row = self.ctx.spark.sql(stmt).first()
-        finally:
-            self.ctx.spark.catalog.dropTempView("metadata")
-        if row is None or len(row) != 2:
-            raise ValidationError(
-                "%metadatavalidate query must return one row [valid, message]"
-            )
-        if not bool(row[0]):
-            raise ValidationError(f"metadata validation failed: {row[1]}")
-        return CellResult(text=str(row[1]), data=row[1])
 
     # -- session magics ------------------------------------------------
 
@@ -426,7 +347,7 @@ class Interpreter:
         tears down the session so the next cell executes on the new
         cluster). Registered temp views do NOT survive: they belong to
         the old session, exactly as in the reference. Neither does
-        ``user_data`` (lastView, log_messages): it describes state of
+        ``user_data`` (lastView, streaming queries): it describes state of
         the torn-down session. Tracked streaming queries are stopped
         FIRST — with an injected factory that keeps the JVM alive,
         they would otherwise keep running untracked after the swap.
@@ -521,13 +442,15 @@ class Interpreter:
         ``${BASE}"/file.csv"`` joins correctly — textual
         pre-substitution would weld the quotes into the value;
         ``${param}`` inside SQL strings resolves at stage runtime."""
-        import os
-
-        from arc_jupyter_spark.plugins import LIFECYCLE_PLUGINS
-
         env = dict(os.environ)
         env.update(self.ctx.merged_params())
-        stages = parse_pipeline(body, env=env)
+        return self._run(parse_pipeline(body, env=env), args)
+
+    def _run(self, stages: list, args: dict[str, str]) -> CellResult:
+        """Run *stages* with the active lifecycle plugins; render the
+        result DataFrame, else show the last stage's ``value``."""
+        from arc_jupyter_spark.plugins import LIFECYCLE_PLUGINS
+
         plugins = [LIFECYCLE_PLUGINS[n] for n in self.lifecycle]
 
         def before_stage(stage):
@@ -545,9 +468,12 @@ class Interpreter:
             before_stage=before_stage if plugins else None,
             after_stage=after_stage if plugins else None,
         )
-        if df is None:
+        if df is not None:
+            return self._render(df, args, label=getattr(stages[-1], "output_view", None))
+        value = stages[-1].value if stages else None
+        if value is None:
             return CellResult(text="")
-        return self._render(df, args)
+        return CellResult(text=value if isinstance(value, str) else json.dumps(value), data=value)
 
 
 def format_error(exc: BaseException, extended: bool = False) -> str:

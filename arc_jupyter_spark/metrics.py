@@ -28,6 +28,9 @@ class SegmentMeter:
         self._bus = sc._jsc.sc().listenerBus()
         self._wrapper = jvm.java.lang.Class.forName(
             "org.apache.spark.status.StageDataWrapper")
+        # taskSummary at quantile 1.0: the largest value of any task
+        self._max_quantile = sc._gateway.new_array(jvm.double, 1)
+        self._max_quantile[0] = 1.0
         # stage attempts finish in completion-time order: a read walks
         # back only to the newest finish time of the previous read;
         # _seen holds the attempts already walked at or after it. The
@@ -70,10 +73,12 @@ class SegmentMeter:
     def segment(self) -> dict:
         """Totals for stages completed since the last call (or init).
 
-        MiB-denominated sums plus the max single-stage
-        ``peakExecutionMemory`` (the task-aggregated unroll/execution
-        memory high-water mark — the number that predicts whether a
-        100× scale-up fits executor memory or spills).
+        MiB-denominated sums plus the largest peak execution memory of
+        any single task (the high-water mark of one task's unroll and
+        execution memory — the number that predicts whether a 100×
+        scale-up fits executor memory or spills). The stage's own
+        ``peakExecutionMemory`` is the sum of its task peaks, so it
+        grows with the task count.
         """
         stages = self.new_stages()
 
@@ -94,5 +99,12 @@ class SegmentMeter:
             "mem_spill_mb": mb("memoryBytesSpilled"),
             "disk_spill_mb": mb("diskBytesSpilled"),
             "peak_execution_memory_mb": round(
-                max((s.peakExecutionMemory() for s in stages), default=0) / MB, 2),
+                max((self._task_peak(s) for s in stages), default=0) / MB, 2),
         }
+
+    def _task_peak(self, stage) -> float:
+        """Largest ``peakExecutionMemory`` of a successful task of
+        *stage* (a ``StageData``), in bytes."""
+        found = self._status.taskSummary(stage.stageId(), stage.attemptId(),
+                                         self._max_quantile)
+        return 0.0 if found.isEmpty() else found.get().peakExecutionMemory().apply(0)

@@ -32,7 +32,8 @@ class ValidationError(Exception):
 class SQLValidate(PipelineStage):
     """Run SQL that must return exactly one row ``[valid, message]``;
     raise when not valid (reference: ArcInterpreter.scala:255-258,
-    Common.scala:434-447)."""
+    Common.scala:434-447). ``value`` is the message, parsed when it is
+    JSON."""
 
     stage_type = "SQLValidate"
     stage_kind = "validate"
@@ -46,17 +47,35 @@ class SQLValidate(PipelineStage):
         rows = ctx.spark.sql(stmt).collect()
         if len(rows) != 1 or len(rows[0]) < 2:
             raise ValidationError(
-                f"SQLValidate '{self.name}' must return exactly 1 row with "
+                f"{self.stage_type} '{self.name}' must return exactly 1 row with "
                 f"[valid: boolean, message] — got {len(rows)} row(s)"
             )
         valid, message = bool(rows[0][0]), rows[0][1]
         try:
-            detail = json.loads(message) if isinstance(message, str) else message
+            self.value = json.loads(message) if isinstance(message, str) else message
         except (TypeError, ValueError):
-            detail = message
+            self.value = message
         if not valid:
-            raise ValidationError(f"SQLValidate '{self.name}' failed: {message}", detail)
-        logger.info("SQLValidate %s passed: %s", self.name, message)
+            raise ValidationError(f"{self.stage_type} '{self.name}' failed: {message}", self.value)
+        logger.info("%s %s passed: %s", self.stage_type, self.name, message)
+
+
+@register_stage
+class MetadataValidate(SQLValidate):
+    """SQLValidate over the metadata-as-table of a view, registered as
+    ``metadata`` (reference: Common.scala:404-423)."""
+
+    stage_type = "MetadataValidate"
+
+    def __init__(self, input_view: str = "", **kwargs: Any) -> None:
+        super().__init__(**kwargs)
+        self.input_view = input_view
+
+    def execute(self, ctx: ArcContext) -> None:
+        from arc_jupyter_spark.operators.metadata import metadata_dataframe
+
+        with ctx.metadata_view(metadata_dataframe(ctx.spark, ctx.table(self.input_view))):
+            super().execute(ctx)
 
 
 @register_stage
@@ -91,33 +110,9 @@ class EqualityValidate(PipelineStage):
 
 
 @register_stage
-class MetadataValidate(PipelineStage):
-    """SQLValidate over the metadata-as-table of a view
-    (reference: Common.scala:404-423)."""
-
-    stage_type = "MetadataValidate"
-    stage_kind = "validate"
-
-    def __init__(self, input_view: str = "", sql: str = "", **kwargs: Any) -> None:
-        super().__init__(**kwargs)
-        self.input_view = input_view
-        self.sql = sql
-
-    def execute(self, ctx: ArcContext) -> None:
-        from arc_jupyter_spark.operators.metadata import metadata_dataframe
-
-        meta = metadata_dataframe(ctx.spark, ctx.table(self.input_view))
-        meta.createOrReplaceTempView("metadata")
-        try:
-            SQLValidate(name=self.name, sql=self.sql, params=self.params).execute(ctx)
-        finally:
-            ctx.spark.catalog.dropTempView("metadata")
-
-
-@register_stage
 class LogExecute(PipelineStage):
-    """Run SQL returning one JSON ``message``; write to the structured
-    log (reference: Common.scala:368-380)."""
+    """Run SQL returning one JSON ``message``; keep it as ``value`` and
+    write it to the structured log (reference: Common.scala:368-380)."""
 
     stage_type = "LogExecute"
     stage_kind = "execute"
@@ -128,15 +123,15 @@ class LogExecute(PipelineStage):
 
     def execute(self, ctx: ArcContext) -> None:
         row = ctx.spark.sql(self.substitute(self.sql, ctx)).first()
-        message = row[0] if row else None
-        logger.info("LogExecute %s: %s", self.name, message)
-        ctx.user_data.setdefault("log_messages", []).append(message)
+        self.value = row[0] if row else None
+        logger.info(self.value)
 
 
 @register_stage
 class ConfigExecute(PipelineStage):
     """Run SQL returning one JSON string; merge parsed keys into the
-    session env (reference: Common.scala:381-393, CHANGELOG.md:81)."""
+    session env, and keep the object as ``value`` (reference:
+    Common.scala:381-393, CHANGELOG.md:81)."""
 
     stage_type = "ConfigExecute"
     stage_kind = "execute"
@@ -149,10 +144,10 @@ class ConfigExecute(PipelineStage):
         row = ctx.spark.sql(self.substitute(self.sql, ctx)).first()
         if row is None or row[0] is None:
             raise ValidationError(f"ConfigExecute '{self.name}' returned no JSON")
-        parsed = json.loads(row[0])
-        if not isinstance(parsed, dict):
+        self.value = json.loads(row[0])
+        if not isinstance(self.value, dict):
             raise ValidationError(f"ConfigExecute '{self.name}' must return a JSON object")
-        ctx.env.update({k: str(v) for k, v in parsed.items()})
+        ctx.env.update({k: str(v) for k, v in self.value.items()})
 
 
 @register_stage

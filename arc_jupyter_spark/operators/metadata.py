@@ -19,7 +19,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
-from arc_jupyter_spark.context import ArcContext
+from arc_jupyter_spark.context import PLACEHOLDER_VIEW, ArcContext
 from arc_jupyter_spark.plans.pipeline import PipelineStage, register_stage
 
 
@@ -172,7 +172,7 @@ class MetadataFilterTransform(PipelineStage):
     def __init__(
         self,
         input_view: str = "",
-        output_view: str = "",
+        output_view: str = PLACEHOLDER_VIEW,
         sql: str = "",
         **kwargs: Any,
     ) -> None:
@@ -183,12 +183,8 @@ class MetadataFilterTransform(PipelineStage):
 
     def execute(self, ctx: ArcContext) -> DataFrame:
         df = ctx.table(self.input_view)
-        meta = metadata_dataframe(ctx.spark, df)
-        meta.createOrReplaceTempView("metadata")
-        try:
+        with ctx.metadata_view(metadata_dataframe(ctx.spark, df)):
             stmt = self.substitute(self.sql, ctx)
             keep = [r["name"] for r in ctx.spark.sql(stmt).select("name").collect()]
-        finally:
-            ctx.spark.catalog.dropTempView("metadata")
         out = df.select(*[c for c in df.columns if c in set(keep)])
         return ctx.register(out, self.output_view, persist=self.persist)

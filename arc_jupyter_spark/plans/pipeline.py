@@ -41,6 +41,9 @@ class PipelineStage(abc.ABC):
     stage_type: str = "AbstractStage"
     #: 'extract' | 'transform' | 'load' | 'execute' | 'validate'
     stage_kind: str = "transform"
+    #: what the stage yields that is not a DataFrame (a validation
+    #: message, a logged value, a config object); set by ``execute``
+    value: Any = None
 
     def __init__(
         self,

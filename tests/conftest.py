@@ -9,10 +9,12 @@ from pathlib import Path
 
 import pytest
 
-sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+#: the checkout these tests belong to
+REPO = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(REPO))
 
 SF_DIR = "/root/testdata/sf0.001"
-SF1_DIR = str(Path(__file__).resolve().parent.parent / ".scaledata" / "sf1")
+SF1_DIR = str(REPO / ".scaledata" / "sf1")
 
 
 @pytest.fixture(scope="session")

@@ -12,8 +12,9 @@ import os
 
 import pytest
 
+from tests.conftest import SF1_DIR as SF1
+
 SF01 = "/root/testdata/sf0.1"
-SF1 = "/root/repo/.scaledata/sf1"
 
 pytestmark = pytest.mark.skipif(
     not os.path.isdir(SF1), reason="sf1 not generated (tools/gen_scaled.py)"

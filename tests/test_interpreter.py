@@ -429,3 +429,112 @@ def test_plan_reports_from_one_plan_string(interp, monkeypatch):
     findings = [advisor.Finding(**d) for d in res.data]
     assert findings == advisor.analyze_plan(plans[0])
     assert res.text == "\n".join(str(f) for f in findings) + "\n\n" + plans[0]
+
+
+# -- stage magics and the cell boundary --------------------------------
+
+STAGE_MAGIC_CELLS = [
+    ("SQLTransform", "%sql\nSELECT 1 AS a"),
+    ("SQLValidate", "%sqlvalidate\nSELECT TRUE, 'ok'"),
+    ("LogExecute", "%log\nSELECT 'spy' AS message"),
+    ("ConfigExecute", "%configexecute\nSELECT to_json(named_struct('SPY', '1'))"),
+    ("MetadataFilterTransform", "%metadatafilter inputView=spy_src\nSELECT * FROM metadata"),
+    ("MetadataValidate", "%metadatavalidate inputView=spy_src\nSELECT COUNT(*) = 1, 'ok' FROM metadata"),
+]
+
+
+def test_each_stage_magic_runs_its_registered_stage(interp, monkeypatch):
+    from arc_jupyter_spark.plans.pipeline import STAGE_REGISTRY
+
+    ran = []
+    for stage_type, _ in STAGE_MAGIC_CELLS:
+        cls = STAGE_REGISTRY[stage_type]
+
+        def execute(self, ctx, cls=cls):
+            ran.append(self.stage_type)
+            return cls.execute(self, ctx)
+
+        monkeypatch.setitem(STAGE_REGISTRY, stage_type, type(cls.__name__, (cls,), {"execute": execute}))
+    interp.ctx.register(interp.ctx.spark.range(3), "spy_src")
+    for _, cell in STAGE_MAGIC_CELLS:
+        interp.execute(cell)
+    assert ran == [stage_type for stage_type, _ in STAGE_MAGIC_CELLS]
+
+
+def test_stage_magic_args_become_typed_stage_config():
+    from arc_jupyter_spark.interpreter import stage_config
+
+    args = parse_args('name="s" outputView=v inputView=i persist=true sqlParams=a=1,b=x numRows=5')
+    assert stage_config("sql", args, "SELECT ${a}") == {
+        "type": "SQLTransform", "sql": "SELECT ${a}", "name": "s", "inputView": "i",
+        "outputView": "v", "persist": True, "params": {"a": "1", "b": "x"},
+    }
+
+
+def test_sqlvalidate_keeps_the_stage_row_rule(interp):
+    with pytest.raises(ValidationError, match="exactly 1 row"):
+        interp.execute("%sqlvalidate\nSELECT TRUE, 'ok' FROM range(2)")
+
+
+def test_failed_pipeline_cell_leaves_catalog_unchanged(interp):
+    before = sorted(interp.ctx.view_names())
+    with pytest.raises(Exception, match="UNRESOLVED_COLUMN"):
+        interp.execute(
+            '{ type = SQLTransform, sql = "SELECT 1 AS a", outputView = fail_stage_one }\n'
+            '{ type = SQLTransform, sql = "SELECT no_col FROM fail_stage_one", '
+            "outputView = fail_stage_two }")
+    assert sorted(interp.ctx.view_names()) == before
+
+
+def test_failed_sql_cell_gives_a_replaced_view_its_old_plan(interp):
+    spark = interp.ctx.spark
+    interp.execute("%sql outputView=fail_y\nSELECT id AS a FROM range(2)")
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        with pytest.raises(Exception, match="NumberFormatException|CAST_INVALID_INPUT"):
+            interp.execute(
+                "%sql outputView=fail_y\nSELECT CAST(concat('x', id) AS INT) AS v FROM range(3)")
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
+    assert interp.ctx.table("fail_y").columns == ["a"]
+    assert sorted(r.a for r in interp.ctx.table("fail_y").collect()) == [0, 1]
+
+
+def test_metadata_magics_put_back_a_user_metadata_view(interp):
+    spark = interp.ctx.spark
+    spark.range(1).toDF("mine").createOrReplaceTempView("metadata")
+    interp.ctx.register(spark.range(3), "mv_user_src")
+    try:
+        assert interp.execute(
+            "%metadatavalidate inputView=mv_user_src\nSELECT COUNT(*) = 1, 'one' FROM metadata"
+        ).text == "one"
+        assert spark.table("metadata").columns == ["mine"]
+        with pytest.raises(ValidationError):
+            interp.execute(
+                "%metadatavalidate inputView=mv_user_src\nSELECT FALSE, 'no' FROM metadata")
+        assert spark.table("metadata").columns == ["mine"]
+        res = interp.execute("%metadatafilter inputView=mv_user_src\nSELECT * FROM metadata")
+        assert res.df.columns == ["id"]
+        assert spark.table("metadata").columns == ["mine"]
+    finally:
+        spark.catalog.dropTempView("metadata")
+
+
+def test_replaced_persisted_view_releases_its_cache(interp):
+    sc = interp.ctx.spark.sparkContext._jsc.sc()
+
+    def cached_rdds():
+        infos = sc.getRDDStorageInfo()
+        return {info.id() for info in infos}
+
+    before = cached_rdds()
+    for n in (1, 2, 3):
+        interp.execute(f"%sql outputView=rel_p persist=true\nSELECT id * {n} AS v FROM range(10)")
+    kept = cached_rdds() - before
+    assert len(kept) == 1
+    # the same plan again keeps the cache it already has
+    interp.execute("%sql outputView=rel_p persist=true\nSELECT id * 3 AS v FROM range(10)")
+    assert cached_rdds() - before == kept
+    assert interp.ctx.table("rel_p").storageLevel.useMemory
+    interp.ctx.table("rel_p").unpersist()

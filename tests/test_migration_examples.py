@@ -9,11 +9,11 @@ from pyspark.sql import functions as F
 from arc_jupyter_spark.context import ArcContext
 from arc_jupyter_spark.interpreter import Interpreter
 
-from tests.conftest import SF_DIR
+from tests.conftest import REPO, SF_DIR
 
 
 def _blocks():
-    text = open("/root/repo/MIGRATION.md").read()
+    text = (REPO / "MIGRATION.md").read_text()
     return re.findall(r"```(?:\n|.)*?```", text)
 
 

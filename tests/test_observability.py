@@ -118,6 +118,29 @@ def test_segment_meter_counts_work_after_a_failed_stage(spark):
 _UI_REST = re.compile(r"""api/v1|spark\.ui\.enabled["']?\s*[:,=]\s*["']?true""", re.IGNORECASE)
 
 
+def test_peak_execution_memory_is_the_largest_task_peak(spark):
+    from arc_jupyter_spark.metrics import MB, SegmentMeter
+
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    coalesce = spark.conf.get(key)
+    spark.conf.set(key, "false")  # keep the 8 reduce tasks
+    try:
+        meter, probe = SegmentMeter(spark), SegmentMeter(spark)
+        spark.range(0, 200_000, 1, 8).groupBy((F.col("id") % 10_000).alias("k")).count().collect()
+    finally:
+        spark.conf.set(key, coalesce)
+    reading = meter.segment()["peak_execution_memory_mb"]
+    store = spark.sparkContext._jsc.sc().statusStore()
+    stages = probe.new_stages()
+    assert [s.numTasks() for s in stages] == [8, 8]
+    tasks = [store.taskList(s.stageId(), s.attemptId(), 100) for s in stages]
+    task_peaks = [seq.apply(i).taskMetrics().get().peakExecutionMemory()
+                  for seq in tasks for i in range(seq.size())]
+    assert reading == round(max(task_peaks) / MB, 2) > 0
+    # a stage's own figure adds up the peaks of its 8 tasks
+    assert reading < round(max(s.peakExecutionMemory() for s in stages) / MB, 2)
+
+
 def test_one_in_process_metrics_core():
     """Stage metrics come from the status store only: no package or
     tool module calls the UI REST API or turns the UI server on."""

@@ -29,7 +29,8 @@ import os
 
 import pytest
 
-SF1_DIR = "/root/repo/.scaledata/sf1"
+from tests.conftest import SF1_DIR
+
 BASE_DIR = "/root/testdata/sf0.001"
 
 pytestmark = pytest.mark.skipif(

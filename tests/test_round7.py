@@ -6,6 +6,8 @@ from __future__ import annotations
 import pytest
 from hypothesis import HealthCheck, given, settings, strategies as st
 
+from tests.conftest import REPO
+
 SETTINGS = settings(
     max_examples=5,
     deadline=None,
@@ -274,7 +276,7 @@ def test_affine_alphabets_distinct_and_caesar_compatible():
     import importlib.util
 
     spec = importlib.util.spec_from_file_location(
-        "gen_scaled", "/root/repo/tools/gen_scaled.py")
+        "gen_scaled", REPO / "tools" / "gen_scaled.py")
     m = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(m)
 

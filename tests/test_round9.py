@@ -70,9 +70,6 @@ def test_onion_gadget_core_is_analytic(spark):
     predicted within-core degrees — and agree with a brute-force
     reference peel, so the adversarial g07 performance fixture is
     also correctness-checked."""
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     from pyspark.sql import functions as F
 
     from arc_jupyter_spark.operators.graph import kcore

@@ -27,9 +27,10 @@ Usage: python tools/dtype_sweep.py [--emit-map FILE] [sf_dir] [query ...]
 from __future__ import annotations
 
 import json
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import pandas as pd  # noqa: E402
 from pyspark.sql import types as T  # noqa: E402

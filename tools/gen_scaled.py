@@ -27,7 +27,8 @@ shifted keys — a standard cardinality-scaling technique:
 This is for SCALING measurement (wall-time exponents), not
 correctness oracles — the synthetic text/vector perturbations are
 documented distortions. Output dir defaults to
-``/root/repo/.scaledata/sf1`` (never writes to /root/testdata).
+``.scaledata/sf1`` in this checkout (never writes to the source
+data directory).
 
 Text perturbation is an AFFINE substitution cipher per replica:
 letter ``i`` maps to ``(a*i + b) mod 26`` with ``a`` one of the 12
@@ -55,7 +56,8 @@ import argparse
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 SRC = "/root/testdata/sf0.1"
 KEY_STRIDE = 1 << 32  # clean shift far above any sf0.1 key
@@ -98,7 +100,7 @@ def main() -> int:
     # the cross-replica near-dup blowup the cipher exists to prevent
     ap.add_argument("--replicas", type=int, default=10,
                     choices=range(1, 313), metavar="N (1..312)")
-    ap.add_argument("--out", default="/root/repo/.scaledata/sf1")
+    ap.add_argument("--out", default=os.path.join(REPO, ".scaledata", "sf1"))
     ap.add_argument("--src", default=SRC)
     ap.add_argument("--tables", default=None,
                     help="comma-separated subset of scaled tables to "
