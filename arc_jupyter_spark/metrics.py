@@ -12,6 +12,12 @@ Pattern for measuring one segment of work (bench.py's per-query and
 per-pipeline-stage records, selfcheck's per-query ``disk_spill_mb``):
 build a ``SegmentMeter``, do the work, call ``segment()`` for the
 totals of the stages that completed in between.
+
+``segment()`` also reports the driver's codegen work in the segment:
+the classes Janino compiled (cache misses of the generated-class cache)
+and the time it took, read from ``CodegenMetrics`` and
+``CodeGenerator.compileTime``. Both are JVM-wide counters, so work of
+another session in the same JVM counts too.
 """
 
 from __future__ import annotations
@@ -38,6 +44,14 @@ class SegmentMeter:
         # over as a java.lang.Long, which the index's compare needs.
         self._since, self._seen = 2**31, set()
         self.new_stages()
+        self._compiles = (jvm.org.apache.spark.metrics.source.CodegenMetrics
+                          .METRIC_COMPILATION_TIME())
+        self._codegen = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+        self._codegen_mark = self._codegen_totals()
+
+    def _codegen_totals(self) -> tuple[int, int]:
+        """Classes compiled and compile nanoseconds since the JVM started."""
+        return self._compiles.getCount(), self._codegen.compileTime()
 
     def _finished_since(self):
         """Iterator over the stage attempts (``StageDataWrapper``) that
@@ -78,9 +92,13 @@ class SegmentMeter:
         execution memory — the number that predicts whether a 100×
         scale-up fits executor memory or spills). The stage's own
         ``peakExecutionMemory`` is the sum of its task peaks, so it
-        grows with the task count.
+        grows with the task count. ``codegen_compiles`` and
+        ``codegen_ms`` are the generated classes compiled since the last
+        call and the compile time, whatever stage or plan compiled them.
         """
         stages = self.new_stages()
+        compiles, compile_ns = self._codegen_totals()
+        (last_compiles, last_ns), self._codegen_mark = self._codegen_mark, (compiles, compile_ns)
 
         def mb(field: str) -> float:
             return round(sum(getattr(s, field)() for s in stages) / MB, 2)
@@ -100,6 +118,8 @@ class SegmentMeter:
             "disk_spill_mb": mb("diskBytesSpilled"),
             "peak_execution_memory_mb": round(
                 max((self._task_peak(s) for s in stages), default=0) / MB, 2),
+            "codegen_compiles": compiles - last_compiles,
+            "codegen_ms": round((compile_ns - last_ns) / 1e6, 2),
         }
 
     def _task_peak(self, stage) -> float:

@@ -12,7 +12,9 @@ import json
 import logging
 from typing import Any
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from arc_jupyter_spark.context import ArcContext
 from arc_jupyter_spark.plans.pipeline import PipelineStage, parse_pipeline, register_stage, run_pipeline
@@ -44,11 +46,15 @@ class SQLValidate(PipelineStage):
 
     def execute(self, ctx: ArcContext) -> None:
         stmt = self.substitute(self.sql, ctx)
-        rows = ctx.spark.sql(stmt).collect()
+        # two rows are enough to tell one row from more: a query that
+        # returns many by mistake ships none of the rest to the driver
+        rows = ctx.spark.sql(stmt).limit(2).collect()
         if len(rows) != 1 or len(rows[0]) < 2:
+            got = {0: "0 rows", 1: "1 row with fewer than 2 columns"}.get(
+                len(rows), "more than 1 row")
             raise ValidationError(
                 f"{self.stage_type} '{self.name}' must return exactly 1 row with "
-                f"[valid: boolean, message] — got {len(rows)} row(s)"
+                f"[valid: boolean, message] — got {got}"
             )
         valid, message = bool(rows[0][0]), rows[0][1]
         try:
@@ -163,8 +169,13 @@ class StatisticsExecute(PipelineStage):
 
     def execute(self, ctx: ArcContext) -> DataFrame:
         stats = ctx.table(self.input_view).summary()
-        ctx.user_data["last_statistics"] = stats.collect()
-        return stats
+        rows = stats.collect()
+        ctx.user_data["last_statistics"] = rows
+        # the collected rows as a LocalRelation: rendering the result
+        # runs no second aggregation and pins no storage
+        table = pa.Table.from_pylist([r.asDict() for r in rows],
+                                     schema=to_arrow_schema(stats.schema))
+        return ctx.spark.createDataFrame(table, stats.schema)
 
 
 @register_stage

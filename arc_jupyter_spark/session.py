@@ -9,6 +9,15 @@ PySpark: AQE on, UTC session timezone, Arrow enabled, shuffle
 partitions sized to the local core count rather than the 200 default
 (on a real cluster this should be ~2-3× total executor cores; set
 ``spark.sql.shuffle.partitions`` explicitly via env/conf).
+
+The generated-class cache is sized to a notebook session's working set.
+Spark keeps 100 compiled whole-stage classes by default; one round of
+the notebook deck compiles 127-129 distinct classes and the seven-query
+mix at sf0.1 compiles 102. A session re-runs its cells in the same
+order, and cyclic reuse of a set larger than an LRU cache misses on
+every visit: each warm round recompiled about 103 classes (notebook)
+and 52 (query mix) through Janino. 1000 entries hold both sets, and a
+warm round compiles none.
 """
 
 from __future__ import annotations
@@ -95,6 +104,11 @@ def default_configs() -> dict[str, str]:
         "spark.sql.execution.arrow.pyspark.enabled": "true",
         "spark.sql.files.maxPartitionBytes": "134217728",
         "spark.scheduler.mode": "FAIR",
+        # a static conf, read when the JVM starts: a notebook round
+        # compiles 127 distinct classes and the query mix 102, above
+        # Spark's 100; cyclic reuse defeats LRU, so a smaller cache
+        # recompiles most of them every round
+        "spark.sql.codegen.cache.maxEntries": "1000",
         "spark.ui.enabled": "false",
         "spark.sql.warehouse.dir": os.path.join(
             tempfile.gettempdir(), "arc-jupyter-spark-warehouse"

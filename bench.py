@@ -290,9 +290,9 @@ def main() -> int:
     # a warm cluster delivers.
     timings: dict[str, float] = {}
     first_pass: dict[str, float] = {}
-    # the best pass's build/exec split, stage totals, spill and peak
-    # execution memory (build and execution together), read after the
-    # wall is taken
+    # the best pass's build/exec split, stage totals, spill, peak
+    # execution memory and codegen compiles (build and execution
+    # together), read after the wall is taken
     layers: dict[str, dict] = {}
     meter = SegmentMeter(spark)
     # best-of-3: this machine shows intermittent multi-second stalls
@@ -326,6 +326,8 @@ def main() -> int:
                     "disk_spill_mb": seg["disk_spill_mb"],
                     "mem_spill_mb": seg["mem_spill_mb"],
                     "peak_execution_memory_mb": seg["peak_execution_memory_mb"],
+                    "codegen_compiles": seg["codegen_compiles"],
+                    "codegen_ms": seg["codegen_ms"],
                 }
             del df, rows
 

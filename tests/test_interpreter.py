@@ -538,3 +538,33 @@ def test_replaced_persisted_view_releases_its_cache(interp):
     assert cached_rdds() - before == kept
     assert interp.ctx.table("rel_p").storageLevel.useMemory
     interp.ctx.table("rel_p").unpersist()
+
+
+def test_sqlvalidate_collects_at_most_two_rows(interp, monkeypatch):
+    frame_cls = type(interp.ctx.spark.range(1))
+    limits = []
+    real = frame_cls.collect
+
+    def spy(df):
+        limits.append(df._jdf.queryExecution().optimizedPlan().maxRows())
+        return real(df)
+
+    monkeypatch.setattr(frame_cls, "collect", spy)
+    with pytest.raises(ValidationError, match="exactly 1 row .* got 0 rows"):
+        interp.execute("%sqlvalidate\nSELECT TRUE, 'ok' FROM range(10) WHERE id < 0")
+    with pytest.raises(ValidationError, match="exactly 1 row .* got more than 1 row"):
+        interp.execute("%sqlvalidate\nSELECT TRUE, 'ok' FROM range(2000000)")
+    assert len(limits) == 2
+    assert all(m.isDefined() and m.get() == 2 for m in limits)
+
+
+def test_statistics_execute_aggregates_once(interp):
+    spark = interp.ctx.spark
+    interp.ctx.register(spark.range(1000).selectExpr("id", "id % 7 AS k"), "stats_src")
+    cell = "{ type = StatisticsExecute, name = st, inputView = stats_src }"
+    res = []
+    assert _count_jobs(spark, lambda: res.append(interp.execute(cell))) <= 2
+    # the text of the summary DataFrame itself, as a cell rendered it
+    # when the stage returned that DataFrame
+    assert res[0].text == interp._render(spark.table("stats_src").summary(), {}).text
+    assert interp.ctx.user_data["last_statistics"] == spark.table("stats_src").summary().collect()

@@ -141,6 +141,30 @@ def test_peak_execution_memory_is_the_largest_task_peak(spark):
     assert reading < round(max(s.peakExecutionMemory() for s in stages) / MB, 2)
 
 
+def test_segment_meter_counts_codegen_compiles(spark):
+    from arc_jupyter_spark.metrics import SegmentMeter
+
+    # a literal new to this JVM makes the generated code new
+    fresh = uuid.uuid4().int % 1_000_000_007
+    df = spark.range(0, 1000, 1, 2).selectExpr(f"sum(id * {fresh} + id % 97) AS s")
+    meter = SegmentMeter(spark)
+    df.collect()
+    first = meter.segment()
+    assert first["codegen_compiles"] >= 1 and first["codegen_ms"] > 0
+    df.collect()  # the same plan: every class comes from the cache
+    assert meter.segment()["codegen_compiles"] == 0
+
+
+def test_session_defaults_size_the_class_cache():
+    from arc_jupyter_spark.session import _env_overrides, default_configs
+
+    key = "spark.sql.codegen.cache.maxEntries"
+    assert default_configs()[key] == "1000"
+    # a user override layers on top through the same key
+    spark_conf, _ = _env_overrides({"conf_spark_sql_codegen_cache_maxEntries": "50"})
+    assert spark_conf == {key: "50"}
+
+
 def test_one_in_process_metrics_core():
     """Stage metrics come from the status store only: no package or
     tool module calls the UI REST API or turns the UI server on."""
