@@ -207,48 +207,42 @@ def minhash_coefficients(num_hashes: int) -> list[tuple[int, int]]:
     return out
 
 
-def base_hash28(value: Column) -> Column:
-    """Portable 28-bit base hash: first 7 hex chars of md5 as BIGINT.
+def md5_prefix_hash(value: Column, hex_digits: int = 7) -> Column:
+    """Portable md5 base hash: the first ``hex_digits`` hex chars of
+    md5 as BIGINT (7 gives the 28-bit base hash, 15 a 60-bit digest).
 
-    Engine-independent (DuckDB: ``('0x'||substr(md5(s),1,7))::BIGINT``
-    matches exactly) unlike murmur3 ``hash()``/``xxhash64``. ONE md5 +
-    ``conv`` per shingle — computing a fresh md5 per seed (md5 +
-    BigInteger conv) dominated profiles; the seed family is derived
-    arithmetically instead. Long signatures also keep the
-    min-aggregation in HashAggregate (string mins force SortAggregate).
+    Engine-independent (DuckDB:
+    ``('0x'||substr(md5(s),1,<hex_digits>))::BIGINT`` matches exactly)
+    unlike murmur3 ``hash()``/``xxhash64``. ONE md5 + ``conv`` per
+    shingle — computing a fresh md5 per seed (md5 + BigInteger conv)
+    dominated profiles; the seed family is derived arithmetically
+    instead. Long signatures also keep the min-aggregation in
+    HashAggregate (string mins force SortAggregate).
     """
     digest = F.md5(value.cast("binary"))
-    return F.conv(F.substring(digest, 1, 7), 16, 10).cast("long")
+    return F.conv(F.substring(digest, 1, hex_digits), 16, 10).cast("long")
 
 
-def minhash_signature(shingles: Column, num_hashes: int = 16) -> Column:
-    """MinHash signature: for seed i, ``min((a_i·x + b_i) mod p)``."""
-    coeffs = minhash_coefficients(num_hashes)
-
-    def one_hash(i: int) -> Column:
-        a, b = coeffs[i]
-
-        def h(s: Column) -> Column:
-            return (F.lit(a) * base_hash28(s) + F.lit(b)) % F.lit(_MERSENNE31)
-
-        return F.array_min(F.transform(shingles, h))
-
-    return F.array(*[one_hash(i) for i in range(num_hashes)])
-
-
-def minhash_bands(signature: Column, bands: int, rows_per_band: int) -> Column:
-    """Band digests: md5 of each signature slice → LSH bucket keys."""
-    return F.array(
-        *[
-            F.md5(
-                F.concat(
-                    F.lit(f"band{b}|"),
-                    F.concat_ws("|", F.slice(signature, b * rows_per_band + 1, rows_per_band)),
-                ).cast("binary")
-            )
-            for b in range(bands)
-        ]
-    )
+def band_digests(bands: int, rows_per_band: int) -> list[Column]:
+    """LSH band keys over the signature columns ``_s0.._sN`` of
+    :func:`minhash_signature_table`: md5 of ``band{b}|`` + the
+    ``|``-joined band rows, first 15 hex digits as a BIGINT."""
+    return [
+        md5_prefix_hash(
+            F.concat(
+                F.lit(f"band{b}|"),
+                F.concat_ws(
+                    "|",
+                    *[
+                        F.col(f"_s{b * rows_per_band + j}").cast("string")
+                        for j in range(rows_per_band)
+                    ],
+                ),
+            ),
+            15,
+        )
+        for b in range(bands)
+    ]
 
 
 def minhash_signature_table(
@@ -273,7 +267,7 @@ def minhash_signature_table(
         F.explode(F.array_distinct(word_shingles(F.col(text_col), shingle_len))).alias("_s"),
     )
     coeffs = minhash_coefficients(num_hashes)
-    based = shingles.select(id_col, base_hash28(F.col("_s")).alias("_x"))
+    based = shingles.select(id_col, md5_prefix_hash(F.col("_s")).alias("_x"))
     hashed = based.select(
         id_col,
         *[
@@ -311,30 +305,8 @@ def minhash_band_table(
     rows_per_band = num_hashes // bands
     if sigs is None:
         sigs = minhash_signature_table(df, id_col, text_col, shingle_len, num_hashes)
-    band_digests = [
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit(f"band{b}|"),
-                        F.concat_ws(
-                            "|",
-                            *[
-                                F.col(f"_s{b * rows_per_band + j}").cast("string")
-                                for j in range(rows_per_band)
-                            ],
-                        ),
-                    ).cast("binary")
-                ),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        for b in range(bands)
-    ]
-    return sigs.select(F.col(id_col), F.explode(F.array(*band_digests)).alias("_band"))
+    keys = band_digests(bands, rows_per_band)
+    return sigs.select(F.col(id_col), F.explode(F.array(*keys)).alias("_band"))
 
 
 def incremental_near_dedup(
@@ -884,7 +856,7 @@ def bloom_positions(key: Column, num_hashes: int, num_bits: int) -> Column:
     """
     return F.array(
         *[
-            base_hash28(F.concat(F.lit(f"{j}|"), key)) % F.lit(num_bits)
+            md5_prefix_hash(F.concat(F.lit(f"{j}|"), key)) % F.lit(num_bits)
             for j in range(num_hashes)
         ]
     )
@@ -1021,15 +993,6 @@ def simhash64(text: Column, num_bits: int = 64) -> Column:
         )
 
     return F.flatten(F.transform(F.array(chunks), per_doc))
-
-
-def simhash_distance(a: Column, b: Column) -> Column:
-    """Hamming distance between two simhash bit arrays."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: F.when(x != y, 1).otherwise(0)),
-        F.lit(0),
-        lambda acc, v: acc + v,
-    )
 
 
 # -- embedding near-dup ----------------------------------------------

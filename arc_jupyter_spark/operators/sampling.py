@@ -20,11 +20,11 @@ from collections.abc import Mapping, Sequence
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
-from arc_jupyter_spark.operators.dedup import base_hash28
+from arc_jupyter_spark.operators.dedup import md5_prefix_hash
 
 #: Number of hash buckets sampling rates are quantized to. 4096 keeps
 #: rate resolution at ~0.02% while staying far inside the 28-bit hash
-#: range (uniformity of ``base_hash28 % 4096`` is exact: 2^28 is a
+#: range (uniformity of ``md5_prefix_hash % 4096`` is exact: 2^28 is a
 #: multiple of 4096).
 SAMPLE_BUCKETS = 4096
 
@@ -32,10 +32,10 @@ SAMPLE_BUCKETS = 4096
 def sample_bucket(key: Column, buckets: int = SAMPLE_BUCKETS) -> Column:
     """Uniform deterministic bucket in ``[0, buckets)`` from a key column.
 
-    md5-derived (``base_hash28``), so it is portable across engines —
+    md5-derived (``md5_prefix_hash``), so it is portable across engines —
     DuckDB mirror: ``('0x' || substr(md5(k), 1, 7))::BIGINT % buckets``.
     """
-    return base_hash28(key.cast("string")) % F.lit(buckets)
+    return md5_prefix_hash(key.cast("string")) % F.lit(buckets)
 
 
 def stratified_sample(
@@ -141,7 +141,7 @@ def priority_sample(
     the choice is reproducible across runs, engines and layouts.
 
     The priority is pure integer arithmetic
-    (``(u * scale) DIV w`` with ``u = base_hash28(key)``), so the
+    (``(u * scale) DIV w`` with ``u = md5_prefix_hash(key)``), so the
     selection is engine-exact — no ``pow``/``ln`` transform whose libm
     rounding could flip a boundary row between Spark and an oracle.
     ``u`` is 28 bits and ``scale`` 10^6, so the multiply peaks at
@@ -154,7 +154,7 @@ def priority_sample(
     zero or less are kept out of the sample deterministically by
     mapping them to the maximum priority.
     """
-    u = base_hash28(F.col(key_col).cast("string"))
+    u = md5_prefix_hash(F.col(key_col).cast("string"))
     w = F.col(weight_col).cast("bigint")
     # collision-proof temp names (a user column named _u/_w must not
     # be clobbered and dropped)
@@ -254,7 +254,7 @@ def shard_assign(
 
     The final step of a data pipeline writes N roughly-equal shards
     that downstream loaders read independently. The shard id is
-    md5-derived from ``key_col`` (``base_hash28 % num_shards``), so:
+    md5-derived from ``key_col`` (``md5_prefix_hash % num_shards``), so:
 
     - layout is reproducible across runs, engines, and cluster sizes
       (no ``rand()``, no partition-index dependence — the round-1
@@ -297,7 +297,7 @@ def epoch_mixture(
     Emits ``min(budget, n_source * max_epochs)`` rows per source:
     whole epochs first (``epoch`` = 0..k-1), then the remainder of the
     final partial epoch chosen deterministically by content hash
-    (``base_hash28(id)`` ascending, id tiebreak) so the same rows are
+    (``md5_prefix_hash(id)`` ascending, id tiebreak) so the same rows are
     picked on any engine/layout.
 
     Scale shape: per-source counts are one tiny aggregate (broadcast
@@ -338,7 +338,7 @@ def epoch_mixture(
     # would push max_epochs x the data through the exchange for the
     # same ranks
     rank_w = Window.partitionBy(source_col).orderBy(
-        base_hash28(F.col(id_col).cast("string")), F.col(id_col)
+        md5_prefix_hash(F.col(id_col).cast("string")), F.col(id_col)
     )
     ranked = with_n.withColumn("__em_rk", F.row_number().over(rank_w))
     replicated = ranked.withColumn(

@@ -13,14 +13,15 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from arc_jupyter_spark.operators.dedup import md5_prefix_hash
+
 
 def _bucket(key: Column, d: Column, width: int) -> Column:
     """Hash row ``d``'s bucket for ``key``: md5 over the seed-prefixed
     key, first 15 hex chars as BIGINT, mod width — one md5 per
     (key, row), portable across engines."""
     seeded = F.concat(d.cast("string"), F.lit("|"), key)
-    h = F.conv(F.substring(F.md5(seeded.cast("binary")), 1, 15), 16, 10).cast("bigint")
-    return h % width
+    return md5_prefix_hash(seeded, 15) % width
 
 
 def _fan_out_depth(depth: int) -> Column:

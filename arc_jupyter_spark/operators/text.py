@@ -40,12 +40,6 @@ def word_count(text: Column) -> Column:
     return F.size(tokens(text))
 
 
-def stopword_ratio(text: Column, lang: str = "en") -> Column:
-    toks = tokens(text)
-    stops = F.size(F.filter(toks, lambda t: t.isin(*LANG_STOPWORDS[lang])))
-    return F.when(F.size(toks) > 0, stops / F.size(toks)).otherwise(F.lit(0.0))
-
-
 def punct_ratio(text: Column) -> Column:
     """Non-alphanumeric, non-space chars / total chars."""
     n = F.length(text)
@@ -217,6 +211,8 @@ def overlapping_chunks(
     tokens × (window/stride). ``keep_cols`` pass through so callers
     don't re-join the corpus to recover grouping columns.
     """
+    from arc_jupyter_spark.operators.dedup import md5_prefix_hash
+
     toks = tokens(F.col(text_col))
     n_chunks = (
         F.lit(1)
@@ -239,13 +235,7 @@ def overlapping_chunks(
             F.col(id_col),
             *kept,
             F.col("_idx").cast("bigint").alias("chunk_idx"),
-            F.conv(
-                F.substring(
-                    F.md5(F.concat_ws(" ", chunk_arr).cast("binary")), 1, 15
-                ),
-                16,
-                10,
-            ).cast("bigint").alias("chunk_digest"),
+            md5_prefix_hash(F.concat_ws(" ", chunk_arr), 15).alias("chunk_digest"),
             F.size(chunk_arr).cast("bigint").alias("chunk_tokens"),
         )
     )
@@ -537,7 +527,7 @@ def dsir_importance(
     than sums of logs, but every value is a BIGINT and therefore
     partition- and engine-exact). Features are bigrams hashed into
     ``buckets`` buckets with the portable md5-based
-    :func:`~arc_jupyter_spark.operators.dedup.base_hash28` (NOT
+    :func:`~arc_jupyter_spark.operators.dedup.md5_prefix_hash` (NOT
     murmur3 ``hash()`` — oracles must reproduce it).
 
     Scale shape: the two bucket-count tables are partial-aggregated
@@ -547,14 +537,14 @@ def dsir_importance(
     (the occurrence itself is counted), so the divisor never
     degenerates.
     """
-    from arc_jupyter_spark.operators.dedup import base_hash28
+    from arc_jupyter_spark.operators.dedup import md5_prefix_hash
 
     def bucketed(df):
         occ = _bigram_occurrences(df, id_col, text_col)
         return occ.select(
             id_col,
             (
-                base_hash28(F.concat_ws("|", F.col("w1"), F.col("w2")))
+                md5_prefix_hash(F.concat_ws("|", F.col("w1"), F.col("w2")))
                 % F.lit(buckets)
             ).alias("_b"),
         )
@@ -614,10 +604,10 @@ def vocab_growth(
     """
     from pyspark.sql import Window
 
-    from arc_jupyter_spark.operators.dedup import base_hash28
+    from arc_jupyter_spark.operators.dedup import md5_prefix_hash
 
     shard = (
-        base_hash28(F.col(id_col).cast("string")) % F.lit(shards) + 1
+        md5_prefix_hash(F.col(id_col).cast("string")) % F.lit(shards) + 1
     ).alias("shard")
     occ = df.select(shard, F.explode(tokens(F.col(text_col))).alias("w"))
     tokens_by = occ.groupBy("shard").agg(

@@ -4,6 +4,14 @@ Each named query is a ``(spark, sf_dir) -> DataFrame`` callable paired
 (when SQL-expressible) with an ANSI-SQL oracle string DuckDB runs on
 the same parquet tables. Column names and rounding are mirrored on both
 sides so the driver's order-insensitive value hash matches.
+
+An oracle must not return DuckDB's HUGEINT: DuckDB types
+``SUM(<integer>)`` as HUGEINT, which the driver's pandas fetch turns
+into float64 while Spark's side stays int64, so the value hashes
+differ on equal values. Each oracle casts such a column to BIGINT at
+its own expression (``CAST(SUM(x) AS BIGINT) AS x_sum``);
+``tests/test_driver_contract.py::test_no_oracle_returns_hugeint``
+binds every oracle and fails on any HUGEINT result column.
 """
 
 from __future__ import annotations
@@ -20,7 +28,6 @@ from arc_jupyter_spark.workloads import (  # noqa: F401
     streaming_queries,
 )
 from arc_jupyter_spark.workloads.base import ORACLES, QUERIES
-from arc_jupyter_spark.workloads.oracle_casts import apply_oracle_casts
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
@@ -28,6 +35,4 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    # apply_oracle_casts closes the DuckDB HUGEINT -> pandas float64
-    # channel in the driver's oracle fetch (see oracle_casts.py)
-    return {name: apply_oracle_casts(name, sql) for name, sql in ORACLES.items()}
+    return dict(ORACLES)

@@ -58,8 +58,8 @@ kept AS (
   JOIN (SELECT grp, MIN(doc_id) AS doc_id FROM u GROUP BY grp) w
   USING (grp, doc_id)
 )
-SELECT source, COUNT(*) AS n_kept, SUM(doc_id) AS id_sum,
-       SUM(length(canon)) AS canon_len_sum
+SELECT source, COUNT(*) AS n_kept, CAST(SUM(doc_id) AS BIGINT) AS id_sum,
+       CAST(SUM(length(canon)) AS BIGINT) AS canon_len_sum
 FROM kept GROUP BY source ORDER BY source
 """
 
@@ -109,9 +109,10 @@ WITH c AS (
   FROM documents
 )
 SELECT source, COUNT(*) AS n_docs,
-       SUM(length(clean)) AS clean_len_sum,
-       SUM({_T32_ANCHOR_CHARS}) AS anchor_sum,
-       SUM(CASE WHEN {_T32_ANCHOR_CHARS} * 1000 >= 80 * length(clean) THEN 1 ELSE 0 END) AS n_link_heavy
+       CAST(SUM(length(clean)) AS BIGINT) AS clean_len_sum,
+       CAST(SUM({_T32_ANCHOR_CHARS}) AS BIGINT) AS anchor_sum,
+       CAST(SUM(CASE WHEN {_T32_ANCHOR_CHARS} * 1000 >= 80 * length(clean)
+                     THEN 1 ELSE 0 END) AS BIGINT) AS n_link_heavy
 FROM c GROUP BY source ORDER BY source
 """
 
@@ -178,9 +179,11 @@ s AS (
   FROM c
 )
 SELECT source,
-       SUM(CASE WHEN n > 0 AND score * 1000 >= 60 * n THEN 1 ELSE 0 END) AS n_code,
-       SUM(CASE WHEN n > 0 AND score * 1000 >= 60 * n THEN 0 ELSE 1 END) AS n_prose,
-       SUM(score) AS score_sum
+       CAST(SUM(CASE WHEN n > 0 AND score * 1000 >= 60 * n THEN 1 ELSE 0 END)
+            AS BIGINT) AS n_code,
+       CAST(SUM(CASE WHEN n > 0 AND score * 1000 >= 60 * n THEN 0 ELSE 1 END)
+            AS BIGINT) AS n_prose,
+       CAST(SUM(score) AS BIGINT) AS score_sum
 FROM s GROUP BY source ORDER BY source
 """
 
@@ -264,7 +267,8 @@ def g02(spark: SparkSession, sf_dir: str) -> DataFrame:
 Q80_ORACLE = """
 SELECT * FROM (
   SELECT 'custkey_not_null' AS rule_name, 'o_custkey' AS col_name,
-         SUM(CASE WHEN o_custkey IS NULL THEN 1 ELSE 0 END) AS n_violations,
+         CAST(SUM(CASE WHEN o_custkey IS NULL THEN 1 ELSE 0 END) AS BIGINT)
+           AS n_violations,
          COUNT(*) AS n_rows,
          SUM(CASE WHEN o_custkey IS NULL THEN 1 ELSE 0 END) = 0 AS passed
   FROM orders
@@ -275,17 +279,17 @@ SELECT * FROM (
   FROM orders
   UNION ALL
   SELECT 'totalprice_range', 'o_totalprice',
-         SUM(CASE WHEN o_totalprice IS NULL OR o_totalprice < 0
-                    OR o_totalprice > 400000 THEN 1 ELSE 0 END),
+         CAST(SUM(CASE WHEN o_totalprice IS NULL OR o_totalprice < 0
+                         OR o_totalprice > 400000 THEN 1 ELSE 0 END) AS BIGINT),
          COUNT(*),
          SUM(CASE WHEN o_totalprice IS NULL OR o_totalprice < 0
                     OR o_totalprice > 400000 THEN 1 ELSE 0 END) = 0
   FROM orders
   UNION ALL
   SELECT 'priority_format', 'o_orderpriority',
-         SUM(CASE WHEN o_orderpriority IS NULL
-                    OR NOT regexp_matches(o_orderpriority, '^(?:[1-3]-[A-Z ]+)$')
-                  THEN 1 ELSE 0 END),
+         CAST(SUM(CASE WHEN o_orderpriority IS NULL
+                         OR NOT regexp_matches(o_orderpriority, '^(?:[1-3]-[A-Z ]+)$')
+                       THEN 1 ELSE 0 END) AS BIGINT),
          COUNT(*),
          SUM(CASE WHEN o_orderpriority IS NULL
                     OR NOT regexp_matches(o_orderpriority, '^(?:[1-3]-[A-Z ]+)$')
@@ -293,8 +297,8 @@ SELECT * FROM (
   FROM orders
   UNION ALL
   SELECT 'status_in_set', 'o_orderstatus',
-         SUM(CASE WHEN o_orderstatus IS NULL
-                    OR o_orderstatus NOT IN ('O', 'F') THEN 1 ELSE 0 END),
+         CAST(SUM(CASE WHEN o_orderstatus IS NULL
+                         OR o_orderstatus NOT IN ('O', 'F') THEN 1 ELSE 0 END) AS BIGINT),
          COUNT(*),
          SUM(CASE WHEN o_orderstatus IS NULL
                     OR o_orderstatus NOT IN ('O', 'F') THEN 1 ELSE 0 END) = 0
@@ -402,10 +406,10 @@ WITH r AS (
 )
 SELECT l_returnflag,
        MAX(n) AS n,
-       SUM(CASE WHEN rn_q IN ((n + 1) {IDIV} 2, (n + 2) {IDIV} 2) THEN q ELSE 0 END)
-         * (CASE WHEN MAX(n) % 2 = 1 THEN 2 ELSE 1 END) AS median_x2_qty,
-       SUM(CASE WHEN rn_c IN ((n + 1) {IDIV} 2, (n + 2) {IDIV} 2) THEN cents ELSE 0 END)
-         * (CASE WHEN MAX(n) % 2 = 1 THEN 2 ELSE 1 END) AS median_x2_cents
+       CAST(SUM(CASE WHEN rn_q IN ((n + 1) {IDIV} 2, (n + 2) {IDIV} 2) THEN q ELSE 0 END)
+         * (CASE WHEN MAX(n) % 2 = 1 THEN 2 ELSE 1 END) AS BIGINT) AS median_x2_qty,
+       CAST(SUM(CASE WHEN rn_c IN ((n + 1) {IDIV} 2, (n + 2) {IDIV} 2) THEN cents ELSE 0 END)
+         * (CASE WHEN MAX(n) % 2 = 1 THEN 2 ELSE 1 END) AS BIGINT) AS median_x2_cents
 FROM r GROUP BY l_returnflag ORDER BY l_returnflag
 """
 
@@ -520,7 +524,7 @@ def q84(spark: SparkSession, sf_dir: str) -> DataFrame:
 _M08_MISS_MASK = 3 * (1 + (1 << 16) + (1 << 32) + (1 << 48))
 
 M08_ORACLE = """
-SELECT source, COUNT(*) AS n_pairs, SUM(doc_id) AS id_a_sum,
+SELECT source, COUNT(*) AS n_pairs, CAST(SUM(doc_id) AS BIGINT) AS id_a_sum,
        COUNT(*) AS hamming_sum
 FROM documents WHERE doc_id % 3 = 0
 GROUP BY source ORDER BY source
@@ -600,7 +604,7 @@ ranked AS (
                doc_id) AS rk
   FROM r
 )
-SELECT source, epoch, COUNT(*) AS n_rows, SUM(doc_id) AS id_sum
+SELECT source, epoch, COUNT(*) AS n_rows, CAST(SUM(doc_id) AS BIGINT) AS id_sum
 FROM ranked
 WHERE epoch < epochs - 1 OR rk <= budget - (epochs - 1) * n_src
 GROUP BY source, epoch ORDER BY source, epoch
@@ -665,7 +669,8 @@ pick AS (
 )
 SELECT q_label, pick.bin,
        {_T34_LO} + (pick.bin * {_T34_HI - _T34_LO + 1}) // {_T34_BINS} AS bin_lo,
-       cum.cum_n, t.t AS n_total, TRUE AS merge_exact
+       CAST(cum.cum_n AS BIGINT) AS cum_n, CAST(t.t AS BIGINT) AS n_total,
+       TRUE AS merge_exact
 FROM pick JOIN cum ON cum.bin = pick.bin, t
 ORDER BY q_label
 """
@@ -733,13 +738,15 @@ r AS (
   FROM kc
 )
 SELECT MAX(nk) AS n_keys,
-       MAX(total) AS n_rows,
+       CAST(MAX(total) AS BIGINT) AS n_rows,
        MAX(n) AS max_per_key,
        MIN(n) AS min_per_key,
-       SUM(CASE WHEN rn = (nk + 1) {IDIV} 2 THEN n ELSE 0 END) AS p50_per_key,
-       SUM(CASE WHEN rn = (nk * 99 + 99) {IDIV} 100 THEN n ELSE 0 END) AS p99_per_key,
-       SUM(CASE WHEN rn = nk THEN k ELSE 0 END) AS heaviest_key,
-       MAX(n) * MAX(nk) - MAX(total) AS balance_gap
+       CAST(SUM(CASE WHEN rn = (nk + 1) {IDIV} 2 THEN n ELSE 0 END) AS BIGINT)
+         AS p50_per_key,
+       CAST(SUM(CASE WHEN rn = (nk * 99 + 99) {IDIV} 100 THEN n ELSE 0 END) AS BIGINT)
+         AS p99_per_key,
+       CAST(SUM(CASE WHEN rn = nk THEN k ELSE 0 END) AS BIGINT) AS heaviest_key,
+       CAST(MAX(n) * MAX(nk) - MAX(total) AS BIGINT) AS balance_gap
 FROM r
 """
 
@@ -764,8 +771,8 @@ def q85(spark: SparkSession, sf_dir: str) -> DataFrame:
 Q86_ORACLE = """
 SELECT o_orderpriority,
        COUNT(*) AS n,
-       SUM(CAST(l_quantity AS BIGINT)) AS qty_sum,
-       SUM(CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT)) AS cents_sum
+       CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS qty_sum,
+       CAST(SUM(CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT)) AS BIGINT) AS cents_sum
 FROM orders JOIN lineitem ON orders.o_orderkey = lineitem.l_orderkey
 GROUP BY o_orderpriority ORDER BY o_orderpriority
 """
@@ -868,9 +875,10 @@ sharded AS (
          ('0x' || substr(md5(clean), 1, 7))::BIGINT AS ck
   FROM capped
 )
-SELECT shard, COUNT(*) AS n_docs, SUM(is_code) AS n_code,
-       SUM(doc_id) AS id_sum, SUM(n_chars) AS char_sum,
-       SUM(ck) AS clean_checksum
+SELECT shard, COUNT(*) AS n_docs, CAST(SUM(is_code) AS BIGINT) AS n_code,
+       CAST(SUM(doc_id) AS BIGINT) AS id_sum,
+       CAST(SUM(n_chars) AS BIGINT) AS char_sum,
+       CAST(SUM(ck) AS BIGINT) AS clean_checksum
 FROM sharded GROUP BY shard ORDER BY shard
 """
 
@@ -883,7 +891,7 @@ def p07_stage_frames(spark: SparkSession, sf_dir: str) -> dict:
     p07 query and bench.py's per-pipeline breakdown (VERDICT r7
     item 2)."""
     from arc_jupyter_spark.operators import sampling
-    from arc_jupyter_spark.operators.dedup import base_hash28
+    from arc_jupyter_spark.operators.dedup import md5_prefix_hash
     from pyspark.sql import Window
 
     load_views(spark, sf_dir, "documents")
@@ -906,7 +914,7 @@ def p07_stage_frames(spark: SparkSession, sf_dir: str) -> dict:
         F.size(text.tokens(F.col("clean"))) >= _P07_MIN_WORDS
     ).withColumn("is_code", text.is_code(F.col("clean"), per_kchar=60))
     rk = Window.partitionBy("source").orderBy(
-        base_hash28(F.col("doc_id").cast("string")), F.col("doc_id")
+        md5_prefix_hash(F.col("doc_id").cast("string")), F.col("doc_id")
     )
     capped = (
         gated.withColumn("_rk", F.row_number().over(rk))
@@ -920,7 +928,7 @@ def p07_stage_frames(spark: SparkSession, sf_dir: str) -> dict:
 
 @query("p07_crawl_pipeline", oracle=P07_ORACLE)
 def p07(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from arc_jupyter_spark.operators.dedup import base_hash28
+    from arc_jupyter_spark.operators.dedup import md5_prefix_hash
 
     sharded = p07_stage_frames(spark, sf_dir)["shard"]
     return (
@@ -930,7 +938,7 @@ def p07(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.when(F.col("is_code"), 1).otherwise(0)).alias("n_code"),
             F.sum("doc_id").alias("id_sum"),
             F.sum(F.length("clean")).alias("char_sum"),
-            F.sum(base_hash28(F.col("clean"))).alias("clean_checksum"),
+            F.sum(md5_prefix_hash(F.col("clean"))).alias("clean_checksum"),
         )
         .orderBy("shard")
     )

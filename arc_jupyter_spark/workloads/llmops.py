@@ -689,8 +689,9 @@ m AS (
 )
 SELECT lang,
        COUNT(*) AS n_docs,
-       SUM(CASE WHEN wc BETWEEN 10 AND 1000 AND sr >= 0.05 THEN 1 ELSE 0 END) AS n_kept,
-       SUM(CAST(FLOOR(sr * 100000000 + 0.5) AS BIGINT)) AS sum_sr_e8
+       CAST(SUM(CASE WHEN wc BETWEEN 10 AND 1000 AND sr >= 0.05 THEN 1 ELSE 0 END)
+            AS BIGINT) AS n_kept,
+       CAST(SUM(CAST(FLOOR(sr * 100000000 + 0.5) AS BIGINT)) AS BIGINT) AS sum_sr_e8
 FROM m GROUP BY lang ORDER BY lang
 """
 
@@ -739,10 +740,11 @@ _T06_PAT = text.term_pattern(_T06_TERMS)
 
 T06_ORACLE = f"""
 SELECT source,
-       SUM(len(regexp_extract_all(text, '{_T06_PAT}'))) AS n_redactions,
-       SUM(CASE WHEN len(regexp_extract_all(text, '{_T06_PAT}')) > 0
-                THEN 1 ELSE 0 END) AS n_docs_hit,
-       SUM(LENGTH(regexp_replace(text, '{_T06_PAT}', '[X]', 'g'))) AS total_len_after
+       CAST(SUM(len(regexp_extract_all(text, '{_T06_PAT}'))) AS BIGINT) AS n_redactions,
+       CAST(SUM(CASE WHEN len(regexp_extract_all(text, '{_T06_PAT}')) > 0
+                     THEN 1 ELSE 0 END) AS BIGINT) AS n_docs_hit,
+       CAST(SUM(LENGTH(regexp_replace(text, '{_T06_PAT}', '[X]', 'g'))) AS BIGINT)
+         AS total_len_after
 FROM documents GROUP BY source ORDER BY source
 """
 
@@ -800,8 +802,10 @@ b AS (
 )
 SELECT source,
        COUNT(*) AS n_docs,
-       SUM(CAST(FLOOR(dupfrac * 100000000 + 0.5) AS BIGINT)) AS sum_dupfrac_e8,
-       SUM(CAST(FLOOR(topbigram * 100000000 + 0.5) AS BIGINT)) AS sum_topbigram_e8
+       CAST(SUM(CAST(FLOOR(dupfrac * 100000000 + 0.5) AS BIGINT)) AS BIGINT)
+         AS sum_dupfrac_e8,
+       CAST(SUM(CAST(FLOOR(topbigram * 100000000 + 0.5) AS BIGINT)) AS BIGINT)
+         AS sum_topbigram_e8
 FROM b GROUP BY source ORDER BY source
 """
 
@@ -843,7 +847,7 @@ WITH b AS (
          ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 7))::BIGINT % 4096 AS bucket
   FROM documents
 )
-SELECT lang, COUNT(*) AS n_kept, SUM(doc_id) AS id_sum
+SELECT lang, COUNT(*) AS n_kept, CAST(SUM(doc_id) AS BIGINT) AS id_sum
 FROM b
 WHERE bucket < CASE lang WHEN 'en' THEN 2048 WHEN 'de' THEN 4096
                          WHEN 'zh' THEN 1024 ELSE 3072 END
@@ -891,7 +895,8 @@ r AS (
                          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS running_cost
   FROM c
 )
-SELECT source, COUNT(*) AS n_docs, SUM(cost) AS spent, SUM(doc_id) AS id_sum
+SELECT source, COUNT(*) AS n_docs, CAST(SUM(cost) AS BIGINT) AS spent,
+       CAST(SUM(doc_id) AS BIGINT) AS id_sum
 FROM r WHERE running_cost <= {_T09_BUDGET}
 GROUP BY source ORDER BY source
 """
@@ -954,7 +959,7 @@ SELECT source,
        COUNT(DISTINCT term) AS n_distinct_top,
        MIN(term) AS alpha_first,
        MAX(term) AS alpha_last,
-       SUM(tf) AS sum_top_tf
+       CAST(SUM(tf) AS BIGINT) AS sum_top_tf
 FROM ranked WHERE rn = 1
 GROUP BY source ORDER BY source
 """
@@ -1021,7 +1026,7 @@ SELECT b.source,
        COUNT(*) AS n_docs,
        COUNT(h.doc_id) AS n_contaminated,
        COALESCE(MAX(h.n_shared), 0) AS max_shared,
-       COALESCE(SUM(h.n_shared), 0) AS sum_shared
+       CAST(COALESCE(SUM(h.n_shared), 0) AS BIGINT) AS sum_shared
 FROM base b LEFT JOIN hits h USING (doc_id)
 GROUP BY 1 ORDER BY 1
 """
@@ -1077,7 +1082,8 @@ thr AS (
          LEAST(4096, (4096 * ((budget * q) // total_q)) // n_docs) AS threshold
   FROM alloc
 )
-SELECT t.lang, t.n_docs, t.weight_e6, t.alloc_docs,
+SELECT t.lang, t.n_docs, CAST(t.weight_e6 AS BIGINT) AS weight_e6,
+       CAST(t.alloc_docs AS BIGINT) AS alloc_docs,
        COUNT(*) FILTER (
          WHERE ('0x' || substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 7))::BIGINT % 4096
                < t.threshold
@@ -1160,8 +1166,8 @@ budgeted AS (
 )
 SELECT lang,
        COUNT(*) AS n_docs,
-       SUM(cost) AS total_cost,
-       SUM(doc_id) AS id_sum
+       CAST(SUM(cost) AS BIGINT) AS total_cost,
+       CAST(SUM(doc_id) AS BIGINT) AS id_sum
 FROM budgeted GROUP BY lang ORDER BY lang
 """
 
@@ -1303,8 +1309,8 @@ WITH b AS (SELECT source, md5(text) AS x FROM documents),
 f AS (SELECT source, {_feat(0)} AS f0, {_feat(1)} AS f1 FROM b)
 SELECT source,
        COUNT(*) AS n,
-       SUM(CAST(FLOOR(f0 * 100000000 + 0.5) AS BIGINT)) AS sum_f0_e8,
-       SUM(CAST(FLOOR(f1 * 100000000 + 0.5) AS BIGINT)) AS sum_f1_e8
+       CAST(SUM(CAST(FLOOR(f0 * 100000000 + 0.5) AS BIGINT)) AS BIGINT) AS sum_f0_e8,
+       CAST(SUM(CAST(FLOOR(f1 * 100000000 + 0.5) AS BIGINT)) AS BIGINT) AS sum_f1_e8
 FROM f GROUP BY source ORDER BY source
 """
 
@@ -1358,9 +1364,10 @@ meta AS (
 )
 SELECT source,
        COUNT(*) AS n_clips,
-       SUM(n_samples) AS total_samples,
-       SUM(channels - 1) AS n_stereo,
-       SUM(CAST(FLOOR(n_samples * 1000.0 / sample_rate + 0.5) AS BIGINT)) AS total_ms,
+       CAST(SUM(n_samples) AS BIGINT) AS total_samples,
+       CAST(SUM(channels - 1) AS BIGINT) AS n_stereo,
+       CAST(SUM(CAST(FLOOR(n_samples * 1000.0 / sample_rate + 0.5) AS BIGINT)) AS BIGINT)
+         AS total_ms,
        CAST(MAX(sample_rate) AS INT) AS max_rate
 FROM meta GROUP BY source ORDER BY source
 """
@@ -1471,9 +1478,9 @@ b AS (
 SELECT source,
        COUNT(*) AS n_docs,
        MAX(end_bin) + 1 AS n_seqs,
-       SUM(CASE WHEN end_bin > start_bin THEN 1 ELSE 0 END) AS n_split_docs,
-       SUM(cost) AS total_tokens,
-       SUM(doc_id * end_bin + start_bin) AS bin_checksum
+       CAST(SUM(CASE WHEN end_bin > start_bin THEN 1 ELSE 0 END) AS BIGINT) AS n_split_docs,
+       CAST(SUM(cost) AS BIGINT) AS total_tokens,
+       CAST(SUM(doc_id * end_bin + start_bin) AS BIGINT) AS bin_checksum
 FROM b GROUP BY source ORDER BY source
 """
 
@@ -1589,7 +1596,7 @@ scored AS (
   FROM tok t JOIN model m USING (tok)
   GROUP BY t.doc_id
 )
-SELECT doc_id, sum_rarity, n_tokens
+SELECT doc_id, CAST(sum_rarity AS BIGINT) AS sum_rarity, n_tokens
 FROM scored
 ORDER BY CAST(sum_rarity AS DOUBLE) / n_tokens DESC, doc_id
 LIMIT 20
@@ -1624,8 +1631,8 @@ tc AS (
 )
 SELECT source,
        COUNT(*) AS vocab,
-       SUM(CASE WHEN n = 1 THEN 1 ELSE 0 END) AS hapax,
-       SUM(n) AS total_tokens
+       CAST(SUM(CASE WHEN n = 1 THEN 1 ELSE 0 END) AS BIGINT) AS hapax,
+       CAST(SUM(n) AS BIGINT) AS total_tokens
 FROM tc GROUP BY source ORDER BY source
 """
 
@@ -1672,8 +1679,9 @@ meta AS (
 kept AS (SELECT doc_id FROM meta WHERE width >= {_M05_MIN_WIDTH})
 SELECT d.source,
        COUNT(*) AS n_kept,
-       SUM(len(regexp_extract_all(d.text, '{text.TOKEN_PATTERN}'))) AS sum_tokens,
-       SUM(d.n_chars) AS sum_chars
+       CAST(SUM(len(regexp_extract_all(d.text, '{text.TOKEN_PATTERN}'))) AS BIGINT)
+         AS sum_tokens,
+       CAST(SUM(d.n_chars) AS BIGINT) AS sum_chars
 FROM documents d JOIN kept USING (doc_id)
 GROUP BY d.source ORDER BY d.source
 """
@@ -1758,8 +1766,8 @@ packed AS (
 SELECT source,
        COUNT(*) AS n_docs,
        MAX(end_bin) + 1 AS n_seqs,
-       SUM(cost) AS total_tokens,
-       SUM(doc_id * end_bin + start_bin) AS bin_checksum
+       CAST(SUM(cost) AS BIGINT) AS total_tokens,
+       CAST(SUM(doc_id * end_bin + start_bin) AS BIGINT) AS bin_checksum
 FROM packed GROUP BY source ORDER BY source
 """
 
@@ -1891,7 +1899,7 @@ SELECT source,
        COUNT(*) AS n_kept,
        MIN(score) AS min_score,
        MAX(score) AS max_score,
-       SUM(doc_id) AS id_sum
+       CAST(SUM(doc_id) AS BIGINT) AS id_sum
 FROM ranked WHERE decile = 1
 GROUP BY source ORDER BY source
 """
@@ -2010,8 +2018,8 @@ ranked AS (
 )
 SELECT source,
        COUNT(*) AS n_kept,
-       SUM(score) AS tok_kept,
-       SUM(doc_id) AS id_sum
+       CAST(SUM(score) AS BIGINT) AS tok_kept,
+       CAST(SUM(doc_id) AS BIGINT) AS id_sum
 FROM ranked WHERE rn <= {_T17_CAP}
 GROUP BY source ORDER BY source
 """
@@ -2064,7 +2072,7 @@ WITH sharded AS (
 )
 SELECT shard,
        COUNT(*) AS n_docs,
-       SUM(score) AS tok_sum,
+       CAST(SUM(score) AS BIGINT) AS tok_sum,
        MIN(doc_id) AS min_id,
        MAX(doc_id) AS max_id
 FROM sharded GROUP BY shard ORDER BY shard
@@ -2133,8 +2141,8 @@ winners AS (
 )
 SELECT s.source,
        COUNT(*) AS n_kept,
-       SUM(s.score) AS tok_kept,
-       SUM(s.doc_id) AS id_sum
+       CAST(SUM(s.score) AS BIGINT) AS tok_kept,
+       CAST(SUM(s.doc_id) AS BIGINT) AS id_sum
 FROM scored s LEFT JOIN labels l ON s.doc_id = l.node
 WHERE l.label IS NULL OR s.doc_id IN (SELECT doc_id FROM winners)
 GROUP BY s.source
@@ -2349,9 +2357,9 @@ cleaned AS (
 )
 SELECT source,
        COUNT(*) AS n_docs,
-       SUM(len(list_filter(regexp_split_to_array(ctext, ' '), x -> x <> '')))
-         AS kept_tokens,
-       SUM(('0x' || substr(md5(ctext), 1, 7))::BIGINT) AS text_checksum
+       CAST(SUM(len(list_filter(regexp_split_to_array(ctext, ' '), x -> x <> '')))
+            AS BIGINT) AS kept_tokens,
+       CAST(SUM(('0x' || substr(md5(ctext), 1, 7))::BIGINT) AS BIGINT) AS text_checksum
 FROM cleaned GROUP BY source ORDER BY source
 """
 
@@ -2371,7 +2379,7 @@ def t19(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.sum(kept).alias("kept_tokens"),
-            F.sum(dedup.base_hash28(F.col("ctext"))).alias("text_checksum"),
+            F.sum(dedup.md5_prefix_hash(F.col("ctext"))).alias("text_checksum"),
         )
         .orderBy("source")
     )
@@ -2558,8 +2566,9 @@ o AS (
 ),
 w AS (SELECT dg, MIN(doc_id * 1048576 + idx) AS win FROM o GROUP BY dg)
 SELECT source, COUNT(*) AS n_passages,
-       SUM(CASE WHEN doc_id*1048576+idx = win THEN 1 ELSE 0 END) AS n_kept,
-       SUM(CASE WHEN doc_id*1048576+idx = win THEN ctoks ELSE 0 END)
+       CAST(SUM(CASE WHEN doc_id*1048576+idx = win THEN 1 ELSE 0 END) AS BIGINT)
+         AS n_kept,
+       CAST(SUM(CASE WHEN doc_id*1048576+idx = win THEN ctoks ELSE 0 END) AS BIGINT)
          AS kept_tokens
 FROM o JOIN w USING (dg) GROUP BY source ORDER BY source
 """
@@ -2615,8 +2624,8 @@ sc AS (
   FROM luma
 )
 SELECT source, COUNT(DISTINCT doc_id) AS n_videos, COUNT(*) AS n_frames,
-       SUM(CASE WHEN prev IS NULL OR abs(luma - prev) > 64 THEN 1 ELSE 0 END)
-         AS n_scenes
+       CAST(SUM(CASE WHEN prev IS NULL OR abs(luma - prev) > 64 THEN 1 ELSE 0 END)
+            AS BIGINT) AS n_scenes
 FROM sc GROUP BY source ORDER BY source
 """
 
@@ -2635,7 +2644,7 @@ def m07(spark: SparkSession, sf_dir: str) -> DataFrame:
         payloads, binary_col="value", every_n=10
     ).select("doc_id", "source", "frame_index", "frame_digest")
     luma = frames.withColumn(
-        "luma", dedup.base_hash28(F.col("frame_digest")) % 256
+        "luma", dedup.md5_prefix_hash(F.col("frame_digest")) % 256
     )
     w = Window.partitionBy("doc_id").orderBy("frame_index")
     prev = F.lag("luma").over(w)
@@ -2765,7 +2774,7 @@ scored AS (
   JOIN um u ON o.w1 = u.w1
   GROUP BY o.doc_id
 )
-SELECT doc_id, sum_surprisal, n_bigrams
+SELECT doc_id, CAST(sum_surprisal AS BIGINT) AS sum_surprisal, n_bigrams
 FROM scored
 ORDER BY CAST(sum_surprisal AS DOUBLE) / n_bigrams DESC, doc_id
 LIMIT 20
@@ -2860,7 +2869,7 @@ def d12(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.explode(
             F.array_distinct(dedup.word_shingles(F.col("text"), _SHINGLE_LEN))
         ).alias("_s"),
-    ).select("doc_id", dedup.base_hash28(F.col("_s")).alias("_sd"))
+    ).select("doc_id", dedup.md5_prefix_hash(F.col("_s")).alias("_sd"))
     sizes = shd.groupBy("doc_id").agg(F.countDistinct("_sd").alias("n"))
     inter = (
         cands.join(
@@ -2927,9 +2936,12 @@ scanned AS (
   FROM injected
 )
 SELECT source,
-       SUM(n_email) AS n_email, SUM(n_phone) AS n_phone, SUM(n_ipv4) AS n_ipv4,
-       SUM(CASE WHEN n_email + n_phone + n_ipv4 > 0 THEN 1 ELSE 0 END) AS n_docs_with_pii,
-       SUM(('0x' || substr(md5(clean), 1, 7))::BIGINT) AS clean_checksum
+       CAST(SUM(n_email) AS BIGINT) AS n_email,
+       CAST(SUM(n_phone) AS BIGINT) AS n_phone,
+       CAST(SUM(n_ipv4) AS BIGINT) AS n_ipv4,
+       CAST(SUM(CASE WHEN n_email + n_phone + n_ipv4 > 0 THEN 1 ELSE 0 END) AS BIGINT)
+         AS n_docs_with_pii,
+       CAST(SUM(('0x' || substr(md5(clean), 1, 7))::BIGINT) AS BIGINT) AS clean_checksum
 FROM scanned GROUP BY source ORDER BY source
 """
 
@@ -2974,7 +2986,7 @@ def t27(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.col("n_email") + F.col("n_phone") + F.col("n_ipv4") > 0, 1
                 ).otherwise(0)
             ).cast("bigint").alias("n_docs_with_pii"),
-            F.sum(dedup.base_hash28(F.col("clean"))).alias("clean_checksum"),
+            F.sum(dedup.md5_prefix_hash(F.col("clean"))).alias("clean_checksum"),
         )
         .orderBy("source")
     )
@@ -3028,8 +3040,8 @@ final AS (
          doc_id, n_toks, clean
   FROM gated WHERE n_toks >= {_P04_MIN_TOKENS}
 )
-SELECT shard, COUNT(*) AS n_docs, SUM(n_toks) AS tok_sum,
-       SUM(('0x' || substr(md5(clean), 1, 7))::BIGINT) AS clean_checksum
+SELECT shard, COUNT(*) AS n_docs, CAST(SUM(n_toks) AS BIGINT) AS tok_sum,
+       CAST(SUM(('0x' || substr(md5(clean), 1, 7))::BIGINT) AS BIGINT) AS clean_checksum
 FROM final GROUP BY shard ORDER BY shard
 """
 
@@ -3087,7 +3099,7 @@ def p04_stage_frames(
         ).cast("bigint").alias("n_toks"),
     ).where(F.col("n_toks") >= _P04_MIN_TOKENS)
     final = gated.select(
-        (dedup.base_hash28(F.col("doc_id").cast("string")) % _P04_SHARDS).alias(
+        (dedup.md5_prefix_hash(F.col("doc_id").cast("string")) % _P04_SHARDS).alias(
             "shard"
         ),
         "n_toks",
@@ -3104,7 +3116,7 @@ def p04(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.sum("n_toks").alias("tok_sum"),
-            F.sum(dedup.base_hash28(F.col("clean"))).alias("clean_checksum"),
+            F.sum(dedup.md5_prefix_hash(F.col("clean"))).alias("clean_checksum"),
         )
         .orderBy("shard")
     )
@@ -3128,7 +3140,7 @@ WITH d AS (
 )
 SELECT lang,
        COUNT(*) AS n_docs,
-       SUM(n_toks) AS total_tokens,
+       CAST(SUM(n_toks) AS BIGINT) AS total_tokens,
        MIN(n_toks) AS min_tokens,
        MAX(n_toks) AS max_tokens,
        COUNT(DISTINCT dg) AS n_unique,
@@ -3512,7 +3524,8 @@ kept AS (
   WHERE NOT (host = 'spam-mill.com' OR host LIKE '%.spam-mill.com'
              OR host = 'content-farm.net' OR host LIKE '%.content-farm.net')
 )
-SELECT source, COUNT(*) AS n_kept, MIN(doc_id) AS min_id, SUM(doc_id) AS id_sum
+SELECT source, COUNT(*) AS n_kept, MIN(doc_id) AS min_id,
+       CAST(SUM(doc_id) AS BIGINT) AS id_sum
 FROM kept GROUP BY source ORDER BY source
 """
 
@@ -3563,7 +3576,7 @@ labels AS (
 ),
 sizes AS (SELECT label, COUNT(*) AS cluster_size FROM labels GROUP BY label)
 SELECT cluster_size, COUNT(*) AS n_clusters,
-       SUM(cluster_size) AS n_docs
+       CAST(SUM(cluster_size) AS BIGINT) AS n_docs
 FROM sizes GROUP BY cluster_size
 UNION ALL
 SELECT 1, (SELECT COUNT(*) FROM documents) - (SELECT COUNT(*) FROM labels),
@@ -5209,12 +5222,12 @@ def m09(spark: SparkSession, sf_dir: str) -> DataFrame:
 # hashed-bigram distribution is — the importance-resampling signal a
 # pretraining mixture uses to upweight target-domain-like raw data.
 # Integer surrogate ratio ((n_target+1)*1e6) DIV (n_raw+1) summed per
-# doc; buckets via the portable md5 hash (base_hash28 % 4096), which
+# doc; buckets via the portable md5 hash (md5_prefix_hash % 4096), which
 # the oracle reproduces exactly.
 # --------------------------------------------------------------------
 
 _T38_BUCKETS = 4096
-_DUCK_BIGRAMS = (
+_DUCK_PIPE_BIGRAMS = (
     "list_transform(generate_series(1, len(toks) - 1), "
     "j -> toks[j] || '|' || toks[j + 1])"
 )
@@ -5227,13 +5240,13 @@ raw AS (
 ),
 bt AS (
   SELECT ('0x' || substr(md5(bg), 1, 7))::BIGINT % {_T38_BUCKETS} AS b
-  FROM (SELECT unnest({_DUCK_BIGRAMS}) AS bg FROM tgt WHERE len(toks) >= 2)
+  FROM (SELECT unnest({_DUCK_PIPE_BIGRAMS}) AS bg FROM tgt WHERE len(toks) >= 2)
 ),
 nt AS (SELECT b, COUNT(*) AS _nt FROM bt GROUP BY b),
 bro AS (
   SELECT doc_id,
          ('0x' || substr(md5(bg), 1, 7))::BIGINT % {_T38_BUCKETS} AS b
-  FROM (SELECT doc_id, unnest({_DUCK_BIGRAMS}) AS bg
+  FROM (SELECT doc_id, unnest({_DUCK_PIPE_BIGRAMS}) AS bg
         FROM raw WHERE len(toks) >= 2)
 ),
 nr AS (SELECT b, COUNT(*) AS _nr FROM bro GROUP BY b),
@@ -5328,18 +5341,9 @@ def p09(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.least(
                 F.expr("sum_ratio_e6 DIV n_bigrams DIV 10000"), F.lit(100)
             ).alias("acc"),
-            (
-                F.conv(
-                    F.substring(
-                        F.md5(F.col("doc_id").cast("string").cast("binary")),
-                        1,
-                        7,
-                    ),
-                    16,
-                    10,
-                ).cast("bigint")
-                % 100
-            ).alias("draw"),
+            (dedup.md5_prefix_hash(F.col("doc_id").cast("string")) % 100).alias(
+                "draw"
+            ),
         )
     )
     keep = F.col("draw") < F.col("acc")
@@ -5718,7 +5722,7 @@ def t43(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source",
         F.explode(dedup.word_shingles(F.col("text"), 5)).alias("sg"),
     ).select(
-        "source", dedup.base_hash28(F.col("sg")).alias("h")
+        "source", dedup.md5_prefix_hash(F.col("sg")).alias("h")
     )
     # bottom-K DISTINCT hashes per source WITHOUT a corpus-wide
     # distinct first: dense_rank counts distinct h values, and its
@@ -5987,7 +5991,7 @@ def p11(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.length("clean")).cast("bigint").alias("kept_chars"),
             (F.sum("orig_chars") - F.sum(F.length("clean")))
             .cast("bigint").alias("removed_chars"),
-            F.sum(dedup.base_hash28(F.col("clean")))
+            F.sum(dedup.md5_prefix_hash(F.col("clean")))
             .alias("clean_checksum"),
         )
         .orderBy("source")
@@ -7443,41 +7447,17 @@ def d25(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tag each config's (doc_id, band) rows and run ONE
     # (config, band)-keyed bucket-size cap + self-join over the union
     # instead of three separate cap shuffles and self-joins (the band
-    # digests are identical to minhash_band_table's: md5 of
-    # "band{b}|" + the "|"-joined band rows, first 15 hex digits as a
-    # BIGINT). The config tag in the join key keeps buckets from
+    # keys are minhash_band_table's: ``dedup.band_digests``). The
+    # config tag in the join key keeps buckets from
     # different bandings apart; per-config results are bit-identical
     # to three independent minhash_candidates calls.
     banded = None
     for nb, rpb in _D25_CONFIGS:
-        digs = [
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(
-                            F.lit(f"band{b}|"),
-                            F.concat_ws(
-                                "|",
-                                *[
-                                    F.col(f"_s{b * rpb + j}").cast("string")
-                                    for j in range(rpb)
-                                ],
-                            ),
-                        ).cast("binary")
-                    ),
-                    1,
-                    15,
-                ),
-                16,
-                10,
-            ).cast("bigint")
-            for b in range(nb)
-        ]
         one = sigs.select(
             F.lit(nb).alias("bands"),
             F.lit(rpb).alias("rows_per_band"),
             F.col("doc_id"),
-            F.explode(F.array(*digs)).alias("_band"),
+            F.explode(F.array(*dedup.band_digests(nb, rpb))).alias("_band"),
         )
         banded = one if banded is None else banded.unionAll(one)
     bucket_sizes = banded.groupBy("bands", "_band").agg(

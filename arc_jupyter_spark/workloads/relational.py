@@ -438,7 +438,7 @@ SELECT c_mktsegment,
        COUNT(*) AS n,
        CAST(FLOOR(CAST(SUM(LENGTH(c_name)) AS DOUBLE) * 10000 / COUNT(*) + 0.5) AS BIGINT) AS avg_name_len_e4,
        MIN(UPPER(SUBSTR(c_name, 1, 8))) AS min_prefix,
-       SUM(CASE WHEN c_name LIKE '%1%' THEN 1 ELSE 0 END) AS n_with_one,
+       CAST(SUM(CASE WHEN c_name LIKE '%1%' THEN 1 ELSE 0 END) AS BIGINT) AS n_with_one,
        MAX(CONCAT(c_mktsegment, '#', LOWER(SUBSTR(c_name, 1, 4)))) AS max_tag
 FROM customer
 GROUP BY c_mktsegment
@@ -1132,7 +1132,7 @@ def q37(spark: SparkSession, sf_dir: str) -> DataFrame:
 Q38_SQL = """
 SELECT
   COUNT(*) AS n,
-  SUM(CASE WHEN NULLIF(l_returnflag, 'N') IS NULL THEN 1 ELSE 0 END) AS n_flag_n,
+  CAST(SUM(CASE WHEN NULLIF(l_returnflag, 'N') IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_flag_n,
   ROUND((CAST(SUM(CAST(FLOOR(COALESCE(NULLIF(l_discount, 0.0), 0.05) * 100 + 0.5) AS BIGINT)) AS DOUBLE) / 100), 2) AS disc_with_default
 FROM lineitem
 """
@@ -1727,7 +1727,7 @@ ORDER BY l_suppkey
 Q59_ORACLE = """
 SELECT l_suppkey,
        COUNT(*) AS n_lines,
-       SUM(CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT)) AS price_e2
+       CAST(SUM(CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT)) AS BIGINT) AS price_e2
 FROM lineitem
 GROUP BY l_suppkey
 ORDER BY l_suppkey
@@ -2021,7 +2021,7 @@ v AS (
   FROM changes
 )
 SELECT user_id, COUNT(*) AS n_versions,
-       SUM(CASE WHEN valid_to IS NULL THEN 1 ELSE 0 END) AS n_open,
+       CAST(SUM(CASE WHEN valid_to IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_open,
        CAST(SUM(epoch_ms(valid_to) - epoch_ms(valid_from)) AS BIGINT)
          AS total_ms
 FROM v GROUP BY user_id ORDER BY user_id LIMIT 25
@@ -2220,7 +2220,7 @@ full_agg AS (
          SUM(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)) AS cents
   FROM orders GROUP BY o_orderpriority
 )
-SELECT m.o_orderpriority, m.n AS n_merged,
+SELECT m.o_orderpriority, CAST(m.n AS BIGINT) AS n_merged,
        CAST(m.cents AS DOUBLE) / 100 AS total_merged,
        (m.n = f.n AND m.cents = f.cents) AS consistent
 FROM merged m JOIN full_agg f USING (o_orderpriority)
@@ -2331,7 +2331,7 @@ dim AS (
   WHERE name IN ('m1', 'm2')
 )
 SELECT d.name, COUNT(*) AS n,
-       SUM(CAST(FLOOR(f.o_totalprice * 100 + 0.5) AS BIGINT)) AS cents,
+       CAST(SUM(CAST(FLOOR(f.o_totalprice * 100 + 0.5) AS BIGINT)) AS BIGINT) AS cents,
        TRUE AS dpp_used
 FROM fact f JOIN dim d USING (mo)
 GROUP BY d.name ORDER BY d.name
@@ -2458,7 +2458,8 @@ def q78(spark: SparkSession, sf_dir: str) -> DataFrame:
 Q79_SQL = """
 SELECT user_id, ts,
        COUNT(*) OVER w AS n_trailing_hour,
-       SUM(CAST(FLOOR(value * 1000000 + 0.5) AS BIGINT)) OVER w AS tot_e6
+       CAST(SUM(CAST(FLOOR(value * 1000000 + 0.5) AS BIGINT)) OVER w AS BIGINT)
+         AS tot_e6
 FROM events
 WINDOW w AS (PARTITION BY user_id ORDER BY ts
              RANGE BETWEEN INTERVAL 1 HOUR PRECEDING AND CURRENT ROW)

@@ -280,7 +280,8 @@ def s03(spark: SparkSession, sf_dir: str) -> DataFrame:
 Q56_ORACLE = """
 SELECT l_returnflag,
        COUNT(*) AS n,
-       SUM(CAST(FLOOR(l_extendedprice * (1 - l_discount) * 100 + 0.5) AS BIGINT)) AS revenue_e2
+       CAST(SUM(CAST(FLOOR(l_extendedprice * (1 - l_discount) * 100 + 0.5) AS BIGINT))
+            AS BIGINT) AS revenue_e2
 FROM lineitem
 GROUP BY l_returnflag
 ORDER BY l_returnflag
@@ -337,7 +338,8 @@ def q56(spark: SparkSession, sf_dir: str) -> DataFrame:
 Q57_ORACLE = """
 SELECT o.o_orderpriority,
        COUNT(*) AS n_lines,
-       SUM(CAST(FLOOR(l.l_extendedprice * (1 - l.l_discount) * 100 + 0.5) AS BIGINT)) AS revenue_e2
+       CAST(SUM(CAST(FLOOR(l.l_extendedprice * (1 - l.l_discount) * 100 + 0.5) AS BIGINT))
+            AS BIGINT) AS revenue_e2
 FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
 GROUP BY 1 ORDER BY 1
 """
@@ -415,8 +417,8 @@ x AS (
          CAST(js -> '$.price[0]' AS BIGINT) AS p0
   FROM j
 )
-SELECT SUM(i0) AS sum_i0, SUM(i1) AS sum_i1, SUM(p0) AS sum_price_floor,
-       COUNT(*) AS n
+SELECT CAST(SUM(i0) AS BIGINT) AS sum_i0, CAST(SUM(i1) AS BIGINT) AS sum_i1,
+       CAST(SUM(p0) AS BIGINT) AS sum_price_floor, COUNT(*) AS n
 FROM x
 """
 
@@ -460,8 +462,8 @@ def q58(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------
 
 Q60_ORACLE = """
-SELECT o_orderstatus, COUNT(*) AS n, SUM(o_orderkey) AS key_sum,
-       SUM(o_custkey) AS cust_sum
+SELECT o_orderstatus, COUNT(*) AS n, CAST(SUM(o_orderkey) AS BIGINT) AS key_sum,
+       CAST(SUM(o_custkey) AS BIGINT) AS cust_sum
 FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus
 """
 
@@ -518,7 +520,7 @@ def q60(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------
 
 Q62_ORACLE = """
-SELECT o_orderstatus, COUNT(*) AS n, SUM(o_orderkey) AS key_sum
+SELECT o_orderstatus, COUNT(*) AS n, CAST(SUM(o_orderkey) AS BIGINT) AS key_sum
 FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus
 """
 
@@ -583,7 +585,7 @@ def q62(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------
 
 Q64_ORACLE = """
-SELECT n_regionkey, COUNT(*) AS n_nations, SUM(n_nationkey) AS key_sum
+SELECT n_regionkey, COUNT(*) AS n_nations, CAST(SUM(n_nationkey) AS BIGINT) AS key_sum
 FROM nation GROUP BY n_regionkey ORDER BY n_regionkey
 """
 
@@ -651,7 +653,7 @@ def q64(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 Q65_ORACLE = """
 SELECT COUNT(*) AS n,
-       SUM(CAST(2 * n_nationkey + 1 AS BIGINT)) AS resp_sum
+       CAST(SUM(CAST(2 * n_nationkey + 1 AS BIGINT)) AS BIGINT) AS resp_sum
 FROM nation
 """
 
@@ -699,7 +701,7 @@ Q66_ORACLE = """
 WITH src AS (
   SELECT n_nationkey, n_regionkey FROM nation WHERE n_nationkey < 10
 )
-SELECT n_regionkey, COUNT(*) AS n, SUM(n_nationkey) AS key_sum
+SELECT n_regionkey, COUNT(*) AS n, CAST(SUM(n_nationkey) AS BIGINT) AS key_sum
 FROM src GROUP BY n_regionkey ORDER BY n_regionkey
 """
 
@@ -851,7 +853,7 @@ def q68(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 Q69_ORACLE = """
 SELECT n_regionkey,
-       SUM(CAST(2 * n_nationkey + 7 AS BIGINT)) AS score_sum,
+       CAST(SUM(CAST(2 * n_nationkey + 7 AS BIGINT)) AS BIGINT) AS score_sum,
        COUNT(*) AS n
 FROM nation GROUP BY n_regionkey ORDER BY n_regionkey
 """

@@ -169,7 +169,7 @@ WITH w AS (
 SELECT CAST(window_start AS TIMESTAMP) AS window_start,
        event_type,
        COUNT(*) AS n,
-       SUM(CAST(FLOOR(value * 1000000 + 0.5) AS BIGINT)) AS sum_value_e6
+       CAST(SUM(CAST(FLOOR(value * 1000000 + 0.5) AS BIGINT)) AS BIGINT) AS sum_value_e6
 FROM w
 GROUP BY 1, 2
 ORDER BY 1, 2
@@ -230,7 +230,7 @@ def st03(spark: SparkSession, sf_dir: str) -> DataFrame:
 ST04_ORACLE = """
 SELECT CAST(time_bucket(INTERVAL 1 HOUR, a.ts) AS TIMESTAMP) AS click_hour,
        COUNT(*) AS n_pairs,
-       SUM(CAST(FLOOR(b.value * 100 + 0.5) AS BIGINT)) AS sum_purchase_e2,
+       CAST(SUM(CAST(FLOOR(b.value * 100 + 0.5) AS BIGINT)) AS BIGINT) AS sum_purchase_e2,
        MIN((epoch_us(b.ts) // 1000000) - (epoch_us(a.ts) // 1000000)) AS min_delay_s,
        MAX((epoch_us(b.ts) // 1000000) - (epoch_us(a.ts) // 1000000)) AS max_delay_s
 FROM events a JOIN events b
@@ -364,7 +364,8 @@ sessions AS (
 SELECT user_id,
        CAST(MIN(ts) AS TIMESTAMP) AS session_start,
        COUNT(*) AS n_events,
-       SUM(CAST(FLOOR(value * 1000000 + 0.5) AS BIGINT)) AS session_value_e6
+       CAST(SUM(CAST(FLOOR(value * 1000000 + 0.5) AS BIGINT)) AS BIGINT)
+         AS session_value_e6
 FROM sessions
 GROUP BY user_id, session_id
 ORDER BY user_id, session_start
@@ -420,7 +421,7 @@ def st06(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 ST07_ORACLE = """
 SELECT event_type, COUNT(*) AS n,
-       SUM(CAST(FLOOR(value * 1000000 + 0.5) AS BIGINT)) AS sum_value_e6
+       CAST(SUM(CAST(FLOOR(value * 1000000 + 0.5) AS BIGINT)) AS BIGINT) AS sum_value_e6
 FROM events GROUP BY event_type ORDER BY event_type
 """
 

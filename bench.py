@@ -161,6 +161,24 @@ SHARED_18 = [
 ]
 
 
+def compact_summary(detail: dict, timings: dict, first_pass: dict) -> dict:
+    """The compact final stdout line (must stay well under ~1.5 KB — see
+    the SHARED_18 note): totals over all queries + per-query detail for
+    the stable 18-query cross-round subset only."""
+    return {
+        "metric": "headline_queries_total_wall",
+        "value": detail["value"],
+        "unit": "sec",
+        "n": len(HEADLINE),
+        "value_first_pass": detail["value_first_pass"],
+        "value_first_pass_quiet": detail.get("value_first_pass_quiet"),
+        "shared18": round(sum(timings[q] for q in SHARED_18), 3),
+        "shared18_first_pass": round(sum(first_pass[q] for q in SHARED_18), 3),
+        "queries": {q: timings[q] for q in SHARED_18},
+        "sf": detail["sf"],
+    }
+
+
 def _host_cpu_ref(n: int = 20_000_000) -> float:
     """Best-of-3 wall of a fixed single-core integer loop — the
     host-speed reference embedded in every BENCH_DETAIL."""
@@ -401,21 +419,7 @@ def main() -> int:
     with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
                            "BENCH_DETAIL.json"), "w") as fh:
         json.dump(detail, fh, indent=1)
-    # compact final line (must stay well under ~1.5 KB — see SHARED_18
-    # note): totals over all queries + per-query detail for the stable
-    # 18-query cross-round subset only
-    out = {
-        "metric": "headline_queries_total_wall",
-        "value": detail["value"],
-        "unit": "sec",
-        "n": len(HEADLINE),
-        "value_first_pass": detail["value_first_pass"],
-        "value_first_pass_quiet": detail.get("value_first_pass_quiet"),
-        "shared18": round(sum(timings[q] for q in SHARED_18), 3),
-        "shared18_first_pass": round(sum(first_pass[q] for q in SHARED_18), 3),
-        "queries": {q: timings[q] for q in SHARED_18},
-        "sf": sf_val,
-    }
+    out = compact_summary(detail, timings, first_pass)
     line = json.dumps(out)
     if len(line) >= 1400:
         # never crash a multi-minute run at the final print: drop the

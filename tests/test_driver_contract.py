@@ -29,23 +29,21 @@ def test_headline_is_a_subset_of_queries():
 
 def test_bench_summary_line_fits_driver_capture():
     """Round 3 was lost to a 2.5 KB final line the driver truncated;
-    the compact summary (worst case: every SHARED_18 timing printed at
-    4-digit seconds) must stay under the 1.4 KB guard bench.py also
-    asserts at runtime."""
-    from bench import HEADLINE, SHARED_18
+    the compact summary bench.py prints (worst case: every total and
+    SHARED_18 timing at 4-digit seconds) must stay under the 1.4 KB
+    guard bench.py also asserts at runtime."""
+    from bench import SHARED_18, compact_summary
 
-    fake = {
-        "metric": "headline_total_sec",
-        "value": 9999.999,
-        "unit": "sec",
-        "sf": 0.1,
-        "n": len(HEADLINE),
-        "first_pass_total": 9999.999,
-        "shared18": 9999.999,
-        "shared18_first_pass": 9999.999,
-        "queries": {q: 9999.999 for q in SHARED_18},
+    worst = 9999.999
+    detail = {
+        "value": worst,
+        "value_first_pass": worst,
+        "value_first_pass_quiet": worst,
+        "sf": 0.001,
     }
-    assert len(json.dumps(fake)) < 1400
+    timings = {q: worst for q in SHARED_18}
+    line = json.dumps(compact_summary(detail, timings, dict(timings)))
+    assert len(line) < 1400, len(line)
 
 
 def test_oracles_only_reference_registered_views():
@@ -80,3 +78,33 @@ def test_oracles_only_reference_registered_views():
         if unknown:
             bad[name] = sorted(unknown)
     assert not bad, f"oracles referencing unregistered tables: {bad}"
+
+
+def test_no_oracle_returns_hugeint():
+    """DuckDB types SUM(<integer>) as HUGEINT, which the driver's pandas
+    fetch turns into float64 while Spark's side stays int64: equal values,
+    different hashes. Every oracle must cast such a column to BIGINT
+    itself. Binding (no execution) over the fixture views is enough to
+    read the result types."""
+    import duckdb
+
+    import __spark_entry__ as e
+    from arc_jupyter_spark.workloads.base import TABLES
+    from conftest import SF_DIR
+
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
+        )
+    bad = []
+    for name, sql in sorted(e.oracle_sql().items()):
+        rel = con.sql(sql)
+        bad += [
+            f"{name}.{col}" for col, typ in zip(rel.columns, rel.types)
+            if str(typ) == "HUGEINT"
+        ]
+    assert not bad, (
+        "oracle columns typed HUGEINT (write CAST(... AS BIGINT) at the "
+        f"column's expression): {bad}"
+    )

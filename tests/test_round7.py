@@ -322,7 +322,7 @@ def test_p11_reassembly_is_lossless_without_dups(spark):
     (keep-first drops nothing), and one with an exact duplicate doc
     must drop the duplicate's full length."""
     from arc_jupyter_spark.workloads import queries  # noqa: F401
-    from arc_jupyter_spark.operators.dedup import cdc_chunks, base_hash28
+    from arc_jupyter_spark.operators.dedup import cdc_chunks
     from pyspark.sql import functions as F
 
     # high-entropy texts (verified chunk-collision-free): low-entropy

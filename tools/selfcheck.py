@@ -31,7 +31,7 @@ green status is re-derived, not inherited.
 
 ``--emit FILE`` additionally writes the per-query results as JSON in
 the driver's CORRECTNESS format ({name: {rows_match, schema_match,
-hash_match, spark_rows, oracle_rows, err}}), so the full 195-query
+hash_match, spark_rows, oracle_rows, err}}), so the full query
 matrix can be committed per round (SELFCHECK_r{N}.json) and diffed by
 the judge instead of sampled. Queries with no oracle entry are
 recorded rows-only (hash_match/schema_match null), mirroring the
@@ -153,6 +153,7 @@ def main() -> int:
 
     from arc_jupyter_spark.metrics import SegmentMeter
     from arc_jupyter_spark.workloads import oracle_sql, queries
+    from arc_jupyter_spark.workloads.base import TABLES
 
     args = sys.argv[1:]
     tuned = "--tuned" in args
@@ -192,9 +193,7 @@ def main() -> int:
         spark = SparkSession.builder.getOrCreate()
         spark.sparkContext.setLogLevel("ERROR")
     con = duckdb.connect()
-    for t in (
-        "region nation customer supplier part orders lineitem events documents embeddings"
-    ).split():
+    for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
         )
