@@ -23,10 +23,9 @@ Shape, designed for the 100 TB case:
    partial aggregation on ``doc_id``. Nothing proportional to corpus
    text volume ever reaches a shuffle.
 
-Digests are Spark-internal 64-bit xxhash64 keys (the oracles join
-raw shingle strings, so the hash choice cannot change a result — a
-2^-64-scale collision flags one extra shared shingle, a conservative
-error for a contamination screen).
+Digests are plan-internal (``digest.internal_digest``); the oracles
+join raw shingle strings. A collision flags one extra shared shingle,
+a conservative error for a contamination screen.
 """
 
 from __future__ import annotations
@@ -41,11 +40,9 @@ def shingle_digests(text: Column, n: int = 7) -> Column:
 
     ``array_distinct`` runs map-side so a document repeating one
     shingle many times contributes it once — overlap counts below are
-    set-semantics, matching COUNT(DISTINCT ...) oracles. Digests are
-    64-bit xxhash64 (one hash per shingle, no per-shingle string
-    build — see :func:`word_shingle_digests`): the broadcast eval set
-    and the exploded corpus rows carry 8 bytes per shingle instead of
-    a 32-char string.
+    set-semantics, matching COUNT(DISTINCT ...) oracles. With
+    :func:`word_shingle_digests` the broadcast eval set and the
+    exploded corpus rows carry 8 bytes per shingle, not a string.
     """
     return F.array_distinct(word_shingle_digests(text, n))
 

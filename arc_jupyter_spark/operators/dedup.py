@@ -10,8 +10,9 @@ Scale design:
   functions (``transform``/``array_min``) — no explode, no shuffle;
   only the tiny (id, band-hash) pairs shuffle for bucketing. Banding
   turns the O(n²) pair space into per-bucket joins.
-- Hashes are md5-based (not Spark's murmur3 ``hash``) so results are
-  engine-independent and oracle-checkable.
+- Digests come from ``arc_jupyter_spark.digest``, which states the
+  rule: md5 forms where an oracle sees the value, ``xxhash64`` for
+  plan-internal keys.
 """
 
 from __future__ import annotations
@@ -19,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from arc_jupyter_spark.checkpoint import materialize, materialize_lazy
+from arc_jupyter_spark.digest import band_digests, internal_digest, md5_hex, md5_prefix_hash
 from arc_jupyter_spark.operators.litarray import long_array
 
 
@@ -47,13 +49,11 @@ def exact_dedup_by_digest(df: DataFrame, text_col: str, order_col: str) -> DataF
     (map-side combine collapses same-digest rows before the shuffle)
     and needs no per-partition sort.
 
-    The digest is ``xxhash64`` of the full text — a group key only
-    (dropped before return; oracles partition by their own md5 of the
-    text, which is the same grouping). xxhash64 streams the payload
-    ~an order of magnitude faster per byte than md5, and this is the
-    one digest in the module computed over whole documents.
+    The digest is ``internal_digest`` of the full text, dropped before
+    return; it streams whole documents ~an order of magnitude faster
+    per byte than md5.
     """
-    keyed = df.withColumn("_digest", F.xxhash64(F.col(text_col)))
+    keyed = df.withColumn("_digest", internal_digest(F.col(text_col)))
     packed = keyed.groupBy("_digest").agg(
         F.min_by(F.struct(*df.columns), F.col(order_col)).alias("_row")
     )
@@ -145,21 +145,12 @@ def word_shingle_digests(text: Column, n: int = 3) -> Column:
     """Per-position 64-bit shingle digests of lowercased whitespace-
     tokenized text — :func:`word_shingles` fused with the digest step.
 
-    The digest is ``xxhash64`` over the shingle's n tokens directly
-    (seed-chained multi-arg form), so the per-shingle ``concat_ws``
-    string is never built and no md5+substring+conv chain runs — one
-    cheap hash per shingle inside the interpreted HOF (guide §4.2:
-    make the per-row work cheap; the map stage hashing every shingle
-    of the corpus is the dominant CPU at scale). Digests are
-    Spark-internal join/group keys only — every oracle joins raw
-    shingle strings — so swapping the hash cannot change a declared
-    result; only the collision class moves, and it IMPROVES:
-    full 64-bit xxhash64 (2^-64-scale) vs the 60-bit truncated md5 it
-    replaces. Documents shorter than ``n`` tokens contribute one
-    whole-document digest (hash of the joined string — never equal to
-    any n-token shingle's multi-arg digest except by hash collision,
-    mirroring the string scheme where the two forms differ in token
-    count).
+    The digest is ``internal_digest`` over the shingle's n tokens
+    directly (seed-chained multi-arg form): no per-shingle ``concat_ws``
+    string, one cheap hash per shingle inside the interpreted HOF (guide
+    §4.2). Every oracle joins raw shingle strings. Documents shorter
+    than ``n`` tokens contribute one whole-document digest (hash of the
+    joined string, unequal to any n-token digest but by collision).
     """
     tokens = F.filter(F.split(F.lower(text), r"\s+"), lambda t: t != "")
 
@@ -168,11 +159,11 @@ def word_shingle_digests(text: Column, n: int = 3) -> Column:
             F.size(toks) >= n,
             F.transform(
                 F.sequence(F.lit(1), F.size(toks) - (n - 1)),
-                lambda j: F.xxhash64(
+                lambda j: internal_digest(
                     *[F.element_at(toks, j + i) for i in range(n)]
                 ),
             ),
-        ).otherwise(F.array(F.xxhash64(F.concat_ws(" ", toks))))
+        ).otherwise(F.array(internal_digest(F.concat_ws(" ", toks))))
 
     return F.flatten(F.transform(F.array(tokens), per_doc))
 
@@ -205,44 +196,6 @@ def minhash_coefficients(num_hashes: int) -> list[tuple[int, int]]:
         b = next(gen)
         out.append((a, b))
     return out
-
-
-def md5_prefix_hash(value: Column, hex_digits: int = 7) -> Column:
-    """Portable md5 base hash: the first ``hex_digits`` hex chars of
-    md5 as BIGINT (7 gives the 28-bit base hash, 15 a 60-bit digest).
-
-    Engine-independent (DuckDB:
-    ``('0x'||substr(md5(s),1,<hex_digits>))::BIGINT`` matches exactly)
-    unlike murmur3 ``hash()``/``xxhash64``. ONE md5 + ``conv`` per
-    shingle — computing a fresh md5 per seed (md5 + BigInteger conv)
-    dominated profiles; the seed family is derived arithmetically
-    instead. Long signatures also keep the min-aggregation in
-    HashAggregate (string mins force SortAggregate).
-    """
-    digest = F.md5(value.cast("binary"))
-    return F.conv(F.substring(digest, 1, hex_digits), 16, 10).cast("long")
-
-
-def band_digests(bands: int, rows_per_band: int) -> list[Column]:
-    """LSH band keys over the signature columns ``_s0.._sN`` of
-    :func:`minhash_signature_table`: md5 of ``band{b}|`` + the
-    ``|``-joined band rows, first 15 hex digits as a BIGINT."""
-    return [
-        md5_prefix_hash(
-            F.concat(
-                F.lit(f"band{b}|"),
-                F.concat_ws(
-                    "|",
-                    *[
-                        F.col(f"_s{b * rows_per_band + j}").cast("string")
-                        for j in range(rows_per_band)
-                    ],
-                ),
-            ),
-            15,
-        )
-        for b in range(bands)
-    ]
 
 
 def minhash_signature_table(
@@ -292,11 +245,9 @@ def minhash_band_table(
     """Per-document LSH band digests: ``(id_col, _band)`` rows.
 
     The shared banding primitive behind candidate generation and
-    incremental near-dedup — one md5 per band over the concatenated
-    band rows of the MinHash signature, truncated to a BIGINT (8 bytes
-    per band key on the shuffle instead of a 32-char hex string; a
-    2^-60-scale collision just adds one spurious candidate pair, which
-    downstream exact verification tolerates by design).
+    incremental near-dedup: one :func:`band_digests` BIGINT per band, 8
+    bytes on the shuffle (a collision adds one spurious candidate pair,
+    which downstream exact verification tolerates by design).
 
     Pass a precomputed ``sigs`` (from :func:`minhash_signature_table`)
     to avoid re-shingling when a pipeline needs both the signatures
@@ -850,8 +801,8 @@ def bloom_positions(key: Column, num_hashes: int, num_bits: int) -> Column:
 
     md5-derived with a per-hash salt prefix, so the filter is
     engine-portable: DuckDB reproduces the identical bit pattern with
-    ``('0x' || substr(md5(j || '|' || key), 1, 7))::BIGINT % num_bits``
-    — which makes even the false-positive SET exact and oracle-checkable,
+    ``digest.duck_md5_prefix_hash("j || '|' || key") % num_bits`` —
+    which makes even the false-positive SET exact and oracle-checkable,
     not just bounded.
     """
     return F.array(
@@ -952,7 +903,7 @@ def simhash64(text: Column, num_bits: int = 64) -> Column:
     across engines; pack to a bigint downstream if needed).
     """
     tokens = F.filter(F.split(F.lower(text), r"\s+"), lambda t: t != "")
-    hashes = F.transform(tokens, lambda t: F.md5(t.cast("binary")))
+    hashes = F.transform(tokens, lambda t: md5_hex(t.cast("binary")))
     # Interpreted HOF lambdas do no common-subexpression elimination,
     # so everything per-token must be bound as a lambda variable and
     # string work must happen once, not once per bit: tokenize+md5 is
@@ -1051,15 +1002,11 @@ def positional_shingles(
         df.select(F.col(id_col), tokens.alias("_toks"))
         .where(F.size("_toks") >= n)
     )
-    # 64-bit digest: seed-chained multi-arg xxhash64 over the gram's n
-    # tokens — the gram string is never concatenated and no
-    # md5+substring+conv chain runs (guide §4.2: this projection
-    # hashes every token position of the corpus, the dominant map CPU
-    # at scale). Digests never surface in results (oracles join raw
-    # gram strings); collisions merge two grams' doc sets — at 2^-64
-    # (vs 2^-60 for the truncated md5 this replaces), negligible
-    # against the >= 2 doc-frequency threshold even at corpus scale.
-    digest = F.xxhash64(
+    # seed-chained multi-arg digest over the gram's n tokens: no gram
+    # string (guide §4.2: this projection hashes every token position of
+    # the corpus). Oracles join raw gram strings; a 2^-64 collision
+    # merges two grams' doc sets.
+    digest = internal_digest(
         *[F.element_at(F.col("_toks"), F.col("_pos") + i) for i in range(n)]
     )
     return toks.select(
@@ -1718,13 +1665,10 @@ def passage_dedup(
     chunk_arr = F.slice(
         F.col("_toks"), F.col("_idx") * passage_len + 1, passage_len
     )
-    # digest = xxhash64 of the token-array slice directly: no chunk
-    # string is ever concatenated, no re-split to count tokens (the
-    # slice of an already-filtered token array has no empties, so its
-    # size IS the chunk's token count), no md5+substring+conv chain
-    # (guide §4.2). The digest is a Spark-internal group key only —
-    # the oracle groups by its own md5 of the passage string — so only
-    # the collision class changes (2^-64 vs 2^-60, an improvement).
+    # digest of the token-array slice directly: no chunk string, no
+    # re-split to count tokens (a slice of the filtered token array has
+    # no empties, so its size IS the chunk's token count). The oracle
+    # groups by its own md5 of the passage string.
     occ = (
         df.select(F.col(id_col), toks.alias("_toks"))
         .where(F.size("_toks") > 0)
@@ -1736,7 +1680,7 @@ def passage_dedup(
         .select(
             F.col(id_col),
             F.col("_idx"),
-            F.xxhash64(chunk_arr).alias("_digest"),
+            internal_digest(chunk_arr).alias("_digest"),
             F.size(chunk_arr).cast("bigint").alias("_chunk_toks"),
         )
     )
@@ -1810,9 +1754,8 @@ def boilerplate_chunks(
         .select(
             F.col(id_col),
             F.col(group_col),
-            # array-hash digest, same scheme as passage_dedup: no
-            # chunk string, no md5 chain; group key only (2^-64)
-            F.xxhash64(chunk_arr).alias("_digest"),
+            # array-hash digest, same scheme as passage_dedup
+            internal_digest(chunk_arr).alias("_digest"),
             F.size(chunk_arr).cast("bigint").alias("_chunk_toks"),
         )
     )

@@ -12,6 +12,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from arc_jupyter_spark.digest import internal_digest
+
 
 def asof_join(
     left: DataFrame,
@@ -185,7 +187,7 @@ def salted_join(
     fact_s = fact.withColumn(
         salt_col,
         F.pmod(
-            F.xxhash64(*[F.col(c) for c in fact.columns]), F.lit(salts)
+            internal_digest(*[F.col(c) for c in fact.columns]), F.lit(salts)
         ).cast("int"),
     )
     dim_s = dim.withColumn(

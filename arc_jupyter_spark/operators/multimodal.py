@@ -65,6 +65,7 @@ def _decode_image_stub(payload: bytes) -> tuple[int, int, int, str]:
     Real path: ``PIL.Image.open(io.BytesIO(payload))``. The fake keeps
     tests deterministic and exercises the full Arrow round-trip.
     """
+    # hashlib in the Python worker; m01's oracle mirrors it as md5(text)
     digest = hashlib.md5(payload).digest()
     width = 64 + struct.unpack("<H", digest[0:2])[0] % 1024
     height = 64 + struct.unpack("<H", digest[2:4])[0] % 1024
@@ -81,6 +82,7 @@ def _decode_audio_stub(payload: bytes) -> tuple[int, int, int]:
     ``_decode_image_stub`` so the DuckDB oracle can reproduce it with
     hex-digit arithmetic (m04).
     """
+    # hashlib in the Python worker; m04's oracle mirrors it as md5(text)
     digest = hashlib.md5(payload).digest()
     sample_rate = _AUDIO_RATES[digest[0] % 4]
     n_samples = 1000 + struct.unpack("<I", digest[4:8])[0] % 160000
@@ -191,6 +193,7 @@ def image_features_stub(
         for pdf in batches:
             feats = []
             for payload in pdf[binary_col]:
+                # hashlib in the Python worker; m02's oracle mirrors it as md5(text)
                 digest = hashlib.md5(bytes(payload or b"")).digest()
                 feats.append(
                     [struct.unpack("<H", digest[2 * i:2 * i + 2])[0] / 65535.0 for i in range(dim)]
@@ -228,6 +231,7 @@ def sample_frames_stub(
                 for i in range(n_frames):
                     out = dict(row)
                     out["frame_index"] = i
+                    # hashlib in the Python worker; oracles mirror md5(text || i)
                     out["frame_digest"] = hashlib.md5(payload + str(i).encode()).hexdigest()
                     rows.append(out)
             yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])

@@ -20,7 +20,7 @@ from collections.abc import Mapping, Sequence
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
-from arc_jupyter_spark.operators.dedup import md5_prefix_hash
+from arc_jupyter_spark.digest import md5_prefix_hash
 
 #: Number of hash buckets sampling rates are quantized to. 4096 keeps
 #: rate resolution at ~0.02% while staying far inside the 28-bit hash
@@ -33,7 +33,7 @@ def sample_bucket(key: Column, buckets: int = SAMPLE_BUCKETS) -> Column:
     """Uniform deterministic bucket in ``[0, buckets)`` from a key column.
 
     md5-derived (``md5_prefix_hash``), so it is portable across engines —
-    DuckDB mirror: ``('0x' || substr(md5(k), 1, 7))::BIGINT % buckets``.
+    DuckDB mirror: ``digest.duck_md5_prefix_hash(k) % buckets``.
     """
     return md5_prefix_hash(key.cast("string")) % F.lit(buckets)
 
@@ -262,7 +262,7 @@ def shard_assign(
     - uniformity is that of md5 on distinct keys — shard sizes
       concentrate tightly around n/num_shards;
     - DuckDB mirror for oracles:
-      ``('0x' || substr(md5(k), 1, 7))::BIGINT % num_shards``.
+      ``digest.duck_md5_prefix_hash(k) % num_shards``.
 
     With ``repartition=True`` the frame is hash-repartitioned on the
     shard id so each output file task writes exactly one shard

@@ -2,18 +2,18 @@
 
 Count-min here; Bloom filters live in ``dedup`` (bloom_build /
 bloom_might_contain), HLL distinct counts ride Spark's built-in
-``approx_count_distinct``. The hash family is the portable md5 base
-hash (``('0x'||substr(md5(s),1,15))::BIGINT`` in DuckDB terms), so
-sketch contents are bit-identical across engines and partitionings —
-a sketch is just a tiny (depth x width) table, and merging two
-sketches is a union + groupBy-sum.
+``approx_count_distinct``. The hash family is ``digest.md5_prefix_hash``
+at 15 digits (oracle twin: ``_duck_sql.duck_count_min_ctes``), so sketch
+contents are bit-identical across engines and partitionings — a sketch
+is just a tiny (depth x width) table, and merging two sketches is a
+union + groupBy-sum.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
-from arc_jupyter_spark.operators.dedup import md5_prefix_hash
+from arc_jupyter_spark.digest import internal_digest, md5_prefix_hash
 
 
 def _bucket(key: Column, d: Column, width: int) -> Column:
@@ -112,7 +112,7 @@ def hll_shard_estimate(
     you would drop it (it is the expensive thing HLL replaces).
     """
     sharded = df.withColumn(
-        "_shard", F.pmod(F.xxhash64(F.col(key_col)), F.lit(num_shards))
+        "_shard", F.pmod(internal_digest(F.col(key_col)), F.lit(num_shards))
     )
     shard_sketches = sharded.groupBy("_shard").agg(
         F.hll_sketch_agg(F.col(key_col), F.lit(lg_k)).alias("_sk")

@@ -10,6 +10,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, functions as F
 
+from arc_jupyter_spark.digest import md5_hex, md5_prefix_hash
+
 # Tiny per-language stopword lists for the n-gram/stopword language
 # heuristic (public-knowledge function words).
 LANG_STOPWORDS: dict[str, tuple[str, ...]] = {
@@ -170,7 +172,7 @@ def top_bigram_fraction(text: Column) -> Column:
 def fingerprint(text: Column) -> Column:
     """Exact-content fingerprint: md5 of whitespace-normalized lowercased text."""
     normalized = F.regexp_replace(F.trim(F.lower(text)), r"\s+", " ")
-    return F.md5(normalized.cast("binary"))
+    return md5_hex(normalized.cast("binary"))
 
 
 def winnow_fingerprint(text: Column, shingle_len: int = 5) -> Column:
@@ -182,7 +184,7 @@ def winnow_fingerprint(text: Column, shingle_len: int = 5) -> Column:
     from arc_jupyter_spark.operators.dedup import word_shingles
 
     return F.array_min(
-        F.transform(word_shingles(text, shingle_len), lambda s: F.md5(s.cast("binary")))
+        F.transform(word_shingles(text, shingle_len), lambda s: md5_hex(s.cast("binary")))
     )
 
 
@@ -211,8 +213,6 @@ def overlapping_chunks(
     tokens × (window/stride). ``keep_cols`` pass through so callers
     don't re-join the corpus to recover grouping columns.
     """
-    from arc_jupyter_spark.operators.dedup import md5_prefix_hash
-
     toks = tokens(F.col(text_col))
     n_chunks = (
         F.lit(1)
@@ -526,9 +526,9 @@ def dsir_importance(
     documented deviation — sums of ratios rank slightly differently
     than sums of logs, but every value is a BIGINT and therefore
     partition- and engine-exact). Features are bigrams hashed into
-    ``buckets`` buckets with the portable md5-based
-    :func:`~arc_jupyter_spark.operators.dedup.md5_prefix_hash` (NOT
-    murmur3 ``hash()`` — oracles must reproduce it).
+    ``buckets`` buckets with
+    :func:`~arc_jupyter_spark.digest.md5_prefix_hash`, which oracles
+    reproduce.
 
     Scale shape: the two bucket-count tables are partial-aggregated
     to at most ``buckets`` rows each and broadcast into the raw
@@ -537,8 +537,6 @@ def dsir_importance(
     (the occurrence itself is counted), so the divisor never
     degenerates.
     """
-    from arc_jupyter_spark.operators.dedup import md5_prefix_hash
-
     def bucketed(df):
         occ = _bigram_occurrences(df, id_col, text_col)
         return occ.select(
@@ -603,8 +601,6 @@ def vocab_growth(
     token totals; everything else operates on ``shards`` rows.
     """
     from pyspark.sql import Window
-
-    from arc_jupyter_spark.operators.dedup import md5_prefix_hash
 
     shard = (
         md5_prefix_hash(F.col(id_col).cast("string")) % F.lit(shards) + 1

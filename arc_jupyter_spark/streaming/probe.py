@@ -22,6 +22,8 @@ import uuid
 
 from pyspark.sql import SparkSession, functions as F
 
+from arc_jupyter_spark.digest import md5_hex
+
 
 def rate_throughput_probe(
     spark: SparkSession,
@@ -136,7 +138,7 @@ def multibatch_cdc_ingest_probe(
         chunks = cdc_chunks(
             stream, id_col="doc_id", text_col="text",
             window=CDC_WINDOW, mask=CDC_MASK,
-        ).select("source", F.md5("chunk").alias("dg"))
+        ).select("source", md5_hex("chunk").alias("dg"))
         unique = chunks.dropDuplicates(["source", "dg"])
         q = (
             unique.writeStream.format("memory")
@@ -160,7 +162,7 @@ def multibatch_cdc_ingest_probe(
         expected = (
             cdc_chunks(docs, id_col="doc_id", text_col="text",
                        window=CDC_WINDOW, mask=CDC_MASK)
-            .select("source", F.md5("chunk").alias("dg"))
+            .select("source", md5_hex("chunk").alias("dg"))
             .distinct()
             .count()
         )

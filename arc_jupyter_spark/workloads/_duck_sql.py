@@ -10,6 +10,8 @@ cycle.
 
 from __future__ import annotations
 
+from arc_jupyter_spark.digest import duck_band_digests, duck_md5_prefix_hash
+
 #: DuckDB expression: lowercased whitespace tokens of ``text`` with
 #: empties removed — mirrors the Spark-side
 #: ``filter(split(lower(text), '\\s+'), t -> t != '')``.
@@ -37,6 +39,25 @@ def duck_shingles(n: int) -> str:
         f"j -> array_to_string(toks[j:j + {n - 1}], ' ')) "
         f"ELSE [array_to_string(toks, ' ')] END"
     )
+
+
+def duck_count_min_ctes(key: str, depth: int, width: int) -> str:
+    """CTEs ``hashed → cms → est(<key>, exact_n, estimate)`` over a
+    ``tc(<key>, exact_n)`` relation: the DuckDB twin of
+    ``sketch.count_min_build`` + ``count_min_estimate``."""
+    bucket = duck_md5_prefix_hash(f"d::VARCHAR || '|' || {key}", 15)
+    return f"""hashed AS (
+  SELECT {key}, exact_n, d,
+         {bucket}
+           % {width} AS bucket
+  FROM tc, unnest(generate_series(0, {depth - 1})) AS t(d)
+),
+cms AS (SELECT d, bucket, SUM(exact_n) AS cnt FROM hashed GROUP BY d, bucket),
+est AS (
+  SELECT h.{key}, h.exact_n, MIN(c.cnt) AS estimate
+  FROM hashed h JOIN cms c ON h.d = c.d AND h.bucket = c.bucket
+  GROUP BY h.{key}, h.exact_n
+)"""
 
 
 def duck_cdc_dist_cte(window: int = 8, mask: int = 64) -> str:
@@ -98,30 +119,25 @@ MINHASH_ROWS_PER_BAND = MINHASH_NUM_HASHES // MINHASH_BANDS
 MINHASH_SHINGLE_LEN = 3
 
 
+def duck_minhash_signatures() -> str:
+    """Select list ``<min-hash> AS s0, ...`` over a ``shingles`` list
+    column: the DuckDB twin of ``dedup.minhash_signature_table``."""
+    from arc_jupyter_spark.operators import dedup
+
+    base = duck_md5_prefix_hash("s")
+    return ", ".join(
+        f"list_min(list_transform(shingles, s -> ({a} * {base} + {b})"
+        f" % {dedup._MERSENNE31})) AS s{i}"
+        for i, (a, b) in enumerate(dedup.minhash_coefficients(MINHASH_NUM_HASHES))
+    )
+
+
 def duck_banded_cte(src: str = "documents") -> str:
     """DuckDB CTE chain ending in ``banded(doc_id, band)`` — the exact
     truncated-md5 minhash band BIGINTs the Spark operators compute.
     ``src`` is the relation banded over (any CTE with doc_id + text;
     default the documents table)."""
-    from arc_jupyter_spark.operators import dedup
-
-    coeffs = dedup.minhash_coefficients(MINHASH_NUM_HASHES)
-    sigs = ", ".join(
-        f"list_min(list_transform(shingles, "
-        f"s -> ({a} * ('0x' || substr(md5(s), 1, 7))::BIGINT + {b})"
-        f" % {dedup._MERSENNE31})) AS s{i}"
-        for i, (a, b) in enumerate(coeffs)
-    )
-    bands = ", ".join(
-        "('0x' || substr(md5('band{b}|' || {parts}), 1, 15))::BIGINT AS band{b}".format(
-            b=b,
-            parts=" || '|' || ".join(
-                f"s{b * MINHASH_ROWS_PER_BAND + r}::VARCHAR"
-                for r in range(MINHASH_ROWS_PER_BAND)
-            ),
-        )
-        for b in range(MINHASH_BANDS)
-    )
+    bands = duck_band_digests(MINHASH_BANDS, MINHASH_ROWS_PER_BAND)
     band_list = ", ".join(f"band{b}" for b in range(MINHASH_BANDS))
     return f"""toks AS (
   SELECT doc_id, {DUCK_TOKS} AS toks FROM {src}
@@ -130,7 +146,7 @@ sh AS (
   SELECT doc_id, {duck_shingles(MINHASH_SHINGLE_LEN)} AS shingles FROM toks
 ),
 sigs AS (
-  SELECT doc_id, {sigs} FROM sh
+  SELECT doc_id, {duck_minhash_signatures()} FROM sh
 ),
 banded AS (
   SELECT doc_id, unnest([{band_list}]) AS band FROM ( SELECT doc_id, {bands} FROM sigs )

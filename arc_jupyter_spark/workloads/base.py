@@ -128,10 +128,10 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
 
 def _pin_event_confs(spark: SparkSession) -> None:
     spark.conf.set(_NANOS_AS_LONG, "true")
-    # the ntz→ltz cast in read_events and epoch arithmetic (unix_micros)
-    # are the one session-timezone-sensitive spot in the workloads;
-    # DuckDB treats naive timestamps as UTC, so pin the session to match
-    # on whatever session the driver brings
+    # the ntz→ltz cast of both event readers and epoch arithmetic
+    # (unix_micros) are the one session-timezone-sensitive spot in the
+    # workloads; DuckDB treats naive timestamps as UTC, so pin the
+    # session to match on whatever session the driver brings
     spark.conf.set("spark.sql.session.timeZone", "UTC")
 
 
@@ -145,12 +145,17 @@ def read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     with identical values — a pure projection, pushdown-safe.
     """
     _pin_event_confs(spark)
-    df = read_parquet(spark, f"{sf_dir}/events.parquet")
+    return _normalize_ts(read_parquet(spark, f"{sf_dir}/events.parquet"))
+
+
+def _normalize_ts(df: DataFrame) -> DataFrame:
+    """``ts`` of an events read (batch or stream) as a microsecond
+    TimestampType column."""
     ts_type = df.schema["ts"].dataType.typeName()
     if ts_type == "long":  # int64 nanos under nanosAsLong
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif ts_type != "timestamp":  # timestamp_ntz → session-tz timestamp
-        df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+        return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    if ts_type != "timestamp":  # timestamp_ntz → session-tz timestamp
+        return df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
 
 
@@ -189,15 +194,9 @@ def read_table_stream(
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-stream read of the events fixture, ``ts`` normalized to
     TimestampType (same nanos/micros tolerance as :func:`read_events`)."""
-    spark.conf.set(_NANOS_AS_LONG, "true")
+    _pin_event_confs(spark)
     schema = read_parquet(spark, f"{sf_dir}/events.parquet").schema
-    stream = read_table_stream(spark, sf_dir, "events", schema)
-    ts_type = schema["ts"].dataType.typeName()
-    if ts_type == "long":
-        stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif ts_type != "timestamp":
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    return stream
+    return _normalize_ts(read_table_stream(spark, sf_dir, "events", schema))
 
 
 def load_views(spark: SparkSession, sf_dir: str, *names: str) -> None:

@@ -18,6 +18,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from arc_jupyter_spark.digest import (
+    duck_md5_prefix_hash, internal_digest, md5_prefix_hash,
+)
 from arc_jupyter_spark.operators import graph, litarray, quality, text, urls
 from arc_jupyter_spark.workloads.base import load_views, query
 
@@ -539,7 +542,7 @@ def m08(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = spark.table("documents").select(
         "doc_id",
         "source",
-        F.xxhash64(
+        internal_digest(
             F.concat(F.col("text"), F.lit("|"), F.col("doc_id").cast("string"))
         ).alias("ph"),
     )
@@ -584,7 +587,7 @@ def m08(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _P06_BUDGETS = {"src1": 1000, "src2": 5, "src3": 37, "src4": 2}
 
-P06_ORACLE = """
+P06_ORACLE = f"""
 WITH n AS (SELECT source, COUNT(*) AS n_src FROM documents GROUP BY source),
 b(source, budget) AS (VALUES ('src1', 1000), ('src2', 5), ('src3', 37), ('src4', 2)),
 d AS (
@@ -600,7 +603,7 @@ r AS (
 ranked AS (
   SELECT *, ROW_NUMBER() OVER (
       PARTITION BY source, epoch
-      ORDER BY ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 7))::BIGINT,
+      ORDER BY {duck_md5_prefix_hash("CAST(doc_id AS VARCHAR)")},
                doc_id) AS rk
   FROM r
 )
@@ -861,18 +864,18 @@ capped AS (
     SELECT *,
            ROW_NUMBER() OVER (
              PARTITION BY source
-             ORDER BY ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 7))::BIGINT,
+             ORDER BY {duck_md5_prefix_hash("CAST(doc_id AS VARCHAR)")},
                       doc_id) AS rk
     FROM gated
   ) WHERE rk <= {_P07_CAP}
 ),
 sharded AS (
   SELECT *,
-         ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 7))::BIGINT
+         {duck_md5_prefix_hash("CAST(doc_id AS VARCHAR)")}
            % {_P07_SHARDS} AS shard,
          length(clean) AS n_chars,
          CASE WHEN score * 1000 >= 60 * length(clean) THEN 1 ELSE 0 END AS is_code,
-         ('0x' || substr(md5(clean), 1, 7))::BIGINT AS ck
+         {duck_md5_prefix_hash("clean")} AS ck
   FROM capped
 )
 SELECT shard, COUNT(*) AS n_docs, CAST(SUM(is_code) AS BIGINT) AS n_code,
@@ -891,7 +894,6 @@ def p07_stage_frames(spark: SparkSession, sf_dir: str) -> dict:
     p07 query and bench.py's per-pipeline breakdown (VERDICT r7
     item 2)."""
     from arc_jupyter_spark.operators import sampling
-    from arc_jupyter_spark.operators.dedup import md5_prefix_hash
     from pyspark.sql import Window
 
     load_views(spark, sf_dir, "documents")
@@ -928,7 +930,6 @@ def p07_stage_frames(spark: SparkSession, sf_dir: str) -> dict:
 
 @query("p07_crawl_pipeline", oracle=P07_ORACLE)
 def p07(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from arc_jupyter_spark.operators.dedup import md5_prefix_hash
 
     sharded = p07_stage_frames(spark, sf_dir)["shard"]
     return (
@@ -1140,6 +1141,7 @@ def q87(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------
 
 _D16_LEN = 5
+_D16_CHUNK = f"toks[idx*{_D16_LEN}+1:idx*{_D16_LEN}+{_D16_LEN}]"
 
 D16_ORACLE = f"""
 WITH tk AS (
@@ -1157,10 +1159,8 @@ occ AS (
 ),
 ch AS (
   SELECT doc_id, source,
-         ('0x' || substr(md5(array_to_string(
-           toks[idx*{_D16_LEN}+1:idx*{_D16_LEN}+{_D16_LEN}], ' ')), 1, 15)
-         )::BIGINT AS dg,
-         len(toks[idx*{_D16_LEN}+1:idx*{_D16_LEN}+{_D16_LEN}]) AS ctoks
+         {duck_md5_prefix_hash(f"array_to_string({_D16_CHUNK}, ' ')", 15)} AS dg,
+         len({_D16_CHUNK}) AS ctoks
   FROM occ
 ),
 boiler AS (
@@ -1212,6 +1212,7 @@ def d16(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _T35_WIN = 32
 _T35_STRIDE = 16
+_T35_CHUNK = f"toks[idx*{_T35_STRIDE}+1:idx*{_T35_STRIDE}+{_T35_WIN}]"
 
 T35_ORACLE = f"""
 WITH tk AS (
@@ -1230,10 +1231,8 @@ occ AS (
 ),
 ch AS (
   SELECT doc_id, source, idx,
-         ('0x' || substr(md5(array_to_string(
-           toks[idx*{_T35_STRIDE}+1:idx*{_T35_STRIDE}+{_T35_WIN}], ' ')),
-           1, 15))::BIGINT AS dg,
-         len(toks[idx*{_T35_STRIDE}+1:idx*{_T35_STRIDE}+{_T35_WIN}]) AS ctoks
+         {duck_md5_prefix_hash(f"array_to_string({_T35_CHUNK}, ' ')", 15)} AS dg,
+         len({_T35_CHUNK}) AS ctoks
   FROM occ
 )
 SELECT source,

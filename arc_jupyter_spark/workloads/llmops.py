@@ -1,8 +1,10 @@
 """Training-data pipeline workloads: dedup, similarity search, text
 analysis — each oracle-checked against DuckDB where expressible.
 
-Hashing is md5-based everywhere (portable across engines); tokenization
-is ``\\s+`` splitting mirrored by DuckDB ``regexp_split_to_array``.
+Every digest comes from ``arc_jupyter_spark.digest``: md5 forms where
+an oracle recomputes the value, ``xxhash64`` only for plan-internal
+keys. Tokenization is ``\\s+`` splitting mirrored by DuckDB
+``regexp_split_to_array``.
 Oracle SQL for the hash-heavy queries (minhash, simhash) is generated
 programmatically so both engines compute bit-identical strings.
 """
@@ -12,7 +14,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from arc_jupyter_spark.checkpoint import materialize, materialize_lazy
-
+from arc_jupyter_spark.digest import (
+    band_digests, duck_band_digests, duck_md5_prefix_hash, md5_hex, md5_prefix_hash,
+)
 from arc_jupyter_spark.operators import (
     decontaminate,
     dedup,
@@ -28,6 +32,7 @@ from arc_jupyter_spark.workloads.base import exact_sum, load_views, query
 from arc_jupyter_spark.workloads._duck_sql import (
     DUCK_TOKS as _DUCK_TOKS,
     duck_cdc_dist_cte as _duck_cdc_dist,
+    duck_count_min_ctes as _duck_count_min,
     duck_shingles as _duck_shingles,
 )
 
@@ -68,6 +73,7 @@ from arc_jupyter_spark.workloads._duck_sql import (
     MINHASH_ROWS_PER_BAND as _ROWS_PER_BAND,
     MINHASH_SHINGLE_LEN as _SHINGLE_LEN,
     duck_banded_cte as _banded_cte,
+    duck_minhash_signatures as _duck_minhash_signatures,
 )
 
 
@@ -841,10 +847,10 @@ def t07(spark: SparkSession, sf_dir: str) -> DataFrame:
 _T08_RATES = {"en": 0.5, "de": 1.0, "zh": 0.25}
 _T08_DEFAULT = 0.75
 
-T08_ORACLE = """
+T08_ORACLE = f"""
 WITH b AS (
   SELECT lang, doc_id,
-         ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 7))::BIGINT % 4096 AS bucket
+         {duck_md5_prefix_hash("CAST(doc_id AS VARCHAR)")} % 4096 AS bucket
   FROM documents
 )
 SELECT lang, COUNT(*) AS n_kept, CAST(SUM(doc_id) AS BIGINT) AS id_sum
@@ -1085,7 +1091,7 @@ thr AS (
 SELECT t.lang, t.n_docs, CAST(t.weight_e6 AS BIGINT) AS weight_e6,
        CAST(t.alloc_docs AS BIGINT) AS alloc_docs,
        COUNT(*) FILTER (
-         WHERE ('0x' || substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 7))::BIGINT % 4096
+         WHERE {duck_md5_prefix_hash("CAST(d.doc_id AS VARCHAR)")} % 4096
                < t.threshold
        ) AS n_sampled
 FROM documents d JOIN thr t USING (lang)
@@ -1152,7 +1158,7 @@ deduped AS (
 ),
 sampled AS (
   SELECT * FROM deduped
-  WHERE ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 7))::BIGINT % 4096
+  WHERE {duck_md5_prefix_hash("CAST(doc_id AS VARCHAR)")} % 4096
         < CASE lang WHEN 'en' THEN 2048 ELSE 4096 END
 ),
 budgeted AS (
@@ -2064,7 +2070,7 @@ _T18_SHARDS = 16
 
 T18_ORACLE = f"""
 WITH sharded AS (
-  SELECT ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 7))::BIGINT
+  SELECT {duck_md5_prefix_hash("CAST(doc_id AS VARCHAR)")}
            % {_T18_SHARDS} AS shard,
          doc_id,
          len(regexp_extract_all(text, '{text.TOKEN_PATTERN}')) AS score
@@ -2195,7 +2201,7 @@ WITH corpus AS (
   SELECT DISTINCT md5(text) AS h FROM documents WHERE doc_id % 3 = 0
 ),
 pos AS (
-  SELECT (('0x' || substr(md5(j || '|' || h), 1, 7))::BIGINT % {_D10_BITS}) AS p
+  SELECT ({duck_md5_prefix_hash("j || '|' || h")} % {_D10_BITS}) AS p
   FROM corpus, UNNEST([0, 1, 2]) AS t(j)
 ),
 bitmap AS (
@@ -2207,7 +2213,7 @@ new_docs AS (
 ),
 probe AS (
   SELECT doc_id, h,
-         (('0x' || substr(md5(j || '|' || h), 1, 7))::BIGINT % {_D10_BITS}) AS p
+         ({duck_md5_prefix_hash("j || '|' || h")} % {_D10_BITS}) AS p
   FROM new_docs, UNNEST([0, 1, 2]) AS t(j)
 ),
 hits AS (
@@ -2233,10 +2239,10 @@ def d10(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_views(spark, sf_dir, "documents")
     docs = spark.table("documents")
     corpus = docs.where(F.col("doc_id") % 3 == 0).select(
-        F.md5(F.col("text")).alias("h")
+        md5_hex(F.col("text")).alias("h")
     ).distinct()
     new_docs = docs.where(F.col("doc_id") % 3 != 0).select(
-        "doc_id", F.md5(F.col("text")).alias("h")
+        "doc_id", md5_hex(F.col("text")).alias("h")
     )
     bitmap = dedup.bloom_build(
         corpus, F.col("h"), num_hashes=_D10_K, num_bits=_D10_BITS
@@ -2359,7 +2365,7 @@ SELECT source,
        COUNT(*) AS n_docs,
        CAST(SUM(len(list_filter(regexp_split_to_array(ctext, ' '), x -> x <> '')))
             AS BIGINT) AS kept_tokens,
-       CAST(SUM(('0x' || substr(md5(ctext), 1, 7))::BIGINT) AS BIGINT) AS text_checksum
+       CAST(SUM({duck_md5_prefix_hash("ctext")}) AS BIGINT) AS text_checksum
 FROM cleaned GROUP BY source ORDER BY source
 """
 
@@ -2379,7 +2385,7 @@ def t19(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.sum(kept).alias("kept_tokens"),
-            F.sum(dedup.md5_prefix_hash(F.col("ctext"))).alias("text_checksum"),
+            F.sum(md5_prefix_hash(F.col("ctext"))).alias("text_checksum"),
         )
         .orderBy("source")
     )
@@ -2559,7 +2565,7 @@ p AS (
 ),
 o AS (
   SELECT doc_id, source, idx,
-         ('0x' || substr(md5(passage), 1, 15))::BIGINT AS dg,
+         {duck_md5_prefix_hash("passage", 15)} AS dg,
          len(list_filter(regexp_split_to_array(passage, ' '), x -> x <> ''))
            AS ctoks
   FROM p
@@ -2600,7 +2606,7 @@ def d11(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (only digests + ints do).
 # --------------------------------------------------------------------
 
-M07_ORACLE = """
+M07_ORACLE = f"""
 WITH d AS (
   SELECT doc_id, source, text,
          GREATEST(1, (strlen(text) // 10) % 8) AS n_frames
@@ -2615,7 +2621,7 @@ frames AS (
 ),
 luma AS (
   SELECT doc_id, source, frame_index,
-         ('0x' || substr(md5(frame_digest), 1, 7))::BIGINT % 256 AS luma
+         {duck_md5_prefix_hash("frame_digest")} % 256 AS luma
   FROM frames
 ),
 sc AS (
@@ -2644,7 +2650,7 @@ def m07(spark: SparkSession, sf_dir: str) -> DataFrame:
         payloads, binary_col="value", every_n=10
     ).select("doc_id", "source", "frame_index", "frame_digest")
     luma = frames.withColumn(
-        "luma", dedup.md5_prefix_hash(F.col("frame_digest")) % 256
+        "luma", md5_prefix_hash(F.col("frame_digest")) % 256
     )
     w = Window.partitionBy("doc_id").orderBy("frame_index")
     prev = F.lag("luma").over(w)
@@ -2704,18 +2710,7 @@ _T25_DEPTH, _T25_WIDTH = 4, 1024
 T25_ORACLE = f"""
 WITH occ AS (SELECT unnest({_DUCK_TOKS}) AS tok FROM documents),
 tc AS (SELECT tok, COUNT(*) AS exact_n FROM occ GROUP BY tok),
-hashed AS (
-  SELECT tok, exact_n, d,
-         ('0x' || substr(md5(d::VARCHAR || '|' || tok), 1, 15))::BIGINT
-           % {_T25_WIDTH} AS bucket
-  FROM tc, unnest(generate_series(0, {_T25_DEPTH - 1})) AS t(d)
-),
-cms AS (SELECT d, bucket, SUM(exact_n) AS cnt FROM hashed GROUP BY d, bucket),
-est AS (
-  SELECT h.tok, h.exact_n, MIN(c.cnt) AS estimate
-  FROM hashed h JOIN cms c ON h.d = c.d AND h.bucket = c.bucket
-  GROUP BY h.tok, h.exact_n
-)
+{_duck_count_min("tok", _T25_DEPTH, _T25_WIDTH)}
 SELECT tok, exact_n, CAST(estimate AS BIGINT) AS estimate,
        CAST(estimate - exact_n AS BIGINT) AS overcount
 FROM est ORDER BY exact_n DESC, tok LIMIT 20
@@ -2812,7 +2807,7 @@ shs AS (
   SELECT doc_id, unnest(list_distinct(shingles)) AS s FROM sh
 ),
 shd AS (
-  SELECT doc_id, ('0x' || substr(md5(s), 1, 7))::BIGINT AS sd FROM shs
+  SELECT doc_id, {duck_md5_prefix_hash("s")} AS sd FROM shs
 ),
 sizes AS (SELECT doc_id, COUNT(DISTINCT sd) AS n FROM shd GROUP BY doc_id),
 inter AS (
@@ -2869,7 +2864,7 @@ def d12(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.explode(
             F.array_distinct(dedup.word_shingles(F.col("text"), _SHINGLE_LEN))
         ).alias("_s"),
-    ).select("doc_id", dedup.md5_prefix_hash(F.col("_s")).alias("_sd"))
+    ).select("doc_id", md5_prefix_hash(F.col("_s")).alias("_sd"))
     sizes = shd.groupBy("doc_id").agg(F.countDistinct("_sd").alias("n"))
     inter = (
         cands.join(
@@ -2910,7 +2905,7 @@ def d12(spark: SparkSession, sf_dir: str) -> DataFrame:
 # RE2 pattern subset is deliberately shared.
 # --------------------------------------------------------------------
 
-T27_ORACLE = r"""
+T27_ORACLE = rf"""
 WITH injected AS (
   SELECT doc_id, source,
          text ||
@@ -2925,14 +2920,14 @@ WITH injected AS (
 ),
 scanned AS (
   SELECT doc_id, source,
-         len(regexp_extract_all(text, '(?i)[a-z0-9._%+-]+@[a-z0-9.-]+\.[a-z]{2,}')) AS n_email,
-         len(regexp_extract_all(text, '\b[0-9]{3}-[0-9]{4}\b')) AS n_phone,
-         len(regexp_extract_all(text, '\b[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\b')) AS n_ipv4,
+         len(regexp_extract_all(text, '(?i)[a-z0-9._%+-]+@[a-z0-9.-]+\.[a-z]{{2,}}')) AS n_email,
+         len(regexp_extract_all(text, '\b[0-9]{{3}}-[0-9]{{4}}\b')) AS n_phone,
+         len(regexp_extract_all(text, '\b[0-9]{{1,3}}\.[0-9]{{1,3}}\.[0-9]{{1,3}}\.[0-9]{{1,3}}\b')) AS n_ipv4,
          regexp_replace(
            regexp_replace(
-             regexp_replace(text, '(?i)[a-z0-9._%+-]+@[a-z0-9.-]+\.[a-z]{2,}', '[PII]', 'g'),
-             '\b[0-9]{3}-[0-9]{4}\b', '[PII]', 'g'),
-           '\b[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\b', '[PII]', 'g') AS clean
+             regexp_replace(text, '(?i)[a-z0-9._%+-]+@[a-z0-9.-]+\.[a-z]{{2,}}', '[PII]', 'g'),
+             '\b[0-9]{{3}}-[0-9]{{4}}\b', '[PII]', 'g'),
+           '\b[0-9]{{1,3}}\.[0-9]{{1,3}}\.[0-9]{{1,3}}\.[0-9]{{1,3}}\b', '[PII]', 'g') AS clean
   FROM injected
 )
 SELECT source,
@@ -2941,7 +2936,7 @@ SELECT source,
        CAST(SUM(n_ipv4) AS BIGINT) AS n_ipv4,
        CAST(SUM(CASE WHEN n_email + n_phone + n_ipv4 > 0 THEN 1 ELSE 0 END) AS BIGINT)
          AS n_docs_with_pii,
-       CAST(SUM(('0x' || substr(md5(clean), 1, 7))::BIGINT) AS BIGINT) AS clean_checksum
+       CAST(SUM({duck_md5_prefix_hash("clean")}) AS BIGINT) AS clean_checksum
 FROM scanned GROUP BY source ORDER BY source
 """
 
@@ -2986,7 +2981,7 @@ def t27(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.col("n_email") + F.col("n_phone") + F.col("n_ipv4") > 0, 1
                 ).otherwise(0)
             ).cast("bigint").alias("n_docs_with_pii"),
-            F.sum(dedup.md5_prefix_hash(F.col("clean"))).alias("clean_checksum"),
+            F.sum(md5_prefix_hash(F.col("clean"))).alias("clean_checksum"),
         )
         .orderBy("source")
     )
@@ -3035,13 +3030,13 @@ gated AS (
   FROM keep WHERE rn = 1
 ),
 final AS (
-  SELECT ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 7))::BIGINT
+  SELECT {duck_md5_prefix_hash("CAST(doc_id AS VARCHAR)")}
            % {_P04_SHARDS} AS shard,
          doc_id, n_toks, clean
   FROM gated WHERE n_toks >= {_P04_MIN_TOKENS}
 )
 SELECT shard, COUNT(*) AS n_docs, CAST(SUM(n_toks) AS BIGINT) AS tok_sum,
-       CAST(SUM(('0x' || substr(md5(clean), 1, 7))::BIGINT) AS BIGINT) AS clean_checksum
+       CAST(SUM({duck_md5_prefix_hash("clean")}) AS BIGINT) AS clean_checksum
 FROM final GROUP BY shard ORDER BY shard
 """
 
@@ -3099,7 +3094,7 @@ def p04_stage_frames(
         ).cast("bigint").alias("n_toks"),
     ).where(F.col("n_toks") >= _P04_MIN_TOKENS)
     final = gated.select(
-        (dedup.md5_prefix_hash(F.col("doc_id").cast("string")) % _P04_SHARDS).alias(
+        (md5_prefix_hash(F.col("doc_id").cast("string")) % _P04_SHARDS).alias(
             "shard"
         ),
         "n_toks",
@@ -3116,7 +3111,7 @@ def p04(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.sum("n_toks").alias("tok_sum"),
-            F.sum(dedup.md5_prefix_hash(F.col("clean"))).alias("clean_checksum"),
+            F.sum(md5_prefix_hash(F.col("clean"))).alias("clean_checksum"),
         )
         .orderBy("shard")
     )
@@ -3155,7 +3150,7 @@ def t28(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = spark.table("documents").select(
         "lang",
         F.size(text.tokens(F.col("text"))).cast("bigint").alias("n_toks"),
-        F.md5(F.col("text").cast("binary")).alias("dg"),
+        md5_hex(F.col("text").cast("binary")).alias("dg"),
     )
     return (
         d.groupBy("lang")
@@ -3210,7 +3205,7 @@ FROM j GROUP BY status ORDER BY status
 def d13(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_views(spark, sf_dir, "documents")
     docs = spark.table("documents")
-    a = docs.select("doc_id", F.md5(F.col("text").cast("binary")).alias("dg"))
+    a = docs.select("doc_id", md5_hex(F.col("text").cast("binary")).alias("dg"))
     b_src = docs.where(F.col("doc_id") % 9 != 0).select(
         "doc_id",
         F.when(
@@ -3218,11 +3213,11 @@ def d13(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).otherwise(F.col("text")).alias("text"),
     )
     b = b_src.select(
-        "doc_id", F.md5(F.col("text").cast("binary")).alias("dg")
+        "doc_id", md5_hex(F.col("text").cast("binary")).alias("dg")
     ).unionAll(
         docs.where(F.col("doc_id") % 13 == 0).select(
             (F.col("doc_id") + 5000000).alias("doc_id"),
-            F.md5(F.concat(F.col("text"), F.lit(" new")).cast("binary")).alias("dg"),
+            md5_hex(F.concat(F.col("text"), F.lit(" new")).cast("binary")).alias("dg"),
         )
     )
     j = a.alias("a").join(
@@ -3342,7 +3337,7 @@ rep AS (
 ),
 bucketed AS (
   SELECT doc_id, rep,
-         ('0x' || substr(md5(CAST(rep AS VARCHAR)), 1, 7))::BIGINT % 4096 AS b
+         {duck_md5_prefix_hash("CAST(rep AS VARCHAR)")} % 4096 AS b
   FROM rep
 )
 SELECT CASE WHEN b < {_P05_TRAIN} THEN 'train'
@@ -3391,11 +3386,11 @@ def p05(spark: SparkSession, sf_dir: str) -> DataFrame:
 # is exactly reproducible (integer priorities, no RNG, no libm).
 # --------------------------------------------------------------------
 
-T29_ORACLE = """
+T29_ORACLE = f"""
 WITH p AS (
   SELECT doc_id, n_chars,
          CASE WHEN n_chars > 0 THEN
-           (1000000 * (('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 7))::BIGINT)) // n_chars
+           (1000000 * ({duck_md5_prefix_hash("CAST(doc_id AS VARCHAR)")})) // n_chars
          ELSE 9223372036854775807 END AS priority
   FROM documents
 )
@@ -3663,7 +3658,7 @@ thr AS (
 kept AS (
   SELECT a.vec_id, a.cluster_id
   FROM asg a JOIN thr USING (cluster_id)
-  WHERE ('0x' || substr(md5(CAST(a.vec_id AS VARCHAR)), 1, 7))::BIGINT % 4096
+  WHERE {duck_md5_prefix_hash("CAST(a.vec_id AS VARCHAR)")} % 4096
         < thr.t
 )
 SELECT t.cluster_id,
@@ -4311,11 +4306,11 @@ thr AS (
 kept AS (
   SELECT s.doc_id, s.n_chars, s.cluster_id
   FROM sub s JOIN thr USING (cluster_id)
-  WHERE ('0x' || substr(md5(CAST(s.doc_id AS VARCHAR)), 1, 7))::BIGINT
+  WHERE {duck_md5_prefix_hash("CAST(s.doc_id AS VARCHAR)")}
         % 4096 < thr.t
 )
 SELECT cluster_id,
-       CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 7))::BIGINT
+       CAST({duck_md5_prefix_hash("CAST(doc_id AS VARCHAR)")}
             % {_P08_SHARDS} AS BIGINT) AS shard_id,
        CAST(COUNT(*) AS BIGINT) AS n_docs,
        CAST(SUM(n_chars) AS BIGINT) AS chars_sum,
@@ -4343,7 +4338,7 @@ def p08_stage_frames(
     fp = gated.select(
         "doc_id",
         "n_chars",
-        F.md5(F.concat_ws(" ", F.slice(toks, 1, 8))).alias("lead_fp"),
+        md5_hex(F.concat_ws(" ", F.slice(toks, 1, 8))).alias("lead_fp"),
     )
     best = (
         fp.groupBy("lead_fp")
@@ -4743,7 +4738,7 @@ def d19(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.size(toks).cast("bigint").alias("n_tokens"),
         (F.size(toks) - F.size(ktoks)).cast("bigint").alias("n_removed"),
-        F.md5(F.col("clean_text").cast("binary")).alias("clean_digest"),
+        md5_hex(F.col("clean_text").cast("binary")).alias("clean_digest"),
     ).orderBy("doc_id")
 
 
@@ -5239,13 +5234,13 @@ raw AS (
   SELECT doc_id, {_DUCK_TOKS} AS toks FROM documents WHERE lang <> 'en'
 ),
 bt AS (
-  SELECT ('0x' || substr(md5(bg), 1, 7))::BIGINT % {_T38_BUCKETS} AS b
+  SELECT {duck_md5_prefix_hash("bg")} % {_T38_BUCKETS} AS b
   FROM (SELECT unnest({_DUCK_PIPE_BIGRAMS}) AS bg FROM tgt WHERE len(toks) >= 2)
 ),
 nt AS (SELECT b, COUNT(*) AS _nt FROM bt GROUP BY b),
 bro AS (
   SELECT doc_id,
-         ('0x' || substr(md5(bg), 1, 7))::BIGINT % {_T38_BUCKETS} AS b
+         {duck_md5_prefix_hash("bg")} % {_T38_BUCKETS} AS b
   FROM (SELECT doc_id, unnest({_DUCK_PIPE_BIGRAMS}) AS bg
         FROM raw WHERE len(toks) >= 2)
 ),
@@ -5304,7 +5299,7 @@ WITH {_T38_CTES},
 sel AS (
   SELECT d.doc_id, d.lang,
          LEAST(s.sum_ratio_e6 // s.n_bigrams // 10000, 100) AS acc,
-         ('0x' || substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 7))::BIGINT
+         {duck_md5_prefix_hash("CAST(d.doc_id AS VARCHAR)")}
            % 100 AS draw,
          s.n_bigrams
   FROM documents d JOIN scored s USING (doc_id)
@@ -5341,7 +5336,7 @@ def p09(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.least(
                 F.expr("sum_ratio_e6 DIV n_bigrams DIV 10000"), F.lit(100)
             ).alias("acc"),
-            (dedup.md5_prefix_hash(F.col("doc_id").cast("string")) % 100).alias(
+            (md5_prefix_hash(F.col("doc_id").cast("string")) % 100).alias(
                 "draw"
             ),
         )
@@ -5373,7 +5368,7 @@ _T39_SHARDS = 8
 
 T39_ORACLE = f"""
 WITH occ AS (
-  SELECT ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 7))::BIGINT
+  SELECT {duck_md5_prefix_hash("CAST(doc_id AS VARCHAR)")}
            % {_T39_SHARDS} + 1 AS shard,
          unnest({_DUCK_TOKS}) AS w
   FROM documents
@@ -5507,7 +5502,7 @@ def d21(spark: SparkSession, sf_dir: str) -> DataFrame:
     ch = dedup.cdc_chunks(docs, id_col="doc_id", text_col="text",
                           window=_D21_W, mask=_D21_MASK)
     dist = (
-        ch.select("source", F.md5("chunk").alias("dg"),
+        ch.select("source", md5_hex("chunk").alias("dg"),
                   F.length("chunk").cast("bigint").alias("ln"))
         .groupBy("source", "dg")
         .agg(F.count(F.lit(1)).alias("n_occ"), F.max("ln").alias("ln"))
@@ -5677,7 +5672,7 @@ WITH t AS (
 ),
 hv AS (
   SELECT DISTINCT source,
-         ('0x' || substr(md5(s), 1, 7))::BIGINT AS h
+         {duck_md5_prefix_hash("s")} AS h
   FROM (SELECT source, unnest({_duck_shingles(5)}) AS s FROM t)
 ),
 sk AS (
@@ -5722,7 +5717,7 @@ def t43(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source",
         F.explode(dedup.word_shingles(F.col("text"), 5)).alias("sg"),
     ).select(
-        "source", dedup.md5_prefix_hash(F.col("sg")).alias("h")
+        "source", md5_prefix_hash(F.col("sg")).alias("h")
     )
     # bottom-K DISTINCT hashes per source WITHOUT a corpus-wide
     # distinct first: dense_rank counts distinct h values, and its
@@ -5918,7 +5913,7 @@ SELECT l.source,
        CAST(SUM(length(r.clean)) AS BIGINT) AS kept_chars,
        CAST(SUM(l.orig_chars) - SUM(length(r.clean)) AS BIGINT)
          AS removed_chars,
-       CAST(SUM(('0x' || substr(md5(r.clean), 1, 7))::BIGINT) AS BIGINT)
+       CAST(SUM({duck_md5_prefix_hash("r.clean")}) AS BIGINT)
          AS clean_checksum
 FROM lens l JOIN rebuilt r ON l.source = r.source AND l.doc_id = r.doc_id
 GROUP BY l.source ORDER BY l.source
@@ -5945,7 +5940,7 @@ def p11_stage_frames(
     # branch — 3 full documents scans + 3 chunking passes in the
     # before plan. A lazy localCheckpoint shares one evaluation
     # (guide §5; the p10/p12/d23 multi-branch pattern).
-    dg = ch.withColumn("dg", F.md5("chunk")).transform(materialize_lazy)
+    dg = ch.withColumn("dg", md5_hex("chunk")).transform(materialize_lazy)
     # keep-first decision on DIGESTS only: map-side partial MIN of the
     # (doc_id, chunk_idx) struct per digest — never text
     firsts = dg.select("dg", "doc_id", "chunk_idx").groupBy("dg").agg(
@@ -5991,7 +5986,7 @@ def p11(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.length("clean")).cast("bigint").alias("kept_chars"),
             (F.sum("orig_chars") - F.sum(F.length("clean")))
             .cast("bigint").alias("removed_chars"),
-            F.sum(dedup.md5_prefix_hash(F.col("clean")))
+            F.sum(md5_prefix_hash(F.col("clean")))
             .alias("clean_checksum"),
         )
         .orderBy("source")
@@ -7277,7 +7272,7 @@ WITH t AS (
 ),
 g AS (
   SELECT doc_id, source,
-         ('0x' || substr(md5(gram), 1, 15))::BIGINT AS gd
+         {duck_md5_prefix_hash("gram", 15)} AS gd
   FROM (
     SELECT doc_id, source,
            unnest({_duck_shingles(_T47_N)}) AS gram
@@ -7302,11 +7297,8 @@ GROUP BY p.source ORDER BY p.source
 def t47(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_views(spark, sf_dir, "documents")
     docs = spark.table("documents")
-    # 64-bit xxhash64 gram keys (no per-gram string build, no md5
-    # chain — word_shingle_digests); the digest is join-internal: the
-    # oracle digests with its own md5 on BOTH sides of its join, so
-    # either scheme computes the same membership counts modulo the
-    # hash's collision class (2^-64 here vs 2^-60 before)
+    # plan-internal gram keys (word_shingle_digests); the oracle
+    # digests with its own md5 on both sides of its join
     grams = docs.select(
         "doc_id",
         "source",
@@ -7362,30 +7354,9 @@ _D25_TAU_E6 = 500000
 
 
 def _d25_oracle() -> str:
-    from arc_jupyter_spark.operators.dedup import (
-        _MERSENNE31,
-        minhash_coefficients,
-    )
-
-    coeffs = minhash_coefficients(_NUM_HASHES)
-    sig_exprs = ", ".join(
-        f"list_min(list_transform(shingles, "
-        f"s -> ({a} * ('0x' || substr(md5(s), 1, 7))::BIGINT + {b})"
-        f" % {_MERSENNE31})) AS s{i}"
-        for i, (a, b) in enumerate(coeffs)
-    )
     cfg_ctes, tag_selects = [], []
     for nb, rpb in _D25_CONFIGS:
-        band_exprs = ", ".join(
-            "('0x' || substr(md5('band{b}|' || {parts}), 1, 15))::BIGINT"
-            " AS band{b}".format(
-                b=b,
-                parts=" || '|' || ".join(
-                    f"s{b * rpb + r}::VARCHAR" for r in range(rpb)
-                ),
-            )
-            for b in range(nb)
-        )
+        band_exprs = duck_band_digests(nb, rpb)
         band_list = ", ".join(f"band{b}" for b in range(nb))
         cfg_ctes.append(
             f"bd{nb} AS (SELECT doc_id, unnest([{band_list}]) AS band "
@@ -7410,7 +7381,7 @@ WITH toks AS (
 sh AS (
   SELECT doc_id, {_duck_shingles(_SHINGLE_LEN)} AS shingles FROM toks
 ),
-sigs AS (SELECT doc_id, {sig_exprs} FROM sh),
+sigs AS (SELECT doc_id, {_duck_minhash_signatures()} FROM sh),
 {', '.join(cfg_ctes)},
 tagged AS ({tags}),
 allp AS (SELECT DISTINCT id_a, id_b FROM tagged),
@@ -7447,7 +7418,7 @@ def d25(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tag each config's (doc_id, band) rows and run ONE
     # (config, band)-keyed bucket-size cap + self-join over the union
     # instead of three separate cap shuffles and self-joins (the band
-    # keys are minhash_band_table's: ``dedup.band_digests``). The
+    # keys are minhash_band_table's: ``digest.band_digests``). The
     # config tag in the join key keeps buckets from
     # different bandings apart; per-config results are bit-identical
     # to three independent minhash_candidates calls.
@@ -7457,7 +7428,7 @@ def d25(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(nb).alias("bands"),
             F.lit(rpb).alias("rows_per_band"),
             F.col("doc_id"),
-            F.explode(F.array(*dedup.band_digests(nb, rpb))).alias("_band"),
+            F.explode(F.array(*band_digests(nb, rpb))).alias("_band"),
         )
         banded = one if banded is None else banded.unionAll(one)
     bucket_sizes = banded.groupBy("bands", "_band").agg(

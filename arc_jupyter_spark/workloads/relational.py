@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from arc_jupyter_spark.checkpoint import materialize, materialize_lazy
 
 from arc_jupyter_spark.context import ArcContext
+from arc_jupyter_spark.digest import internal_digest
 from arc_jupyter_spark.operators.transform import SQLTransform
 from arc_jupyter_spark.workloads.base import exact_sum, load_views, query
 
@@ -1231,7 +1232,7 @@ FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag
 def q42(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_views(spark, sf_dir, "lineitem")
     li = spark.table("lineitem")
-    salted = li.withColumn("_salt", F.pmod(F.xxhash64("l_orderkey"), F.lit(16)))
+    salted = li.withColumn("_salt", F.pmod(internal_digest("l_orderkey"), F.lit(16)))
     partial = salted.groupBy("l_returnflag", "_salt").agg(
         F.count(F.lit(1)).alias("_n"),
         F.sum(F.floor(F.col("l_quantity") * 100 + F.lit(0.5)).cast("bigint")).alias("_q"),

@@ -22,7 +22,9 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from arc_jupyter_spark.checkpoint import materialize, materialize_lazy
+from arc_jupyter_spark.digest import md5_hex
 
+from arc_jupyter_spark.workloads._duck_sql import duck_count_min_ctes
 from arc_jupyter_spark.workloads.base import (
     query,
     read_events_stream,
@@ -689,18 +691,7 @@ _ST10_DEPTH, _ST10_WIDTH = 4, 256
 ST10_ORACLE = f"""
 WITH keys AS (SELECT user_id::VARCHAR AS k FROM events),
 tc AS (SELECT k, COUNT(*) AS exact_n FROM keys GROUP BY k),
-hashed AS (
-  SELECT k, exact_n, d,
-         ('0x' || substr(md5(d::VARCHAR || '|' || k), 1, 15))::BIGINT
-           % {_ST10_WIDTH} AS bucket
-  FROM tc, unnest(generate_series(0, {_ST10_DEPTH - 1})) AS t(d)
-),
-cms AS (SELECT d, bucket, SUM(exact_n) AS cnt FROM hashed GROUP BY d, bucket),
-est AS (
-  SELECT h.k, h.exact_n, MIN(c.cnt) AS estimate
-  FROM hashed h JOIN cms c ON h.d = c.d AND h.bucket = c.bucket
-  GROUP BY h.k, h.exact_n
-)
+{duck_count_min_ctes("k", _ST10_DEPTH, _ST10_WIDTH)}
 SELECT CAST(k AS BIGINT) AS user_id, exact_n,
        CAST(estimate AS BIGINT) AS estimate,
        CAST(estimate - exact_n AS BIGINT) AS overcount
@@ -1016,10 +1007,8 @@ def st14(spark: SparkSession, sf_dir: str) -> DataFrame:
     from arc_jupyter_spark.operators.dedup import word_shingle_digests
 
     def digests(col):
-        # Spark-internal 64-bit gram keys (one xxhash64 per shingle,
-        # no per-shingle string build); the oracle joins raw gram
-        # strings, so the hash choice cannot change the counts —
-        # both sides of the semi-join use this same helper
+        # plan-internal gram keys on both sides of the semi-join; the
+        # oracle joins raw gram strings
         return word_shingle_digests(col, 5)
 
     batch = read_parquet(spark, f"{sf_dir}/documents.parquet")
@@ -1103,7 +1092,7 @@ def st15(spark: SparkSession, sf_dir: str) -> DataFrame:
     chunks = cdc_chunks(docs, id_col="doc_id", text_col="text",
                         window=_ST15_W, mask=_ST15_MASK).select(
         "source",
-        F.md5("chunk").alias("dg"),
+        md5_hex("chunk").alias("dg"),
         F.length("chunk").cast("bigint").alias("ln"),
     )
     unique = chunks.dropDuplicates(["source", "dg"])

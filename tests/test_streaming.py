@@ -494,3 +494,26 @@ def test_rate_throughput_probe_shape(spark):
     if out["n_batches"]:
         assert out["rows_per_sec"] > 0
         assert out["batch_latency_ms"] > 0
+
+
+def test_event_stream_read_pins_utc(spark):
+    """The events stream reader pins the session time zone to UTC, as
+    the batch reader does: on a non-UTC session st01's hourly windows
+    still match its oracle's (DuckDB reads naive timestamps as UTC)."""
+    import duckdb
+
+    from arc_jupyter_spark.workloads import oracle_sql, queries
+    from tests.conftest import SF_DIR
+
+    key = "spark.sql.session.timeZone"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "Asia/Kolkata")
+    try:
+        n = queries()["st01_stream_window"](spark, SF_DIR).count()
+    finally:
+        spark.conf.set(key, prev)
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW events AS SELECT * FROM read_parquet('{SF_DIR}/events.parquet')"
+    )
+    assert n == len(con.sql(oracle_sql()["st01_stream_window"]).fetchall())
