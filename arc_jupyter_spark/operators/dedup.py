@@ -22,6 +22,7 @@ from pyspark.sql import Column, DataFrame, Window, functions as F
 from arc_jupyter_spark.checkpoint import materialize, materialize_lazy
 from arc_jupyter_spark.digest import band_digests, internal_digest, md5_hex, md5_prefix_hash
 from arc_jupyter_spark.operators.litarray import long_array
+from arc_jupyter_spark.operators.text import tokens
 
 
 # -- exact ------------------------------------------------------------
@@ -125,8 +126,6 @@ def word_shingles(text: Column, n: int = 3) -> Column:
     slice() (no per-shingle array allocation; constants matter ~2x
     in interpreted HOFs).
     """
-    tokens = F.filter(F.split(F.lower(text), r"\s+"), lambda t: t != "")
-
     def per_doc(toks: Column) -> Column:
         return F.when(
             F.size(toks) >= n,
@@ -138,7 +137,7 @@ def word_shingles(text: Column, n: int = 3) -> Column:
             ),
         ).otherwise(F.array(F.concat_ws(" ", toks)))
 
-    return F.flatten(F.transform(F.array(tokens), per_doc))
+    return F.flatten(F.transform(F.array(tokens(text)), per_doc))
 
 
 def word_shingle_digests(text: Column, n: int = 3) -> Column:
@@ -152,8 +151,6 @@ def word_shingle_digests(text: Column, n: int = 3) -> Column:
     than ``n`` tokens contribute one whole-document digest (hash of the
     joined string, unequal to any n-token digest but by collision).
     """
-    tokens = F.filter(F.split(F.lower(text), r"\s+"), lambda t: t != "")
-
     def per_doc(toks: Column) -> Column:
         return F.when(
             F.size(toks) >= n,
@@ -165,7 +162,7 @@ def word_shingle_digests(text: Column, n: int = 3) -> Column:
             ),
         ).otherwise(F.array(internal_digest(F.concat_ws(" ", toks))))
 
-    return F.flatten(F.transform(F.array(tokens), per_doc))
+    return F.flatten(F.transform(F.array(tokens(text)), per_doc))
 
 
 # -- MinHash ----------------------------------------------------------
@@ -902,8 +899,7 @@ def simhash64(text: Column, num_bits: int = 64) -> Column:
     functions); returns an array of ``num_bits`` 0/1 bytes (portable
     across engines; pack to a bigint downstream if needed).
     """
-    tokens = F.filter(F.split(F.lower(text), r"\s+"), lambda t: t != "")
-    hashes = F.transform(tokens, lambda t: md5_hex(t.cast("binary")))
+    hashes = F.transform(tokens(text), lambda t: md5_hex(t.cast("binary")))
     # Interpreted HOF lambdas do no common-subexpression elimination,
     # so everything per-token must be bound as a lambda variable and
     # string work must happen once, not once per bit: tokenize+md5 is
@@ -995,11 +991,8 @@ def positional_shingles(
     8-byte keys (plus two ints) ever shuffle — never gram text.
     Documents shorter than ``n`` tokens contribute no grams.
     """
-    tokens = F.filter(
-        F.split(F.lower(F.col(text_col)), r"\s+"), lambda t: t != ""
-    )
     toks = (
-        df.select(F.col(id_col), tokens.alias("_toks"))
+        df.select(F.col(id_col), tokens(F.col(text_col)).alias("_toks"))
         .where(F.size("_toks") >= n)
     )
     # seed-chained multi-arg digest over the gram's n tokens: no gram
@@ -1018,13 +1011,79 @@ def positional_shingles(
     ).select(F.col(id_col), "_pos", digest.alias("_digest"))
 
 
+def _doc_freq_prune(
+    grams: DataFrame, id_col: str, lo: int | None = None, hi: int | None = None
+) -> DataFrame:
+    """The gram occurrences whose digest is seen in ``lo..hi`` DISTINCT
+    documents (either bound may be None): a partial-agg'd distinct
+    (digest, id) count, LEFT SEMI joined back on the digest, so a hot
+    gram never fans out."""
+    nd = F.col("_nd")
+    cond = nd >= lo if lo is not None else None
+    if hi is not None:
+        cond = nd <= hi if cond is None else cond & (nd <= hi)
+    keep = (
+        grams.select("_digest", id_col)
+        .distinct()
+        .groupBy("_digest")
+        .agg(F.count(F.lit(1)).alias("_nd"))
+        .where(cond)
+        .select("_digest")
+    )
+    return grams.join(keep, "_digest", "left_semi")
+
+
+def _diagonal_runs(
+    seeds: DataFrame,
+    keys: list[str],
+    pos: str,
+    start: str,
+    seed_len: int,
+    min_len: int,
+) -> DataFrame:
+    """Seed-and-chain run-merge: ``seeds`` holds one row per seed hit,
+    ``(*keys, pos, _diag)``; returns one row per maximal island
+    ``(*keys, _diag, _grp, start, match_len)`` with ``match_len >=
+    min_len``. A window PARTITIONED by ``(*keys, _diag)`` — no global
+    sort. ``(*keys, _diag, pos)`` is unique by construction (one gram
+    per position, one row per occurrence pair), so row_number is
+    deterministic and ``pos - row_number`` is constant per island."""
+    w = Window.partitionBy(*keys, "_diag").orderBy(pos)
+    isl = seeds.withColumn("_grp", F.col(pos) - F.row_number().over(w))
+    return (
+        isl.groupBy(*keys, "_diag", "_grp")
+        .agg(
+            F.min(pos).alias(start),
+            (F.count(F.lit(1)) + F.lit(seed_len - 1)).alias("match_len"),
+        )
+        .where(F.col("match_len") >= min_len)
+    )
+
+
+def _interval_union_new(id_col: str, start_col: str, end_col: str) -> Column:
+    """Per interval, the tokens it adds to the union of half-open
+    [start, end) intervals of its id — the classic running-max-end
+    sweep over a window PARTITIONED by id (each partition is one
+    document's intervals; nothing global sorts). Summed per id it is
+    the union's length, exact under duplicates: an interval identical
+    to a predecessor contributes 0."""
+    uw = Window.partitionBy(id_col).orderBy(start_col, end_col)
+    prev_end = F.max(end_col).over(
+        uw.rowsBetween(Window.unboundedPreceding, -1)
+    )
+    return F.greatest(
+        F.lit(0).cast("bigint"),
+        F.col(end_col)
+        - F.greatest(F.coalesce(prev_end, F.lit(0)), F.col(start_col)),
+    )
+
+
 def duplicated_spans(
     df: DataFrame,
     id_col: str,
     text_col: str,
     gram_len: int = 5,
     min_docs: int = 2,
-    cache_grams: bool = True,
 ) -> DataFrame:
     """Per-document duplicated-span statistics (exact substring dedup).
 
@@ -1051,38 +1110,27 @@ def duplicated_spans(
       ``min(gram_len, pos - prev_pos)`` new tokens. One window shuffle
       of the dup occurrences, no row multiplication.
 
-    ``cache_grams`` persists the (id, pos, digest) gram table
-    (MEMORY_AND_DISK) because BOTH branches — document frequency and
-    membership — consume it; without the cache Spark re-runs the
-    shingle+md5 projection twice (measured ~30% of wall at sf0.1).
-    At 24 bytes/row the cache is ~5% of corpus text size; disable for
-    corpora where even that doesn't fit the cluster's storage tier —
-    recompute is then the right trade. The session keeps at most ONE
-    gram table pinned across the whole substring-dedup family (the
-    next operator call releases the previous one); call
-    :func:`release_gram_cache` to drop it eagerly.
+    The (id, pos, digest) gram table is persisted (MEMORY_AND_DISK)
+    because BOTH branches — document frequency and membership —
+    consume it; without it Spark re-runs the shingle+digest projection
+    twice (measured ~30% of wall at sf0.1). At 24 bytes/row it is ~5%
+    of corpus text size. The session keeps at most ONE gram table
+    pinned across the whole substring-dedup family (the next operator
+    call releases the previous one); call :func:`release_gram_cache`
+    to drop it eagerly.
     """
-    grams = positional_shingles(_parallelize(df), id_col, text_col, gram_len)
-    if cache_grams:
-        grams = _persist_grams(grams)
-    dup_digests = (
-        grams.select("_digest", id_col)
-        .distinct()
-        .groupBy("_digest")
-        .agg(F.count(F.lit(1)).alias("_nd"))
-        .where(F.col("_nd") >= min_docs)
-        .select("_digest")
+    grams = _persist_grams(
+        positional_shingles(_parallelize(df), id_col, text_col, gram_len)
     )
     # n_grams needs no aggregation: it is size(tokens) - n + 1,
     # computed map-side straight from the document
-    tokens = F.filter(
-        F.split(F.lower(F.col(text_col)), r"\s+"), lambda t: t != ""
-    )
     per_doc = df.select(
         F.col(id_col),
-        (F.size(tokens) - (gram_len - 1)).cast("bigint").alias("n_grams"),
+        (F.size(tokens(F.col(text_col))) - (gram_len - 1))
+        .cast("bigint")
+        .alias("n_grams"),
     ).where(F.col("n_grams") > 0)
-    dup_occ = grams.join(dup_digests, "_digest", "left_semi")
+    dup_occ = _doc_freq_prune(grams, id_col, lo=min_docs)
     # one shuffle: the coverage window and the dup-gram count share the
     # same per-document partitioning and fuse into one aggregation
     w = Window.partitionBy(id_col).orderBy("_pos")
@@ -1110,7 +1158,6 @@ def scrub_duplicated_spans(
     gram_len: int = 5,
     min_docs: int = 2,
     out_col: str = "clean_text",
-    cache_grams: bool = True,
 ) -> DataFrame:
     """REMOVE duplicated spans from documents (the second half of Lee
     et al. 2021 — :func:`duplicated_spans` detects, this scrubs).
@@ -1131,28 +1178,16 @@ def scrub_duplicated_spans(
     search over merged intervals bounds the scan — at fixture scale the
     direct form is already exact and fast.
 
-    ``cache_grams``: same two-consumer justification as
-    :func:`duplicated_spans` — doc frequency and membership both read
-    the gram table; the cache avoids a second shingle+md5 pass.
+    The gram table is persisted for the same two consumers as in
+    :func:`duplicated_spans`.
     """
-    grams = positional_shingles(_parallelize(df), id_col, text_col, gram_len)
-    if cache_grams:
-        grams = _persist_grams(grams)
-    dup_digests = (
-        grams.select("_digest", id_col)
-        .distinct()
-        .groupBy("_digest")
-        .agg(F.count(F.lit(1)).alias("_nd"))
-        .where(F.col("_nd") >= min_docs)
-        .select("_digest")
+    grams = _persist_grams(
+        positional_shingles(_parallelize(df), id_col, text_col, gram_len)
     )
     starts = (
-        grams.join(dup_digests, "_digest", "left_semi")
+        _doc_freq_prune(grams, id_col, lo=min_docs)
         .groupBy(id_col)
         .agg(F.array_sort(F.collect_list("_pos")).alias("_starts"))
-    )
-    toks = F.filter(
-        F.split(F.lower(F.col(text_col)), r"\s+"), lambda t: t != ""
     )
     ss = F.coalesce(F.col("_starts"), F.array().cast("array<int>"))
 
@@ -1160,7 +1195,7 @@ def scrub_duplicated_spans(
         j = i + F.lit(1)  # starts are 1-based token positions
         return ~F.exists(ss, lambda s: (s <= j) & (j < s + F.lit(gram_len)))
 
-    cleaned = F.concat_ws(" ", F.filter(toks, keep))
+    cleaned = F.concat_ws(" ", F.filter(tokens(F.col(text_col)), keep))
     return (
         df.join(starts, id_col, "left")
         .withColumn(out_col, cleaned)
@@ -1175,7 +1210,6 @@ def maximal_match_pairs(
     seed_len: int = 5,
     min_len: int = 10,
     max_doc_freq: int | None = 50,
-    cache_grams: bool = True,
 ) -> DataFrame:
     """Maximal cross-document token matches — suffix-array semantics,
     distributed as a sorted-ngram run-merge (seed-and-chain).
@@ -1234,20 +1268,10 @@ def maximal_match_pairs(
             f"min_len ({min_len}) must be >= seed_len ({seed_len}): "
             "matches shorter than the seed produce no seed hits"
         )
-    grams = positional_shingles(_parallelize(df), id_col, text_col, seed_len)
-    if cache_grams:
-        grams = _persist_grams(grams)
-    freq = (
-        grams.select("_digest", id_col)
-        .distinct()
-        .groupBy("_digest")
-        .agg(F.count(F.lit(1)).alias("_nd"))
+    grams = _persist_grams(
+        positional_shingles(_parallelize(df), id_col, text_col, seed_len)
     )
-    cond = F.col("_nd") >= 2
-    if max_doc_freq is not None:
-        cond = cond & (F.col("_nd") <= max_doc_freq)
-    keep_digests = freq.where(cond).select("_digest")
-    occ = grams.join(keep_digests, "_digest", "left_semi")
+    occ = _doc_freq_prune(grams, id_col, lo=2, hi=max_doc_freq)
     a = occ.alias("a")
     b = occ.alias("b")
     seeds = (
@@ -1260,25 +1284,14 @@ def maximal_match_pairs(
             (F.col("a._pos") - F.col("b._pos")).alias("_diag"),
         )
     )
-    # (id_a, id_b, _diag, pos_a) is unique by construction — one gram
-    # per position, one row per occurrence pair — so row_number is
-    # deterministic and pos_a - row_number is constant per island
-    w = Window.partitionBy("id_a", "id_b", "_diag").orderBy("pos_a")
-    isl = seeds.withColumn("_grp", F.col("pos_a") - F.row_number().over(w))
-    return (
-        isl.groupBy("id_a", "id_b", "_diag", "_grp")
-        .agg(
-            F.min("pos_a").alias("start_a"),
-            (F.count(F.lit(1)) + F.lit(seed_len - 1)).alias("match_len"),
-        )
-        .where(F.col("match_len") >= min_len)
-        .select(
-            "id_a",
-            "id_b",
-            "start_a",
-            (F.col("start_a") - F.col("_diag")).alias("start_b"),
-            "match_len",
-        )
+    return _diagonal_runs(
+        seeds, ["id_a", "id_b"], "pos_a", "start_a", seed_len, min_len
+    ).select(
+        "id_a",
+        "id_b",
+        "start_a",
+        (F.col("start_a") - F.col("_diag")).alias("start_b"),
+        "match_len",
     )
 
 
@@ -1352,36 +1365,20 @@ def self_repeat_stats(
             (F.col("b._pos") - F.col("a._pos")).alias("_diag"),
         )
     )
-    w = Window.partitionBy(id_col, "_diag").orderBy("pos_a")
-    isl = seeds.withColumn("_grp", F.col("pos_a") - F.row_number().over(w))
-    runs = (
-        isl.groupBy(id_col, "_diag", "_grp")
-        .agg(
-            F.min("pos_a").alias("start_a"),
-            (F.count(F.lit(1)) + F.lit(seed_len - 1)).alias("match_len"),
-        )
-        .where(F.col("match_len") >= min_len)
-        .select(
-            F.col(id_col),
-            (F.col("start_a") + F.col("_diag")).alias("_start_q"),
-            (F.col("start_a") + F.col("_diag") + F.col("match_len")).alias(
-                "_end_q"
-            ),
-            "match_len",
-        )
+    runs = _diagonal_runs(
+        seeds, [id_col], "pos_a", "start_a", seed_len, min_len
+    ).select(
+        F.col(id_col),
+        (F.col("start_a") + F.col("_diag")).alias("_start_q"),
+        (F.col("start_a") + F.col("_diag") + F.col("match_len")).alias(
+            "_end_q"
+        ),
+        "match_len",
     )
-    # variable-length interval union (running max end): a token of the
-    # later occurrence counts once even when repeats overlap
-    uw = Window.partitionBy(id_col).orderBy("_start_q", "_end_q")
-    prev_end = F.max("_end_q").over(
-        uw.rowsBetween(Window.unboundedPreceding, -1)
-    )
-    contrib = F.greatest(
-        F.lit(0).cast("bigint"),
-        F.col("_end_q") - F.greatest(F.coalesce(prev_end, F.lit(0)), F.col("_start_q")),
-    )
+    # variable-length interval union: a token of the later occurrence
+    # counts once even when repeats overlap
     return (
-        runs.withColumn("_new", contrib)
+        runs.withColumn("_new", _interval_union_new(id_col, "_start_q", "_end_q"))
         .groupBy(id_col)
         .agg(
             F.count(F.lit(1)).alias("n_rep_matches"),
@@ -1435,16 +1432,7 @@ def cross_match_pairs(
         _parallelize(df_corpus), id_col, text_col, seed_len
     )
     if max_doc_freq is not None:
-        corpus = _persist_grams(corpus)
-        keep = (
-            corpus.select("_digest", id_col)
-            .distinct()
-            .groupBy("_digest")
-            .agg(F.count(F.lit(1)).alias("_nd"))
-            .where(F.col("_nd") <= max_doc_freq)
-            .select("_digest")
-        )
-        corpus = corpus.join(keep, "_digest", "left_semi")
+        corpus = _doc_freq_prune(_persist_grams(corpus), id_col, hi=max_doc_freq)
     a = probe.alias("a")
     b = corpus.alias("b")
     seeds = (
@@ -1456,46 +1444,15 @@ def cross_match_pairs(
             (F.col("a._pos") - F.col("b._pos")).alias("_diag"),
         )
     )
-    w = Window.partitionBy("id_probe", "id_corpus", "_diag").orderBy("pos_p")
-    isl = seeds.withColumn("_grp", F.col("pos_p") - F.row_number().over(w))
-    return (
-        isl.groupBy("id_probe", "id_corpus", "_diag", "_grp")
-        .agg(
-            F.min("pos_p").alias("start_probe"),
-            (F.count(F.lit(1)) + F.lit(seed_len - 1)).alias("match_len"),
-        )
-        .where(F.col("match_len") >= min_len)
-        .select(
-            "id_probe",
-            "id_corpus",
-            "start_probe",
-            (F.col("start_probe") - F.col("_diag")).alias("start_corpus"),
-            "match_len",
-        )
-    )
-
-
-def _interval_union_sum(
-    runs: DataFrame, id_col: str, start_col: str, end_col: str, out_col: str
-) -> DataFrame:
-    """Per-id total length of the union of half-open [start, end)
-    integer intervals — the classic running-max-end sweep, over a
-    window PARTITIONED by id (each partition is one document's
-    intervals; nothing global sorts). Exact under duplicates: an
-    interval identical to a predecessor contributes 0."""
-    uw = Window.partitionBy(id_col).orderBy(start_col, end_col)
-    prev_end = F.max(end_col).over(
-        uw.rowsBetween(Window.unboundedPreceding, -1)
-    )
-    contrib = F.greatest(
-        F.lit(0).cast("bigint"),
-        F.col(end_col)
-        - F.greatest(F.coalesce(prev_end, F.lit(0)), F.col(start_col)),
-    )
-    return (
-        runs.withColumn("_new", contrib)
-        .groupBy(id_col)
-        .agg(F.sum("_new").alias(out_col))
+    return _diagonal_runs(
+        seeds, ["id_probe", "id_corpus"], "pos_p", "start_probe",
+        seed_len, min_len,
+    ).select(
+        "id_probe",
+        "id_corpus",
+        "start_probe",
+        (F.col("start_probe") - F.col("_diag")).alias("start_corpus"),
+        "match_len",
     )
 
 
@@ -1523,12 +1480,14 @@ def substring_removal_counts(
         F.col("start_b").alias("_s"),
         (F.col("start_b") + F.col("match_len")).alias("_e"),
     )
-    removed = _interval_union_sum(iv, id_col, "_s", "_e", "removed_tokens")
-    toks = F.filter(
-        F.split(F.lower(F.col(text_col)), r"\s+"), lambda t: t != ""
+    removed = (
+        iv.withColumn("_new", _interval_union_new(id_col, "_s", "_e"))
+        .groupBy(id_col)
+        .agg(F.sum("_new").alias("removed_tokens"))
     )
     per_doc = df.select(
-        F.col(id_col), F.size(toks).cast("bigint").alias("n_tokens")
+        F.col(id_col),
+        F.size(tokens(F.col(text_col))).cast("bigint").alias("n_tokens"),
     )
     return per_doc.join(removed, id_col, "left").withColumn(
         "removed_tokens",
@@ -1588,9 +1547,6 @@ def scrub_maximal_matches(
             ).alias("_ivs")
         )
     )
-    toks = F.filter(
-        F.split(F.lower(F.col(text_col)), r"\s+"), lambda t: t != ""
-    )
     iv = F.coalesce(
         F.col("_ivs"), F.array().cast("array<struct<s:int,l:bigint>>")
     )
@@ -1601,7 +1557,7 @@ def scrub_maximal_matches(
             iv, lambda r: (r["s"] <= j) & (j < r["s"] + r["l"])
         )
 
-    cleaned = F.concat_ws(" ", F.filter(toks, keep))
+    cleaned = F.concat_ws(" ", F.filter(tokens(F.col(text_col)), keep))
     return (
         df.join(ivs, id_col, "left")
         .withColumn(out_col, cleaned)
@@ -1660,7 +1616,7 @@ def passage_dedup(
     winners on the digest: no row multiplication (one winner per
     digest), and AQE may broadcast the winner table when small.
     """
-    toks = F.filter(F.split(F.lower(F.col(text_col)), r"\s+"), lambda t: t != "")
+    toks = tokens(F.col(text_col))
     n_chunks = F.ceil(F.size("_toks") / F.lit(passage_len)).cast("int")
     chunk_arr = F.slice(
         F.col("_toks"), F.col("_idx") * passage_len + 1, passage_len
@@ -1737,7 +1693,7 @@ def boilerplate_chunks(
     only) — it broadcasts back onto the occurrence stream, so the
     flagging join never shuffles the corpus.
     """
-    toks = F.filter(F.split(F.lower(F.col(text_col)), r"\s+"), lambda t: t != "")
+    toks = tokens(F.col(text_col))
     n_chunks = F.ceil(F.size("_toks") / F.lit(passage_len)).cast("int")
     chunk_arr = F.slice(
         F.col("_toks"), F.col("_idx") * passage_len + 1, passage_len

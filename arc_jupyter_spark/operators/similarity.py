@@ -18,6 +18,7 @@ from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from arc_jupyter_spark.checkpoint import materialize, materialize_lazy
 from arc_jupyter_spark.operators.litarray import double_array, long_array
+from arc_jupyter_spark.operators.text import tokens
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -120,10 +121,9 @@ def bm25_scores(
     """
     if not terms:
         raise ValueError("bm25_scores: terms must be non-empty")
-    toks = F.filter(F.split(F.lower(F.col(text_col)), r"\s+"), lambda t: t != "")
     feat = df.select(
         F.col(id_col),
-        toks.alias("_toks"),
+        tokens(F.col(text_col)).alias("_toks"),
     ).select(
         F.col(id_col),
         F.size("_toks").cast("bigint").alias("_dl"),

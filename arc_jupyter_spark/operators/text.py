@@ -29,7 +29,9 @@ TOKEN_PATTERN = "[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]"
 
 
 def tokens(text: Column) -> Column:
-    """Lowercased whitespace tokens (empty-safe)."""
+    """Lowercased whitespace tokens (empty-safe): the package's one Spark
+    word tokenizer. Its DuckDB twin is ``workloads._duck_sql.duck_tokens``;
+    ``tests/test_text.py`` fails on a hand-built copy of either."""
     return F.filter(F.split(F.lower(text), r"\s+"), lambda t: t != "")
 
 

@@ -6,18 +6,40 @@ queries AND the streaming oracles), so they live here rather than as
 private helpers of one workload module — importing llmops internals
 from streaming_queries coupled the modules and risked an import
 cycle.
+
+Which inputs the tokenizer mirrors exactly: :func:`duck_tokens` equals
+``operators.text.tokens`` on NULL, empty and blank strings, on every
+ASCII whitespace character, and on any text that lowercases without
+Java's special casing. Java's ``\\s`` includes U+000B and RE2's does
+not, hence the ``[\\s\\v]`` class (:data:`DUCK_WHITESPACE`); neither
+engine splits on Unicode spaces such as U+00A0. The engines still
+lowercase two cases differently: Spark's ``lower`` applies
+Java's special casing (``İ`` → ``i̇``, a word-final ``Σ`` → ``ς``),
+DuckDB maps each code point on its own (``i``, ``σ``). No fixture
+holds such text; ``tests/test_text.py`` checks the parity and names
+those two inputs as the known exceptions.
 """
 
 from __future__ import annotations
 
 from arc_jupyter_spark.digest import duck_band_digests, duck_md5_prefix_hash
 
-#: DuckDB expression: lowercased whitespace tokens of ``text`` with
-#: empties removed — mirrors the Spark-side
-#: ``filter(split(lower(text), '\\s+'), t -> t != '')``.
-DUCK_TOKS = (
-    "list_filter(regexp_split_to_array(lower(text), '\\s+'), x -> x <> '')"
-)
+#: RE2 class for Java's ``\\s+`` (which includes U+000B).
+DUCK_WHITESPACE = "[\\s\\v]+"
+
+
+def duck_tokens(expr: str) -> str:
+    """DuckDB expression: lowercased whitespace tokens of ``expr`` with
+    empties removed — the twin of ``operators.text.tokens``. Every
+    oracle tokenizes through this."""
+    return (
+        f"list_filter(regexp_split_to_array(lower({expr}), "
+        f"'{DUCK_WHITESPACE}'), x -> x <> '')"
+    )
+
+
+#: ``duck_tokens`` over the ``text`` column.
+DUCK_TOKS = duck_tokens("text")
 
 #: Canonical CDC chunker parameters, shared by the d21 batch query,
 #: the st15 streaming query, p11's scrub pipeline, and every oracle

@@ -22,6 +22,7 @@ from arc_jupyter_spark.digest import (
     duck_md5_prefix_hash, internal_digest, md5_prefix_hash,
 )
 from arc_jupyter_spark.operators import graph, litarray, quality, text, urls
+from arc_jupyter_spark.workloads._duck_sql import DUCK_TOKS, duck_tokens
 from arc_jupyter_spark.workloads.base import load_views, query
 
 # --------------------------------------------------------------------
@@ -853,11 +854,11 @@ c AS (
 ),
 gated AS (
   SELECT *,
-         len(list_filter(regexp_split_to_array(clean, '\\s+'), x -> x <> '')) AS n_words,
+         len({duck_tokens("clean")}) AS n_words,
          3 * len(regexp_extract_all(clean, '{text._CODE_KEYWORD_RE}'))
            + len(regexp_extract_all(clean, '{text._CODE_SYMBOL_RE}')) AS score
   FROM c
-  WHERE len(list_filter(regexp_split_to_array(clean, '\\s+'), x -> x <> '')) >= {_P07_MIN_WORDS}
+  WHERE len({duck_tokens("clean")}) >= {_P07_MIN_WORDS}
 ),
 capped AS (
   SELECT * FROM (
@@ -1144,12 +1145,7 @@ _D16_LEN = 5
 _D16_CHUNK = f"toks[idx*{_D16_LEN}+1:idx*{_D16_LEN}+{_D16_LEN}]"
 
 D16_ORACLE = f"""
-WITH tk AS (
-  SELECT doc_id, source,
-         list_filter(regexp_split_to_array(lower(text), '\\s+'), x -> x <> '')
-           AS toks
-  FROM documents
-),
+WITH tk AS (SELECT doc_id, source, {DUCK_TOKS} AS toks FROM documents),
 occ AS (
   SELECT doc_id, source,
          unnest(generate_series(
@@ -1215,12 +1211,7 @@ _T35_STRIDE = 16
 _T35_CHUNK = f"toks[idx*{_T35_STRIDE}+1:idx*{_T35_STRIDE}+{_T35_WIN}]"
 
 T35_ORACLE = f"""
-WITH tk AS (
-  SELECT doc_id, source,
-         list_filter(regexp_split_to_array(lower(text), '\\s+'), x -> x <> '')
-           AS toks
-  FROM documents
-),
+WITH tk AS (SELECT doc_id, source, {DUCK_TOKS} AS toks FROM documents),
 occ AS (
   SELECT doc_id, source,
          unnest(generate_series(
@@ -1295,12 +1286,9 @@ def _s10_bm25_sql() -> str:
     )
     return f"""feat AS (
   SELECT doc_id,
-         len(list_filter(regexp_split_to_array(lower(text), '\\s+'),
-                         x -> x <> '')) AS dl, {tf}
+         len({DUCK_TOKS}) AS dl, {tf}
   FROM (
-    SELECT doc_id, text,
-           list_filter(regexp_split_to_array(lower(text), '\\s+'),
-                       x -> x <> '') AS toks
+    SELECT doc_id, text, {DUCK_TOKS} AS toks
     FROM documents
   )
 ),

@@ -3,8 +3,8 @@ analysis — each oracle-checked against DuckDB where expressible.
 
 Every digest comes from ``arc_jupyter_spark.digest``: md5 forms where
 an oracle recomputes the value, ``xxhash64`` only for plan-internal
-keys. Tokenization is ``\\s+`` splitting mirrored by DuckDB
-``regexp_split_to_array``.
+keys. Tokenization is ``text.tokens`` (``\\s+`` splitting), mirrored in
+every oracle by ``_duck_sql.duck_tokens``.
 Oracle SQL for the hash-heavy queries (minhash, simhash) is generated
 programmatically so both engines compute bit-identical strings.
 """
@@ -31,9 +31,11 @@ from arc_jupyter_spark.workloads.base import exact_sum, load_views, query
 # same tokenizer); local aliases keep the many f-string sites short
 from arc_jupyter_spark.workloads._duck_sql import (
     DUCK_TOKS as _DUCK_TOKS,
+    DUCK_WHITESPACE as _DUCK_WS,
     duck_cdc_dist_cte as _duck_cdc_dist,
     duck_count_min_ctes as _duck_count_min,
     duck_shingles as _duck_shingles,
+    duck_tokens as _duck_tokens,
 )
 
 
@@ -632,7 +634,7 @@ def t03(spark: SparkSession, sf_dir: str) -> DataFrame:
 T04_ORACLE = f"""
 WITH f AS (
   SELECT doc_id, source,
-         md5(regexp_replace(trim(lower(text)), '\\s+', ' ', 'g')) AS fp
+         md5(regexp_replace(trim(lower(text)), '{_DUCK_WS}', ' ', 'g')) AS fp
   FROM documents
 ),
 t AS (SELECT doc_id, source, {_DUCK_TOKS} AS toks FROM documents),
@@ -3025,8 +3027,7 @@ keep AS (
 ),
 gated AS (
   SELECT doc_id, source, clean,
-         len(list_filter(regexp_split_to_array(lower(clean), '\s+'), x -> x <> ''))
-           AS n_toks
+         len({_duck_tokens("clean")}) AS n_toks
   FROM keep WHERE rn = 1
 ),
 final AS (
@@ -3089,9 +3090,7 @@ def p04_stage_frames(
     gated = kept.select(
         "doc_id",
         "clean",
-        F.size(
-            F.filter(F.split(F.lower(F.col("clean")), r"\s+"), lambda t: t != "")
-        ).cast("bigint").alias("n_toks"),
+        F.size(text.tokens(F.col("clean"))).cast("bigint").alias("n_toks"),
     ).where(F.col("n_toks") >= _P04_MIN_TOKENS)
     final = gated.select(
         (md5_prefix_hash(F.col("doc_id").cast("string")) % _P04_SHARDS).alias(
@@ -4728,9 +4727,7 @@ def d19(spark: SparkSession, sf_dir: str) -> DataFrame:
         min_len=_D18_MIN_LEN,
         max_doc_freq=_D18_MAX_DF,
     )
-    toks = F.filter(
-        F.split(F.lower(F.col("text")), r"\s+"), lambda t: t != ""
-    )
+    toks = text.tokens(F.col("text"))
     ktoks = F.filter(
         F.split(F.col("clean_text"), r"\s+"), lambda t: t != ""
     )
@@ -4827,9 +4824,7 @@ ORDER BY doc_id
 @query("d20_self_repeats", oracle=D20_ORACLE)
 def d20(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_views(spark, sf_dir, "documents")
-    toks = F.filter(
-        F.split(F.lower(F.col("text")), r"\s+"), lambda t: t != ""
-    )
+    toks = text.tokens(F.col("text"))
     chorus = spark.table("documents").select(
         "doc_id",
         F.concat_ws(

@@ -1,10 +1,11 @@
-"""Property-based invariant for the round-6 operator (d18 maximal
-cross-document matches): the Spark seed-and-chain diagonal run-merge
-is checked against an independent pure-Python suffix scan — for every
-document pair and every alignment offset, scan the token-equality
-runs directly and keep the maximal runs >= min_len. This is the
-naive O(n*m) form of what a suffix array computes; agreement on
-random corpora is the "suffix-array semantics" claim of
+"""Property-based invariants for the exact-substring dedup family
+(d18 maximal cross-document matches, d19 keep-first scrub, d20 self
+repeats, cross-corpus matches): each operator's Spark seed-and-chain
+diagonal run-merge is checked against an independent pure-Python
+scan — for every document pair and every alignment offset, scan the
+token-equality runs directly and keep the maximal runs >= min_len.
+This is the naive O(n*m) form of what a suffix array computes;
+agreement on random corpora is the "suffix-array semantics" claim of
 operators/dedup.py:maximal_match_pairs (bounded example count — each
 example runs Spark jobs)."""
 

@@ -1,9 +1,15 @@
 """Text-analysis operators: token counting, quality, language ID,
 fingerprinting."""
 
+import re
+from pathlib import Path
+
+import duckdb
+import pandas as pd
 from pyspark.sql import functions as F
 
 from arc_jupyter_spark.operators import text
+from arc_jupyter_spark.workloads import _duck_sql
 
 
 def one(spark, s, expr):
@@ -459,3 +465,79 @@ def test_calibration_report_clamps_out_of_range_scores(spark):
     assert got[0] == (2, 1)  # the -0.25 row clamped in with the 0.10 row
     assert got[None] == (1, 1)  # the NaN row, isolated
     assert set(got) == {0, None}
+
+
+# -- one tokenizer per engine -------------------------------------------
+
+PACKAGE = Path(text.__file__).parents[1]
+# filter(split(lower(x), '\s+'), ...) built by hand, in Python or SQL
+SPARK_TOKENIZER = re.compile(
+    r"\bsplit\(\s*(?:F\.)?lower\((?:[^()]|\([^()]*\))*\),\s*r?[\"']\\{1,2}s\+"
+)
+DUCK_TOKENIZER = re.compile(r"regexp_split_to_array\(\s*lower\(")
+
+
+def _hand_built(pattern: re.Pattern, owner: Path) -> list[str]:
+    hits = []
+    for path in sorted(PACKAGE.rglob("*.py")):
+        if path == owner:
+            continue
+        src = path.read_text()
+        for m in pattern.finditer(src):
+            n = src.count("\n", 0, m.start()) + 1
+            line = src.splitlines()[n - 1].strip()
+            hits.append(f"{path.relative_to(PACKAGE.parent)}:{n}: {line}")
+    return hits
+
+
+def test_spark_tokenizer_is_built_only_in_text_module():
+    hits = _hand_built(SPARK_TOKENIZER, Path(text.__file__))
+    assert not hits, (
+        "hand-built \\s+ tokenizer outside operators/text.py "
+        "(call text.tokens):\n" + "\n".join(hits)
+    )
+
+
+def test_duck_tokenizer_is_built_only_in_duck_sql():
+    hits = _hand_built(DUCK_TOKENIZER, Path(_duck_sql.__file__))
+    assert not hits, (
+        "hand-built DuckDB tokenizer outside workloads/_duck_sql.py "
+        "(call duck_tokens):\n" + "\n".join(hits)
+    )
+
+
+# Spark's lower applies Java's special casing ('İ' -> 'i̇', a word-final
+# 'Σ' -> 'ς'); DuckDB lowercases each code point on its own.
+CASING_DIFFERS = ["İstanbul", "ΣΑΣ ΟΔΟΣ"]
+# ASCII whitespace, the separators Java's \s and RE2's \s leave out,
+# and Unicode spaces (neither engine splits on those)
+WHITESPACE_LIKE = (
+    "\t\n\x0b\x0c\r \x1c\x1d\x1e\x1f\x85\xa0\u1680\u2000\u2002"
+    "\u2007\u200a\u2028\u2029\u202f\u205f\u3000"
+)
+
+
+def test_spark_tokens_equal_duckdb_twin(spark):
+    values = [f"a{c}b" for c in WHITESPACE_LIKE] + CASING_DIFFERS + [
+        "naïve café", "Straße", "日本語 テキスト", "ÉCOLE Ünïcödé",
+        "emoji 🙂 🚀", "Mixed  CASE\tWords", " lead trail ", "   ", "", None,
+    ]
+    rows = list(enumerate(values))
+    got = dict(
+        spark.createDataFrame(rows, "i int, s string")
+        .select("i", text.tokens(F.col("s")))
+        .collect()
+    )
+    con = duckdb.connect()
+    con.register("t", pd.DataFrame({"i": range(len(values)),
+                                    "s": pd.Series(values, dtype=object)}))
+    want = dict(con.execute(
+        f"SELECT i, {_duck_sql.duck_tokens('s')} FROM t"
+    ).fetchall())
+    assert len(got) == len(want) == len(values) == 34
+    bad = [
+        (values[i], got[i], want[i])
+        for i in want
+        if values[i] not in CASING_DIFFERS and got[i] != want[i]
+    ]
+    assert not bad, f"{len(bad)} of {len(values)} differ: {bad}"
