@@ -21,6 +21,7 @@ from collections.abc import Mapping, Sequence
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from arc_jupyter_spark.digest import md5_prefix_hash
+from arc_jupyter_spark.exact import quantize
 
 #: Number of hash buckets sampling rates are quantized to. 4096 keeps
 #: rate resolution at ~0.02% while staying far inside the 28-bit hash
@@ -68,7 +69,7 @@ def mixture_allocation(
     group_col: str,
     budget_num: int = 2,
     budget_den: int = 5,
-    qsqrt_scale: int = 10**6,
+    qsqrt_digits: int = 6,
 ) -> DataFrame:
     """Temperature-scaled (α=0.5) sampling allocation per group.
 
@@ -83,7 +84,7 @@ def mixture_allocation(
     ``sample_bucket``. ``weight_e6`` is the weight in exact parts-per-
     million (pure integer arithmetic — safe to value-hash across
     engines; headroom: ``_q * 10^6`` stays under 2^63 up to ~3e12 rows
-    per group at the default ``qsqrt_scale``); ``weight`` is the
+    per group at the default ``qsqrt_digits``); ``weight`` is the
     convenience double of the same ratio.
 
     Engine-exact by construction: ``sqrt`` is correctly rounded in
@@ -101,9 +102,7 @@ def mixture_allocation(
     counts = (
         counts.withColumn(
             "_q",
-            F.floor(F.sqrt(F.col("n_docs")) * qsqrt_scale + F.lit(0.5)).cast(
-                "bigint"
-            ),
+            quantize(F.sqrt(F.col("n_docs")), qsqrt_digits),
         )
         .withColumn("_total_q", F.sum("_q").over(w))
         .withColumn(

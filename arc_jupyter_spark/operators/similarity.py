@@ -17,6 +17,7 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from arc_jupyter_spark.checkpoint import materialize, materialize_lazy
+from arc_jupyter_spark.exact import host_quantize, quantize
 from arc_jupyter_spark.operators.litarray import double_array, long_array
 from arc_jupyter_spark.operators.text import tokens
 
@@ -108,8 +109,8 @@ def bm25_scores(
 
     ``score = Σ_t ln(1 + (N - df_t + 0.5)/(df_t + 0.5)) ·
     tf·(k1+1) / (tf + k1·(1 - b + b·dl/avgdl))`` with whitespace
-    tokens; ``score_e9`` is the FLOOR(x·1e9 + 0.5) scaled-long
-    quantization for order-stable downstream ranking. Defaults pick
+    tokens; ``score_e9`` is the score quantized at e9 (``exact.py``)
+    for order-stable downstream ranking. Defaults pick
     binary-exact constants (k1 = 1.25, b = 0.75, k1+1 = 2.25) so the
     arithmetic reproduces bit-identically on any IEEE engine.
 
@@ -160,7 +161,7 @@ def bm25_scores(
     return scored.select(
         F.col(id_col),
         score.alias("score"),
-        F.floor(score * F.lit(1e9) + F.lit(0.5)).cast("bigint").alias("score_e9"),
+        quantize(score, 9).alias("score_e9"),
     )
 
 
@@ -617,7 +618,7 @@ def quantized_topk(
     import math
 
     absmax = max(max(abs(float(x)) for x in query_vec), 1e-300)
-    # round-half-up via floor(x+0.5), mirroring quantize_int8 exactly
+    # rounded half up, mirroring quantize_int8 exactly
     q = [int(math.floor(float(x) * levels / absmax + 0.5)) for x in query_vec]
     qlit = long_array(q)
     scored = df.select(
@@ -629,7 +630,7 @@ def quantized_topk(
 
 def quantize_vec_py(vec: Sequence[float], levels: int = 127) -> list[int]:
     """Driver-side twin of :func:`quantize_int8` (same absmax recipe,
-    same op order, round-half-up via ``floor(x + 0.5)``) so literal
+    same op order, rounded half up) so literal
     anchor/query vectors match the engine-side quantization bit-exactly
     — and so a SQL oracle running the same formula reproduces them."""
     import math
@@ -735,7 +736,7 @@ def mmr_topk(
     vec_col: str = "embedding",
     lam_num: int = 1,
     lam_den: int = 2,
-    scale: int = 1_000_000,
+    digits: int = 6,
 ) -> DataFrame:
     """Maximal-Marginal-Relevance diversity re-rank →
     ``[rank, id_col, score_e6]``.
@@ -760,7 +761,7 @@ def mmr_topk(
     top = cosine_topk(df, query_vec, id_col=id_col, vec_col=vec_col, k=pool)
     rel_df = top.select(
         id_col,
-        F.floor(F.col("cosine") * scale + F.lit(0.5)).cast("bigint").alias("rel_q"),
+        quantize(F.col("cosine"), digits).alias("rel_q"),
     )
     pool_vec = df.join(F.broadcast(rel_df), id_col).select(
         F.col(id_col), F.col(vec_col).cast("array<double>").alias("_v")
@@ -773,9 +774,7 @@ def mmr_topk(
         .select(
             "ia",
             "ib",
-            F.floor(cosine_similarity(F.col("_va"), F.col("_vb")) * scale + F.lit(0.5))
-            .cast("bigint")
-            .alias("s_q"),
+            quantize(cosine_similarity(F.col("_va"), F.col("_vb")), digits).alias("s_q"),
         )
     )
     rel = {r[id_col]: r["rel_q"] for r in rel_df.collect()}  # pool rows
@@ -792,7 +791,7 @@ def lloyd_step_quantized(
     df: DataFrame,
     anchors: Sequence[tuple[int, Sequence[float]]],
     vec_col: str = "embedding",
-    scale: int = 1_000_000,
+    digits: int = 6,
     levels: int = 127,
 ) -> DataFrame:
     """One distributed Lloyd (k-means) iteration, integer-exact →
@@ -805,10 +804,10 @@ def lloyd_step_quantized(
       the broadcast anchor literals (map-only, no IEEE ordering
       hazard).
     * **Update + inertia** — raw components are fixed-point quantized
-      (``FLOOR(x * scale + 0.5)`` — exact IEEE ops, the repo-standard
-      e6 recipe), then one explode to ``(cluster_id, dim)`` granularity
-      aggregates the per-dimension component sums (``sum_q``; the new
-      centroid is ``sum_q / n_c`` downstream) and the squared
+      at ``10^digits`` (``exact.py``), then one explode to
+      ``(cluster_id, dim)`` granularity aggregates the per-dimension
+      component sums (``sum_q``; the new centroid is ``sum_q / n_c``
+      downstream) and the squared
       quantized distance to the OWN anchor, rolled up to the
       per-cluster ``inertia_q`` (e12 units) that a driver loop would
       watch for convergence.
@@ -819,32 +818,27 @@ def lloyd_step_quantized(
     combine collapses to at most ``k * dim`` rows per task before the
     only shuffle. The per-cluster inertia rollup runs on the k*dim-row
     aggregate (broadcast-joined back). Overflow headroom: each squared
-    term is <= (2*scale)^2, so with e6 quantization a single cluster
+    term is <= (2*10^digits)^2, so with e6 quantization a single cluster
     can absorb ~2M unit-norm vectors per dimension before the BIGINT
-    bound — drop ``scale`` to 1e3 (and re-derive the oracle) past
+    bound — drop ``digits`` to 3 (and re-derive the oracle) past
     that, or shard clusters.
 
     Iterating this step k times IS distributed k-means
     (:func:`kmeans_centroids` is the float/driver-loop variant; this
     one is oracle-checkable bit-for-bit).
     """
-    import math
-
     if not anchors:
         raise ValueError("lloyd_step_quantized: anchors must be non-empty")
     asg = assign_quantized_cells(df, anchors, vec_col=vec_col, levels=levels)
     q6 = F.transform(
-        F.col(vec_col).cast("array<double>"),
-        lambda x: F.floor(x * F.lit(float(scale)) + F.lit(0.5)).cast("bigint"),
+        F.col(vec_col).cast("array<double>"), lambda x: quantize(x, digits)
     )
     # anchors as a literal array-of-arrays indexed by cluster_id —
-    # quantized driver-side with the identical FLOOR formula, so the
-    # in-plan literals match what the engine would compute
+    # quantized driver-side by the numpy twin, so the in-plan literals
+    # match what the engine would compute
     ordered = sorted((int(aid), avec) for aid, avec in anchors)
     a6 = F.array(*[
-        F.array(*[
-            F.lit(int(math.floor(float(x) * scale + 0.5))) for x in avec
-        ])
+        F.array(*[F.lit(v) for v in host_quantize(avec, digits).tolist()])
         for _aid, avec in ordered
     ])
     id_to_pos = {aid: i for i, (aid, _v) in enumerate(ordered)}
@@ -902,7 +896,7 @@ def lloyd_train_quantized(
     anchors: Sequence[tuple[int, Sequence[float]]],
     iters: int = 3,
     vec_col: str = "embedding",
-    scale: int = 1_000_000,
+    digits: int = 6,
 ) -> DataFrame:
     """Full distributed k-means TRAINING loop (Lloyd to ``iters``
     assignment rounds), integer-exact end to end → the final
@@ -932,26 +926,24 @@ def lloyd_train_quantized(
     Scale shape: the corpus is scanned once per round (``iters`` scans
     total — persist the quantized projection at real scale); per-round
     driver traffic is k*dim longs. Overflow headroom: per-cluster
-    ``sum_q`` is bounded by ``n_c * max|x| * scale`` — with unit-ish
-    embeddings and e6 scale, ~1.5e12 rows per cluster before the
-    BIGINT bound; shard clusters or drop ``scale`` past that.
+    ``sum_q`` is bounded by ``n_c * max|x| * 10^digits`` — with
+    unit-ish embeddings at e6, ~1.5e12 rows per cluster before the
+    BIGINT bound; shard clusters or drop ``digits`` past that.
     """
-    import math
-
     if not anchors:
         raise ValueError("lloyd_train_quantized: anchors must be non-empty")
     if iters < 1:
         raise ValueError("lloyd_train_quantized: iters must be >= 1")
     ordered = sorted((int(aid), avec) for aid, avec in anchors)
-    # e6-quantize the seed anchors driver-side with the exact engine
-    # formula (FLOOR(x*scale + 0.5) on IEEE doubles)
+    # quantize the seed anchors driver-side with the numpy twin of the
+    # engine form
     cents: dict[int, list[int]] = {
-        aid: [int(math.floor(float(x) * scale + 0.5)) for x in avec]
+        aid: host_quantize(avec, digits).tolist()
         for aid, avec in ordered
     }
     q6 = F.transform(
         F.col(vec_col).cast("array<double>"),
-        lambda x: F.floor(x * F.lit(float(scale)) + F.lit(0.5)).cast("bigint"),
+        lambda x: quantize(x, digits),
     )
     qcol = "__ltq_q"
     # quantize ONCE (CollapseProject keeps the multi-referenced
@@ -1035,10 +1027,10 @@ def range_neighbors(
 
     The complement of top-k retrieval: dedup radius sweeps and
     contamination checks ask "everything this close", not "the k
-    closest". The threshold compares the QUANTIZED score
-    (``FLOOR(cos * 1e6 + 0.5)``, the engine-portable integer both
-    sides of an oracle compute identically) so no pair can land on
-    opposite sides of the cut via sub-quantum float noise.
+    closest". The threshold compares the QUANTIZED score (at e6,
+    ``exact.py``: the integer both sides of an oracle compute
+    identically) so no pair can land on opposite sides of the cut via
+    sub-quantum float noise.
 
     Scale shape: queries broadcast (small set by contract); scoring
     is a narrow map over the corpus — zero shuffle until the
@@ -1056,7 +1048,7 @@ def range_neighbors(
     scored = corpus.crossJoin(F.broadcast(q)).select(
         F.col("query_id"),
         F.col(id_col),
-        F.floor(sim * 1_000_000 + F.lit(0.5)).cast("bigint").alias("cosine_e6"),
+        quantize(sim, 6).alias("cosine_e6"),
     )
     # pushdown fence: without it Catalyst pushes the threshold filter
     # through this projection into the join condition AND keeps the

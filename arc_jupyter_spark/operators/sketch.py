@@ -148,8 +148,8 @@ def hist_build(
     on partition order. Binning is pure integer arithmetic —
     ``((v - lo) * nbins) DIV (hi - lo + 1)`` clamped to the edge bins
     — so the histogram is bit-identical in any engine at any
-    partitioning. ``value`` must already be integer-typed (e.g. cents
-    via ``FLOOR(x*100 + 0.5)``).
+    partitioning. ``value`` must already be integer-typed (e.g. cents,
+    ``exact.quantize(x, 2)``).
 
     Scale shape: one map-side projection + one partial-agg'd groupBy
     on (shard, bin) — the shuffle carries at most shards × nbins rows.

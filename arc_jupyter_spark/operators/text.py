@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import Column, functions as F
 
 from arc_jupyter_spark.digest import md5_hex, md5_prefix_hash
+from arc_jupyter_spark.exact import quantize
 
 # Tiny per-language stopword lists for the n-gram/stopword language
 # heuristic (public-knowledge function words).
@@ -643,9 +644,8 @@ def calibration_report(
     the per-bin |accuracy - confidence| gaps whose weighted sum is
     the expected calibration error).
 
-    Integer-exact: the score is quantized ONCE per row with the
-    repo-standard ``FLOOR(x*1e8 + 0.5)`` (identical IEEE ops in both
-    engines); binning, rates, and gaps are then pure BIGINT
+    Integer-exact: the score is quantized ONCE per row at e8
+    (``exact.py``); binning, rates, and gaps are then pure BIGINT
     arithmetic (truncating DIV), so bin membership cannot flip on
     summation order or libm differences. ``bins`` must divide 1e8.
 
@@ -655,7 +655,7 @@ def calibration_report(
     if 100_000_000 % bins:
         raise ValueError("calibration_report: bins must divide 1e8")
     width = 100_000_000 // bins
-    q = F.floor(score * F.lit(100_000_000.0) + F.lit(0.5)).cast("bigint")
+    q = quantize(score, 8)
     # NaN scores must surface, not fold: Spark's non-ANSI double→bigint
     # cast maps NaN to 0, which would silently place NaN rows in bin 0.
     # Map them to NULL so they aggregate into one visible NULL-bin row.

@@ -18,6 +18,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from arc_jupyter_spark.exact import host_quantize
+
 STATE_SCHEMA = T.StructType(
     [
         T.StructField("n", T.LongType()),
@@ -52,29 +54,24 @@ def running_counts(
     key_field = stream.schema[key_col]
     out_schema = _output_schema(key_field)
 
-    # Exact accumulation: quantize each value to micro-units
-    # (floor(v * 1e6 + 0.5) — the same IEEE ops Spark/DuckDB FLOOR
-    # performs) and sum as int64, so the emitted total is independent
-    # of row/batch order (a raw float sum can flip a downstream
-    # rounding tie depending on how the source splits batches).
-    # Equivalent SQL, mirrored by the st02 oracle:
-    # CAST(SUM(CAST(FLOOR(value * 1000000 + 0.5) AS BIGINT)) AS DOUBLE) / 1e6.
-    scale = 1_000_000
+    # Exact accumulation at e6 (exact.py): the emitted total is
+    # independent of row/batch order (a raw float sum can flip a
+    # downstream rounding tie depending on how the source splits
+    # batches). The st02 oracle sums with sql_exact_sum at 6 digits.
+    digits = 6
 
     def update(
         key: tuple[Any, ...],
         pdfs: Iterable[pd.DataFrame],
         state: GroupState,
     ) -> Iterable[pd.DataFrame]:
-        import numpy as np
-
         n, total = state.get if state.exists else (0, 0.0)
-        acc = int(np.floor(total * scale + 0.5))
+        acc = int(host_quantize(total, digits))
         for pdf in pdfs:
             n += len(pdf)
             vals = pdf[value_col].to_numpy(dtype="float64")
-            acc += int(np.floor(vals * scale + 0.5).astype("int64").sum())
-        total = acc / scale
+            acc += int(host_quantize(vals, digits).sum())
+        total = acc / 10**digits
         state.update((n, total))
         yield pd.DataFrame(
             {key_col: [key[0]], "n_events": [n], "sum_value": [total]}
@@ -154,24 +151,18 @@ def running_extremes_tws(
             T.StructField("max_value_e6", T.LongType()),
         ]
     )
-    scale = 1_000_000
-
     class RunningExtremes(StatefulProcessor):
         def init(self, handle: StatefulProcessorHandle) -> None:
             self._agg = handle.getValueState("agg", "n BIGINT, vmax_e6 BIGINT")
 
         def handleInputRows(self, key, rows, timerValues):
-            import numpy as np
-
             prev = self._agg.get() if self._agg.exists() else None
             n, vmax = (prev[0], prev[1]) if prev else (0, None)
             for pdf in rows:
                 n += len(pdf)
                 vals = pdf[value_col].to_numpy(dtype="float64")
                 if len(vals):
-                    batch_max = int(
-                        np.floor(vals * scale + 0.5).astype("int64").max()
-                    )
+                    batch_max = int(host_quantize(vals, 6).max())
                     vmax = batch_max if vmax is None else max(vmax, batch_max)
             self._agg.update((n, vmax if vmax is not None else -(2**62)))
             yield pd.DataFrame(

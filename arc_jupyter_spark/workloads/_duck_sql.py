@@ -11,7 +11,8 @@ Which inputs the tokenizer mirrors exactly: :func:`duck_tokens` equals
 ``operators.text.tokens`` on NULL, empty and blank strings, on every
 ASCII whitespace character, and on any text that lowercases without
 Java's special casing. Java's ``\\s`` includes U+000B and RE2's does
-not, hence the ``[\\s\\v]`` class (:data:`DUCK_WHITESPACE`); neither
+not, hence the ``[\\s\\v]`` class (:data:`DUCK_WHITESPACE`, and in
+:data:`DUCK_TOKEN_PATTERN` and :data:`DUCK_ALNUM_SPACE`); neither
 engine splits on Unicode spaces such as U+00A0. The engines still
 lowercase two cases differently: Spark's ``lower`` applies
 Java's special casing (``İ`` → ``i̇``, a word-final ``Σ`` → ``ς``),
@@ -26,6 +27,10 @@ from arc_jupyter_spark.digest import duck_band_digests, duck_md5_prefix_hash
 
 #: RE2 class for Java's ``\\s+`` (which includes U+000B).
 DUCK_WHITESPACE = "[\\s\\v]+"
+#: RE2 twin of ``operators.text.TOKEN_PATTERN`` (``text.token_count``).
+DUCK_TOKEN_PATTERN = "[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s\\v]"
+#: RE2 twin of the class ``text.punct_ratio`` deletes before counting.
+DUCK_ALNUM_SPACE = "[A-Za-z0-9\\s\\v]"
 
 
 def duck_tokens(expr: str) -> str:

@@ -37,29 +37,6 @@ def query(name: str, oracle: str | None = None):
     return deco
 
 
-def exact_sum(col, scale: int = 6):
-    """Order-independent SUM over a double column, returned as DOUBLE.
-
-    Scaled-long recipe: quantize per row at 10^scale
-    (``FLOOR(x * S + 0.5)`` — identical IEEE ops in Spark and DuckDB,
-    sign-independent), SUM as BIGINT (exact), divide back. The result
-    cannot depend on partitioning or summation order (the driver's
-    plain session partitions differently from build_session — round-1
-    q15/t05 hash flips came from exactly that), and long sums codegen
-    ~3x faster than the equivalent DECIMAL sums and ~1.2x faster than
-    plain double sums. Mirror with
-    ``CAST(SUM(CAST(FLOOR(x * S + 0.5) AS BIGINT)) AS DOUBLE) / S``
-    in the DuckDB oracle.
-
-    Overflow headroom: keep S * |x| * rowcount below ~9e18 (Spark
-    wraps silently past 2^63; DuckDB's HUGEINT doesn't, so they would
-    diverge). scale=6 with |x|<=1e5 holds to ~1e8 rows per group;
-    pick a smaller scale for larger magnitudes.
-    """
-    s = 10 ** scale
-    return F.sum(F.floor(col * s + F.lit(0.5)).cast("bigint")).cast("double") / s
-
-
 _NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
 
 #: session confs that steer parquet schema inference: part of every

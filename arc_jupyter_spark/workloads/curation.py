@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from arc_jupyter_spark.digest import (
     duck_md5_prefix_hash, internal_digest, md5_prefix_hash,
 )
+from arc_jupyter_spark.exact import quantize, sql_quantize
 from arc_jupyter_spark.operators import graph, litarray, quality, text, urls
 from arc_jupyter_spark.workloads._duck_sql import DUCK_TOKS, duck_tokens
 from arc_jupyter_spark.workloads.base import load_views, query
@@ -396,11 +397,11 @@ def q81(spark: SparkSession, sf_dir: str) -> DataFrame:
 # sorts. Engine-exact — no float percentile paths.
 # --------------------------------------------------------------------
 
-_Q82_SQL = """
+_Q82_SQL = f"""
 WITH r AS (
   SELECT l_returnflag,
          CAST(l_quantity AS BIGINT) AS q,
-         CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT) AS cents,
+         {sql_quantize('l_extendedprice', 2)} AS cents,
          ROW_NUMBER() OVER (PARTITION BY l_returnflag
                             ORDER BY l_quantity, l_orderkey, l_linenumber) AS rn_q,
          ROW_NUMBER() OVER (PARTITION BY l_returnflag
@@ -410,9 +411,9 @@ WITH r AS (
 )
 SELECT l_returnflag,
        MAX(n) AS n,
-       CAST(SUM(CASE WHEN rn_q IN ((n + 1) {IDIV} 2, (n + 2) {IDIV} 2) THEN q ELSE 0 END)
+       CAST(SUM(CASE WHEN rn_q IN ((n + 1) {{IDIV}} 2, (n + 2) {{IDIV}} 2) THEN q ELSE 0 END)
          * (CASE WHEN MAX(n) % 2 = 1 THEN 2 ELSE 1 END) AS BIGINT) AS median_x2_qty,
-       CAST(SUM(CASE WHEN rn_c IN ((n + 1) {IDIV} 2, (n + 2) {IDIV} 2) THEN cents ELSE 0 END)
+       CAST(SUM(CASE WHEN rn_c IN ((n + 1) {{IDIV}} 2, (n + 2) {{IDIV}} 2) THEN cents ELSE 0 END)
          * (CASE WHEN MAX(n) % 2 = 1 THEN 2 ELSE 1 END) AS BIGINT) AS median_x2_cents
 FROM r GROUP BY l_returnflag ORDER BY l_returnflag
 """
@@ -437,7 +438,7 @@ def q82(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cents = sketch.exact_grouped_median_x2(
         li, "l_returnflag",
-        F.expr("CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT)"),
+        F.expr(sql_quantize("l_extendedprice", 2)),
         tiebreak, lo=0, hi=10_999_999, nbins=1000,
         out_col="median_x2_cents",
     )
@@ -484,19 +485,17 @@ def q83(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------
 # q84 — rank-family windows: NTILE over a total order, PERCENT_RANK /
 # CUME_DIST over a tied order (coarse balance buckets), both recovered
-# to exact integers via FLOOR(x * den + 0.5) so the output hash can't
+# to exact integers as x * den rounded half up so the output hash can't
 # drift (pr = (rank-1)/(n-1) and cd = peers/n are exact rationals;
 # the double round-trip is lossless for den < 2^26).
 # --------------------------------------------------------------------
 
-_Q84_SQL = """
+_Q84_SQL = f"""
 SELECT c_custkey, c_mktsegment,
        NTILE(4) OVER (PARTITION BY c_mktsegment
                       ORDER BY c_acctbal, c_custkey) AS tile,
-       CAST(FLOOR(PERCENT_RANK() OVER (PARTITION BY c_mktsegment ORDER BY bucket)
-                  * (n - 1) + 0.5) AS BIGINT) AS pr_num,
-       CAST(FLOOR(CUME_DIST() OVER (PARTITION BY c_mktsegment ORDER BY bucket)
-                  * n + 0.5) AS BIGINT) AS cd_num,
+       {sql_quantize('PERCENT_RANK() OVER (PARTITION BY c_mktsegment ORDER BY bucket) * (n - 1)', 0)} AS pr_num,
+       {sql_quantize('CUME_DIST() OVER (PARTITION BY c_mktsegment ORDER BY bucket) * n', 0)} AS cd_num,
        n AS n_seg
 FROM (
   SELECT c_custkey, c_mktsegment, c_acctbal,
@@ -650,7 +649,7 @@ _T34_LO, _T34_HI, _T34_BINS = 0, 10_999_999, 1000
 
 T34_ORACLE = f"""
 WITH c AS (
-  SELECT CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT) AS cents
+  SELECT {sql_quantize('l_extendedprice', 2)} AS cents
   FROM lineitem
 ),
 cl AS (SELECT GREATEST({_T34_LO}, LEAST({_T34_HI}, cents)) AS v FROM c),
@@ -686,7 +685,7 @@ def t34(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     load_views(spark, sf_dir, "lineitem")
     li = spark.table("lineitem")
-    cents = F.expr("CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT)")
+    cents = F.expr(sql_quantize("l_extendedprice", 2))
     sharded = sketch.hist_build(
         li, cents, _T34_LO, _T34_HI, _T34_BINS,
         shard=F.col("l_orderkey") % 8,
@@ -772,11 +771,11 @@ def q85(spark: SparkSession, sf_dir: str) -> DataFrame:
 # proves the identity AND the implementation on real data.
 # --------------------------------------------------------------------
 
-Q86_ORACLE = """
+Q86_ORACLE = f"""
 SELECT o_orderpriority,
        COUNT(*) AS n,
        CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS qty_sum,
-       CAST(SUM(CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT)) AS BIGINT) AS cents_sum
+       CAST(SUM({sql_quantize('l_extendedprice', 2)}) AS BIGINT) AS cents_sum
 FROM orders JOIN lineitem ON orders.o_orderkey = lineitem.l_orderkey
 GROUP BY o_orderpriority ORDER BY o_orderpriority
 """
@@ -808,7 +807,7 @@ def q86(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n"),
             F.sum(F.col("l_quantity").cast("bigint")).alias("qty_sum"),
             F.sum(
-                F.expr("CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT)")
+                F.expr(sql_quantize("l_extendedprice", 2))
             ).alias("cents_sum"),
         )
         .orderBy("o_orderpriority")
@@ -1055,7 +1054,7 @@ def s09(spark: SparkSession, sf_dir: str) -> DataFrame:
 # unambiguous; production data would add a value tiebreak to the sort.
 # --------------------------------------------------------------------
 
-Q87_ORACLE = """
+Q87_ORACLE = f"""
 WITH l AS (
   SELECT user_id, ts, event_id FROM events WHERE event_type = 'click'
 ),
@@ -1091,7 +1090,7 @@ SELECT user_id,
        COUNT(*) AS n_clicks,
        COUNT(val) AS n_attributed,
        CAST(SUM(CASE WHEN val IS NOT NULL
-                     THEN CAST(FLOOR(val * 1000000 + 0.5) AS BIGINT)
+                     THEN {sql_quantize('val', 6)}
                      ELSE 0 END) AS BIGINT) AS val_e6
 FROM clicks GROUP BY user_id ORDER BY user_id
 """
@@ -1122,9 +1121,7 @@ def q87(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(
                 F.when(
                     F.col("asof_value").isNotNull(),
-                    F.floor(F.col("asof_value") * 1000000 + F.lit(0.5)).cast(
-                        "bigint"
-                    ),
+                    quantize(F.col("asof_value"), 6),
                 ).otherwise(F.lit(0))
             ).alias("val_e6"),
         )
@@ -1297,7 +1294,7 @@ stats AS (
 ),
 scored AS (
   SELECT doc_id,
-         CAST(FLOOR(({terms}) * 1000000000 + 0.5) AS BIGINT) AS score_e9
+         {sql_quantize(terms, 9)} AS score_e9
   FROM (
     SELECT f.*, s.n,
            {", ".join(f"s.df{i}" for i in range(len(_S10_TERMS)))},
@@ -1306,6 +1303,12 @@ scored AS (
   )
 )"""
 
+
+#: reciprocal-rank fusion (k = 60) of the two ranks, as the Spark side
+_S10_RRF = (
+    "CASE WHEN r_bm IS NOT NULL THEN CAST(1 AS DOUBLE) / (60 + r_bm) ELSE 0.0 END"
+    " + CASE WHEN r_cos IS NOT NULL THEN CAST(1 AS DOUBLE) / (60 + r_cos) ELSE 0.0 END"
+)
 
 S10_ORACLE = f"""
 WITH {_s10_bm25_sql()},
@@ -1335,12 +1338,7 @@ f AS (
   FROM bm_r b FULL OUTER JOIN cos_r c ON b.doc_id = c.doc_id
 )
 SELECT doc_id,
-       CAST(FLOOR((
-         CASE WHEN r_bm IS NOT NULL
-              THEN CAST(1 AS DOUBLE) / (60 + r_bm) ELSE 0.0 END
-       + CASE WHEN r_cos IS NOT NULL
-              THEN CAST(1 AS DOUBLE) / (60 + r_cos) ELSE 0.0 END
-       ) * 1000000000 + 0.5) AS BIGINT) AS rrf_e9,
+       {sql_quantize(_S10_RRF, 9)} AS rrf_e9,
        CAST(COALESCE(r_bm, 0) AS BIGINT) AS r_bm,
        CAST(COALESCE(r_cos, 0) AS BIGINT) AS r_cos
 FROM f ORDER BY rrf_e9 DESC, doc_id LIMIT 15
@@ -1392,7 +1390,7 @@ def s10(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         fused.select(
             "doc_id",
-            F.floor(rrf * F.lit(1e9) + F.lit(0.5)).cast("bigint").alias("rrf_e9"),
+            quantize(rrf, 9).alias("rrf_e9"),
             F.coalesce("r_bm", F.lit(0)).cast("bigint").alias("r_bm"),
             F.coalesce("r_cos", F.lit(0)).cast("bigint").alias("r_cos"),
         )

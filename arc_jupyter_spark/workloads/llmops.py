@@ -17,6 +17,7 @@ from arc_jupyter_spark.checkpoint import materialize, materialize_lazy
 from arc_jupyter_spark.digest import (
     band_digests, duck_band_digests, duck_md5_prefix_hash, md5_hex, md5_prefix_hash,
 )
+from arc_jupyter_spark.exact import exact_sum, quantize, sql_exact_sum, sql_quantize
 from arc_jupyter_spark.operators import (
     decontaminate,
     dedup,
@@ -25,11 +26,13 @@ from arc_jupyter_spark.operators import (
     similarity,
     text,
 )
-from arc_jupyter_spark.workloads.base import exact_sum, load_views, query
+from arc_jupyter_spark.workloads.base import load_views, query
 
 # shared DuckDB fragments live in _duck_sql (streaming oracles use the
 # same tokenizer); local aliases keep the many f-string sites short
 from arc_jupyter_spark.workloads._duck_sql import (
+    DUCK_ALNUM_SPACE as _DUCK_ALNUM_SPACE,
+    DUCK_TOKEN_PATTERN as _DUCK_TOKEN_PATTERN,
     DUCK_TOKS as _DUCK_TOKS,
     DUCK_WHITESPACE as _DUCK_WS,
     duck_cdc_dist_cte as _duck_cdc_dist,
@@ -139,8 +142,7 @@ inter AS (
 ),
 sizes AS (SELECT doc_id, len(s) AS n FROM sh)
 SELECT i.id_a, i.id_b,
-       CAST(FLOOR(CAST(i.ninter AS DOUBLE) / (sa.n + sb.n - i.ninter)
-                  * 1000000 + 0.5) AS BIGINT) AS jaccard_e6
+       {sql_quantize('CAST(i.ninter AS DOUBLE) / (sa.n + sb.n - i.ninter)', 6)} AS jaccard_e6
 FROM inter i
 JOIN sizes sa ON i.id_a = sa.doc_id
 JOIN sizes sb ON i.id_b = sb.doc_id
@@ -161,16 +163,11 @@ def d03(spark: SparkSession, sf_dir: str) -> DataFrame:
         block_col="source",
         max_doc_freq=_D03_MAX_DF,
     )
-    # hashed output is the exact-integer quantization of the ratio —
-    # FLOOR(x*1e6+0.5) is the same IEEE op sequence on the same double
-    # in both engines (ROUND(x, 6) is each engine's own BigDecimal/C++
-    # path and can differ on half-way representations)
+    # hashed output is the ratio quantized at e6 (exact.py)
     return pairs.select(
         "id_a",
         "id_b",
-        F.floor(F.col("jaccard") * 1000000 + F.lit(0.5))
-        .cast("bigint")
-        .alias("jaccard_e6"),
+        quantize(F.col("jaccard"), 6).alias("jaccard_e6"),
     ).orderBy("id_a", "id_b")
 
 
@@ -217,11 +214,10 @@ def d04(spark: SparkSession, sf_dir: str) -> DataFrame:
 # d05 — embedding near-dup pairs (label-blocked cosine).
 # --------------------------------------------------------------------
 
-D05_ORACLE = """
+D05_ORACLE = f"""
 WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings)
 SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-       CAST(FLOOR(list_cosine_similarity(a.v, b.v) * 1000000 + 0.5)
-            AS BIGINT) AS cosine_e6
+       {sql_quantize('list_cosine_similarity(a.v, b.v)', 6)} AS cosine_e6
 FROM e a JOIN e b ON a.label = b.label AND a.vec_id < b.vec_id
 WHERE list_cosine_similarity(a.v, b.v) >= 0.40
 ORDER BY id_a, id_b
@@ -238,15 +234,11 @@ def d05(spark: SparkSession, sf_dir: str) -> DataFrame:
         threshold=0.40,
         block_col="label",
     )
-    # FLOOR(x*1e6+0.5) quantization instead of ROUND(x, 6): identical
-    # IEEE op sequence in both engines on the same double (round-3
-    # verdict item 5 — hashed doubles must be exact by construction)
+    # hashed doubles must be exact by construction: quantize at e6
     return pairs.select(
         F.col("id_a"),
         F.col("id_b"),
-        F.floor(F.col("cosine") * 1000000 + F.lit(0.5))
-        .cast("bigint")
-        .alias("cosine_e6"),
+        quantize(F.col("cosine"), 6).alias("cosine_e6"),
     ).orderBy("id_a", "id_b")
 
 
@@ -335,11 +327,10 @@ def d07(spark: SparkSession, sf_dir: str) -> DataFrame:
 # s01 — brute-force cosine top-k (exact ANN baseline).
 # --------------------------------------------------------------------
 
-S01_ORACLE = """
+S01_ORACLE = f"""
 WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 0)
 SELECT vec_id,
-       CAST(FLOOR(list_cosine_similarity(CAST(embedding AS DOUBLE[]), q.qv)
-                  * 1000000 + 0.5) AS BIGINT) AS cosine_e6
+       {sql_quantize('list_cosine_similarity(CAST(embedding AS DOUBLE[]), q.qv)', 6)} AS cosine_e6
 FROM embeddings, q
 ORDER BY list_cosine_similarity(CAST(embedding AS DOUBLE[]), q.qv) DESC, vec_id
 LIMIT 10
@@ -354,9 +345,7 @@ def s01(spark: SparkSession, sf_dir: str) -> DataFrame:
     top = similarity.cosine_topk(emb, qvec, id_col="vec_id", vec_col="embedding", k=10)
     return top.select(
         "vec_id",
-        F.floor(F.col("cosine") * 1000000 + F.lit(0.5))
-        .cast("bigint")
-        .alias("cosine_e6"),
+        quantize(F.col("cosine"), 6).alias("cosine_e6"),
     )
 
 
@@ -502,11 +491,19 @@ def s05(spark: SparkSession, sf_dir: str) -> DataFrame:
 # t01 — quality scoring per language.
 # --------------------------------------------------------------------
 
+#: ``text.quality_score`` over the word count ``wc``, mean word length
+#: ``mwl`` and punctuation ratio ``pr`` (t01 and t40 oracles)
+_DUCK_QUALITY = (
+    "0.5 * LEAST(ln(1 + wc) / ln(1001.0), 1.0)"
+    " + 0.25 * (1.0 - LEAST(abs(mwl - 5.0) / 5.0, 1.0))"
+    " + 0.25 * (1.0 - LEAST(pr * 4.0, 1.0))"
+)
+
 T01_ORACLE = f"""
 WITH t AS (
   SELECT lang, {_DUCK_TOKS} AS toks,
          length(text) AS n_chars,
-         length(regexp_replace(text, '[A-Za-z0-9\\s]', '', 'g')) AS n_punct
+         length(regexp_replace(text, '{_DUCK_ALNUM_SPACE}', '', 'g')) AS n_punct
   FROM documents
 ),
 m AS (
@@ -519,11 +516,7 @@ m AS (
   FROM t
 )
 SELECT lang, COUNT(*) AS n,
-       ROUND(CAST(SUM(CAST(FLOOR((
-         0.5 * LEAST(ln(1 + wc) / ln(1001.0), 1.0)
-         + 0.25 * (1.0 - LEAST(abs(mwl - 5.0) / 5.0, 1.0))
-         + 0.25 * (1.0 - LEAST(pr * 4.0, 1.0))
-       ) * 100000000 + 0.5) AS BIGINT)) AS DOUBLE) / 100000000 / COUNT(*), 6) AS avg_quality,
+       ROUND({sql_exact_sum(_DUCK_QUALITY, 8)} / COUNT(*), 6) AS avg_quality,
        ROUND(CAST(SUM(CAST(wc AS BIGINT)) AS DOUBLE) / COUNT(*), 4) AS avg_words
 FROM m GROUP BY lang ORDER BY lang
 """
@@ -538,7 +531,7 @@ def t01(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).alias("n"),
             F.round(
-                exact_sum(text.quality_score(F.col("text")), scale=8)
+                exact_sum(text.quality_score(F.col("text")), 8)
                 / F.count(F.lit(1)),
                 6,
             ).alias("avg_quality"),
@@ -602,9 +595,9 @@ def t02(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 T03_ORACLE = f"""
 SELECT source,
-       CAST(SUM(len(regexp_extract_all(text, '{text.TOKEN_PATTERN}'))) AS BIGINT) AS total_tokens,
-       CAST(MAX(len(regexp_extract_all(text, '{text.TOKEN_PATTERN}'))) AS BIGINT) AS max_tokens,
-       ROUND(CAST(SUM(len(regexp_extract_all(text, '{text.TOKEN_PATTERN}'))) AS DOUBLE) / COUNT(*), 4) AS avg_tokens
+       CAST(SUM(len(regexp_extract_all(text, '{_DUCK_TOKEN_PATTERN}'))) AS BIGINT) AS total_tokens,
+       CAST(MAX(len(regexp_extract_all(text, '{_DUCK_TOKEN_PATTERN}'))) AS BIGINT) AS max_tokens,
+       ROUND(CAST(SUM(len(regexp_extract_all(text, '{_DUCK_TOKEN_PATTERN}'))) AS DOUBLE) / COUNT(*), 4) AS avg_tokens
 FROM documents GROUP BY source ORDER BY source
 """
 
@@ -699,7 +692,7 @@ SELECT lang,
        COUNT(*) AS n_docs,
        CAST(SUM(CASE WHEN wc BETWEEN 10 AND 1000 AND sr >= 0.05 THEN 1 ELSE 0 END)
             AS BIGINT) AS n_kept,
-       CAST(SUM(CAST(FLOOR(sr * 100000000 + 0.5) AS BIGINT)) AS BIGINT) AS sum_sr_e8
+       CAST(SUM({sql_quantize('sr', 8)}) AS BIGINT) AS sum_sr_e8
 FROM m GROUP BY lang ORDER BY lang
 """
 
@@ -728,9 +721,7 @@ def t05(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.col("wc").between(10, 1000) & (F.col("sr") >= 0.05), 1
                 ).otherwise(0)
             ).alias("n_kept"),
-            F.sum(
-                F.floor(F.col("sr") * 100000000 + F.lit(0.5)).cast("bigint")
-            ).alias("sum_sr_e8"),
+            F.sum(quantize(F.col("sr"), 8)).alias("sum_sr_e8"),
         )
         .orderBy("lang")
     )
@@ -810,9 +801,9 @@ b AS (
 )
 SELECT source,
        COUNT(*) AS n_docs,
-       CAST(SUM(CAST(FLOOR(dupfrac * 100000000 + 0.5) AS BIGINT)) AS BIGINT)
+       CAST(SUM({sql_quantize('dupfrac', 8)}) AS BIGINT)
          AS sum_dupfrac_e8,
-       CAST(SUM(CAST(FLOOR(topbigram * 100000000 + 0.5) AS BIGINT)) AS BIGINT)
+       CAST(SUM({sql_quantize('topbigram', 8)}) AS BIGINT)
          AS sum_topbigram_e8
 FROM b GROUP BY source ORDER BY source
 """
@@ -824,16 +815,13 @@ def t07(spark: SparkSession, sf_dir: str) -> DataFrame:
     dupfrac = text.dup_word_fraction(F.col("text"))
     topbigram = text.top_bigram_fraction(F.col("text"))
 
-    def e8(c):
-        return F.floor(c * 100000000 + F.lit(0.5)).cast("bigint")
-
     return (
         dedup._parallelize(spark.table("documents"))
         .groupBy("source")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
-            F.sum(e8(dupfrac)).alias("sum_dupfrac_e8"),
-            F.sum(e8(topbigram)).alias("sum_topbigram_e8"),
+            F.sum(quantize(dupfrac, 8)).alias("sum_dupfrac_e8"),
+            F.sum(quantize(topbigram, 8)).alias("sum_topbigram_e8"),
         )
         .orderBy("source")
     )
@@ -894,7 +882,7 @@ _T09_BUDGET = 700
 T09_ORACLE = f"""
 WITH c AS (
   SELECT source, doc_id, n_chars,
-         len(regexp_extract_all(text, '{text.TOKEN_PATTERN}')) AS cost
+         len(regexp_extract_all(text, '{_DUCK_TOKEN_PATTERN}')) AS cost
   FROM documents
 ),
 r AS (
@@ -1078,8 +1066,8 @@ WITH counts AS (
 ),
 alloc AS (
   SELECT lang, n_docs,
-         CAST(FLOOR(SQRT(n_docs) * 1000000 + 0.5) AS BIGINT) AS q,
-         SUM(CAST(FLOOR(SQRT(n_docs) * 1000000 + 0.5) AS BIGINT)) OVER () AS total_q,
+         {sql_quantize('SQRT(n_docs)', 6)} AS q,
+         SUM({sql_quantize('SQRT(n_docs)', 6)}) OVER () AS total_q,
          (SUM(n_docs) OVER () * 2) // 5 AS budget
   FROM counts
 ),
@@ -1105,7 +1093,9 @@ GROUP BY 1, 2, 3, 4 ORDER BY 1
 def t12(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_views(spark, sf_dir, "documents")
     docs = spark.table("documents")
-    alloc = sampling.mixture_allocation(docs, "lang", budget_num=2, budget_den=5)
+    alloc = sampling.mixture_allocation(
+        docs, "lang", budget_num=2, budget_den=5, qsqrt_digits=6
+    )
     bucket = sampling.sample_bucket(F.col("doc_id").cast("string"))
     return (
         docs.join(F.broadcast(alloc), "lang")
@@ -1144,7 +1134,7 @@ WITH t AS (
 ),
 gated AS (
   SELECT lang, source, doc_id, text, n_chars,
-         len(regexp_extract_all(text, '{text.TOKEN_PATTERN}')) AS cost
+         len(regexp_extract_all(text, '{_DUCK_TOKEN_PATTERN}')) AS cost
   FROM t
   WHERE len(toks) BETWEEN 10 AND 1000
     AND CASE WHEN len(toks) > 0
@@ -1317,8 +1307,8 @@ WITH b AS (SELECT source, md5(text) AS x FROM documents),
 f AS (SELECT source, {_feat(0)} AS f0, {_feat(1)} AS f1 FROM b)
 SELECT source,
        COUNT(*) AS n,
-       CAST(SUM(CAST(FLOOR(f0 * 100000000 + 0.5) AS BIGINT)) AS BIGINT) AS sum_f0_e8,
-       CAST(SUM(CAST(FLOOR(f1 * 100000000 + 0.5) AS BIGINT)) AS BIGINT) AS sum_f1_e8
+       CAST(SUM({sql_quantize('f0', 8)}) AS BIGINT) AS sum_f0_e8,
+       CAST(SUM({sql_quantize('f1', 8)}) AS BIGINT) AS sum_f1_e8
 FROM f GROUP BY source ORDER BY source
 """
 
@@ -1338,12 +1328,8 @@ def m02(spark: SparkSession, sf_dir: str) -> DataFrame:
         feats.groupBy("source")
         .agg(
             F.count(F.lit(1)).alias("n"),
-            F.sum(F.floor(f0 * 100000000 + F.lit(0.5)).cast("bigint")).alias(
-                "sum_f0_e8"
-            ),
-            F.sum(F.floor(f1 * 100000000 + F.lit(0.5)).cast("bigint")).alias(
-                "sum_f1_e8"
-            ),
+            F.sum(quantize(f0, 8)).alias("sum_f0_e8"),
+            F.sum(quantize(f1, 8)).alias("sum_f1_e8"),
         )
         .orderBy("source")
     )
@@ -1374,7 +1360,7 @@ SELECT source,
        COUNT(*) AS n_clips,
        CAST(SUM(n_samples) AS BIGINT) AS total_samples,
        CAST(SUM(channels - 1) AS BIGINT) AS n_stereo,
-       CAST(SUM(CAST(FLOOR(n_samples * 1000.0 / sample_rate + 0.5) AS BIGINT)) AS BIGINT)
+       CAST(SUM({sql_quantize('n_samples * 1000.0 / sample_rate', 0)}) AS BIGINT)
          AS total_ms,
        CAST(MAX(sample_rate) AS INT) AS max_rate
 FROM meta GROUP BY source ORDER BY source
@@ -1390,10 +1376,9 @@ def m04(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source", F.col("text").cast("binary").alias("value")
     )
     decoded = multimodal.extract_audio_metadata(payloads, binary_col="value")
-    ms = F.floor(
-        F.col("audio_meta.n_samples") * 1000.0 / F.col("audio_meta.sample_rate")
-        + F.lit(0.5)
-    ).cast("bigint")
+    ms = quantize(
+        F.col("audio_meta.n_samples") * 1000.0 / F.col("audio_meta.sample_rate"), 0
+    )
     return (
         decoded.groupBy("source")
         .agg(
@@ -1467,7 +1452,7 @@ _T13_CAPACITY = 256
 T13_ORACLE = f"""
 WITH c AS (
   SELECT source, doc_id,
-         len(regexp_extract_all(text, '{text.TOKEN_PATTERN}')) AS cost
+         len(regexp_extract_all(text, '{_DUCK_TOKEN_PATTERN}')) AS cost
   FROM documents
 ),
 r AS (
@@ -1687,7 +1672,7 @@ meta AS (
 kept AS (SELECT doc_id FROM meta WHERE width >= {_M05_MIN_WIDTH})
 SELECT d.source,
        COUNT(*) AS n_kept,
-       CAST(SUM(len(regexp_extract_all(d.text, '{text.TOKEN_PATTERN}'))) AS BIGINT)
+       CAST(SUM(len(regexp_extract_all(d.text, '{_DUCK_TOKEN_PATTERN}'))) AS BIGINT)
          AS sum_tokens,
        CAST(SUM(d.n_chars) AS BIGINT) AS sum_chars
 FROM documents d JOIN kept USING (doc_id)
@@ -1746,7 +1731,7 @@ kept AS (
 ),
 survivors AS (
   SELECT d.source, d.doc_id, d.text,
-         len(regexp_extract_all(d.text, '{text.TOKEN_PATTERN}')) AS cost
+         len(regexp_extract_all(d.text, '{_DUCK_TOKEN_PATTERN}')) AS cost
   FROM documents d JOIN kept USING (doc_id)
 ),
 deduped AS (
@@ -1895,7 +1880,7 @@ def s06(spark: SparkSession, sf_dir: str) -> DataFrame:
 T16_ORACLE = f"""
 WITH scored AS (
   SELECT source, doc_id,
-         len(regexp_extract_all(text, '{text.TOKEN_PATTERN}')) AS score
+         len(regexp_extract_all(text, '{_DUCK_TOKEN_PATTERN}')) AS score
   FROM documents
 ),
 ranked AS (
@@ -2016,7 +2001,7 @@ _T17_CAP = 15
 T17_ORACLE = f"""
 WITH scored AS (
   SELECT source, doc_id,
-         len(regexp_extract_all(text, '{text.TOKEN_PATTERN}')) AS score
+         len(regexp_extract_all(text, '{_DUCK_TOKEN_PATTERN}')) AS score
   FROM documents
 ),
 ranked AS (
@@ -2075,7 +2060,7 @@ WITH sharded AS (
   SELECT {duck_md5_prefix_hash("CAST(doc_id AS VARCHAR)")}
            % {_T18_SHARDS} AS shard,
          doc_id,
-         len(regexp_extract_all(text, '{text.TOKEN_PATTERN}')) AS score
+         len(regexp_extract_all(text, '{_DUCK_TOKEN_PATTERN}')) AS score
   FROM documents
 )
 SELECT shard,
@@ -2135,7 +2120,7 @@ labels AS (
 ),
 scored AS (
   SELECT doc_id, source,
-         len(regexp_extract_all(text, '{text.TOKEN_PATTERN}')) AS score
+         len(regexp_extract_all(text, '{_DUCK_TOKEN_PATTERN}')) AS score
   FROM documents
 ),
 winners AS (
@@ -3780,16 +3765,14 @@ WITH RECURSIVE
 q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 0),
 pool AS (
   SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-         CAST(FLOOR(list_cosine_similarity(CAST(embedding AS DOUBLE[]), q.qv)
-                    * 1000000 + 0.5) AS BIGINT) AS rel_e6
+         {sql_quantize('list_cosine_similarity(CAST(embedding AS DOUBLE[]), q.qv)', 6)} AS rel_e6
   FROM embeddings, q WHERE vec_id <> 0
   ORDER BY list_cosine_similarity(CAST(embedding AS DOUBLE[]), q.qv) DESC, vec_id
   LIMIT {_S12_POOL}
 ),
 sims AS (
   SELECT a.vec_id AS ia, b.vec_id AS ib,
-         CAST(FLOOR(list_cosine_similarity(a.v, b.v) * 1000000 + 0.5)
-              AS BIGINT) AS s_e6
+         {sql_quantize('list_cosine_similarity(a.v, b.v)', 6)} AS s_e6
   FROM pool a, pool b WHERE a.vec_id <> b.vec_id
 ),
 sel(step, ids, pick, score_e6) AS (
@@ -3924,13 +3907,13 @@ def g03(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the float/driver-loop variant used by IVF).
 # --------------------------------------------------------------------
 
-_S13_SCALE = 1_000_000
+_S13_DIGITS = 6
 
 S13_ORACLE = f"""
 WITH {{asg}},
 q6 AS (
   SELECT vec_id,
-         list_transform(v, x -> CAST(FLOOR(x * {_S13_SCALE}.0 + 0.5) AS BIGINT)) AS q
+         list_transform(v, x -> {sql_quantize('x', _S13_DIGITS)}) AS q
   FROM e
 ),
 aq AS (SELECT vec_id AS cluster_id, q AS a FROM q6 WHERE vec_id < {_S11_K}),
@@ -3971,7 +3954,7 @@ def s13(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     step = similarity.lloyd_step_quantized(
         dedup._parallelize(emb), anchors, vec_col="embedding",
-        scale=_S13_SCALE,
+        digits=_S13_DIGITS,
     )
     return step.orderBy("cluster_id", "dim")
 
@@ -4124,7 +4107,7 @@ def t37(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------
 
 _S14_ITERS = 3
-_S14_SCALE = 1_000_000
+_S14_DIGITS = 6
 
 
 def _s14_round(i: int, final: bool = False) -> str:
@@ -4161,7 +4144,7 @@ S14_ORACLE = f"""
 WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
 q6 AS (
   SELECT vec_id,
-         list_transform(v, x -> CAST(FLOOR(x * {_S14_SCALE}.0 + 0.5) AS BIGINT)) AS q
+         list_transform(v, x -> {sql_quantize('x', _S14_DIGITS)}) AS q
   FROM e
 ),
 qx AS (
@@ -4197,7 +4180,7 @@ def s14(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb,
         [(int(r["vec_id"]), list(r["embedding"])) for r in anchor_rows],
         iters=_S14_ITERS,
-        scale=_S14_SCALE,
+        digits=_S14_DIGITS,
     )
 
 
@@ -4532,8 +4515,7 @@ inter AS (
 ),
 sizes AS (SELECT doc_id, len(s) AS n FROM sh)
 SELECT i.id_a, i.id_b,
-       CAST(FLOOR(CAST(i.ninter AS DOUBLE) / LEAST(sa.n, sb.n)
-                  * 1000000 + 0.5) AS BIGINT) AS containment_e6
+       {sql_quantize('CAST(i.ninter AS DOUBLE) / LEAST(sa.n, sb.n)', 6)} AS containment_e6
 FROM inter i
 JOIN sizes sa ON i.id_a = sa.doc_id
 JOIN sizes sb ON i.id_b = sb.doc_id
@@ -4556,9 +4538,7 @@ def d17(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pairs.select(
         "id_a",
         "id_b",
-        F.floor(F.col("containment") * 1000000 + F.lit(0.5))
-        .cast("bigint")
-        .alias("containment_e6"),
+        quantize(F.col("containment"), 6).alias("containment_e6"),
     ).orderBy("id_a", "id_b")
 
 
@@ -5399,7 +5379,7 @@ def t39(spark: SparkSession, sf_dir: str) -> DataFrame:
 # against an "is English" label — the table a pipeline reads to SET
 # its filter threshold, with per-bin |accuracy - confidence| gaps
 # (their weighted sum is the expected calibration error). Score
-# quantized once (FLOOR(x*1e8+0.5), the t01 idiom); everything after
+# quantized once at e8 (exact.py), as t01 does; everything after
 # is BIGINT arithmetic, so bin membership is engine-exact.
 # --------------------------------------------------------------------
 
@@ -5409,7 +5389,7 @@ T40_ORACLE = f"""
 WITH t AS (
   SELECT lang, {_DUCK_TOKS} AS toks,
          length(text) AS n_chars,
-         length(regexp_replace(text, '[A-Za-z0-9\\s]', '', 'g')) AS n_punct
+         length(regexp_replace(text, '{_DUCK_ALNUM_SPACE}', '', 'g')) AS n_punct
   FROM documents
 ),
 m AS (
@@ -5423,11 +5403,7 @@ m AS (
 ),
 qz AS (
   SELECT y,
-         CAST(FLOOR((
-           0.5 * LEAST(ln(1 + wc) / ln(1001.0), 1.0)
-           + 0.25 * (1.0 - LEAST(abs(mwl - 5.0) / 5.0, 1.0))
-           + 0.25 * (1.0 - LEAST(pr * 4.0, 1.0))
-         ) * 100000000 + 0.5) AS BIGINT) AS q
+         {sql_quantize(_DUCK_QUALITY, 8)} AS q
   FROM m
 ),
 agg AS (
@@ -6257,9 +6233,7 @@ WITH q AS (
 ),
 s AS (
   SELECT q.query_id, e.vec_id,
-         CAST(FLOOR(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-                                           q.qv) * 1000000 + 0.5)
-              AS BIGINT) AS cosine_e6
+         {sql_quantize('list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), q.qv)', 6)} AS cosine_e6
   FROM embeddings e, q
 )
 SELECT query_id, vec_id, cosine_e6

@@ -3,17 +3,11 @@ from SURVEY.md §2 (joins, aggregation, grouping sets, windows, set ops,
 sort/limit, subqueries, CTEs, scalar functions, JSON, pivot, typing,
 diff, metadata, statistics).
 
-Every query is paired with a DuckDB oracle. Hashed floating aggregates
-use the order-independent scaled-long recipe
-``ROUND(CAST(SUM(CAST(FLOOR(x * S + 0.5) AS BIGINT)) AS DOUBLE) / S
-[/ COUNT], d)``: the per-row quantization is identical IEEE math in
-both engines, the long SUM is exact (so partitioning / summation
-order can never flip a rounding tie), and long sums codegen faster
-than both double and decimal sums. S is chosen per site so
-S * |x| * rows stays far below 2^63 (Spark wraps; DuckDB's HUGEINT
-doesn't — they'd diverge past that). tools/selfcheck.py under
-perturbed partitioning checks every query that uses it bit-for-bit
-against DuckDB.
+Every query is paired with a DuckDB oracle. Floating aggregates are
+exact sums from ``arc_jupyter_spark/exact.py``, which states the
+recipe and its headroom bound; tools/selfcheck.py under perturbed
+partitioning checks every query that uses them bit-for-bit against
+DuckDB.
 """
 
 from __future__ import annotations
@@ -24,25 +18,26 @@ from arc_jupyter_spark.checkpoint import materialize, materialize_lazy
 
 from arc_jupyter_spark.context import ArcContext
 from arc_jupyter_spark.digest import internal_digest
+from arc_jupyter_spark.exact import exact_sum, quantize, sql_exact_sum, sql_quantize
 from arc_jupyter_spark.operators.transform import SQLTransform
-from arc_jupyter_spark.workloads.base import exact_sum, load_views, query
+from arc_jupyter_spark.workloads.base import load_views, query
 
 # --------------------------------------------------------------------
 # q01 — scan → filter → hash agg → sort (TPC-H Q1 shape). Flagship.
 # Runs through the SQLTransform stage to exercise the stage layer.
 # --------------------------------------------------------------------
 
-Q01_SQL = """
+Q01_SQL = f"""
 SELECT
   l_returnflag,
   l_linestatus,
-  ROUND((CAST(SUM(CAST(FLOOR(l_quantity * 100 + 0.5) AS BIGINT)) AS DOUBLE) / 100), 2)      AS sum_qty,
-  ROUND((CAST(SUM(CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT)) AS DOUBLE) / 100), 2) AS sum_base_price,
-  ROUND((CAST(SUM(CAST(FLOOR(l_extendedprice * (1 - l_discount) * 1000000 + 0.5) AS BIGINT)) AS DOUBLE) / 1000000), 2)               AS sum_disc_price,
-  ROUND((CAST(SUM(CAST(FLOOR(l_extendedprice * (1 - l_discount) * (1 + l_tax) * 1000000 + 0.5) AS BIGINT)) AS DOUBLE) / 1000000), 2) AS sum_charge,
-  ROUND((CAST(SUM(CAST(FLOOR(l_quantity * 100 + 0.5) AS BIGINT)) AS DOUBLE) / 100) / COUNT(*), 4)      AS avg_qty,
-  ROUND((CAST(SUM(CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT)) AS DOUBLE) / 100) / COUNT(*), 4) AS avg_price,
-  ROUND((CAST(SUM(CAST(FLOOR(l_discount * 100 + 0.5) AS BIGINT)) AS DOUBLE) / 100) / COUNT(*), 6)      AS avg_disc,
+  ROUND({sql_exact_sum('l_quantity', 2)}, 2)      AS sum_qty,
+  ROUND({sql_exact_sum('l_extendedprice', 2)}, 2) AS sum_base_price,
+  ROUND({sql_exact_sum('l_extendedprice * (1 - l_discount)', 6)}, 2)               AS sum_disc_price,
+  ROUND({sql_exact_sum('l_extendedprice * (1 - l_discount) * (1 + l_tax)', 6)}, 2) AS sum_charge,
+  ROUND({sql_exact_sum('l_quantity', 2)} / COUNT(*), 4)      AS avg_qty,
+  ROUND({sql_exact_sum('l_extendedprice', 2)} / COUNT(*), 4) AS avg_price,
+  ROUND({sql_exact_sum('l_discount', 2)} / COUNT(*), 6)      AS avg_disc,
   COUNT(*)                                                        AS count_order
 FROM lineitem
 WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
@@ -63,9 +58,9 @@ def q01(spark: SparkSession, sf_dir: str) -> DataFrame:
 # broadcast; at 100 TB part/supplier stay broadcast-able dims.
 # --------------------------------------------------------------------
 
-Q02_ORACLE = """
+Q02_ORACLE = f"""
 SELECT p.p_brand,
-       ROUND((CAST(SUM(CAST(FLOOR(l.l_extendedprice * (1 - l.l_discount) * 1000000 + 0.5) AS BIGINT)) AS DOUBLE) / 1000000), 2) AS revenue,
+       ROUND({sql_exact_sum('l.l_extendedprice * (1 - l.l_discount)', 6)}, 2) AS revenue,
        COUNT(*) AS n_items
 FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
 WHERE p.p_size <= 15
@@ -83,7 +78,7 @@ def q02(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
         .groupBy("p_brand")
         .agg(
-            F.round(exact_sum(li.l_extendedprice * (1 - li.l_discount)), 2).alias("revenue"),
+            F.round(exact_sum(li.l_extendedprice * (1 - li.l_discount), 6), 2).alias("revenue"),
             F.count(F.lit(1)).alias("n_items"),
         )
         .orderBy("p_brand")
@@ -94,9 +89,9 @@ def q02(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q03 — 3-way join + group + deterministic top-k (TakeOrdered).
 # --------------------------------------------------------------------
 
-Q03_ORACLE = """
+Q03_ORACLE = f"""
 SELECT o.o_orderkey,
-       ROUND((CAST(SUM(CAST(FLOOR(l.l_extendedprice * (1 - l.l_discount) * 1000000 + 0.5) AS BIGINT)) AS DOUBLE) / 1000000), 2) AS revenue,
+       ROUND({sql_exact_sum('l.l_extendedprice * (1 - l.l_discount)', 6)}, 2) AS revenue,
        o.o_orderpriority
 FROM customer c
 JOIN orders o ON c.c_custkey = o.o_custkey
@@ -118,7 +113,7 @@ def q03(spark: SparkSession, sf_dir: str) -> DataFrame:
         l.join(o, l.l_orderkey == o.o_orderkey)
         .join(F.broadcast(c), o.o_custkey == c.c_custkey)
         .groupBy("o_orderkey", "o_orderpriority")
-        .agg(F.round(exact_sum(l.l_extendedprice * (1 - l.l_discount)), 2).alias("revenue"))
+        .agg(F.round(exact_sum(l.l_extendedprice * (1 - l.l_discount), 6), 2).alias("revenue"))
         .select("o_orderkey", "revenue", "o_orderpriority")
         .orderBy(F.col("revenue").desc(), F.col("o_orderkey"))
         .limit(10)
@@ -183,18 +178,18 @@ def q05(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q06 — parameterized filter + global agg (${param} injection path).
 # --------------------------------------------------------------------
 
-Q06_SQL = """
-SELECT ROUND((CAST(SUM(CAST(FLOOR(l_extendedprice * l_discount * 1000000 + 0.5) AS BIGINT)) AS DOUBLE) / 1000000), 2) AS revenue,
+Q06_SQL = f"""
+SELECT ROUND({sql_exact_sum('l_extendedprice * l_discount', 6)}, 2) AS revenue,
        COUNT(*) AS n_rows
 FROM lineitem
-WHERE l_shipdate >= TIMESTAMP '${start_date} 00:00:00'
-  AND l_shipdate <  TIMESTAMP '${end_date} 00:00:00'
-  AND l_discount BETWEEN ${discount=0.05} - 0.01 AND ${discount=0.05} + 0.01
-  AND l_quantity < ${max_qty=24}
+WHERE l_shipdate >= TIMESTAMP '${{start_date}} 00:00:00'
+  AND l_shipdate <  TIMESTAMP '${{end_date}} 00:00:00'
+  AND l_discount BETWEEN ${{discount=0.05}} - 0.01 AND ${{discount=0.05}} + 0.01
+  AND l_quantity < ${{max_qty=24}}
 """
 
-Q06_ORACLE = """
-SELECT ROUND((CAST(SUM(CAST(FLOOR(l_extendedprice * l_discount * 1000000 + 0.5) AS BIGINT)) AS DOUBLE) / 1000000), 2) AS revenue,
+Q06_ORACLE = f"""
+SELECT ROUND({sql_exact_sum('l_extendedprice * l_discount', 6)}, 2) AS revenue,
        COUNT(*) AS n_rows
 FROM lineitem
 WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
@@ -215,11 +210,11 @@ def q06(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q07 — left outer join + null-aware aggregates.
 # --------------------------------------------------------------------
 
-Q07_ORACLE = """
+Q07_ORACLE = f"""
 SELECT o.o_orderstatus,
        COUNT(*) AS n_rows,
        COUNT(l.l_orderkey) AS n_lineitems,
-       ROUND((CAST(SUM(CAST(FLOOR(COALESCE(l.l_quantity, 0) * 100 + 0.5) AS BIGINT)) AS DOUBLE) / 100), 2) AS total_qty
+       ROUND({sql_exact_sum('COALESCE(l.l_quantity, 0)', 6)}, 2) AS total_qty
 FROM orders o LEFT JOIN lineitem l
   ON o.o_orderkey = l.l_orderkey AND l.l_quantity > 49
 GROUP BY o.o_orderstatus
@@ -238,7 +233,7 @@ def q07(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).alias("n_rows"),
             F.count("l_orderkey").alias("n_lineitems"),
-            F.round(exact_sum(F.coalesce(l.l_quantity, F.lit(0))), 2).alias("total_qty"),
+            F.round(exact_sum(F.coalesce(l.l_quantity, F.lit(0)), 6), 2).alias("total_qty"),
         )
         .orderBy("o_orderstatus")
     )
@@ -350,11 +345,11 @@ def q10(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q11 — ROLLUP + GROUPING() — multi-level aggregates in one pass.
 # --------------------------------------------------------------------
 
-Q11_SQL = """
+Q11_SQL = f"""
 SELECT l_returnflag, l_linestatus,
        CAST(GROUPING(l_returnflag) AS INT) AS g_rf,
        CAST(GROUPING(l_linestatus) AS INT) AS g_ls,
-       ROUND((CAST(SUM(CAST(FLOOR(l_quantity * 100 + 0.5) AS BIGINT)) AS DOUBLE) / 100), 2) AS sum_qty,
+       ROUND({sql_exact_sum('l_quantity', 2)}, 2) AS sum_qty,
        COUNT(*) AS n_rows
 FROM lineitem
 GROUP BY ROLLUP (l_returnflag, l_linestatus)
@@ -372,9 +367,9 @@ def q11(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q12 — CUBE.
 # --------------------------------------------------------------------
 
-Q12_SQL = """
+Q12_SQL = f"""
 SELECT l_returnflag, l_linestatus, COUNT(*) AS n_rows,
-       ROUND((CAST(SUM(CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT)) AS DOUBLE) / 100), 2) AS sum_price
+       ROUND({sql_exact_sum('l_extendedprice', 2)}, 2) AS sum_price
 FROM lineitem
 GROUP BY CUBE (l_returnflag, l_linestatus)
 ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST
@@ -413,11 +408,11 @@ def q13(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q14 — DISTINCT aggregates.
 # --------------------------------------------------------------------
 
-Q14_SQL = """
+Q14_SQL = f"""
 SELECT l_returnflag,
        COUNT(DISTINCT l_partkey) AS n_parts,
        COUNT(DISTINCT l_suppkey) AS n_supps,
-       ROUND((CAST(SUM(DISTINCT CAST(FLOOR(l_quantity * 100 + 0.5) AS BIGINT)) AS DOUBLE) / 100), 2) AS sum_distinct_qty
+       ROUND((CAST(SUM(DISTINCT {sql_quantize('l_quantity', 2)}) AS DOUBLE) / 100), 2) AS sum_distinct_qty
 FROM lineitem
 GROUP BY l_returnflag
 ORDER BY l_returnflag
@@ -434,10 +429,10 @@ def q14(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q15 — string scalar functions.
 # --------------------------------------------------------------------
 
-Q15_SQL = """
+Q15_SQL = f"""
 SELECT c_mktsegment,
        COUNT(*) AS n,
-       CAST(FLOOR(CAST(SUM(LENGTH(c_name)) AS DOUBLE) * 10000 / COUNT(*) + 0.5) AS BIGINT) AS avg_name_len_e4,
+       {sql_quantize('CAST(SUM(LENGTH(c_name)) AS DOUBLE) * 10000 / COUNT(*)', 0)} AS avg_name_len_e4,
        MIN(UPPER(SUBSTR(c_name, 1, 8))) AS min_prefix,
        CAST(SUM(CASE WHEN c_name LIKE '%1%' THEN 1 ELSE 0 END) AS BIGINT) AS n_with_one,
        MAX(CONCAT(c_mktsegment, '#', LOWER(SUBSTR(c_name, 1, 4)))) AS max_tag
@@ -457,11 +452,11 @@ def q15(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q16 — datetime scalar functions.
 # --------------------------------------------------------------------
 
-Q16_SQL = """
+Q16_SQL = f"""
 SELECT CAST(YEAR(o_orderdate) AS INT) AS yr,
        CAST(MONTH(o_orderdate) AS INT) AS mo,
        COUNT(*) AS n_orders,
-       ROUND((CAST(SUM(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)) AS DOUBLE) / 100), 2) AS total
+       ROUND({sql_exact_sum('o_totalprice', 2)}, 2) AS total
 FROM orders
 GROUP BY 1, 2
 ORDER BY 1, 2
@@ -478,14 +473,14 @@ def q16(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q17 — math scalar functions.
 # --------------------------------------------------------------------
 
-Q17_SQL = """
+Q17_SQL = f"""
 SELECT l_linestatus,
        CAST(SUM(CAST(FLOOR(l_quantity) AS BIGINT)) AS BIGINT) AS sum_floor_qty,
        CAST(SUM(CAST(CEIL(l_extendedprice / 1000) AS BIGINT)) AS BIGINT) AS sum_ceil_kprice,
-       ROUND((CAST(SUM(CAST(FLOOR(POWER(l_discount, 2) * 100000000 + 0.5) AS BIGINT)) AS DOUBLE) / 100000000), 4) AS sum_disc_sq,
+       ROUND({sql_exact_sum('POWER(l_discount, 2)', 8)}, 4) AS sum_disc_sq,
        CAST(SUM(l_orderkey % 7) AS BIGINT) AS sum_mod,
-       ROUND((CAST(SUM(CAST(FLOOR(ABS(l_extendedprice - 1000.0) * 100 + 0.5) AS BIGINT)) AS DOUBLE) / 100), 2) AS sum_absdev,
-       ROUND((CAST(SUM(CAST(FLOOR(SQRT(l_quantity) * 100000000 + 0.5) AS BIGINT)) AS DOUBLE) / 100000000), 4) AS sum_sqrt_qty
+       ROUND({sql_exact_sum('ABS(l_extendedprice - 1000.0)', 2)}, 2) AS sum_absdev,
+       ROUND({sql_exact_sum('SQRT(l_quantity)', 8)}, 4) AS sum_sqrt_qty
 FROM lineitem
 GROUP BY l_linestatus
 ORDER BY l_linestatus
@@ -502,12 +497,12 @@ def q17(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q18 — CASE WHEN bucketing.
 # --------------------------------------------------------------------
 
-Q18_SQL = """
+Q18_SQL = f"""
 SELECT CASE WHEN l_quantity < 10 THEN 'low'
             WHEN l_quantity < 30 THEN 'mid'
             ELSE 'high' END AS bucket,
        COUNT(*) AS n,
-       ROUND((CAST(SUM(CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT)) AS DOUBLE) / 100) / COUNT(*), 4) AS avg_price
+       ROUND({sql_exact_sum('l_extendedprice', 2)} / COUNT(*), 4) AS avg_price
 FROM lineitem
 GROUP BY 1
 ORDER BY 1
@@ -524,10 +519,10 @@ def q18(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q19 — uncorrelated scalar subquery.
 # --------------------------------------------------------------------
 
-Q19_SQL = """
+Q19_SQL = f"""
 SELECT c_mktsegment, COUNT(*) AS n_above_avg
 FROM customer
-WHERE c_acctbal > (SELECT (CAST(SUM(CAST(FLOOR(c_acctbal * 100 + 0.5) AS BIGINT)) AS DOUBLE) / 100) / COUNT(*) FROM customer)
+WHERE c_acctbal > (SELECT {sql_exact_sum('c_acctbal', 2)} / COUNT(*) FROM customer)
 GROUP BY c_mktsegment
 ORDER BY c_mktsegment
 """
@@ -582,16 +577,16 @@ def q21(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q22 — CTE + join of aggregates.
 # --------------------------------------------------------------------
 
-Q22_SQL = """
+Q22_SQL = f"""
 WITH supplier_revenue AS (
   SELECT l_suppkey,
-         (CAST(SUM(CAST(FLOOR(l_extendedprice * (1 - l_discount) * 1000000 + 0.5) AS BIGINT)) AS DOUBLE) / 1000000) AS rev
+         {sql_exact_sum('l_extendedprice * (1 - l_discount)', 6)} AS rev
   FROM lineitem GROUP BY l_suppkey
 )
 SELECT COUNT(*) AS n_supp,
        ROUND(MAX(rev), 2) AS max_rev,
        ROUND(MIN(rev), 2) AS min_rev,
-       ROUND((CAST(SUM(CAST(FLOOR(rev * 1000000 + 0.5) AS BIGINT)) AS DOUBLE) / 1000000) / COUNT(*), 2) AS avg_rev
+       ROUND({sql_exact_sum('rev', 6)} / COUNT(*), 2) AS avg_rev
 FROM supplier_revenue
 """
 
@@ -606,10 +601,10 @@ def q22(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q23 — pivot (conditional aggregation on the oracle side).
 # --------------------------------------------------------------------
 
-Q23_ORACLE = """
+Q23_ORACLE = f"""
 SELECT l_returnflag,
-       ROUND((CAST(SUM(CAST(FLOOR((CASE WHEN l_linestatus = 'O' THEN l_quantity ELSE 0 END) * 100 + 0.5) AS BIGINT)) AS DOUBLE) / 100), 2) AS O,
-       ROUND((CAST(SUM(CAST(FLOOR((CASE WHEN l_linestatus = 'F' THEN l_quantity ELSE 0 END) * 100 + 0.5) AS BIGINT)) AS DOUBLE) / 100), 2) AS F
+       ROUND({sql_exact_sum("CASE WHEN l_linestatus = 'O' THEN l_quantity ELSE 0 END", 6)}, 2) AS O,
+       ROUND({sql_exact_sum("CASE WHEN l_linestatus = 'F' THEN l_quantity ELSE 0 END", 6)}, 2) AS F
 FROM lineitem
 GROUP BY l_returnflag
 ORDER BY l_returnflag
@@ -623,7 +618,7 @@ def q23(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.table("lineitem")
         .groupBy("l_returnflag")
         .pivot("l_linestatus", ["O", "F"])
-        .agg(F.round(exact_sum(F.col("l_quantity")), 2))
+        .agg(F.round(exact_sum(F.col("l_quantity"), 6), 2))
         .orderBy("l_returnflag")
     )
     return pivoted.select(
@@ -699,10 +694,10 @@ def q25(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q26 — window lag/lead over event time.
 # --------------------------------------------------------------------
 
-Q26_ORACLE = """
+Q26_ORACLE = f"""
 SELECT user_id,
        COUNT(*) AS n_gaps,
-       ROUND((CAST(SUM(CAST(FLOOR(delta * 1000000 + 0.5) AS BIGINT)) AS DOUBLE) / 1000000) / COUNT(delta), 4) AS avg_delta
+       ROUND({sql_exact_sum('delta', 6)} / COUNT(delta), 4) AS avg_delta
 FROM (
   SELECT user_id,
          value - LAG(value) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS delta
@@ -728,7 +723,7 @@ def q26(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).alias("n_gaps"),
             F.round(
-                exact_sum(F.col("delta"), scale=6) / F.count("delta"), 4
+                exact_sum(F.col("delta"), 6) / F.count("delta"), 4
             ).alias("avg_delta"),
         )
         .orderBy("user_id")
@@ -739,11 +734,11 @@ def q26(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q27 — event-time tumbling window (F.window ↔ time_bucket).
 # --------------------------------------------------------------------
 
-Q27_ORACLE = """
+Q27_ORACLE = f"""
 SELECT strftime(time_bucket(INTERVAL 1 HOUR, ts), '%Y-%m-%d %H:%M:%S') AS window_start,
        event_type,
        COUNT(*) AS n,
-       ROUND((CAST(SUM(CAST(FLOOR(value * 1000000 + 0.5) AS BIGINT)) AS DOUBLE) / 1000000), 2) AS sum_value
+       ROUND({sql_exact_sum('value', 6)}, 2) AS sum_value
 FROM events
 GROUP BY 1, 2
 HAVING COUNT(*) >= 3
@@ -759,7 +754,7 @@ def q27(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n"),
-            F.round(exact_sum(F.col("value"), scale=6), 2).alias("sum_value"),
+            F.round(exact_sum(F.col("value"), 6), 2).alias("sum_value"),
         )
         .where(F.col("n") >= 3)
         .select(
@@ -881,18 +876,18 @@ def q29(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q30 — statistics (the StatisticsExtract family, exact aggregates).
 # --------------------------------------------------------------------
 
-Q30_SQL = """
+Q30_SQL = f"""
 SELECT COUNT(*) AS n,
        ROUND(MIN(l_quantity), 2) AS min_qty,
        ROUND(MAX(l_quantity), 2) AS max_qty,
-       ROUND((CAST(SUM(CAST(FLOOR(l_quantity * 100 + 0.5) AS BIGINT)) AS DOUBLE) / 100) / COUNT(*), 4) AS avg_qty,
-       ROUND(SQRT(((CAST(SUM(CAST(FLOOR(l_quantity * 100 + 0.5) AS BIGINT) * CAST(FLOOR(l_quantity * 100 + 0.5) AS BIGINT)) AS DOUBLE) / 10000)
-                   - (CAST(SUM(CAST(FLOOR(l_quantity * 100 + 0.5) AS BIGINT)) AS DOUBLE) / 100)
-                     * (CAST(SUM(CAST(FLOOR(l_quantity * 100 + 0.5) AS BIGINT)) AS DOUBLE) / 100) / COUNT(*))
+       ROUND({sql_exact_sum('l_quantity', 2)} / COUNT(*), 4) AS avg_qty,
+       ROUND(SQRT(((CAST(SUM({sql_quantize('l_quantity', 2)} * {sql_quantize('l_quantity', 2)}) AS DOUBLE) / 10000)
+                   - {sql_exact_sum('l_quantity', 2)}
+                     * {sql_exact_sum('l_quantity', 2)} / COUNT(*))
                   / (COUNT(*) - 1)), 4) AS std_qty,
        ROUND(MIN(l_extendedprice), 2) AS min_price,
        ROUND(MAX(l_extendedprice), 2) AS max_price,
-       ROUND((CAST(SUM(CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT)) AS DOUBLE) / 100) / COUNT(*), 4) AS avg_price
+       ROUND({sql_exact_sum('l_extendedprice', 2)} / COUNT(*), 4) AS avg_price
 FROM lineitem
 """
 
@@ -908,12 +903,12 @@ def q30(spark: SparkSession, sf_dir: str) -> DataFrame:
 # at scale this is one shuffle with grouping-id expansion, not N scans).
 # --------------------------------------------------------------------
 
-Q31_SQL = """
+Q31_SQL = f"""
 SELECT
   CASE WHEN GROUPING(l_returnflag) = 1 THEN 'ALL' ELSE l_returnflag END AS flag,
   CASE WHEN GROUPING(l_linestatus) = 1 THEN 'ALL' ELSE l_linestatus END AS status,
   COUNT(*) AS n,
-  ROUND((CAST(SUM(CAST(FLOOR(l_quantity * 100 + 0.5) AS BIGINT)) AS DOUBLE) / 100), 2) AS sum_qty
+  ROUND({sql_exact_sum('l_quantity', 2)}, 2) AS sum_qty
 FROM lineitem
 GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_returnflag), ())
 ORDER BY flag, status
@@ -1061,8 +1056,8 @@ def q35(spark: SparkSession, sf_dir: str) -> DataFrame:
 # projections; Spark unionByName == DuckDB UNION ALL BY NAME).
 # --------------------------------------------------------------------
 
-Q36_ORACLE = """
-SELECT kind, key, ROUND((CAST(SUM(CAST(FLOOR(bal * 100 + 0.5) AS BIGINT)) AS DOUBLE) / 100), 2) AS total FROM (
+Q36_ORACLE = f"""
+SELECT kind, key, ROUND({sql_exact_sum('bal', 6)}, 2) AS total FROM (
   SELECT 'cust' AS kind, c_nationkey AS key, c_acctbal AS bal FROM customer
   UNION ALL BY NAME
   SELECT s_acctbal AS bal, s_nationkey AS key, 'supp' AS kind FROM supplier
@@ -1087,7 +1082,7 @@ def q36(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         cust.unionByName(supp)
         .groupBy("kind", "key")
-        .agg(F.round(exact_sum(F.col("bal")), 2).alias("total"))
+        .agg(F.round(exact_sum(F.col("bal"), 6), 2).alias("total"))
         .orderBy("kind", "key")
     )
 
@@ -1130,11 +1125,11 @@ def q37(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q38 — null-handling scalars (coalesce/nullif + conditional defaults).
 # --------------------------------------------------------------------
 
-Q38_SQL = """
+Q38_SQL = f"""
 SELECT
   COUNT(*) AS n,
   CAST(SUM(CASE WHEN NULLIF(l_returnflag, 'N') IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_flag_n,
-  ROUND((CAST(SUM(CAST(FLOOR(COALESCE(NULLIF(l_discount, 0.0), 0.05) * 100 + 0.5) AS BIGINT)) AS DOUBLE) / 100), 2) AS disc_with_default
+  ROUND({sql_exact_sum('COALESCE(NULLIF(l_discount, 0.0), 0.05)', 2)}, 2) AS disc_with_default
 FROM lineitem
 """
 
@@ -1150,11 +1145,11 @@ def q38(spark: SparkSession, sf_dir: str) -> DataFrame:
 # conditional sums — the scale-friendly alternative to self-joins).
 # --------------------------------------------------------------------
 
-Q39_SQL = """
+Q39_SQL = f"""
 SELECT l_returnflag,
        COUNT(*) FILTER (WHERE l_quantity > 25) AS n_big,
        COUNT(*) FILTER (WHERE l_quantity <= 25) AS n_small,
-       ROUND((CAST(SUM(CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT)) FILTER (WHERE l_discount > 0.05) AS DOUBLE) / 100), 2) AS disc_rev
+       ROUND((CAST(SUM({sql_quantize('l_extendedprice', 2)}) FILTER (WHERE l_discount > 0.05) AS DOUBLE) / 100), 2) AS disc_rev
 FROM lineitem
 GROUP BY l_returnflag
 ORDER BY l_returnflag
@@ -1197,9 +1192,9 @@ def q40(spark: SparkSession, sf_dir: str) -> DataFrame:
 # vs row-based; Catalyst evaluates with a sliding range bound).
 # --------------------------------------------------------------------
 
-Q41_SQL = """
+Q41_SQL = f"""
 SELECT o_orderkey, o_custkey,
-       ROUND(CAST(SUM(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)) OVER (
+       ROUND(CAST(SUM({sql_quantize('o_totalprice', 2)}) OVER (
          PARTITION BY o_custkey ORDER BY o_totalprice
          RANGE BETWEEN 10000 PRECEDING AND CURRENT ROW) AS DOUBLE) / 100, 2) AS near_total,
        DENSE_RANK() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC) AS rnk,
@@ -1222,8 +1217,8 @@ def q41(spark: SparkSession, sf_dir: str) -> DataFrame:
 # result as a direct GROUP BY, bounded per-task state at 100 TB).
 # --------------------------------------------------------------------
 
-Q42_ORACLE = """
-SELECT l_returnflag, COUNT(*) AS n, ROUND((CAST(SUM(CAST(FLOOR(l_quantity * 100 + 0.5) AS BIGINT)) AS DOUBLE) / 100), 2) AS sum_qty
+Q42_ORACLE = f"""
+SELECT l_returnflag, COUNT(*) AS n, ROUND({sql_exact_sum('l_quantity', 2)}, 2) AS sum_qty
 FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag
 """
 
@@ -1235,7 +1230,7 @@ def q42(spark: SparkSession, sf_dir: str) -> DataFrame:
     salted = li.withColumn("_salt", F.pmod(internal_digest("l_orderkey"), F.lit(16)))
     partial = salted.groupBy("l_returnflag", "_salt").agg(
         F.count(F.lit(1)).alias("_n"),
-        F.sum(F.floor(F.col("l_quantity") * 100 + F.lit(0.5)).cast("bigint")).alias("_q"),
+        F.sum(quantize(F.col("l_quantity"), 2)).alias("_q"),
     )
     return (
         partial.groupBy("l_returnflag")
@@ -1253,17 +1248,17 @@ def q42(spark: SparkSession, sf_dir: str) -> DataFrame:
 # so DuckDB can oracle-check it without a session primitive.
 # --------------------------------------------------------------------
 
-Q43_SPARK = """
+Q43_SPARK = f"""
 SELECT user_id,
        session_window.start AS session_start,
        COUNT(*) AS n_events,
-       ROUND((CAST(SUM(CAST(FLOOR(value * 1000000 + 0.5) AS BIGINT)) AS DOUBLE) / 1000000), 2) AS session_value
+       ROUND({sql_exact_sum('value', 6)}, 2) AS session_value
 FROM events
 GROUP BY user_id, session_window(ts, '30 minutes')
 ORDER BY user_id, session_start
 """
 
-Q43_ORACLE = """
+Q43_ORACLE = f"""
 WITH marked AS (
   SELECT user_id, ts, value,
          CASE WHEN ts - LAG(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
@@ -1281,7 +1276,7 @@ sessions AS (
 SELECT user_id,
        CAST(MIN(ts) AS TIMESTAMP) AS session_start,
        COUNT(*) AS n_events,
-       ROUND((CAST(SUM(CAST(FLOOR(value * 1000000 + 0.5) AS BIGINT)) AS DOUBLE) / 1000000), 2) AS session_value
+       ROUND({sql_exact_sum('value', 6)}, 2) AS session_value
 FROM sessions
 GROUP BY user_id, session_id
 ORDER BY user_id, session_start
@@ -1330,12 +1325,12 @@ def q44(spark: SparkSession, sf_dir: str) -> DataFrame:
 # full partial-agg + single-shuffle treatment.
 # --------------------------------------------------------------------
 
-Q45_ORACLE = """
+Q45_ORACLE = f"""
 WITH a AS (
   SELECT l_returnflag,
-         ROUND((CAST(SUM(CAST(FLOOR(l_quantity * 100 + 0.5) AS BIGINT)) AS DOUBLE) / 100), 2) AS sum_qty,
-         ROUND((CAST(SUM(CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT)) AS DOUBLE) / 100), 2) AS sum_price,
-         ROUND((CAST(SUM(CAST(FLOOR(l_discount * 100 + 0.5) AS BIGINT)) AS DOUBLE) / 100), 2) AS sum_disc
+         ROUND({sql_exact_sum('l_quantity', 6)}, 2) AS sum_qty,
+         ROUND({sql_exact_sum('l_extendedprice', 6)}, 2) AS sum_price,
+         ROUND({sql_exact_sum('l_discount', 6)}, 2) AS sum_disc
   FROM lineitem GROUP BY l_returnflag
 )
 SELECT l_returnflag, 'sum_qty' AS measure, sum_qty AS value FROM a
@@ -1351,9 +1346,9 @@ ORDER BY l_returnflag, measure
 def q45(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_views(spark, sf_dir, "lineitem")
     agg = spark.table("lineitem").groupBy("l_returnflag").agg(
-        F.round(exact_sum(F.col("l_quantity")), 2).alias("sum_qty"),
-        F.round(exact_sum(F.col("l_extendedprice")), 2).alias("sum_price"),
-        F.round(exact_sum(F.col("l_discount")), 2).alias("sum_disc"),
+        F.round(exact_sum(F.col("l_quantity"), 6), 2).alias("sum_qty"),
+        F.round(exact_sum(F.col("l_extendedprice"), 6), 2).alias("sum_price"),
+        F.round(exact_sum(F.col("l_discount"), 6), 2).alias("sum_disc"),
     )
     return agg.unpivot(
         ["l_returnflag"], ["sum_qty", "sum_price", "sum_disc"], "measure", "value"
@@ -1493,10 +1488,10 @@ def q51(spark: SparkSession, sf_dir: str) -> DataFrame:
 # exact percentiles ride along as scaled integers).
 # --------------------------------------------------------------------
 
-Q52_SPARK = """
+Q52_SPARK = f"""
 SELECT l_returnflag,
-       CAST(FLOOR(percentile(l_extendedprice, 0.5) * 100 + 0.5) AS BIGINT) AS p50_e2,
-       CAST(FLOOR(percentile(l_extendedprice, 0.95) * 100 + 0.5) AS BIGINT) AS p95_e2,
+       {sql_quantize('percentile(l_extendedprice, 0.5)', 2)} AS p50_e2,
+       {sql_quantize('percentile(l_extendedprice, 0.95)', 2)} AS p95_e2,
        ABS(approx_percentile(l_extendedprice, 0.5, 10000)
            - percentile(l_extendedprice, 0.5))
          <= 0.02 * percentile(l_extendedprice, 0.5)  AS p50_within_2pct,
@@ -1506,10 +1501,10 @@ SELECT l_returnflag,
 FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag
 """
 
-Q52_ORACLE = """
+Q52_ORACLE = f"""
 SELECT l_returnflag,
-       CAST(FLOOR(quantile_cont(l_extendedprice, 0.5) * 100 + 0.5) AS BIGINT) AS p50_e2,
-       CAST(FLOOR(quantile_cont(l_extendedprice, 0.95) * 100 + 0.5) AS BIGINT) AS p95_e2,
+       {sql_quantize('quantile_cont(l_extendedprice, 0.5)', 2)} AS p50_e2,
+       {sql_quantize('quantile_cont(l_extendedprice, 0.95)', 2)} AS p95_e2,
        TRUE AS p50_within_2pct,
        TRUE AS p95_within_2pct
 FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag
@@ -1601,7 +1596,7 @@ Q54_ORACLE = f"""
 SELECT n1.n_name AS supp_nation,
        n2.n_name AS cust_nation,
        CAST(EXTRACT(year FROM l.l_shipdate) AS BIGINT) AS l_year,
-       ROUND(CAST(SUM(CAST(FLOOR(l.l_extendedprice * (1 - l.l_discount) * 1000000 + 0.5) AS BIGINT)) AS DOUBLE) / 1000000, 2) AS revenue
+       ROUND({sql_exact_sum('l.l_extendedprice * (1 - l.l_discount)', 6)}, 2) AS revenue
 FROM lineitem l
 JOIN supplier s ON l.l_suppkey = s.s_suppkey
 JOIN orders o   ON l.l_orderkey = o.o_orderkey
@@ -1659,7 +1654,7 @@ def q54(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(
             F.round(
-                exact_sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
+                exact_sum(F.col("l_extendedprice") * (1 - F.col("l_discount")), 6), 2
             ).alias("revenue")
         )
         .orderBy("supp_nation", "cust_nation", "l_year")
@@ -1674,10 +1669,10 @@ def q54(spark: SparkSession, sf_dir: str) -> DataFrame:
 # oracle checks.
 # --------------------------------------------------------------------
 
-Q55_ORACLE = """
+Q55_ORACLE = f"""
 SELECT c.c_mktsegment AS segment,
        COUNT(*) AS n_events,
-       ROUND(CAST(SUM(CAST(FLOOR(e.value * 1000000 + 0.5) AS BIGINT)) AS DOUBLE) / 1000000, 2) AS sum_value
+       ROUND({sql_exact_sum('e.value', 6)}, 2) AS sum_value
 FROM events e JOIN customer c ON e.user_id = c.c_custkey
 GROUP BY 1 ORDER BY 1
 """
@@ -1697,7 +1692,7 @@ def q55(spark: SparkSession, sf_dir: str) -> DataFrame:
         joined.groupBy(F.col("c_mktsegment").alias("segment"))
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.round(exact_sum(F.col("value")), 2).alias("sum_value"),
+            F.round(exact_sum(F.col("value"), 6), 2).alias("sum_value"),
         )
         .orderBy("segment")
     )
@@ -1712,10 +1707,10 @@ def q55(spark: SparkSession, sf_dir: str) -> DataFrame:
 # exactly why you cluster before grouped writes at 100 TB.
 # --------------------------------------------------------------------
 
-Q59_SPARK = """
+Q59_SPARK = f"""
 SELECT l_suppkey,
        COUNT(*) AS n_lines,
-       SUM(CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT)) AS price_e2
+       SUM({sql_quantize('l_extendedprice', 2)}) AS price_e2
 FROM (
   SELECT l_suppkey, l_extendedprice
   FROM lineitem
@@ -1725,10 +1720,10 @@ GROUP BY l_suppkey
 ORDER BY l_suppkey
 """
 
-Q59_ORACLE = """
+Q59_ORACLE = f"""
 SELECT l_suppkey,
        COUNT(*) AS n_lines,
-       CAST(SUM(CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT)) AS BIGINT) AS price_e2
+       CAST(SUM({sql_quantize('l_extendedprice', 2)}) AS BIGINT) AS price_e2
 FROM lineitem
 GROUP BY l_suppkey
 ORDER BY l_suppkey
@@ -2198,17 +2193,17 @@ def q74(spark: SparkSession, sf_dir: str) -> DataFrame:
 # corpus and re-reading two KB-scale state tables.
 # --------------------------------------------------------------------
 
-Q75_ORACLE = """
+Q75_ORACLE = f"""
 WITH base AS (SELECT * FROM orders WHERE o_orderkey % 10 <> 0),
 delta AS (SELECT * FROM orders WHERE o_orderkey % 10 = 0),
 agg AS (
   SELECT o_orderpriority, COUNT(*) AS n,
-         SUM(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)) AS cents
+         SUM({sql_quantize('o_totalprice', 2)}) AS cents
   FROM base GROUP BY o_orderpriority
 ),
 dagg AS (
   SELECT o_orderpriority, COUNT(*) AS n,
-         SUM(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)) AS cents
+         SUM({sql_quantize('o_totalprice', 2)}) AS cents
   FROM delta GROUP BY o_orderpriority
 ),
 merged AS (
@@ -2218,7 +2213,7 @@ merged AS (
 ),
 full_agg AS (
   SELECT o_orderpriority, COUNT(*) AS n,
-         SUM(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)) AS cents
+         SUM({sql_quantize('o_totalprice', 2)}) AS cents
   FROM orders GROUP BY o_orderpriority
 )
 SELECT m.o_orderpriority, CAST(m.n AS BIGINT) AS n_merged,
@@ -2233,9 +2228,7 @@ ORDER BY m.o_orderpriority
 def q75(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_views(spark, sf_dir, "orders")
     orders = spark.table("orders")
-    cents = F.sum(
-        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("bigint")
-    ).alias("cents")
+    cents = F.sum(quantize(F.col("o_totalprice"), 2)).alias("cents")
 
     def agg_of(df):
         return df.groupBy("o_orderpriority").agg(
@@ -2320,7 +2313,7 @@ def q76(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the scan's PartitionFilters); oracle joins the same two inputs.
 # --------------------------------------------------------------------
 
-Q77_ORACLE = """
+Q77_ORACLE = f"""
 WITH fact AS (
   SELECT o_orderkey, o_totalprice, MONTH(o_orderdate) AS mo FROM orders
 ),
@@ -2332,7 +2325,7 @@ dim AS (
   WHERE name IN ('m1', 'm2')
 )
 SELECT d.name, COUNT(*) AS n,
-       CAST(SUM(CAST(FLOOR(f.o_totalprice * 100 + 0.5) AS BIGINT)) AS BIGINT) AS cents,
+       CAST(SUM({sql_quantize('f.o_totalprice', 2)}) AS BIGINT) AS cents,
        TRUE AS dpp_used
 FROM fact f JOIN dim d USING (mo)
 GROUP BY d.name ORDER BY d.name
@@ -2363,9 +2356,7 @@ def q77(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("name")
             .agg(
                 F.count(F.lit(1)).alias("n"),
-                F.sum(
-                    F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("bigint")
-                ).alias("cents"),
+                F.sum(quantize(F.col("o_totalprice"), 2)).alias("cents"),
             )
             .orderBy("name")
         )
@@ -2388,7 +2379,7 @@ def q77(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Output aggregates the merged table per status (scaled-long sums).
 # --------------------------------------------------------------------
 
-Q78_SQL = """
+Q78_SQL = f"""
 WITH base AS (
   SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice
   FROM orders WHERE o_orderkey % 5 <> 4
@@ -2414,7 +2405,7 @@ merged AS (
 )
 SELECT o_orderstatus,
        COUNT(*) AS n,
-       ROUND((CAST(SUM(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)) AS DOUBLE) / 100), 2) AS total_price
+       ROUND({sql_exact_sum('o_totalprice', 2)}, 2) AS total_price
 FROM merged
 GROUP BY o_orderstatus
 ORDER BY o_orderstatus
@@ -2456,10 +2447,10 @@ def q78(spark: SparkSession, sf_dir: str) -> DataFrame:
 # RANGE peers are all included so ties cannot flip the frame).
 # --------------------------------------------------------------------
 
-Q79_SQL = """
+Q79_SQL = f"""
 SELECT user_id, ts,
        COUNT(*) OVER w AS n_trailing_hour,
-       CAST(SUM(CAST(FLOOR(value * 1000000 + 0.5) AS BIGINT)) OVER w AS BIGINT)
+       CAST(SUM({sql_quantize('value', 6)}) OVER w AS BIGINT)
          AS tot_e6
 FROM events
 WINDOW w AS (PARTITION BY user_id ORDER BY ts
@@ -2582,8 +2573,7 @@ def q89(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the one-scan alternative to the naive two-pass (mean first, then
 # deviations) that a 100 TB table cannot afford. Every sum is a
 # map-side-combinable aggregate over exact integers: prices become
-# whole dollars via FLOOR(x + 0.5) (identical IEEE op in both
-# engines), powers and sums run in DECIMAL(38,0) on Spark / HUGEINT
+# whole dollars, quantized at 10^0 (exact.py), powers and sums run in DECIMAL(38,0) on Spark / HUGEINT
 # in DuckDB (Σx⁴ reaches ~1e26 at sf1 — BIGINT wraps silently at
 # 9.2e18, which would diverge between engines). Derived central
 # moments come out as truncating integer divisions over positive
@@ -2592,10 +2582,10 @@ def q89(spark: SparkSession, sf_dir: str) -> DataFrame:
 # BIGINT and both engines print decimal integers identically.
 # --------------------------------------------------------------------
 
-Q90_ORACLE = """
+Q90_ORACLE = f"""
 WITH d AS (
   SELECT l_returnflag,
-         CAST(CAST(FLOOR(l_extendedprice + 0.5) AS BIGINT) AS HUGEINT) AS x
+         CAST({sql_quantize('l_extendedprice', 0)} AS HUGEINT) AS x
   FROM lineitem
 ),
 s AS (
@@ -2624,8 +2614,7 @@ def q90(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_views(spark, sf_dir, "lineitem")
     d = spark.table("lineitem").select(
         "l_returnflag",
-        F.floor(F.col("l_extendedprice") + F.lit(0.5))
-        .cast("bigint").cast("decimal(38,0)").alias("x"),
+        quantize(F.col("l_extendedprice"), 0).cast("decimal(38,0)").alias("x"),
     )
     s = d.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).alias("n"),

@@ -4,19 +4,19 @@ DiffTransform, MetadataFilterTransform had no CORRECTNESS row). Each
 builds deterministic inputs from the fixture tables, runs the real
 stage, and aggregates the result into an oracle-checkable frame.
 
-Float outputs use the scaled-long recipe (see workloads/relational.py
-module docstring)."""
+Float outputs use the scaled-long recipe of ``arc_jupyter_spark/exact.py``."""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from arc_jupyter_spark.context import ArcContext
+from arc_jupyter_spark.exact import exact_sum, quantize, sql_exact_sum, sql_quantize
 from arc_jupyter_spark.operators import similarity
 from arc_jupyter_spark.operators.metadata import MetadataFilterTransform, MetadataTransform
 from arc_jupyter_spark.operators.transform import DiffTransform
 from arc_jupyter_spark.operators.typing import TypingTransform
-from arc_jupyter_spark.workloads.base import exact_sum, load_views, query
+from arc_jupyter_spark.workloads.base import load_views, query
 
 # --------------------------------------------------------------------
 # q48 — TypingTransform end to end: dirty string columns → typed
@@ -39,7 +39,7 @@ SELECT o_orderkey,
 FROM orders
 """
 
-Q48_ORACLE = """
+Q48_ORACLE = f"""
 WITH raw AS (
   SELECT o_orderkey,
          CASE WHEN o_orderkey % 7 = 0 THEN 'not-a-number'
@@ -63,7 +63,7 @@ SELECT COUNT(*) AS n_rows,
        CAST(SUM(CASE WHEN p IS NULL OR fl IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_error_rows,
        CAST(SUM(CASE WHEN p IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_price_errors,
        CAST(SUM(CASE WHEN fl IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_flag_errors,
-       ROUND(CAST(SUM(CAST(FLOOR(p * 100 + 0.5) AS BIGINT)) AS DOUBLE) / 100, 2) AS sum_price,
+       ROUND({sql_exact_sum('p', 2)}, 2) AS sum_price,
        CAST(SUM(CASE WHEN d IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_null_dates,
        CAST(SUM(CASE WHEN fl THEN 1 ELSE 0 END) AS BIGINT) AS n_true_flags
 FROM typed
@@ -93,7 +93,7 @@ def q48(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(F.size("_errors") > 0, 1).otherwise(0)).alias("n_error_rows"),
         F.sum(F.when(has_err("price"), 1).otherwise(0)).alias("n_price_errors"),
         F.sum(F.when(has_err("flag"), 1).otherwise(0)).alias("n_flag_errors"),
-        F.round(exact_sum(F.col("price"), scale=2), 2).alias("sum_price"),
+        F.round(exact_sum(F.col("price"), 2), 2).alias("sum_price"),
         F.sum(F.when(F.col("odate").isNull(), 1).otherwise(0)).alias("n_null_dates"),
         F.sum(F.when(F.col("flag"), 1).otherwise(0)).alias("n_true_flags"),
     )
@@ -173,11 +173,11 @@ def q49(spark: SparkSession, sf_dir: str) -> DataFrame:
 # reads the surviving columns).
 # --------------------------------------------------------------------
 
-Q50_ORACLE = """
+Q50_ORACLE = f"""
 SELECT 'l_orderkey,l_quantity,l_returnflag' AS kept_columns,
        COUNT(*) AS n_rows,
        COUNT(DISTINCT l_returnflag) AS n_flags,
-       ROUND(CAST(SUM(CAST(FLOOR(l_quantity * 100 + 0.5) AS BIGINT)) AS DOUBLE) / 100, 2) AS sum_qty
+       ROUND({sql_exact_sum('l_quantity', 2)}, 2) AS sum_qty
 FROM lineitem
 """
 
@@ -215,7 +215,7 @@ def q50(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(",".join(sorted(pruned.columns))).alias("kept_columns"),
         F.count(F.lit(1)).alias("n_rows"),
         F.countDistinct("l_returnflag").alias("n_flags"),
-        F.round(exact_sum(F.col("l_quantity"), scale=2), 2).alias("sum_qty"),
+        F.round(exact_sum(F.col("l_quantity"), 2), 2).alias("sum_qty"),
     )
 
 
@@ -226,7 +226,7 @@ def q50(spark: SparkSession, sf_dir: str) -> DataFrame:
 # is the equivalent cross join + window.
 # --------------------------------------------------------------------
 
-S03_ORACLE = """
+S03_ORACLE = f"""
 WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
 q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 3),
 scored AS (
@@ -239,7 +239,7 @@ ranked AS (
   FROM scored
 )
 SELECT query_id, vec_id,
-       CAST(FLOOR(c * 1000000 + 0.5) AS BIGINT) AS cosine_e6
+       {sql_quantize('c', 6)} AS cosine_e6
 FROM ranked WHERE rn <= 5
 ORDER BY query_id, vec_id
 """
@@ -257,14 +257,11 @@ def s03(spark: SparkSession, sf_dir: str) -> DataFrame:
         id_col="vec_id", vec_col="embedding",
         query_id_col="query_id", query_vec_col="embedding",
     )
-    # FLOOR(x*1e6+0.5) quantization, not ROUND: identical IEEE ops in
-    # both engines on the same double (round-3 verdict item 5)
+    # quantized at e6 (exact.py), not ROUND
     return top.select(
         "query_id",
         "vec_id",
-        F.floor(F.col("cosine") * 1000000 + F.lit(0.5))
-        .cast("bigint")
-        .alias("cosine_e6"),
+        quantize(F.col("cosine"), 6).alias("cosine_e6"),
     ).orderBy("query_id", "vec_id")
 
 
@@ -277,10 +274,10 @@ def s03(spark: SparkSession, sf_dir: str) -> DataFrame:
 # parse), stage dispatch 423-457.
 # --------------------------------------------------------------------
 
-Q56_ORACLE = """
+Q56_ORACLE = f"""
 SELECT l_returnflag,
        COUNT(*) AS n,
-       CAST(SUM(CAST(FLOOR(l_extendedprice * (1 - l_discount) * 100 + 0.5) AS BIGINT))
+       CAST(SUM({sql_quantize('l_extendedprice * (1 - l_discount)', 2)})
             AS BIGINT) AS revenue_e2
 FROM lineitem
 GROUP BY l_returnflag
@@ -306,7 +303,7 @@ def q56(spark: SparkSession, sf_dir: str) -> DataFrame:
   sql = \"\"\"
     SELECT l_returnflag,
            COUNT(*) AS n,
-           SUM(CAST(FLOOR(l_extendedprice * (1 - l_discount) * 100 + 0.5) AS BIGINT)) AS revenue_e2
+           SUM({sql_quantize('l_extendedprice * (1 - l_discount)', 2)}) AS revenue_e2
     FROM q56_lineitem
     GROUP BY l_returnflag
   \"\"\"
@@ -335,10 +332,10 @@ def q56(spark: SparkSession, sf_dir: str) -> DataFrame:
 # either way, which is what the oracle checks.
 # --------------------------------------------------------------------
 
-Q57_ORACLE = """
+Q57_ORACLE = f"""
 SELECT o.o_orderpriority,
        COUNT(*) AS n_lines,
-       CAST(SUM(CAST(FLOOR(l.l_extendedprice * (1 - l.l_discount) * 100 + 0.5) AS BIGINT))
+       CAST(SUM({sql_quantize('l.l_extendedprice * (1 - l.l_discount)', 2)})
             AS BIGINT) AS revenue_e2
 FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
 GROUP BY 1 ORDER BY 1
@@ -374,12 +371,7 @@ def q57(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(
                 F.count(F.lit(1)).alias("n_lines"),
                 F.sum(
-                    F.floor(
-                        F.col("l_extendedprice")
-                        * (1 - F.col("l_discount"))
-                        * 100
-                        + F.lit(0.5)
-                    ).cast("bigint")
+                    quantize(F.col("l_extendedprice") * (1 - F.col("l_discount")), 2)
                 ).alias("revenue_e2"),
             )
             .orderBy("o_orderpriority")

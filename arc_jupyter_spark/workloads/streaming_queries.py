@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from arc_jupyter_spark.checkpoint import materialize, materialize_lazy
 from arc_jupyter_spark.digest import md5_hex
+from arc_jupyter_spark.exact import exact_sum, quantize, sql_exact_sum, sql_quantize
 
 from arc_jupyter_spark.workloads._duck_sql import duck_count_min_ctes
 from arc_jupyter_spark.workloads.base import (
@@ -53,11 +54,11 @@ def _stream_partitions(spark: SparkSession, target: int = 8):
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
 
-ST01_ORACLE = """
+ST01_ORACLE = f"""
 SELECT CAST(time_bucket(INTERVAL 1 HOUR, ts) AS TIMESTAMP) AS window_start,
        event_type,
        COUNT(*) AS n,
-       ROUND((CAST(SUM(CAST(FLOOR(value * 1000000 + 0.5) AS BIGINT)) AS DOUBLE) / 1000000), 2) AS sum_value
+       ROUND({sql_exact_sum('value', 6)}, 2) AS sum_value
 FROM events
 GROUP BY 1, 2
 ORDER BY 1, 2
@@ -72,13 +73,7 @@ def st01(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n"),
-            F.round(
-                F.sum(
-                    F.floor(F.col("value") * 1000000 + F.lit(0.5)).cast("bigint")
-                ).cast("double")
-                / 1000000,
-                2,
-            ).alias("sum_value"),
+            F.round(exact_sum(F.col("value"), 6), 2).alias("sum_value"),
         )
     )
     name = f"st01_{uuid.uuid4().hex[:10]}"
@@ -111,9 +106,9 @@ def st01(spark: SparkSession, sf_dir: str) -> DataFrame:
 # over the static fixture → emitted totals equal the batch group-by.
 # --------------------------------------------------------------------
 
-ST02_ORACLE = """
+ST02_ORACLE = f"""
 SELECT user_id, COUNT(*) AS n_events,
-       ROUND(CAST(SUM(CAST(FLOOR(value * 1000000 + 0.5) AS BIGINT)) AS DOUBLE) / 1000000, 2) AS sum_value
+       ROUND({sql_exact_sum('value', 6)}, 2) AS sum_value
 FROM events GROUP BY user_id ORDER BY user_id
 """
 
@@ -160,7 +155,7 @@ def st02(spark: SparkSession, sf_dir: str) -> DataFrame:
 # starts align to the 30-minute grid in both engines.
 # --------------------------------------------------------------------
 
-ST03_ORACLE = """
+ST03_ORACLE = f"""
 WITH w AS (
   SELECT unnest([time_bucket(INTERVAL 30 MINUTE, ts),
                  time_bucket(INTERVAL 30 MINUTE, ts) - INTERVAL 30 MINUTE])
@@ -171,7 +166,7 @@ WITH w AS (
 SELECT CAST(window_start AS TIMESTAMP) AS window_start,
        event_type,
        COUNT(*) AS n,
-       CAST(SUM(CAST(FLOOR(value * 1000000 + 0.5) AS BIGINT)) AS BIGINT) AS sum_value_e6
+       CAST(SUM({sql_quantize('value', 6)}) AS BIGINT) AS sum_value_e6
 FROM w
 GROUP BY 1, 2
 ORDER BY 1, 2
@@ -188,9 +183,7 @@ def st03(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(
             F.count(F.lit(1)).alias("n"),
-            F.sum(
-                F.floor(F.col("value") * 1000000 + F.lit(0.5)).cast("bigint")
-            ).alias("sum_value_e6"),
+            F.sum(quantize(F.col("value"), 6)).alias("sum_value_e6"),
         )
     )
     name = f"st03_{uuid.uuid4().hex[:10]}"
@@ -229,10 +222,10 @@ def st03(spark: SparkSession, sf_dir: str) -> DataFrame:
 # aggregation happens batch-side on the drained sink (integer-exact).
 # --------------------------------------------------------------------
 
-ST04_ORACLE = """
+ST04_ORACLE = f"""
 SELECT CAST(time_bucket(INTERVAL 1 HOUR, a.ts) AS TIMESTAMP) AS click_hour,
        COUNT(*) AS n_pairs,
-       CAST(SUM(CAST(FLOOR(b.value * 100 + 0.5) AS BIGINT)) AS BIGINT) AS sum_purchase_e2,
+       CAST(SUM({sql_quantize('b.value', 2)}) AS BIGINT) AS sum_purchase_e2,
        MIN((epoch_us(b.ts) // 1000000) - (epoch_us(a.ts) // 1000000)) AS min_delay_s,
        MAX((epoch_us(b.ts) // 1000000) - (epoch_us(a.ts) // 1000000)) AS max_delay_s
 FROM events a JOIN events b
@@ -283,9 +276,7 @@ def st04(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(
             F.count(F.lit(1)).alias("n_pairs"),
-            F.sum(
-                F.floor(F.col("p_value") * 100 + F.lit(0.5)).cast("bigint")
-            ).alias("sum_purchase_e2"),
+            F.sum(quantize(F.col("p_value"), 2)).alias("sum_purchase_e2"),
             F.min(
                 (F.unix_timestamp("p_ts") - F.unix_timestamp("c_ts")).cast("bigint")
             ).alias("min_delay_s"),
@@ -348,7 +339,7 @@ def st05(spark: SparkSession, sf_dir: str) -> DataFrame:
 # complete-mode drain equals the batch sessionization.
 # --------------------------------------------------------------------
 
-ST06_ORACLE = """
+ST06_ORACLE = f"""
 WITH marked AS (
   SELECT user_id, ts, value,
          CASE WHEN ts - LAG(ts) OVER (PARTITION BY user_id ORDER BY ts)
@@ -366,7 +357,7 @@ sessions AS (
 SELECT user_id,
        CAST(MIN(ts) AS TIMESTAMP) AS session_start,
        COUNT(*) AS n_events,
-       CAST(SUM(CAST(FLOOR(value * 1000000 + 0.5) AS BIGINT)) AS BIGINT)
+       CAST(SUM({sql_quantize('value', 6)}) AS BIGINT)
          AS session_value_e6
 FROM sessions
 GROUP BY user_id, session_id
@@ -384,9 +375,7 @@ def st06(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.sum(
-                F.floor(F.col("value") * 1000000 + F.lit(0.5)).cast("bigint")
-            ).alias("session_value_e6"),
+            F.sum(quantize(F.col("value"), 6)).alias("session_value_e6"),
         )
     )
     name = f"st06_{uuid.uuid4().hex[:10]}"
@@ -421,9 +410,9 @@ def st06(spark: SparkSession, sf_dir: str) -> DataFrame:
 # every streaming ingest pipeline runs.
 # --------------------------------------------------------------------
 
-ST07_ORACLE = """
+ST07_ORACLE = f"""
 SELECT event_type, COUNT(*) AS n,
-       CAST(SUM(CAST(FLOOR(value * 1000000 + 0.5) AS BIGINT)) AS BIGINT) AS sum_value_e6
+       CAST(SUM({sql_quantize('value', 6)}) AS BIGINT) AS sum_value_e6
 FROM events GROUP BY event_type ORDER BY event_type
 """
 
@@ -458,9 +447,7 @@ def st07(spark: SparkSession, sf_dir: str) -> DataFrame:
         landed.groupBy("event_type")
         .agg(
             F.count(F.lit(1)).alias("n"),
-            F.sum(
-                F.floor(F.col("value") * 1000000 + F.lit(0.5)).cast("bigint")
-            ).alias("sum_value_e6"),
+            F.sum(quantize(F.col("value"), 6)).alias("sum_value_e6"),
         )
         .orderBy("event_type")
     )
@@ -1336,7 +1323,7 @@ def st17(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ever re-scanning history (q90's single-pass argument, lifted to
 # the stream). Power sums are commutative-monoid state, so
 # batch-merge == whole-corpus by algebra, and the oracle computes
-# straight over the full events table. x = FLOOR(value + 0.5) whole
+# straight over the full events table. x = value quantized to whole
 # units: x ≤ ~561 keeps Σx⁴ under ~1e18 at every probe scale (the
 # q90 DECIMAL(38,0) recipe is the documented upgrade when a true
 # 100 TB stream overflows BIGINT). All derived-moment divisions run
@@ -1344,10 +1331,10 @@ def st17(spark: SparkSession, sf_dir: str) -> DataFrame:
 # DuckDB `//` (floor) agree.
 # --------------------------------------------------------------------
 
-ST18_ORACLE = """
+ST18_ORACLE = f"""
 WITH d AS (
   SELECT event_type,
-         CAST(FLOOR(value + 0.5) AS BIGINT) AS x
+         {sql_quantize('value', 0)} AS x
   FROM events
 ),
 s AS (
@@ -1377,7 +1364,7 @@ def st18(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = read_events_stream(spark, sf_dir)
 
     def land_sums(batch_df: DataFrame, batch_id: int) -> None:
-        x = F.floor(F.col("value") + F.lit(0.5)).cast("bigint")
+        x = quantize(F.col("value"), 0)
         (
             batch_df.select("event_type", x.alias("x"))
             .groupBy("event_type")

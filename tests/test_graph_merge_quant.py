@@ -266,14 +266,14 @@ def test_bfs_levels_early_stop(spark):
 def test_lloyd_train_hand_trajectory(spark):
     from arc_jupyter_spark.operators.similarity import lloyd_train_quantized
 
-    # 1-D corpus, scale=10 so q values are exact tenths. Seeds at 0.0
+    # 1-D corpus, digits=1 so q values are exact tenths. Seeds at 0.0
     # and 1.0; points cluster around them.
     rows = [(i, [v]) for i, v in enumerate([0.0, 1.0, 0.1, 0.2, 0.9, 0.8])]
     df = spark.createDataFrame(rows, ["vec_id", "embedding"])
     anchors = [(0, [0.0]), (1, [1.0])]
     out = {
         (r["cluster_id"], r["dim"]): (r["c_e6"], r["n_c"])
-        for r in lloyd_train_quantized(df, anchors, iters=2, scale=10).collect()
+        for r in lloyd_train_quantized(df, anchors, iters=2, digits=1).collect()
     }
     # q = [0, 10, 1, 2, 9, 8]. Round 1 vs c0=[0],[10]: dot with 0 is 0
     # for every row, dot with 10 is 10*q — argmax picks cluster 1 when
@@ -296,7 +296,7 @@ def test_lloyd_train_empty_cluster_carries_centroid(spark):
     anchors = [(3, [1.0]), (7, [-1.0])]
     out = {
         r["cluster_id"]: (r["c_e6"], r["n_c"])
-        for r in lloyd_train_quantized(df, anchors, iters=3, scale=10).collect()
+        for r in lloyd_train_quantized(df, anchors, iters=3, digits=1).collect()
     }
     # q = [10, 5]; both pick anchor 3 every round; centroid (10+5) DIV 2 = 7
     assert out == {3: (7, 2)}

@@ -1,5 +1,5 @@
-"""Property-based invariants for the round-5 operators (d17
-containment pairs, t38 DSIR importance): each Spark result is checked
+"""Property-based invariants for the containment and importance
+operators (d17 containment pairs, t38 DSIR importance): each Spark result is checked
 against an independent pure-Python simulation of the documented
 semantics (bounded example counts — each example runs Spark jobs)."""
 

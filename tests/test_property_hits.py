@@ -1,4 +1,4 @@
-"""Property-based invariants for the round-7 graph operator: integer
+"""Property-based invariants for the HITS graph operator: integer
 HITS against an independent pure-Python reference loop on RANDOM
 directed graphs (bounded example count — each example runs Spark
 jobs), plus the normalized-ranking equivalence on the same graphs."""

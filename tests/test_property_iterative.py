@@ -1,4 +1,4 @@
-"""Property-based invariants for the round-4 operators (g04 BFS, t37
+"""Property-based invariants for the iterative operators (g04 BFS, t37
 smoothed bigram LM, s14 Lloyd training): each Spark result is checked
 against an independent pure-Python simulation of the documented
 integer semantics (bounded example counts — each example runs Spark

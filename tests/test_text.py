@@ -541,3 +541,30 @@ def test_spark_tokens_equal_duckdb_twin(spark):
         if values[i] not in CASING_DIFFERS and got[i] != want[i]
     ]
     assert not bad, f"{len(bad)} of {len(values)} differ: {bad}"
+
+
+def test_token_count_and_punct_ratio_equal_duckdb_twins(spark):
+    values = [f"a{c}b" for c in WHITESPACE_LIKE] + [
+        "ab\x0bc!", "Hello, world! 42", "ab!!", "naïve café!",
+        "x_y-z 3.14", "emoji 🙂 🚀", "   ", "",
+    ]
+    rows = list(enumerate(values))
+    got = {
+        r[0]: (r[1], r[2])
+        for r in spark.createDataFrame(rows, "i int, s string")
+        .select("i", text.token_count(F.col("s")), text.punct_ratio(F.col("s")))
+        .collect()
+    }
+    con = duckdb.connect()
+    con.register("t", pd.DataFrame({"i": range(len(values)), "s": values}))
+    want = {r[0]: (r[1], r[2]) for r in con.execute(
+        f"SELECT i, len(regexp_extract_all(s, '{_duck_sql.DUCK_TOKEN_PATTERN}')),"
+        " CASE WHEN length(s) > 0 THEN CAST(length(regexp_replace("
+        f"s, '{_duck_sql.DUCK_ALNUM_SPACE}', '', 'g')) AS DOUBLE) / length(s)"
+        " ELSE 0.0 END FROM t"
+    ).fetchall()}
+    # Java's \s holds U+000B, so these read 'a' 'b' and 'ab' 'c' '!'
+    assert got[values.index("a\x0bb")] == (2, 0.0)
+    assert got[values.index("ab\x0bc!")] == (3, 0.2)
+    bad = [(values[i], got[i], want[i]) for i in want if got[i] != want[i]]
+    assert not bad, f"{len(bad)} of {len(values)} differ: {bad}"
