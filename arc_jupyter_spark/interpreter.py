@@ -86,15 +86,17 @@ def _int(value: str | None, default: int) -> int:
 
 def stage_config(magic: str, args: dict[str, str], body: str) -> dict[str, Any]:
     """The stage config a stage magic compiles to, with the types HOCON
-    would give: ``persist`` a bool, ``sqlParams`` (``k=v,...``) the
-    ``params`` object."""
+    would give: ``persist`` a bool, ``environments`` (``a,b``) a list,
+    ``sqlParams`` (``k=v,...``) an object."""
     config: dict[str, Any] = {"type": STAGE_MAGICS[magic], "sql": body}
     config.update({k: args[k] for k in ("name", "inputView", "outputView") if k in args})
     if "persist" in args:
         config["persist"] = _bool(args["persist"])
+    if args.get("environments"):
+        config["environments"] = [e.strip() for e in args["environments"].split(",") if e.strip()]
     if args.get("sqlParams"):
         pairs = (p.split("=", 1) for p in args["sqlParams"].split(",") if "=" in p)
-        config["params"] = {k.strip(): v.strip() for k, v in pairs}
+        config["sqlParams"] = {k.strip(): v.strip() for k, v in pairs}
     return config
 
 
@@ -624,21 +626,28 @@ def completions(ctx: ArcContext) -> list[dict[str, str]]:
 
 HELP_TEXT = """\
 Magics:
-  %sql [outputView=] [numRows=] [truncate=] [persist=] [streaming=]   run SQL, register result
+  %sql [outputView=]           run SQL, register result
   %sqlvalidate                 assert [valid, message] result
   %metadata [outputView=]      schema+metadata as a DataFrame
-  %metadatafilter inputView=   keep columns whose metadata matches SQL
+  %metadatafilter inputView= [outputView=]   keep columns whose metadata matches SQL
   %metadatavalidate inputView= assert over the metadata table
   %configexecute               merge JSON result into session env
   %log                         log a JSON message from SQL
   %schema / %printschema       schema as JSON / tree
   %printmetadata               Arc metadata-schema document
+  %plan <view>                 physical plan + scale-advisor findings
   %list <uri>                  directory listing as a DataFrame
   %env KEY=VALUE               session substitution variables
   %secret KEY                  prompt-and-store masked secret
   %conf key=value              session configuration
+  %configplugin <name>         run a dynamic-configuration plugin into env
+  %lifecycleplugin <name>      hook a lifecycle plugin around later stages
   %version / %help             info
-  (bare cell)                  JSON pipeline of stages
-Cell options: name= outputView= numRows= truncate= persist= streaming=
-  streamingDuration= monospace= leftAlign= datasetLabels= showLog=
+  %arc / (bare cell)           HOCON pipeline of stages
+Stage magics (%sql %sqlvalidate %log %configexecute %metadatafilter
+  %metadatavalidate) also take: name= persist=
+  environments=a,b (run only when %conf environment= is one of them)
+  sqlParams=k=v,... (values for ${k} in the SQL)
+Cell options: numRows= truncate= streaming= streamingDuration=
+  monospace= leftAlign= datasetLabels= showLog=
 """

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import json
 import logging
+from dataclasses import field
 from typing import Any
 
 import pyarrow as pa
@@ -40,9 +41,7 @@ class SQLValidate(PipelineStage):
     stage_type = "SQLValidate"
     stage_kind = "validate"
 
-    def __init__(self, sql: str = "", **kwargs: Any) -> None:
-        super().__init__(**kwargs)
-        self.sql = sql
+    sql: str = ""
 
     def execute(self, ctx: ArcContext) -> None:
         stmt = self.substitute(self.sql, ctx)
@@ -73,9 +72,7 @@ class MetadataValidate(SQLValidate):
 
     stage_type = "MetadataValidate"
 
-    def __init__(self, input_view: str = "", **kwargs: Any) -> None:
-        super().__init__(**kwargs)
-        self.input_view = input_view
+    input_view: str = ""
 
     def execute(self, ctx: ArcContext) -> None:
         from arc_jupyter_spark.operators.metadata import metadata_dataframe
@@ -91,10 +88,8 @@ class EqualityValidate(PipelineStage):
     stage_type = "EqualityValidate"
     stage_kind = "validate"
 
-    def __init__(self, left_view: str = "", right_view: str = "", **kwargs: Any) -> None:
-        super().__init__(**kwargs)
-        self.left_view = left_view
-        self.right_view = right_view
+    left_view: str = ""
+    right_view: str = ""
 
     def execute(self, ctx: ArcContext) -> None:
         left = ctx.table(self.left_view)
@@ -123,9 +118,7 @@ class LogExecute(PipelineStage):
     stage_type = "LogExecute"
     stage_kind = "execute"
 
-    def __init__(self, sql: str = "", **kwargs: Any) -> None:
-        super().__init__(**kwargs)
-        self.sql = sql
+    sql: str = ""
 
     def execute(self, ctx: ArcContext) -> None:
         row = ctx.spark.sql(self.substitute(self.sql, ctx)).first()
@@ -142,9 +135,7 @@ class ConfigExecute(PipelineStage):
     stage_type = "ConfigExecute"
     stage_kind = "execute"
 
-    def __init__(self, sql: str = "", **kwargs: Any) -> None:
-        super().__init__(**kwargs)
-        self.sql = sql
+    sql: str = ""
 
     def execute(self, ctx: ArcContext) -> None:
         row = ctx.spark.sql(self.substitute(self.sql, ctx)).first()
@@ -163,9 +154,7 @@ class StatisticsExecute(PipelineStage):
     stage_type = "StatisticsExecute"
     stage_kind = "execute"
 
-    def __init__(self, input_view: str = "", **kwargs: Any) -> None:
-        super().__init__(**kwargs)
-        self.input_view = input_view
+    input_view: str = ""
 
     def execute(self, ctx: ArcContext) -> DataFrame:
         stats = ctx.table(self.input_view).summary()
@@ -186,10 +175,8 @@ class PipelineExecute(PipelineStage):
     stage_type = "PipelineExecute"
     stage_kind = "execute"
 
-    def __init__(self, uri: str = "", environment: str | None = None, **kwargs: Any) -> None:
-        super().__init__(**kwargs)
-        self.uri = uri
-        self.environment = environment
+    uri: str = ""
+    environment: str | None = None
 
     def execute(self, ctx: ArcContext) -> DataFrame | None:
         with open(self.substitute(self.uri, ctx), encoding="utf-8") as fh:
@@ -210,16 +197,8 @@ class JDBCExecute(PipelineStage):
     stage_type = "JDBCExecute"
     stage_kind = "execute"
 
-    def __init__(
-        self,
-        jdbc_url: str = "",
-        sql: str = "",
-        params: dict[str, Any] | None = None,
-        **kwargs: Any,
-    ) -> None:
-        super().__init__(params=params, **kwargs)
-        self.jdbc_url = jdbc_url
-        self.sql = sql
+    jdbc_url: str = ""
+    sql: str = ""
 
     def execute(self, ctx: ArcContext) -> None:
         url = self.substitute(self.jdbc_url, ctx)
@@ -243,10 +222,8 @@ class HTTPExecute(PipelineStage):
     stage_type = "HTTPExecute"
     stage_kind = "execute"
 
-    def __init__(self, uri: str = "", payload: dict[str, Any] | None = None, **kwargs: Any) -> None:
-        super().__init__(**kwargs)
-        self.uri = uri
-        self.payload = payload or {}
+    uri: str = ""
+    payload: dict[str, Any] = field(default_factory=dict)
 
     def execute(self, ctx: ArcContext) -> None:
         import urllib.request

@@ -10,76 +10,54 @@ from __future__ import annotations
 
 from typing import Any
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, DataFrameWriter
 
 from arc_jupyter_spark.context import ArcContext
-from arc_jupyter_spark.plans.pipeline import PipelineStage, register_stage
+from arc_jupyter_spark.plans.pipeline import FormatStage, PipelineStage, register_stage
 
 
-class _FileLoad(PipelineStage):
+class _Load(FormatStage):
+    """The one writer of every format-backed load: ``inputView`` to
+    ``format_name`` with the merged options, at the stage's path when
+    it has one. A streaming view goes to the format's streaming sink. A
+    concrete stage gives its format, its package hint, its
+    ``default_options`` and its default ``saveMode``.
+    """
+
     stage_kind = "load"
-    format_name = ""
 
-    def __init__(
-        self,
-        input_view: str = "",
-        output_uri: str = "",
-        save_mode: str = "overwrite",
-        options: dict[str, str] | None = None,
-        bucket_by: tuple[str, ...] = (),
-        num_buckets: int = 0,
-        table_name: str = "",
-        **kwargs: Any,
-    ) -> None:
-        super().__init__(**kwargs)
-        self.input_view = input_view
-        self.output_uri = output_uri
-        self.save_mode = save_mode
-        self.options = dict(options or {})
-        self.bucket_by = tuple(bucket_by)
-        self.num_buckets = num_buckets
-        self.table_name = table_name
+    input_view: str = ""
+    save_mode: str = "append"
 
-    def default_options(self) -> dict[str, str]:
-        return {}
+    def path(self, ctx: ArcContext) -> str | None:
+        return None
 
     def execute(self, ctx: ArcContext) -> DataFrame:
         df = ctx.table(self.input_view)
-        uri = self.substitute(self.output_uri, ctx)
-        if df.isStreaming:
-            return self._execute_streaming(ctx, df, uri)
-        if self.num_partitions:
-            df_out = df.repartition(self.num_partitions)
-        else:
-            df_out = df
-        writer = df_out.write.format(self.format_name).mode(self.save_mode)
-        opts = {**self.default_options(), **self.options}
-        if opts:
-            writer = writer.options(**opts)
-        if self.partition_by:
-            writer = writer.partitionBy(*self.partition_by)
-        if self.bucket_by:
-            # bucketed layout: co-locates downstream equi-joins/aggs on
-            # the bucket key (no exchange at read time). Bucket metadata
-            # lives in the catalog, so this goes through saveAsTable.
-            if not self.table_name:
-                raise ValueError(
-                    f"{self.stage_type} '{self.name}': bucketBy requires tableName"
-                )
-            writer = writer.bucketBy(
-                self.num_buckets or 8, *self.bucket_by
-            ).sortBy(*self.bucket_by)
-            if uri:
-                writer = writer.option("path", uri)
-            writer.saveAsTable(self.table_name)
-        else:
-            writer.save(uri)
+        uri = self.path(ctx)
+        opts = self.resolved_options(ctx)
+        with self.connector():
+            if df.isStreaming:
+                self._write_stream(ctx, df, uri, opts)
+            else:
+                self._write(df, uri, opts)
         return df
 
-    def _execute_streaming(
-        self, ctx: ArcContext, df: DataFrame, uri: str
-    ) -> DataFrame:
-        """Streaming file sink (reference: file Loads accept streaming
+    def _writer(self, df: DataFrame, opts: dict[str, Any]) -> DataFrameWriter:
+        if self.num_partitions:
+            df = df.repartition(self.num_partitions)
+        writer = df.write.format(self.format_name).mode(self.save_mode).options(**opts)
+        if self.partition_by:
+            writer = writer.partitionBy(*self.partition_by)
+        return writer
+
+    def _write(self, df: DataFrame, uri: str | None, opts: dict[str, Any]) -> None:
+        self._writer(df, opts).save(uri)
+
+    def _write_stream(
+        self, ctx: ArcContext, df: DataFrame, uri: str | None, opts: dict[str, Any]
+    ) -> None:
+        """Streaming sink (reference: file Loads accept streaming
         input): exactly-once append via the checkpointed file-sink
         commit log. The checkpoint lives beside the output unless
         overridden via the ``checkpointLocation`` option; the query is
@@ -88,29 +66,67 @@ class _FileLoad(PipelineStage):
         (bounded source snapshot; an unbounded deployment swaps the
         trigger and simply doesn't awaitTermination).
         """
-        if self.bucket_by:
-            raise ValueError(
-                f"{self.stage_type} '{self.name}': bucketBy is a batch-only "
-                "layout (catalog metadata); streaming sinks append files"
-            )
-        opts = {**self.default_options(), **self.options}
         checkpoint = opts.pop(
-            "checkpointLocation", uri.rstrip("/") + "/_checkpoints"
+            "checkpointLocation", uri and uri.rstrip("/") + "/_checkpoints"
         )
         writer = (
             df.writeStream.format(self.format_name)
             .outputMode("append")
             .queryName(f"load:{self.name}")
-            .option("checkpointLocation", checkpoint)
         )
-        if opts:
-            writer = writer.options(**opts)
+        if checkpoint:
+            writer = writer.option("checkpointLocation", checkpoint)
+        writer = writer.options(**opts)
         if self.partition_by:
             writer = writer.partitionBy(*self.partition_by)
         query = writer.trigger(availableNow=True).start(uri)
         ctx.track_stream(query)
         query.awaitTermination()
-        return df
+
+
+class _UriLoad(_Load):
+    """A sink addressed by ``outputURI``, overwritten by default."""
+
+    output_uri: str = ""
+    save_mode: str = "overwrite"
+
+    def path(self, ctx: ArcContext) -> str | None:
+        return self.substitute(self.output_uri, ctx) or None
+
+
+class _FileLoad(_UriLoad):
+    """A file format, which can also write a bucketed catalog table
+    (``bucketBy``, ``numBuckets``, ``tableName``)."""
+
+    bucket_by: tuple[str, ...] = ()
+    num_buckets: int = 0
+    table_name: str = ""
+
+    def _write(self, df: DataFrame, uri: str | None, opts: dict[str, Any]) -> None:
+        if not self.bucket_by:
+            return super()._write(df, uri, opts)
+        # bucketed layout: co-locates downstream equi-joins/aggs on the
+        # bucket key (no exchange at read time). Bucket metadata lives
+        # in the catalog, so this goes through saveAsTable.
+        if not self.table_name:
+            raise ValueError(
+                f"{self.stage_type} '{self.name}': bucketBy requires tableName"
+            )
+        writer = self._writer(df, opts)
+        writer = writer.bucketBy(self.num_buckets or 8, *self.bucket_by).sortBy(*self.bucket_by)
+        if uri:
+            writer = writer.option("path", uri)
+        writer.saveAsTable(self.table_name)
+
+    def _write_stream(
+        self, ctx: ArcContext, df: DataFrame, uri: str | None, opts: dict[str, Any]
+    ) -> None:
+        if self.bucket_by:
+            raise ValueError(
+                f"{self.stage_type} '{self.name}': bucketBy is a batch-only "
+                "layout (catalog metadata); streaming sinks append files"
+            )
+        super()._write_stream(ctx, df, uri, opts)
 
 
 @register_stage
@@ -129,6 +145,7 @@ class ORCLoad(_FileLoad):
 class AvroLoad(_FileLoad):
     stage_type = "AvroLoad"
     format_name = "avro"
+    package = "org.apache.spark:spark-avro"
 
 
 @register_stage
@@ -149,6 +166,7 @@ class XMLLoad(_FileLoad):
 
     stage_type = "XMLLoad"
     format_name = "xml"
+    package = "com.databricks:spark-xml"
 
 
 @register_stage
@@ -156,48 +174,25 @@ class DelimitedLoad(_FileLoad):
     stage_type = "DelimitedLoad"
     format_name = "csv"
 
-    def __init__(self, header: bool = True, delimiter: str = ",", **kwargs: Any) -> None:
-        super().__init__(**kwargs)
-        self.header = header
-        self.delimiter = delimiter
+    header: bool = True
+    delimiter: str = ","
 
-    def default_options(self) -> dict[str, str]:
+    def default_options(self) -> dict[str, Any]:
         return {"header": str(self.header).lower(), "sep": self.delimiter}
 
 
 @register_stage
-class JDBCLoad(PipelineStage):
+class JDBCLoad(_Load):
+    """Append a view to a database table (``tableName``) over JDBC."""
+
     stage_type = "JDBCLoad"
-    stage_kind = "load"
+    format_name = "jdbc"
 
-    def __init__(
-        self,
-        input_view: str = "",
-        jdbc_url: str = "",
-        table_name: str = "",
-        save_mode: str = "append",
-        options: dict[str, str] | None = None,
-        **kwargs: Any,
-    ) -> None:
-        super().__init__(**kwargs)
-        self.input_view = input_view
-        self.jdbc_url = jdbc_url
-        self.table_name = table_name
-        self.save_mode = save_mode
-        self.options = dict(options or {})
+    jdbc_url: str = ""
+    table_name: str = ""
 
-    def execute(self, ctx: ArcContext) -> DataFrame:
-        df = ctx.table(self.input_view)
-        writer = (
-            df.write.format("jdbc")
-            .mode(self.save_mode)
-            .option("url", self.substitute(self.jdbc_url, ctx))
-            .option("dbtable", self.table_name)
-        )
-        for k, v in self.options.items():
-            writer = writer.option(k, v)
-        writer.save()
-        return df
+    def default_options(self) -> dict[str, Any]:
+        return {"url": self.jdbc_url, "dbtable": self.table_name}
 
 
 @register_stage
@@ -207,10 +202,8 @@ class ConsoleLoad(PipelineStage):
     stage_type = "ConsoleLoad"
     stage_kind = "load"
 
-    def __init__(self, input_view: str = "", output_mode: str = "append", **kwargs: Any) -> None:
-        super().__init__(**kwargs)
-        self.input_view = input_view
-        self.output_mode = output_mode
+    input_view: str = ""
+    output_mode: str = "append"
 
     def execute(self, ctx: ArcContext) -> DataFrame:
         df = ctx.table(self.input_view)
@@ -229,17 +222,9 @@ class MemoryLoad(PipelineStage):
     stage_type = "MemoryLoad"
     stage_kind = "load"
 
-    def __init__(
-        self,
-        input_view: str = "",
-        query_name: str = "preview",
-        output_mode: str = "append",
-        **kwargs: Any,
-    ) -> None:
-        super().__init__(**kwargs)
-        self.input_view = input_view
-        self.query_name = query_name
-        self.output_mode = output_mode
+    input_view: str = ""
+    query_name: str = "preview"
+    output_mode: str = "append"
 
     def execute(self, ctx: ArcContext) -> DataFrame:
         df = ctx.table(self.input_view)

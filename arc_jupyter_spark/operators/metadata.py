@@ -13,6 +13,7 @@ schema is tiny; no reason to involve the cluster.
 from __future__ import annotations
 
 import json
+from dataclasses import field
 from typing import Any
 
 import pyarrow as pa
@@ -135,17 +136,9 @@ class MetadataTransform(PipelineStage):
 
     stage_type = "MetadataTransform"
 
-    def __init__(
-        self,
-        input_view: str = "",
-        output_view: str = "",
-        schema: list[dict[str, Any]] | dict[str, dict[str, Any]] | None = None,
-        **kwargs: Any,
-    ) -> None:
-        super().__init__(**kwargs)
-        self.input_view = input_view
-        self.output_view = output_view
-        self.schema = schema or {}
+    input_view: str = ""
+    output_view: str = ""
+    schema: list[dict[str, Any]] | dict[str, dict[str, Any]] = field(default_factory=dict)
 
     def execute(self, ctx: ArcContext) -> DataFrame:
         df = ctx.table(self.input_view)
@@ -169,17 +162,9 @@ class MetadataFilterTransform(PipelineStage):
 
     stage_type = "MetadataFilterTransform"
 
-    def __init__(
-        self,
-        input_view: str = "",
-        output_view: str = PLACEHOLDER_VIEW,
-        sql: str = "",
-        **kwargs: Any,
-    ) -> None:
-        super().__init__(**kwargs)
-        self.input_view = input_view
-        self.output_view = output_view
-        self.sql = sql
+    input_view: str = ""
+    output_view: str = PLACEHOLDER_VIEW
+    sql: str = ""
 
     def execute(self, ctx: ArcContext) -> DataFrame:
         df = ctx.table(self.input_view)

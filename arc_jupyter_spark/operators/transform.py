@@ -29,10 +29,8 @@ class SQLTransform(PipelineStage):
 
     stage_type = "SQLTransform"
 
-    def __init__(self, sql: str = "", output_view: str = PLACEHOLDER_VIEW, **kwargs: Any) -> None:
-        super().__init__(**kwargs)
-        self.sql = sql
-        self.output_view = output_view
+    sql: str = ""
+    output_view: str = PLACEHOLDER_VIEW
 
     def execute(self, ctx: ArcContext) -> DataFrame:
         stmt = self.substitute(self.sql, ctx)
@@ -52,21 +50,11 @@ class DiffTransform(PipelineStage):
 
     stage_type = "DiffTransform"
 
-    def __init__(
-        self,
-        input_left_view: str = "",
-        input_right_view: str = "",
-        output_intersection_view: str | None = None,
-        output_left_view: str | None = None,
-        output_right_view: str | None = None,
-        **kwargs: Any,
-    ) -> None:
-        super().__init__(**kwargs)
-        self.input_left_view = input_left_view
-        self.input_right_view = input_right_view
-        self.output_intersection_view = output_intersection_view
-        self.output_left_view = output_left_view
-        self.output_right_view = output_right_view
+    input_left_view: str = ""
+    input_right_view: str = ""
+    output_intersection_view: str | None = None
+    output_left_view: str | None = None
+    output_right_view: str | None = None
 
     def execute(self, ctx: ArcContext) -> DataFrame:
         left = ctx.table(self.input_left_view)
@@ -94,10 +82,8 @@ class JSONTransform(PipelineStage):
 
     stage_type = "JSONTransform"
 
-    def __init__(self, input_view: str = "", output_view: str = "", **kwargs: Any) -> None:
-        super().__init__(**kwargs)
-        self.input_view = input_view
-        self.output_view = output_view
+    input_view: str = ""
+    output_view: str = ""
 
     def execute(self, ctx: ArcContext) -> DataFrame:
         df = ctx.table(self.input_view)
@@ -118,31 +104,16 @@ class SimilarityJoinTransform(PipelineStage):
 
     stage_type = "SimilarityJoinTransform"
 
-    def __init__(
-        self,
-        left_view: str = "",
-        right_view: str = "",
-        left_fields: tuple[str, ...] = (),
-        right_fields: tuple[str, ...] = (),
-        output_view: str = "",
-        threshold: float = 0.75,
-        shingle_length: int = 3,
-        num_hash_tables: int = 5,
-        case_sensitive: bool = False,
-        seed: int = 42,
-        **kwargs: Any,
-    ) -> None:
-        super().__init__(**kwargs)
-        self.left_view = left_view
-        self.right_view = right_view
-        self.left_fields = tuple(left_fields)
-        self.right_fields = tuple(right_fields)
-        self.output_view = output_view
-        self.threshold = threshold
-        self.shingle_length = shingle_length
-        self.num_hash_tables = num_hash_tables
-        self.case_sensitive = case_sensitive
-        self.seed = seed
+    left_view: str = ""
+    right_view: str = ""
+    left_fields: tuple[str, ...] = ()
+    right_fields: tuple[str, ...] = ()
+    output_view: str = ""
+    threshold: float = 0.75
+    shingle_length: int = 3
+    num_hash_tables: int = 5
+    case_sensitive: bool = False
+    seed: int = 42
 
     def _featurize(self, df: DataFrame, fields: tuple[str, ...]) -> DataFrame:
         from pyspark.ml.feature import HashingTF, NGram, RegexTokenizer
@@ -203,23 +174,12 @@ class HTTPTransform(PipelineStage):
 
     stage_type = "HTTPTransform"
 
-    def __init__(
-        self,
-        input_view: str = "",
-        output_view: str = "",
-        uri: str = "",
-        input_field: str = "value",
-        batch_size: int = 100,
-        post_fn: Any = None,
-        **kwargs: Any,
-    ) -> None:
-        super().__init__(**kwargs)
-        self.input_view = input_view
-        self.output_view = output_view
-        self.uri = uri
-        self.input_field = input_field
-        self.batch_size = batch_size
-        self.post_fn = post_fn
+    input_view: str = ""
+    output_view: str = ""
+    uri: str = ""
+    input_field: str = "value"
+    batch_size: int = 100
+    post_fn: Any = None
 
     def execute(self, ctx: ArcContext) -> DataFrame:
         import pandas as pd
@@ -273,25 +233,13 @@ class TensorFlowServingTransform(PipelineStage):
 
     stage_type = "TensorFlowServingTransform"
 
-    def __init__(
-        self,
-        input_view: str = "",
-        output_view: str = "",
-        uri: str = "",
-        input_field: str = "value",
-        batch_size: int = 100,
-        response_field: str = "prediction",
-        predict_fn: Any = None,
-        **kwargs: Any,
-    ) -> None:
-        super().__init__(**kwargs)
-        self.input_view = input_view
-        self.output_view = output_view
-        self.uri = uri
-        self.input_field = input_field
-        self.batch_size = batch_size
-        self.response_field = response_field
-        self.predict_fn = predict_fn
+    input_view: str = ""
+    output_view: str = ""
+    uri: str = ""
+    input_field: str = "value"
+    batch_size: int = 100
+    response_field: str = "prediction"
+    predict_fn: Any = None
 
     def execute(self, ctx: ArcContext) -> DataFrame:
         import pandas as pd
@@ -338,13 +286,9 @@ class MLTransform(PipelineStage):
 
     stage_type = "MLTransform"
 
-    def __init__(
-        self, input_view: str = "", output_view: str = "", model_uri: str = "", **kwargs: Any
-    ) -> None:
-        super().__init__(**kwargs)
-        self.input_view = input_view
-        self.output_view = output_view
-        self.model_uri = model_uri
+    input_view: str = ""
+    output_view: str = ""
+    model_uri: str = ""
 
     def execute(self, ctx: ArcContext) -> DataFrame:
         from pyspark.ml import PipelineModel

@@ -175,19 +175,10 @@ class TypingTransform(PipelineStage):
 
     stage_type = "TypingTransform"
 
-    def __init__(
-        self,
-        input_view: str = "",
-        output_view: str = "",
-        schema: list[dict[str, Any]] | None = None,
-        fail_mode: str = "permissive",
-        **kwargs: Any,
-    ) -> None:
-        super().__init__(**kwargs)
-        self.input_view = input_view
-        self.output_view = output_view
-        self.schema = schema or []
-        self.fail_mode = fail_mode
+    input_view: str = ""
+    output_view: str = ""
+    schema: list[dict[str, Any]] = field(default_factory=list)
+    fail_mode: str = "permissive"
 
     def execute(self, ctx: ArcContext) -> DataFrame:
         df = ctx.table(self.input_view)

@@ -5,16 +5,20 @@ ServiceLoader (reference: ArcInterpreter.scala:309-336), parses a HOCON
 config into an ordered stage list (ArcInterpreter.scala:404, 423), and
 executes them sequentially (ArcInterpreter.scala:441), with lifecycle
 hooks after each stage (OutputTable.scala:65-85). Here: a plain class
-registry, JSON configs, and a sequential runner with optional
-after-stage callbacks.
+registry of dataclass stages (each declares its config keys as fields,
+and a config naming any other key is rejected), HOCON or JSON configs,
+and a sequential runner with optional before/after-stage callbacks.
 """
 
 from __future__ import annotations
 
 import abc
+import contextlib
+import difflib
 import json
 import re
-from typing import Any, Callable
+from dataclasses import dataclass, field, fields
+from typing import Any, Callable, ClassVar, Iterator
 
 from pyspark.sql import DataFrame
 
@@ -30,38 +34,60 @@ def register_stage(cls: type["PipelineStage"]) -> type["PipelineStage"]:
     return cls
 
 
+@dataclass(kw_only=True, eq=False)
 class PipelineStage(abc.ABC):
     """One pipeline stage.
 
-    Common parameters shared by every Arc stage: ``name``,
-    ``environments``, ``inputView``/``outputView`` where applicable,
-    ``persist``, ``numPartitions``, ``partitionBy``, ``params``.
+    A stage's config keys are its dataclass fields: ``outputView`` is
+    the field ``output_view``, and ``stage_from_config`` rejects a key
+    no field declares. Every subclass becomes a keyword-only dataclass
+    when it is defined, so declaring a key is declaring a field::
+
+        @register_stage
+        class UpperTransform(PipelineStage):
+            stage_type = "UpperTransform"
+            input_view: str = ""
+            output_view: str = ""
+            column: str = "value"
+
+    Class constants (``stage_type``, ``stage_kind``, a format's
+    ``format_name`` and ``package``) are ``ClassVar``s, not keys. The
+    fields here are Arc's common keys; ``description`` and ``id`` are
+    accepted on every stage and read by nothing. A list key (a field
+    defaulting to a tuple) takes a list or one bare string.
     """
 
-    stage_type: str = "AbstractStage"
+    stage_type: ClassVar[str] = "AbstractStage"
     #: 'extract' | 'transform' | 'load' | 'execute' | 'validate'
-    stage_kind: str = "transform"
+    stage_kind: ClassVar[str] = "transform"
+
+    name: str | None = None
+    description: str | None = None
+    id: str | None = None
+    environments: tuple[str, ...] = ()
+    persist: bool = False
+    num_partitions: int | None = None
+    partition_by: tuple[str, ...] = ()
+    #: values for the ``${key}`` placeholders in this stage's text
+    #: (Arc's ``sqlParams``; its generic ``params`` is read as this)
+    sql_params: dict[str, Any] = field(default_factory=dict)
     #: what the stage yields that is not a DataFrame (a validation
     #: message, a logged value, a config object); set by ``execute``
-    value: Any = None
+    value: Any = field(default=None, init=False)
 
-    def __init__(
-        self,
-        name: str | None = None,
-        environments: tuple[str, ...] = (),
-        persist: bool = False,
-        num_partitions: int | None = None,
-        partition_by: tuple[str, ...] = (),
-        params: dict[str, str] | None = None,
-        **extra: Any,
-    ) -> None:
-        self.name = name or self.stage_type
-        self.environments = tuple(environments)
-        self.persist = persist
-        self.num_partitions = num_partitions
-        self.partition_by = tuple(partition_by)
-        self.params = dict(params or {})
-        self.extra = extra
+    def __init_subclass__(cls, **kwargs: Any) -> None:
+        super().__init_subclass__(**kwargs)
+        dataclass(kw_only=True, eq=False)(cls)
+
+    def __post_init__(self) -> None:
+        self.name = self.name or self.stage_type
+        # a list key (default ``()``) stores a tuple; a bare string
+        # (HOCON ``environments = production``) is one item, never a
+        # string that ``in`` would search for substrings
+        for f in fields(self):
+            value = getattr(self, f.name)
+            if isinstance(f.default, tuple) and not isinstance(value, tuple):
+                setattr(self, f.name, (value,) if isinstance(value, str) else tuple(value))
 
     # -- helpers shared across stages ---------------------------------
 
@@ -82,11 +108,55 @@ class PipelineStage(abc.ABC):
         return df
 
     def substitute(self, text: str, ctx: ArcContext) -> str:
-        return inject_parameters(text, ctx.merged_params(self.params))
+        return inject_parameters(text, ctx.merged_params(self.sql_params))
 
     @abc.abstractmethod
     def execute(self, ctx: ArcContext) -> DataFrame | None:
         """Run the stage; return its result DataFrame (or None)."""
+
+
+class FormatStage(PipelineStage):
+    """A stage backed by one Spark data source: ``format_name`` with
+    ``options`` over the concrete stage's ``default_options``.
+
+    String option values get ``${key}`` substitution. Wrap the read or
+    write in :meth:`connector`: a source that is not on the classpath
+    then raises with the stage's ``package`` hint.
+    """
+
+    format_name: ClassVar[str] = ""
+    #: the package that provides ``format_name``; "" for a built-in
+    package: ClassVar[str] = ""
+
+    options: dict[str, Any] = field(default_factory=dict)
+
+    def default_options(self) -> dict[str, Any]:
+        return {}
+
+    def resolved_options(self, ctx: ArcContext) -> dict[str, Any]:
+        return {
+            k: self.substitute(v, ctx) if isinstance(v, str) else v
+            for k, v in {**self.default_options(), **self.options}.items()
+        }
+
+    @contextlib.contextmanager
+    def connector(self) -> Iterator[None]:
+        try:
+            yield
+        except Exception as exc:
+            text = str(exc)
+            if self.package and (
+                "Failed to find data source" in text or "DATA_SOURCE_NOT_FOUND" in text
+            ):
+                raise RuntimeError(
+                    f"the '{self.format_name}' connector is not on the Spark "
+                    f"classpath; add the {self.package} package (e.g. "
+                    "spark.jars.packages)"
+                ) from exc
+            raise
+
+
+_ACRONYMS = {"uri": "URI", "url": "URL"}
 
 
 def _snake(key: str) -> str:
@@ -96,11 +166,19 @@ def _snake(key: str) -> str:
     return re.sub(r"([a-z0-9])([A-Z])", r"\1_\2", s).lower()
 
 
+def _camel(name: str) -> str:
+    """The Arc spelling of a field's key (``input_uri`` → ``inputURI``)."""
+    head, *rest = name.split("_")
+    return head + "".join(_ACRONYMS.get(w, w.capitalize()) for w in rest)
+
+
 def stage_from_config(config: dict[str, Any]) -> PipelineStage:
     """Instantiate a registered stage from an Arc-style config dict.
 
     ``{"type": "SQLTransform", "name": ..., "sql": ..., ...}`` —
-    camelCase keys are normalized to the snake_case constructor args.
+    camelCase keys are normalized to the snake_case fields. A key the
+    stage does not declare raises, naming the nearest declared keys
+    (Arc's ``Invalid attribute``).
     """
     config = dict(config)
     stage_type = config.pop("type")
@@ -110,8 +188,19 @@ def stage_from_config(config: dict[str, Any]) -> PipelineStage:
         raise ValueError(
             f"unknown stage type '{stage_type}'; known: {sorted(STAGE_REGISTRY)}"
         ) from None
-    kwargs = {_snake(k): v for k, v in config.items()}
-    return cls(**kwargs)
+    if "params" in config:
+        config["sqlParams"] = {**config.pop("params"), **config.get("sqlParams", {})}
+    keys = {_camel(f.name): f.name for f in fields(cls) if f.init}
+    declared = set(keys.values())
+    invalid = {k: difflib.get_close_matches(k, keys, n=3)
+               for k in config if _snake(k) not in declared}
+    if invalid:
+        raise ValueError(f"{stage_type}: " + "; ".join(
+            f"invalid attribute '{k}', perhaps you meant "
+            + (" or ".join(close) or f"one of {', '.join(sorted(keys))}")
+            for k, close in invalid.items()
+        ))
+    return cls(**{_snake(k): v for k, v in config.items()})
 
 
 def parse_pipeline(

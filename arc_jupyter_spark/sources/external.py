@@ -1,174 +1,86 @@
 """External-system stages (reference: SURVEY.md §2.B plugin jars —
-DeltaLakeExtract/Load, KafkaExtract/Load, KafkaCommitExecute).
+DeltaLakeExtract/Load, KafkaExtract/Load, KafkaCommitExecute, and the
+Cassandra / Elasticsearch / MongoDB / SAS connectors).
 
 These are thin ``format(...)`` mappings — exactly how the reference's
-out-of-core plugins work: the stage vocabulary is always parseable, and
-execution requires the connector jar on the Spark classpath
-(delta-spark / spark-sql-kafka). Without the jar, execution raises
-Spark's data-source-not-found error with a hint appended.
+out-of-core plugins work (the same ServiceLoader mechanism,
+ArcInterpreter.scala:309-336): the stage vocabulary is always
+parseable, and execution requires the connector jar on the Spark
+classpath. Each stage gives only its format, its package and its
+default options; the one reader (``_Extract.load``) and the one
+writer (``_Load.execute``) raise the package hint when the jar is
+absent.
 """
 
 from __future__ import annotations
 
-from typing import Any
-
-from pyspark.sql import DataFrame
+from typing import Any, ClassVar
 
 from arc_jupyter_spark.context import ArcContext
+from arc_jupyter_spark.operators.load import _Load, _UriLoad
 from arc_jupyter_spark.plans.pipeline import PipelineStage, register_stage
+from arc_jupyter_spark.sources.extract import _StreamExtract, _UriExtract
 
-
-def _rethrow_missing_source(exc: Exception, fmt: str, package: str) -> None:
-    if "Failed to find data source" in str(exc) or "DATA_SOURCE_NOT_FOUND" in str(exc):
-        raise RuntimeError(
-            f"the '{fmt}' connector is not on the Spark classpath; add the "
-            f"{package} package (e.g. spark.jars.packages)"
-        ) from exc
-    raise exc
+_DELTA = "io.delta:delta-spark"
+_KAFKA = "org.apache.spark:spark-sql-kafka-0-10"
+_CASSANDRA = "com.datastax.spark:spark-cassandra-connector"
+_ELASTICSEARCH = "org.elasticsearch:elasticsearch-spark-30"
+_MONGODB = "org.mongodb.spark:mongo-spark-connector"
 
 
 @register_stage
-class DeltaLakeExtract(PipelineStage):
+class DeltaLakeExtract(_UriExtract):
     """Read a Delta table (time travel via ``versionAsOf``/``timestampAsOf``)."""
 
     stage_type = "DeltaLakeExtract"
-    stage_kind = "extract"
-
-    def __init__(
-        self,
-        input_uri: str = "",
-        output_view: str = "",
-        options: dict[str, str] | None = None,
-        streaming: bool = False,
-        **kwargs: Any,
-    ) -> None:
-        super().__init__(**kwargs)
-        self.input_uri = input_uri
-        self.output_view = output_view
-        self.options = dict(options or {})
-        self.streaming = streaming
-
-    def execute(self, ctx: ArcContext) -> DataFrame:
-        reader = ctx.spark.readStream if (self.streaming or ctx.conf.streaming) else ctx.spark.read
-        try:
-            df = reader.format("delta").options(**self.options).load(
-                self.substitute(self.input_uri, ctx)
-            )
-        except Exception as exc:  # noqa: BLE001
-            _rethrow_missing_source(exc, "delta", "io.delta:delta-spark")
-        return ctx.register(self.repartition(df), self.output_view, persist=self.persist)
+    format_name = "delta"
+    package = _DELTA
 
 
 @register_stage
-class DeltaLakeLoad(PipelineStage):
+class DeltaLakeLoad(_UriLoad):
     """Write a view as a Delta table (ACID upsert target at scale)."""
 
     stage_type = "DeltaLakeLoad"
-    stage_kind = "load"
-
-    def __init__(
-        self,
-        input_view: str = "",
-        output_uri: str = "",
-        save_mode: str = "overwrite",
-        options: dict[str, str] | None = None,
-        **kwargs: Any,
-    ) -> None:
-        super().__init__(**kwargs)
-        self.input_view = input_view
-        self.output_uri = output_uri
-        self.save_mode = save_mode
-        self.options = dict(options or {})
-
-    def execute(self, ctx: ArcContext) -> DataFrame:
-        df = self.repartition(ctx.table(self.input_view))
-        writer = df.write.format("delta").mode(self.save_mode).options(**self.options)
-        if self.partition_by:
-            writer = writer.partitionBy(*self.partition_by)
-        try:
-            writer.save(self.substitute(self.output_uri, ctx))
-        except Exception as exc:  # noqa: BLE001
-            _rethrow_missing_source(exc, "delta", "io.delta:delta-spark")
-        return df
+    format_name = "delta"
+    package = _DELTA
 
 
 @register_stage
-class KafkaExtract(PipelineStage):
+class KafkaExtract(_StreamExtract):
     """Read a Kafka topic (batch or streaming); value stays binary."""
 
     stage_type = "KafkaExtract"
-    stage_kind = "extract"
+    format_name = "kafka"
+    package = _KAFKA
 
-    def __init__(
-        self,
-        bootstrap_servers: str = "",
-        topic: str = "",
-        output_view: str = "",
-        starting_offsets: str = "earliest",
-        streaming: bool = False,
-        options: dict[str, str] | None = None,
-        **kwargs: Any,
-    ) -> None:
-        super().__init__(**kwargs)
-        self.bootstrap_servers = bootstrap_servers
-        self.topic = topic
-        self.output_view = output_view
-        self.starting_offsets = starting_offsets
-        self.streaming = streaming
-        self.options = dict(options or {})
+    bootstrap_servers: str = ""
+    topic: str = ""
+    starting_offsets: str = "earliest"
 
-    def execute(self, ctx: ArcContext) -> DataFrame:
-        reader = ctx.spark.readStream if (self.streaming or ctx.conf.streaming) else ctx.spark.read
-        opts = {
-            "kafka.bootstrap.servers": self.substitute(self.bootstrap_servers, ctx),
+    def default_options(self) -> dict[str, Any]:
+        return {
+            "kafka.bootstrap.servers": self.bootstrap_servers,
             "subscribe": self.topic,
             "startingOffsets": self.starting_offsets,
-            **self.options,
         }
-        try:
-            df = reader.format("kafka").options(**opts).load()
-        except Exception as exc:  # noqa: BLE001
-            _rethrow_missing_source(
-                exc, "kafka", "org.apache.spark:spark-sql-kafka-0-10"
-            )
-        return ctx.register(df, self.output_view, persist=self.persist)
 
 
 @register_stage
-class KafkaLoad(PipelineStage):
+class KafkaLoad(_Load):
     """Write ``[key,] value`` rows to a Kafka topic."""
 
     stage_type = "KafkaLoad"
-    stage_kind = "load"
+    format_name = "kafka"
+    package = _KAFKA
+    #: not a key: Kafka's batch sink only appends
+    save_mode: ClassVar[str] = "append"
 
-    def __init__(
-        self,
-        input_view: str = "",
-        bootstrap_servers: str = "",
-        topic: str = "",
-        options: dict[str, str] | None = None,
-        **kwargs: Any,
-    ) -> None:
-        super().__init__(**kwargs)
-        self.input_view = input_view
-        self.bootstrap_servers = bootstrap_servers
-        self.topic = topic
-        self.options = dict(options or {})
+    bootstrap_servers: str = ""
+    topic: str = ""
 
-    def execute(self, ctx: ArcContext) -> DataFrame:
-        df = ctx.table(self.input_view)
-        opts = {
-            "kafka.bootstrap.servers": self.substitute(self.bootstrap_servers, ctx),
-            "topic": self.topic,
-            **self.options,
-        }
-        try:
-            df.write.format("kafka").options(**opts).save()
-        except Exception as exc:  # noqa: BLE001
-            _rethrow_missing_source(
-                exc, "kafka", "org.apache.spark:spark-sql-kafka-0-10"
-            )
-        return df
+    def default_options(self) -> dict[str, Any]:
+        return {"kafka.bootstrap.servers": self.bootstrap_servers, "topic": self.topic}
 
 
 @register_stage
@@ -185,17 +97,9 @@ class KafkaCommitExecute(PipelineStage):
     stage_type = "KafkaCommitExecute"
     stage_kind = "execute"
 
-    def __init__(
-        self,
-        bootstrap_servers: str = "",
-        group_id: str = "",
-        input_view: str = "",
-        **kwargs: Any,
-    ) -> None:
-        super().__init__(**kwargs)
-        self.bootstrap_servers = bootstrap_servers
-        self.group_id = group_id
-        self.input_view = input_view
+    bootstrap_servers: str = ""
+    group_id: str = ""
+    input_view: str = ""
 
     def execute(self, ctx: ArcContext) -> None:
         raise RuntimeError(
@@ -205,145 +109,65 @@ class KafkaCommitExecute(PipelineStage):
         )
 
 
-# -- generic connector stages (Cassandra / Elasticsearch / MongoDB /
-# SAS). The reference loads these as out-of-core plugin jars through
-# the same ServiceLoader mechanism as Delta/Kafka
-# (ArcInterpreter.scala:309-336); here they are the same thin
-# format(...) mappings with graceful absence: the stage vocabulary
-# always parses, and execution without the connector raises an
-# actionable package hint.
-
-
-class _FormatExtract(PipelineStage):
-    """Shared shape for connector extracts: format + options → view."""
-
-    stage_kind = "extract"
-    fmt = ""
-    package = ""
-
-    def __init__(
-        self,
-        output_view: str = "",
-        options: dict[str, str] | None = None,
-        input_uri: str = "",
-        streaming: bool = False,
-        **kwargs: Any,
-    ) -> None:
-        super().__init__(**kwargs)
-        self.output_view = output_view
-        self.options = dict(options or {})
-        self.input_uri = input_uri
-        self.streaming = streaming
-
-    def execute(self, ctx: ArcContext) -> DataFrame:
-        reader = (
-            ctx.spark.readStream
-            if (self.streaming or ctx.conf.streaming)
-            else ctx.spark.read
-        )
-        reader = reader.format(self.fmt).options(**{
-            k: self.substitute(str(v), ctx) for k, v in self.options.items()
-        })
-        try:
-            if self.input_uri:
-                df = reader.load(self.substitute(self.input_uri, ctx))
-            else:
-                df = reader.load()
-        except Exception as exc:  # noqa: BLE001
-            _rethrow_missing_source(exc, self.fmt, self.package)
-        return ctx.register(self.repartition(df), self.output_view, persist=self.persist)
-
-
-class _FormatLoad(PipelineStage):
-    """Shared shape for connector loads: view → format + options."""
-
-    stage_kind = "load"
-    fmt = ""
-    package = ""
-
-    def __init__(
-        self,
-        input_view: str = "",
-        save_mode: str = "append",
-        options: dict[str, str] | None = None,
-        **kwargs: Any,
-    ) -> None:
-        super().__init__(**kwargs)
-        self.input_view = input_view
-        self.save_mode = save_mode
-        self.options = dict(options or {})
-
-    def execute(self, ctx: ArcContext) -> DataFrame:
-        df = ctx.table(self.input_view)
-        writer = df.write.format(self.fmt).mode(self.save_mode).options(**{
-            k: self.substitute(str(v), ctx) for k, v in self.options.items()
-        })
-        try:
-            writer.save()
-        except Exception as exc:  # noqa: BLE001
-            _rethrow_missing_source(exc, self.fmt, self.package)
-        return df
-
-
 @register_stage
-class CassandraExtract(_FormatExtract):
+class CassandraExtract(_UriExtract):
     """Read a Cassandra table (options: keyspace, table)."""
 
     stage_type = "CassandraExtract"
-    fmt = "org.apache.spark.sql.cassandra"
-    package = "com.datastax.spark:spark-cassandra-connector"
+    format_name = "org.apache.spark.sql.cassandra"
+    package = _CASSANDRA
 
 
 @register_stage
-class CassandraLoad(_FormatLoad):
+class CassandraLoad(_Load):
     """Write a view to a Cassandra table (options: keyspace, table)."""
 
     stage_type = "CassandraLoad"
-    fmt = "org.apache.spark.sql.cassandra"
-    package = "com.datastax.spark:spark-cassandra-connector"
+    format_name = "org.apache.spark.sql.cassandra"
+    package = _CASSANDRA
 
 
 @register_stage
-class ElasticsearchExtract(_FormatExtract):
-    """Read an Elasticsearch index (input_uri = index/type resource)."""
+class ElasticsearchExtract(_UriExtract):
+    """Read an Elasticsearch index (inputURI = index/type resource)."""
 
     stage_type = "ElasticsearchExtract"
-    fmt = "org.elasticsearch.spark.sql"
-    package = "org.elasticsearch:elasticsearch-spark-30"
+    format_name = "org.elasticsearch.spark.sql"
+    package = _ELASTICSEARCH
 
 
 @register_stage
-class ElasticsearchLoad(_FormatLoad):
+class ElasticsearchLoad(_Load):
     """Write a view to an Elasticsearch index."""
 
     stage_type = "ElasticsearchLoad"
-    fmt = "org.elasticsearch.spark.sql"
-    package = "org.elasticsearch:elasticsearch-spark-30"
+    format_name = "org.elasticsearch.spark.sql"
+    package = _ELASTICSEARCH
 
 
 @register_stage
-class MongoDBExtract(_FormatExtract):
+class MongoDBExtract(_UriExtract):
     """Read a MongoDB collection (options: connection.uri, database,
     collection)."""
 
     stage_type = "MongoDBExtract"
-    fmt = "mongodb"
-    package = "org.mongodb.spark:mongo-spark-connector"
+    format_name = "mongodb"
+    package = _MONGODB
 
 
 @register_stage
-class MongoDBLoad(_FormatLoad):
+class MongoDBLoad(_Load):
     """Write a view to a MongoDB collection."""
 
     stage_type = "MongoDBLoad"
-    fmt = "mongodb"
-    package = "org.mongodb.spark:mongo-spark-connector"
+    format_name = "mongodb"
+    package = _MONGODB
 
 
 @register_stage
-class SASExtract(_FormatExtract):
-    """Read a sas7bdat dataset (input_uri = path)."""
+class SASExtract(_UriExtract):
+    """Read a sas7bdat dataset (inputURI = path)."""
 
     stage_type = "SASExtract"
-    fmt = "com.github.saurfang.sas.spark"
+    format_name = "com.github.saurfang.sas.spark"
     package = "saurfang:spark-sas7bdat"

@@ -10,63 +10,86 @@ when asked for — an unconditional repartition would add a shuffle.
 
 from __future__ import annotations
 
-from typing import Any
+from typing import Any, ClassVar
 
 from pyspark.sql import DataFrame, functions as F
 
 from arc_jupyter_spark.context import ArcContext
-from arc_jupyter_spark.plans.pipeline import PipelineStage, register_stage
+from arc_jupyter_spark.plans.pipeline import FormatStage, PipelineStage, register_stage
 
 
-class _FileExtract(PipelineStage):
-    """Shared plumbing for file-based extracts.
-
-    Parameters: ``input_uri`` (glob ok), ``output_view``, ``schema``
-    (StructType or DDL string), ``streaming`` (readStream over the same
-    format — requires a schema), plus format-specific ``options``.
+class _Extract(FormatStage):
+    """The one reader of every format-backed extract: ``format_name``
+    with the merged options, at the stage's path when it has one, into
+    ``outputView``. A concrete stage gives its format, its package hint
+    and its ``default_options``. A stage with no ``streaming`` key reads
+    in batch, also in a streaming session (JDBC: the static side of a
+    stream-static join).
     """
 
     stage_kind = "extract"
-    format_name: str = ""
+    #: no key here: the source gives its own schema (``_FileExtract``
+    #: declares ``schema`` as a key)
+    schema: ClassVar[Any] = None
 
-    def __init__(
-        self,
-        input_uri: str = "",
-        output_view: str = "",
-        schema: Any = None,
-        streaming: bool = False,
-        options: dict[str, str] | None = None,
-        add_filename: bool = False,
-        add_index: bool = False,
-        **kwargs: Any,
-    ) -> None:
-        super().__init__(**kwargs)
-        self.input_uri = input_uri
-        self.output_view = output_view
-        self.schema = schema
-        self.streaming = streaming
-        self.options = dict(options or {})
-        self.add_filename = add_filename
-        self.add_index = add_index
+    output_view: str = ""
 
-    def default_options(self) -> dict[str, str]:
-        return {}
+    def streams(self, ctx: ArcContext) -> bool:
+        return False
 
-    def reader(self, ctx: ArcContext):
-        use_stream = self.streaming or ctx.conf.streaming
-        reader = ctx.spark.readStream if use_stream else ctx.spark.read
-        opts = {**self.default_options(), **self.options}
-        if opts:
-            reader = reader.options(**opts)
-        if self.schema is not None:
-            reader = reader.schema(self.schema)
-        return reader.format(self.format_name)
+    def path(self, ctx: ArcContext) -> str | None:
+        return None
 
     def load(self, ctx: ArcContext) -> DataFrame:
-        uri = self.substitute(self.input_uri, ctx)
+        path = self.path(ctx)
+        reader = ctx.spark.readStream if self.streams(ctx) else ctx.spark.read
+        reader = reader.format(self.format_name).options(**self.resolved_options(ctx))
+        if self.schema is not None:
+            reader = reader.schema(self.schema)
+        with self.connector():
+            return reader.load(path)
+
+    def execute(self, ctx: ArcContext) -> DataFrame:
+        df = self.repartition(self.load(ctx))
+        return ctx.register(df, self.output_view, persist=self.persist)
+
+
+class _StreamExtract(_Extract):
+    """A source Spark also reads as a stream: ``streaming`` (or a
+    streaming session) reads it with ``readStream``."""
+
+    streaming: bool = False
+
+    def streams(self, ctx: ArcContext) -> bool:
+        return self.streaming or ctx.conf.streaming
+
+
+class _UriExtract(_StreamExtract):
+    """A source addressed by ``inputURI``: a path, or a connector's
+    resource name (optional for a connector that takes options)."""
+
+    input_uri: str = ""
+
+    def path(self, ctx: ArcContext) -> str | None:
+        return self.substitute(self.input_uri, ctx) or None
+
+
+class _FileExtract(_UriExtract):
+    """A file format: ``inputURI`` (glob ok) is required, ``schema``
+    (StructType or DDL string) skips inference, and ``streaming``
+    needs it. ``addFilename``/``addIndex`` add Arc's ``_filename`` and
+    per-file ``_index`` columns.
+    """
+
+    schema: Any = None
+    add_filename: bool = False
+    add_index: bool = False
+
+    def path(self, ctx: ArcContext) -> str:
+        uri = super().path(ctx)
         if not uri:
             raise ValueError(f"{self.stage_type} '{self.name}': inputURI is required")
-        return self.reader(ctx).load(uri)
+        return uri
 
     def execute(self, ctx: ArcContext) -> DataFrame:
         df = self.load(ctx)
@@ -107,6 +130,7 @@ class ORCExtract(_FileExtract):
 class AvroExtract(_FileExtract):
     stage_type = "AvroExtract"
     format_name = "avro"
+    package = "org.apache.spark:spark-avro"
 
 
 @register_stage
@@ -118,12 +142,10 @@ class DelimitedExtract(_FileExtract):
     stage_type = "DelimitedExtract"
     format_name = "csv"
 
-    def __init__(self, header: bool = True, delimiter: str = ",", **kwargs: Any) -> None:
-        super().__init__(**kwargs)
-        self.header = header
-        self.delimiter = delimiter
+    header: bool = True
+    delimiter: str = ","
 
-    def default_options(self) -> dict[str, str]:
+    def default_options(self) -> dict[str, Any]:
         return {"header": str(self.header).lower(), "sep": self.delimiter}
 
 
@@ -134,11 +156,9 @@ class JSONExtract(_FileExtract):
     stage_type = "JSONExtract"
     format_name = "json"
 
-    def __init__(self, multi_line: bool = False, **kwargs: Any) -> None:
-        super().__init__(**kwargs)
-        self.multi_line = multi_line
+    multi_line: bool = False
 
-    def default_options(self) -> dict[str, str]:
+    def default_options(self) -> dict[str, Any]:
         return {"multiLine": str(self.multi_line).lower()}
 
 
@@ -149,11 +169,9 @@ class TextExtract(_FileExtract):
     stage_type = "TextExtract"
     format_name = "text"
 
-    def __init__(self, whole_text: bool = False, **kwargs: Any) -> None:
-        super().__init__(**kwargs)
-        self.whole_text = whole_text
+    whole_text: bool = False
 
-    def default_options(self) -> dict[str, str]:
+    def default_options(self) -> dict[str, Any]:
         return {"wholetext": str(self.whole_text).lower()}
 
 
@@ -187,17 +205,16 @@ class ImageExtract(_FileExtract):
 
 @register_stage
 class XMLExtract(_FileExtract):
-    """XML via spark-xml (``com.databricks:spark-xml`` / Spark 4 native
-    ``xml``). Gated: raises a clear error if the format is unavailable."""
+    """XML via Spark 4's native ``xml`` source, or spark-xml before it.
+    Gated: raises the package hint if the format is unavailable."""
 
     stage_type = "XMLExtract"
     format_name = "xml"
+    package = "com.databricks:spark-xml"
 
-    def __init__(self, row_tag: str = "row", **kwargs: Any) -> None:
-        super().__init__(**kwargs)
-        self.row_tag = row_tag
+    row_tag: str = "row"
 
-    def default_options(self) -> dict[str, str]:
+    def default_options(self) -> dict[str, Any]:
         return {"rowTag": self.row_tag}
 
 
@@ -208,17 +225,9 @@ class RateExtract(PipelineStage):
     stage_type = "RateExtract"
     stage_kind = "extract"
 
-    def __init__(
-        self,
-        output_view: str = "",
-        rows_per_second: int = 10,
-        num_source_partitions: int = 1,
-        **kwargs: Any,
-    ) -> None:
-        super().__init__(**kwargs)
-        self.output_view = output_view
-        self.rows_per_second = rows_per_second
-        self.num_source_partitions = num_source_partitions
+    output_view: str = ""
+    rows_per_second: int = 10
+    num_source_partitions: int = 1
 
     def execute(self, ctx: ArcContext) -> DataFrame:
         df = (
@@ -242,10 +251,8 @@ class HTTPExtract(PipelineStage):
     stage_type = "HTTPExtract"
     stage_kind = "extract"
 
-    def __init__(self, uri: str = "", output_view: str = "", **kwargs: Any) -> None:
-        super().__init__(**kwargs)
-        self.uri = uri
-        self.output_view = output_view
+    uri: str = ""
+    output_view: str = ""
 
     def execute(self, ctx: ArcContext) -> DataFrame:
         import urllib.request
@@ -258,7 +265,7 @@ class HTTPExtract(PipelineStage):
 
 
 @register_stage
-class JDBCExtract(PipelineStage):
+class JDBCExtract(_Extract):
     """JDBC table/query scan with optional partitioned reads.
 
     At scale: always set partitionColumn/lowerBound/upperBound/
@@ -266,45 +273,28 @@ class JDBCExtract(PipelineStage):
     """
 
     stage_type = "JDBCExtract"
-    stage_kind = "extract"
+    format_name = "jdbc"
 
-    def __init__(
-        self,
-        jdbc_url: str = "",
-        table_name: str = "",
-        output_view: str = "",
-        partition_column: str | None = None,
-        lower_bound: int | None = None,
-        upper_bound: int | None = None,
-        options: dict[str, str] | None = None,
-        **kwargs: Any,
-    ) -> None:
-        super().__init__(**kwargs)
-        self.jdbc_url = jdbc_url
-        self.table_name = table_name
-        self.output_view = output_view
-        self.partition_column = partition_column
-        self.lower_bound = lower_bound
-        self.upper_bound = upper_bound
-        self.options = dict(options or {})
+    jdbc_url: str = ""
+    table_name: str = ""
+    partition_column: str | None = None
+    lower_bound: int | None = None
+    upper_bound: int | None = None
 
-    def execute(self, ctx: ArcContext) -> DataFrame:
-        reader = (
-            ctx.spark.read.format("jdbc")
-            .option("url", self.substitute(self.jdbc_url, ctx))
-            .option("dbtable", self.table_name)
-        )
+    def default_options(self) -> dict[str, Any]:
+        opts = {"url": self.jdbc_url, "dbtable": self.table_name}
         if self.partition_column is not None:
-            reader = (
-                reader.option("partitionColumn", self.partition_column)
-                .option("lowerBound", str(self.lower_bound))
-                .option("upperBound", str(self.upper_bound))
-                .option("numPartitions", str(self.num_partitions or 8))
+            opts.update(
+                partitionColumn=self.partition_column,
+                lowerBound=str(self.lower_bound),
+                upperBound=str(self.upper_bound),
+                numPartitions=str(self.num_partitions or 8),
             )
-        for k, v in self.options.items():
-            reader = reader.option(k, v)
-        df = reader.load()
-        return ctx.register(df, self.output_view, persist=self.persist)
+        return opts
+
+    def repartition(self, df: DataFrame) -> DataFrame:
+        # numPartitions is the read's parallelism, not a shuffle after it
+        return df
 
 
 @register_stage
@@ -315,10 +305,8 @@ class MetadataExtract(PipelineStage):
     stage_type = "MetadataExtract"
     stage_kind = "extract"
 
-    def __init__(self, input_view: str = "", output_view: str = "", **kwargs: Any) -> None:
-        super().__init__(**kwargs)
-        self.input_view = input_view
-        self.output_view = output_view
+    input_view: str = ""
+    output_view: str = ""
 
     def execute(self, ctx: ArcContext) -> DataFrame:
         from arc_jupyter_spark.operators.metadata import metadata_dataframe
@@ -337,17 +325,9 @@ class StatisticsExtract(PipelineStage):
     stage_type = "StatisticsExtract"
     stage_kind = "extract"
 
-    def __init__(
-        self,
-        input_view: str = "",
-        output_view: str = "",
-        statistics: tuple[str, ...] = (),
-        **kwargs: Any,
-    ) -> None:
-        super().__init__(**kwargs)
-        self.input_view = input_view
-        self.output_view = output_view
-        self.statistics = tuple(statistics)
+    input_view: str = ""
+    output_view: str = ""
+    statistics: tuple[str, ...] = ()
 
     def execute(self, ctx: ArcContext) -> DataFrame:
         df = ctx.table(self.input_view)

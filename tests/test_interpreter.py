@@ -467,7 +467,7 @@ def test_stage_magic_args_become_typed_stage_config():
     args = parse_args('name="s" outputView=v inputView=i persist=true sqlParams=a=1,b=x numRows=5')
     assert stage_config("sql", args, "SELECT ${a}") == {
         "type": "SQLTransform", "sql": "SELECT ${a}", "name": "s", "inputView": "i",
-        "outputView": "v", "persist": True, "params": {"a": "1", "b": "x"},
+        "outputView": "v", "persist": True, "sqlParams": {"a": "1", "b": "x"},
     }
 
 
@@ -568,3 +568,36 @@ def test_statistics_execute_aggregates_once(interp):
     # when the stage returned that DataFrame
     assert res[0].text == interp._render(spark.table("stats_src").summary(), {}).text
     assert interp.ctx.user_data["last_statistics"] == spark.table("stats_src").summary().collect()
+
+
+def test_stage_magic_environments_reach_the_stage(interp):
+    interp.execute("%conf environment=test")
+    interp.execute("%sql environments=production outputView=env_prod_only\nSELECT 1 AS a")
+    assert "env_prod_only" not in interp.ctx.view_names()
+    interp.execute("%sql environments=production,test outputView=env_both\nSELECT 1 AS a")
+    assert interp.ctx.table("env_both").count() == 1
+
+
+def test_help_names_every_magic():
+    from arc_jupyter_spark.interpreter import HELP_TEXT, STAGE_MAGICS
+
+    magics = [m[len("magic_"):] for m in dir(Interpreter) if m.startswith("magic_")]
+    missing = [m for m in magics + list(STAGE_MAGICS) if f"%{m} " not in HELP_TEXT]
+    assert not missing, missing
+
+
+def test_help_lists_the_view_keys_each_stage_magic_declares():
+    import dataclasses
+
+    from arc_jupyter_spark.interpreter import HELP_TEXT, STAGE_MAGICS
+    from arc_jupyter_spark.plans.pipeline import STAGE_REGISTRY, _camel
+
+    lines = HELP_TEXT.splitlines()
+    for magic, stage_type in STAGE_MAGICS.items():
+        line = next(ln for ln in lines if ln.startswith(f"  %{magic} "))
+        declared = {_camel(f.name) for f in dataclasses.fields(STAGE_REGISTRY[stage_type])}
+        for key in ("inputView", "outputView"):
+            assert (f"{key}=" in line) == (key in declared), (magic, key)
+        # the keys every stage magic is said to take
+        assert {"name", "persist", "environments", "sqlParams"} <= declared
+
